@@ -1,7 +1,5 @@
-"""Write-plan assembly (the reference's Hudi config-dict builder, C3)
-and physical-plan lint (scale-contract assertions)."""
+"""Physical-plan lint (scale-contract assertions)."""
 
 from glue_hudi_spark.plans import lint
-from glue_hudi_spark.plans.write_config import WritePlan, build_write_plan
 
-__all__ = ["WritePlan", "build_write_plan", "lint"]
+__all__ = ["lint"]

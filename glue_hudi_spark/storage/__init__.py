@@ -6,11 +6,10 @@ precombine conflict resolution, hive-style partition layout, a commit
 timeline with retention-based cleaning, copy-on-write and merge-on-read
 storage types. No Hudi release supports Spark 4 at the time of writing
 (the reference pins ``hudi-spark-bundle_2.11-0.10.1``, glue-stack.ts:38),
-so this backend is the default; the public API is format-agnostic.
+so this is the engine's only table format.
 """
 
 from glue_hudi_spark.storage.native import NativeTable
 from glue_hudi_spark.storage.commits import CommitTimeline
-from glue_hudi_spark.storage.hudi import HudiBackend, open_table
 
-__all__ = ["NativeTable", "CommitTimeline", "HudiBackend", "open_table"]
+__all__ = ["NativeTable", "CommitTimeline"]

@@ -40,7 +40,7 @@ import os
 import re
 import time
 import urllib.parse
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass
 from functools import lru_cache
 from pathlib import Path
@@ -521,21 +521,29 @@ _ROW_STABLE_ND = frozenset(
     {"InputFileName", "InputFileBlockStart", "InputFileBlockLength"})
 
 
-def _nd_culprits(expr, out: set) -> None:
-    """Collect the class names of the PRIMITIVE non-deterministic nodes
-    under ``expr`` (the deepest nodes whose own non-determinism is not
-    inherited from a child)."""
+def _nd_culprits(expr, out: set, jvm) -> None:
+    """Collect the class names of the nodes under ``expr`` that are
+    non-deterministic in their OWN right, not merely by inheriting a
+    child's non-determinism. A node with non-deterministic children
+    counts too when it stays non-deterministic with every child swapped
+    for a literal — ``shuffle(array(input_file_name()))`` records
+    ``Shuffle``, ``regexp_extract(input_file_name(), ...)`` does not."""
     if expr.deterministic():
         return
-    kids = expr.children()
-    any_nd_child = False
-    for i in range(kids.size()):
-        k = kids.apply(i)
-        if not k.deterministic():
-            any_nd_child = True
-            _nd_culprits(k, out)
-    if not any_nd_child:
-        out.add(expr.getClass().getSimpleName())
+    kids = [expr.children().apply(i) for i in range(expr.children().size())]
+    nd_kids = [k for k in kids if not k.deterministic()]
+    for k in nd_kids:
+        _nd_culprits(k, out, jvm)
+    if nd_kids:
+        lits = jvm.java.util.ArrayList()
+        for k in kids:
+            lits.add(jvm.org.apache.spark.sql.catalyst.expressions.Literal(
+                None, k.dataType()))
+        detached = expr.withNewChildren(
+            jvm.scala.jdk.javaapi.CollectionConverters.asScala(lits).toSeq())
+        if detached.deterministic():
+            return
+    out.add(expr.getClass().getSimpleName())
 
 
 def _plan_is_deterministic(df: DataFrame) -> bool:
@@ -562,7 +570,7 @@ def _plan_is_deterministic(df: DataFrame) -> bool:
             node = stack.pop()
             exprs = node.expressions()
             for i in range(exprs.size()):
-                _nd_culprits(exprs.apply(i), culprits)
+                _nd_culprits(exprs.apply(i), culprits, df.sparkSession._jvm)
             kids = node.children()
             for i in range(kids.size()):
                 stack.append(kids.apply(i))
@@ -583,6 +591,44 @@ def record_key_expr(keys: list[str]):
         v = F.coalesce(F.col(k).cast("string"), F.lit(NULL_KEY))
         parts.append(F.concat(F.lit(f"{k}:"), v) if len(keys) > 1 else v)
     return F.concat_ws(",", *parts)
+
+
+def _partial_update(kept: DataFrame, existing: DataFrame,
+                    keyed: DataFrame) -> DataFrame:
+    """Partial-update rewrite output (``upsert(partial=True)``): per
+    matched key, non-null incoming fields overwrite and everything else
+    carries forward. One extra join over the SAME pruned affected set
+    (the anti-join's sibling) — the rewrite scope is unchanged."""
+    batch_cols = set(keyed.columns)
+    old, new = existing.alias("_pm_o"), keyed.alias("_pm_n")
+    updated = old.join(
+        new,
+        F.col(f"_pm_o.{RECORD_KEY_COL}") == F.col(f"_pm_n.{RECORD_KEY_COL}"),
+        "inner",
+    ).select(
+        *[
+            (
+                F.col(f"_pm_n.{c}")
+                if c in (COMMIT_TIME_COL, DELTA_OP_COL)
+                else F.coalesce(F.col(f"_pm_n.{c}"), F.col(f"_pm_o.{c}"))
+                if c in batch_cols and c not in META_COLS
+                else F.col(f"_pm_o.{c}")
+            ).alias(c)
+            for c in existing.columns
+        ],
+        # evolved columns new to this batch ride along unchanged
+        *[
+            F.col(f"_pm_n.{c}").alias(c)
+            for c in keyed.columns
+            if c not in existing.columns
+        ],
+    )
+    inserts = keyed.join(
+        existing.select(RECORD_KEY_COL), on=RECORD_KEY_COL, how="left_anti"
+    )
+    return kept.unionByName(updated, allowMissingColumns=True).unionByName(
+        inserts, allowMissingColumns=True
+    )
 
 
 class NativeTable:
@@ -3522,17 +3568,10 @@ class NativeTable:
         out = out.sortWithinPartitions(*self.record_keys)
         files = self._write_files(out, cid)
         prev = self.timeline.latest()
-        prev_files = prev.files if prev else []
-        prev_deltas = prev.deltas if prev else []
-        new_key_stats, new_col_stats = self._collect_file_stats(files)
-        key_stats = dict(prev.key_stats) if prev else {}
-        key_stats.update(new_key_stats)
-        col_stats = dict(prev.col_stats) if prev else {}
-        col_stats.update(new_col_stats)
-        return self._commit(
-            cid, "bulk_insert", prev_files + files, prev_deltas,
-            out.schema.json(), dict(extra_stats or {}), key_stats, col_stats,
-        )
+        return self._commit_carried(
+            cid, "bulk_insert", prev, prev.files if prev else [], files,
+            out.schema.json(), dict(extra_stats or {}),
+            deltas=prev.deltas if prev else [])
 
     def insert(self, df: DataFrame) -> Commit | None:
         """Plain append (the reference defines but never routes to this —
@@ -3543,21 +3582,9 @@ class NativeTable:
         out = self._with_meta(df, f"{cid:020d}")
         files = self._write_files(out, cid)
         prev = self.timeline.latest()
-        new_key_stats, new_col_stats = self._collect_file_stats(files)
-        key_stats = dict(prev.key_stats) if prev else {}
-        key_stats.update(new_key_stats)
-        col_stats = dict(prev.col_stats) if prev else {}
-        col_stats.update(new_col_stats)
-        return self._commit(
-            cid,
-            "insert",
-            (prev.files if prev else []) + files,
-            prev.deltas if prev else [],
-            out.schema.json(),
-            {},
-            key_stats,
-            col_stats,
-        )
+        return self._commit_carried(
+            cid, "insert", prev, prev.files if prev else [], files,
+            out.schema.json(), {}, deltas=prev.deltas if prev else [])
 
     def upsert(self, batch: DataFrame, parallelism: int = 0,
                extra_stats: dict | None = None, partial: bool = False) -> Commit | None:
@@ -3577,19 +3604,24 @@ class NativeTable:
         if self.storage_type == "mor":
             # MoR routes still need the explicit take-1 guard (an empty
             # batch must not compact or delta-append); the CoW route's
-            # emptiness probe is folded into _cow_merge's single
+            # emptiness probe is folded into _keyed_rewrite's single
             # count+hull aggregate (_batch_probe)
             if batch.isEmpty():
                 return None
-            if partial:
-                if (self.timeline.latest() or Commit(0, "", [])).deltas:
-                    self.compact()
-                return self._cow_merge(batch, deletes=False,
-                                       parallelism=parallelism,
-                                       extra_stats=extra_stats, partial=True)
-            return self._delta_commit(batch, "delta_upsert", "u", extra_stats)
-        return self._cow_merge(batch, deletes=False, parallelism=parallelism,
-                               extra_stats=extra_stats, partial=partial)
+            if not partial:
+                return self._delta_commit(
+                    batch, "delta_upsert", "u", extra_stats)
+            if (self.timeline.latest() or Commit(0, "", [])).deltas:
+                self.compact()
+        prev = self.timeline.latest()
+        if prev is None:
+            return self.bulk_insert(batch, parallelism, extra_stats)
+        return self._keyed_rewrite(
+            batch, prev, "upsert",
+            _partial_update if partial else
+            lambda kept, existing, keyed: kept.unionByName(
+                keyed, allowMissingColumns=True),
+            parallelism=parallelism, extra_stats=extra_stats)
 
     def _write_tombstones(self, keyed: DataFrame) -> list[str]:
         """Land the delete batch's KEY PROJECTION as parquet under
@@ -3624,8 +3656,16 @@ class NativeTable:
             return self._delta_commit(batch, "delta_delete", "d", extra_stats)
         if self.deletion_vectors:
             return self._dv_delete(batch, extra_stats)
-        return self._cow_merge(batch, deletes=True, parallelism=parallelism,
-                               extra_stats=extra_stats)
+        prev = self.timeline.latest()
+        if prev is None:  # delete against an empty table is a no-op
+            return None
+        # the tombstone write is an extra action over the batch: persist
+        # so its lineage computes once for write + anti-join
+        return self._keyed_rewrite(
+            batch, prev, "delete", lambda kept, existing, keyed: kept,
+            tombstones=lambda keyed: keyed,
+            persist=self.change_feed_deletes,
+            parallelism=parallelism, extra_stats=extra_stats)
 
     def _write_dv_sidecar(self, hits: DataFrame, cid: int) -> list[str]:
         """Land (file, pos) marks as ONE parquet sidecar under
@@ -3705,46 +3745,20 @@ class NativeTable:
         prev = self.timeline.latest()
         if prev is None:
             return None
-        # the probe runs on the raw batch BEFORE the persist below; a
-        # non-deterministic derivation must materialize first or its
-        # pruning decisions can disagree with the persisted frame the
-        # semi-join reads (same guard as _cow_merge)
-        nd_persisted = None
-        if not _plan_is_deterministic(batch):
-            nd_persisted = batch = batch.persist()
-        try:
-            return self._dv_delete_guarded(batch, extra_stats, prev)
-        finally:
-            if nd_persisted is not None:
-                nd_persisted.unpersist()
-
-    def _dv_delete_guarded(self, batch: DataFrame,
-                           extra_stats: dict | None,
-                           prev: "Commit") -> Commit | None:
-        probe = self._batch_probe(batch, want_partitions=True)
-        if probe is not None:
-            n_rows, key_range, touched = probe
-            if n_rows == 0:
+        with ExitStack() as stack:
+            probed = self._guarded_probe(stack, batch)
+            if probed is None:
                 return None
-        else:
-            if batch.isEmpty():
-                return None
-            key_range, touched = None, self._batch_partitions(batch)
-        cid = self.timeline.next_commit_id()
-        keyed = batch.withColumn(
-            RECORD_KEY_COL, record_key_expr(self.record_keys))
-        affected, _ = self._split_files(prev.files, touched)
-        affected, _ = self._prune_by_key_range(
-            affected, prev.key_stats, key_range
-        )
-        # bloom probe + semi-join + tombstones share one materialization
-        # (the emptiness/hull probe above ran pre-persist on the raw batch)
-        persisted = keyed = keyed.persist()
-        try:
-            if self.bloom_index and affected:
-                affected, _ = self._prune_by_bloom(
-                    affected, keyed, prev.key_stats)
-            tombstones = self._write_tombstones(keyed)
+            batch, key_range, touched = probed
+            cid = self.timeline.next_commit_id()
+            keyed = batch.withColumn(
+                RECORD_KEY_COL, record_key_expr(self.record_keys))
+            # bloom probe + semi-join + tombstones share one
+            # materialization
+            keyed, affected, _ = self._prune_ladder(
+                stack, prev, keyed, touched, key_range, persist=True)
+            tombstones = self._drop_on_error(
+                stack, self._write_tombstones(keyed))
             if not affected:
                 # nothing can match: publish the (possibly tombstoned)
                 # no-op delete without touching a data byte
@@ -3770,8 +3784,6 @@ class NativeTable:
                             on=RECORD_KEY_COL, how="left_semi")
             hits = self._subtract_prior_marks(hits, affected, prev.dvs)
             return self._dv_commit(prev, cid, hits, tombstones, extra_stats)
-        finally:
-            persisted.unpersist()
 
     def _subtract_prior_marks(self, hits: DataFrame, affected: list[str],
                               dvs: dict) -> DataFrame:
@@ -3872,19 +3884,12 @@ class NativeTable:
         files = self._write_files(
             df, cid,
             n_files=len(to_purge) if not self.partition_keys else None)
-        key_stats, col_stats = self._collect_file_stats(files)
-        key_stats = {**{f: commit.key_stats[f] for f in carried
-                        if f in commit.key_stats}, **key_stats}
-        col_stats = {**{f: commit.col_stats[f] for f in carried
-                        if f in commit.col_stats}, **col_stats}
-        return self._commit(
-            cid, "purge", carried + files,
-            [dict(d) for d in commit.deltas], commit.schema_json,
+        return self._commit_carried(
+            cid, "purge", commit, carried, files, commit.schema_json,
             {"purged_files": len(to_purge),
              "purged_rows": sum(int(commit.dvs[f]["rows"])
                                 for f in to_purge)},
-            key_stats, col_stats,
-        )
+            deltas=commit.deltas)
 
     def bootstrap(self, src_dir: str | Path, pattern: str = "*.parquet") -> Commit:
         """Metadata-only bootstrap (Hudi's METADATA_ONLY bootstrap mode):
@@ -3983,64 +3988,88 @@ class NativeTable:
         carried: list[str] = []
         prev = self.timeline.latest()
         stats = dict(extra_stats or {})
-        key_stats, col_stats = self._collect_file_stats(files)
         if scope == "partitions" and prev is not None and self.partition_keys:
             touched = self._batch_partitions(df) or set()
             carried = [
                 f for f in prev.files if self._file_partition(f) not in touched
             ]
-            key_stats = {**{f: prev.key_stats[f] for f in carried
-                            if f in prev.key_stats}, **key_stats}
-            col_stats = {**{f: prev.col_stats[f] for f in carried
-                            if f in prev.col_stats}, **col_stats}
             stats["partitions_replaced"] = len(touched)
             stats["files_carried"] = len(carried)
-        return self._commit(
-            cid, "insert_overwrite", carried + files, [], out.schema.json(),
-            stats, key_stats, col_stats,
-        )
+        return self._commit_carried(
+            cid, "insert_overwrite", prev, carried, files, out.schema.json(),
+            stats)
 
-    def _cow_merge(self, batch: DataFrame, deletes: bool, parallelism: int,
-                   extra_stats: dict | None = None,
-                   partial: bool = False) -> "Commit | None":
-        prev = self.timeline.latest()
-        if prev is None:
-            if deletes:  # delete against an empty table is a no-op
+    def _keyed_rewrite(self, batch: DataFrame, prev: "Commit", action: str,
+                       output, tombstones=None, *, persist: bool = False,
+                       prune_values: dict[str, list] | None = None,
+                       parallelism: int = 0,
+                       extra_stats: dict | None = None) -> "Commit | None":
+        """The copy-on-write keyed rewrite behind upsert, partial upsert,
+        delete and merge: probe the batch (``_guarded_probe``), prune
+        the file set (``_prune_ladder``), read the affected files,
+        anti-join them against the batch keys, write ``output(kept,
+        existing, keyed)`` clustered like the files it replaces, and
+        publish with every untouched file carried by reference.
+
+        ``tombstones(keyed)`` returns the frame whose keys the change
+        feed records as deleted (None: none). ``persist`` materializes
+        the keyed batch once for paths that run extra actions over it.
+        Every persist lives on this call's own ``ExitStack``, so a
+        failure at any step releases it, and concurrent calls on one
+        handle never touch each other's frames."""
+        with ExitStack() as stack:
+            probed = self._guarded_probe(stack, batch)
+            if probed is None:
                 return None
-            return self.bulk_insert(batch, parallelism, extra_stats)
+            batch, key_range, touched = probed
+            cid = self.timeline.next_commit_id()
+            keyed = self._with_meta(batch, f"{cid:020d}")
+            keyed = self._precombine_dedup(keyed)
+            read_schema_json, keyed = self._apply_type_widening(prev, keyed)
+            keyed, affected, untouched = self._prune_ladder(
+                stack, prev, keyed, touched, key_range, persist, prune_values)
+            existing = self._read_files(affected, read_schema_json,
+                                        dvs=prev.dvs,
+                                        defaults=prev.column_defaults)
+            if parallelism > 0:
+                existing = existing.repartition(parallelism, RECORD_KEY_COL)
+            kept = existing.join(keyed.select(RECORD_KEY_COL),
+                                 on=RECORD_KEY_COL, how="left_anti")
+            merged = output(kept, existing, keyed)
+            gone = tombstones(keyed) if tombstones else None
+            written = ([] if gone is None else self._drop_on_error(
+                stack, self._write_tombstones(gone)))
+            # the anti-join fronts the record-key column; restore the
+            # stored schema's order (plus evolved columns at the end) so
+            # the schema is stable commit-over-commit — catalog sync's
+            # REFRESH fast path compares column order
+            prev_cols = existing.columns
+            merged = merged.select(
+                *prev_cols, *[c for c in merged.columns if c not in prev_cols])
+            files = self._rewrite_files(merged, cid, affected, prev)
+            return self._commit_carried(
+                cid, action, prev, untouched, files, merged.schema.json(),
+                {"files_rewritten": len(affected),
+                 "files_carried": len(untouched), **(extra_stats or {})},
+                tombstones=written)
+
+    def _guarded_probe(self, stack: ExitStack, batch: DataFrame):
+        """The front every keyed write shares: None for an empty batch,
+        else ``(batch, key_range, touched)`` — the batch materialized on
+        the caller's ``stack`` when its plan is non-deterministic."""
         # the probe, prune decisions, anti-join key set, and write leg
         # each execute the batch lineage; a non-deterministic derivation
         # (rand, monotonically_increasing_id) could prune files whose old
         # rows the re-derived write leg then hits — materialize it ONCE
         # first (Delta MERGE's source materialization). Deterministic
         # batches (the common case) keep the cheap unpersisted passes.
-        nd_persisted = None
         if not _plan_is_deterministic(batch):
-            nd_persisted = batch = batch.persist()
-        try:
-            return self._cow_merge_guarded(
-                batch, deletes, parallelism, extra_stats, partial, prev)
-        finally:
-            # a failing read/join/write must not leave either frame
-            # pinned in executor storage until ContextCleaner GC
-            if self._merge_persisted is not None:
-                self._merge_persisted.unpersist()
-                self._merge_persisted = None
-            if nd_persisted is not None:
-                nd_persisted.unpersist()
-
-    # the batch frame a merge body persisted for its extra actions
-    # (tombstones / bloom probe); owned and released by the caller's
-    # finally so exceptions cannot leak it. Write paths are
-    # single-threaded per table handle (OCC serializes commits).
-    _merge_persisted = None
-
-    def _cow_merge_guarded(self, batch, deletes, parallelism, extra_stats,
-                           partial, prev) -> "Commit | None":
+            batch = batch.persist()
+            stack.callback(batch.unpersist)
         # one narrow aggregate decides emptiness, the key hull AND the
-        # touched partitions — the callers' former isEmpty probe (a
-        # take-1 that still ran the batch derivation) and the separate
-        # partition distinct-collect are folded in; see _batch_probe
+        # touched partitions — a separate isEmpty probe (a take-1 that
+        # still runs the batch derivation) and the partition
+        # distinct-collect are folded in; see _batch_probe
         probe = self._batch_probe(
             batch, want_partitions=not self.global_index)
         if probe is not None:
@@ -4053,131 +4082,100 @@ class NativeTable:
             key_range = None
             touched = (None if self.global_index
                        else self._batch_partitions(batch))
-        cid = self.timeline.next_commit_id()
-        keyed = self._with_meta(batch, f"{cid:020d}")
-        keyed = self._precombine_dedup(keyed)
-        read_schema_json, keyed = self._apply_type_widening(prev, keyed)
+        return batch, key_range, touched
 
-        # two-level pruning: partition dirs first, then per-file key ranges
-        # (the record-level index) — a narrow-key upsert on an unpartitioned
-        # table rewrites only the files whose key interval it can hit.
-        # A GLOBAL index skips the partition level (a key may live in ANY
-        # partition; relocation must find and remove the old copy) and
-        # lets the key-range/bloom indexes bound the affected set. The
-        # partition probe ran on the RAW batch (pre-precombine-dedup):
-        # a dropped duplicate may live in a different partition than its
-        # winner, and that partition's old copy must still be rewritten.
+    def _prune_ladder(self, stack: ExitStack, prev: "Commit",
+                      keyed: DataFrame, touched, key_range, persist: bool,
+                      prune_values: dict[str, list] | None = None):
+        """(keyed, affected, untouched): the keyed writes' file pruning,
+        cheapest level first — partition dirs, per-file key ranges (the
+        record-level index: a narrow-key upsert on an unpartitioned
+        table rewrites only the files its key interval can hit), the
+        caller's value ladder (``merge(prune_values=)``), then bloom
+        membership. A GLOBAL index skips the partition level (a key may
+        live in ANY partition; relocation must find and remove the old
+        copy). The partition probe ran on the RAW batch (pre-precombine-
+        dedup): a dropped duplicate may live in a different partition
+        than its winner, and that partition's old copy must still be
+        rewritten.
+
+        ``keyed`` comes back persisted (on ``stack``) when ``persist``
+        asks for it or the bloom pass runs — probing is an extra action
+        over the batch."""
         affected, untouched = self._split_files(prev.files, touched)
         affected, skipped = self._prune_by_key_range(
-            affected, prev.key_stats, key_range
-        )
+            affected, prev.key_stats, key_range)
         untouched = untouched + skipped
-        persisted = None
-        if deletes and self.change_feed_deletes:
-            # the tombstone write is an extra action over the batch:
-            # persist so its lineage computes once for write + anti-join
-            # (registered with the caller's finally — see _cow_merge)
-            self._merge_persisted = persisted = keyed = keyed.persist()
+        if prune_values and affected:
+            vkept = self._prune_candidates_by_values(
+                affected, prev.col_stats, prune_values)
+            untouched = untouched + [f for f in affected
+                                     if f not in set(vkept)]
+            affected = vkept
+        if persist or (self.bloom_index and affected):
+            keyed = keyed.persist()
+            stack.callback(keyed.unpersist)
         if self.bloom_index and affected:
             # membership pass behind the interval pass: catches scattered
             # batches whose [lo, hi] hull spans files none of their keys
-            # hit. Probing is an extra action over the batch, so persist
-            # it for the merge's lifetime (released by the caller).
-            if persisted is None:
-                self._merge_persisted = persisted = keyed = keyed.persist()
-            affected, bloom_skipped = self._prune_by_bloom(
-                affected, keyed, prev.key_stats
-            )
-            untouched = untouched + bloom_skipped
-        existing = self._read_files(affected, read_schema_json, dvs=prev.dvs,
-                                    defaults=prev.column_defaults)
+            # hit
+            affected, skipped = self._prune_by_bloom(
+                affected, keyed, prev.key_stats)
+            untouched = untouched + skipped
+        return keyed, affected, untouched
 
-        keys_only = keyed.select(RECORD_KEY_COL)
-        if parallelism > 0:
-            existing = existing.repartition(parallelism, RECORD_KEY_COL)
-        kept = existing.join(keys_only, on=RECORD_KEY_COL, how="left_anti")
-        tombstones: list[str] = []
-        if deletes:
-            merged = kept
-            tombstones = self._write_tombstones(keyed)
-        elif partial:
-            # field-level merge: per matched key, non-null incoming fields
-            # overwrite, everything else carries forward. One extra join
-            # over the SAME pruned affected set (the anti-join's sibling) —
-            # the rewrite scope is unchanged.
-            batch_cols = set(keyed.columns)
-            old, new = existing.alias("_pm_o"), keyed.alias("_pm_n")
-            updated = old.join(
-                new,
-                F.col(f"_pm_o.{RECORD_KEY_COL}") == F.col(f"_pm_n.{RECORD_KEY_COL}"),
-                "inner",
-            ).select(
-                *[
-                    (
-                        F.col(f"_pm_n.{c}")
-                        if c in (COMMIT_TIME_COL, DELTA_OP_COL)
-                        else F.coalesce(F.col(f"_pm_n.{c}"), F.col(f"_pm_o.{c}"))
-                        if c in batch_cols and c not in META_COLS
-                        else F.col(f"_pm_o.{c}")
-                    ).alias(c)
-                    for c in existing.columns
-                ],
-                # evolved columns new to this batch ride along unchanged
-                *[
-                    F.col(f"_pm_n.{c}").alias(c)
-                    for c in keyed.columns
-                    if c not in existing.columns
-                ],
-            )
-            inserts = keyed.join(
-                existing.select(RECORD_KEY_COL), on=RECORD_KEY_COL, how="left_anti"
-            )
-            merged = kept.unionByName(updated, allowMissingColumns=True).unionByName(
-                inserts, allowMissingColumns=True
-            )
-        else:
-            merged = kept.unionByName(keyed, allowMissingColumns=True)
-        # the anti-join fronts the record-key column; restore the stored
-        # schema's order (plus evolved columns at the end) so the schema is
-        # stable commit-over-commit — catalog sync's REFRESH fast path
-        # compares column order
-        prev_cols = [c for c in existing.columns]
-        merged = merged.select(
-            *prev_cols, *[c for c in merged.columns if c not in prev_cols]
-        )
+    def _drop_on_error(self, stack: ExitStack, rels: list[str]) -> list[str]:
+        """Register removal of the tombstone files ``rels`` for when the
+        call fails before a manifest references them. Tombstone paths
+        carry no commit id, so ``vacuum`` cannot tell a failed writer's
+        from an in-flight one's — the writer cleans up after itself."""
+        import shutil
 
+        def drop(exc_type, *_):
+            if exc_type is None:
+                return
+            head = self.timeline.latest()
+            if head and set(rels) & set(head.tombstones):
+                return  # published after all (a failure past publish)
+            for d in {Path(r).parent for r in rels}:
+                shutil.rmtree(self.root / d, ignore_errors=True)
+
+        if rels:
+            stack.push(drop)
+        return rels
+
+    def _rewrite_files(self, df: DataFrame, cid: int, affected: list[str],
+                       prev: "Commit") -> list[str]:
+        """Write the rewrite of ``affected``: about one output file per
+        rewritten file, range-clustered on the affected files' own key
+        boundaries where the layout allows (``_merge_boundaries``)."""
         boundaries = self._merge_boundaries(affected, prev)
         with self._range_write_cache(
-                merged, affected if boundaries is None else [],
-                prev) as merged:
-            files = self._write_files(
-                merged, cid,
+                df, affected if boundaries is None else [], prev) as df:
+            return self._write_files(
+                df, cid,
                 n_files=(max(1, len(affected))
                          if not self.partition_keys else None),
                 boundaries=boundaries,
             )
-        if persisted is not None:
-            # eager release on the success path; the caller's finally is
-            # the exception backstop
-            persisted.unpersist()
-            self._merge_persisted = None
-        new_key_stats, new_col_stats = self._collect_file_stats(files)
-        key_stats = {f: prev.key_stats[f] for f in untouched if f in prev.key_stats}
-        key_stats.update(new_key_stats)
-        col_stats = {f: prev.col_stats[f] for f in untouched if f in prev.col_stats}
-        col_stats.update(new_col_stats)
+
+    def _commit_carried(self, cid: int, action: str, prev: "Commit | None",
+                        carried: list[str], files: list[str],
+                        schema_json: str, stats: dict,
+                        deltas: list[dict] | None = None,
+                        tombstones: list[str] | None = None) -> Commit:
+        """Publish ``carried`` (by reference, from ``prev``) plus the
+        newly written ``files``: the new files' footer stats join the
+        carried files' key and column stats. ``prev`` may be None only
+        when nothing is carried."""
+        key_stats, col_stats = self._collect_file_stats(files)
+        key_stats = {**{f: prev.key_stats[f] for f in carried
+                        if f in prev.key_stats}, **key_stats}
+        col_stats = {**{f: prev.col_stats[f] for f in carried
+                        if f in prev.col_stats}, **col_stats}
         return self._commit(
-            cid,
-            "delete" if deletes else "upsert",
-            untouched + files,
-            [],
-            merged.schema.json(),
-            {"files_rewritten": len(affected), "files_carried": len(untouched),
-             **(extra_stats or {})},
-            key_stats,
-            col_stats,
-            tombstones=tombstones,
-        )
+            cid, action, carried + files, [dict(d) for d in deltas or []],
+            schema_json, stats, key_stats, col_stats, tombstones=tombstones)
 
     def delete_where(self, cond, prune: dict | None = None,
                      extra_stats: dict | None = None) -> Commit:
@@ -4212,34 +4210,19 @@ class NativeTable:
             untouched = [f for f in prev.files if f not in set(affected)]
         existing = self._read_files(affected, prev.schema_json, dvs=prev.dvs,
                                     defaults=prev.column_defaults)
-        kept = existing.filter(~F.coalesce(cond, F.lit(False)))
-        # change feed: the dropped rows' keys — one extra filter pass over
-        # the SAME pruned affected set, nothing table-wide
-        tombstones = self._write_tombstones(
-            existing.filter(F.coalesce(cond, F.lit(False))))
-        boundaries = self._merge_boundaries(affected, prev)
-        with self._range_write_cache(
-                kept, affected if boundaries is None else [],
-                prev) as kept:
-            files = self._write_files(
-                kept, cid,
-                n_files=(max(1, len(affected))
-                         if not self.partition_keys else None),
-                boundaries=boundaries,
-            )
-        new_key_stats, new_col_stats = self._collect_file_stats(files)
-        key_stats = {f: prev.key_stats[f] for f in untouched if f in prev.key_stats}
-        key_stats.update(new_key_stats)
-        col_stats = {f: prev.col_stats[f] for f in untouched if f in prev.col_stats}
-        col_stats.update(new_col_stats)
-        return self._commit(
-            cid, "delete", untouched + files, [], prev.schema_json,
-            {"files_rewritten": len(affected), "files_carried": len(untouched),
-             **(extra_stats or {})},
-            key_stats,
-            col_stats,
-            tombstones=tombstones,
-        )
+        with ExitStack() as stack:
+            # change feed: the dropped rows' keys — one extra filter pass
+            # over the SAME pruned affected set, nothing table-wide
+            tombstones = self._drop_on_error(stack, self._write_tombstones(
+                existing.filter(F.coalesce(cond, F.lit(False)))))
+            files = self._rewrite_files(
+                existing.filter(~F.coalesce(cond, F.lit(False))),
+                cid, affected, prev)
+            return self._commit_carried(
+                cid, "delete", prev, untouched, files, prev.schema_json,
+                {"files_rewritten": len(affected),
+                 "files_carried": len(untouched), **(extra_stats or {})},
+                tombstones=tombstones)
 
     def touch(self, extra_stats: dict | None = None,
               action: str = "touch") -> Commit:
@@ -4307,116 +4290,26 @@ class NativeTable:
         if prev is None:
             keep = batch.filter(F.col(op_col) != "D").drop(op_col, *drop_cols)
             return self.bulk_insert(keep, parallelism, extra_stats)
-        # non-deterministic batch derivations materialize once, and a
-        # failing read/join/write cannot leak the persisted frame — the
-        # same guard _cow_merge carries (see there for the rationale)
-        nd_persisted = None
-        if not _plan_is_deterministic(batch):
-            nd_persisted = batch = batch.persist()
-        try:
-            return self._merge_guarded(
-                batch, op_col, drop_cols, parallelism, extra_stats,
-                prune_values, prev)
-        finally:
-            if self._merge_persisted is not None:
-                self._merge_persisted.unpersist()
-                self._merge_persisted = None
-            if nd_persisted is not None:
-                nd_persisted.unpersist()
 
-    def _merge_guarded(self, batch: DataFrame, op_col: str,
-                       drop_cols: list[str], parallelism: int,
-                       extra_stats: dict | None,
-                       prune_values: dict[str, list] | None,
-                       prev: "Commit") -> Commit | None:
-        # emptiness + key hull + touched partitions in one aggregate —
-        # see _batch_probe
-        probe = self._batch_probe(
-            batch, want_partitions=not self.global_index)
-        if probe is not None:
-            n_rows, key_range, touched = probe
-            if n_rows == 0:
-                return None
-        else:
-            if batch.isEmpty():
-                return None
-            key_range = None
-            touched = (None if self.global_index
-                       else self._batch_partitions(batch))
-        cid = self.timeline.next_commit_id()
-        keyed = self._with_meta(batch, f"{cid:020d}")
-        keyed = self._precombine_dedup(keyed)
-        read_schema_json, keyed = self._apply_type_widening(prev, keyed)
+        def upserted(kept, existing, keyed):
+            return kept.unionByName(
+                keyed.filter(F.col(op_col) != "D").drop(op_col, *drop_cols),
+                allowMissingColumns=True)
 
-        affected, untouched = self._split_files(prev.files, touched)
-        affected, skipped = self._prune_by_key_range(
-            affected, prev.key_stats, key_range
-        )
-        untouched = untouched + skipped
-        if prune_values and affected:
-            vkept = self._prune_candidates_by_values(
-                affected, prev.col_stats, prune_values)
-            untouched = untouched + [f for f in affected
-                                     if f not in set(vkept)]
-            affected = vkept
-        persisted = None
+        def deleted(keyed):
+            dels = keyed.filter(F.col(op_col) == "D")
+            return (dels if self.change_feed_deletes and not dels.isEmpty()
+                    else None)
+
         # the tombstone pass adds two extra actions over the batch
         # (emptiness probe + key write); persist so the batch lineage —
         # often a window over the raw feed — computes ONCE for all of
         # probe, tombstone write, anti-join, and union (the r8 bench
         # caught the unpersisted version re-deriving it per action)
-        if self.change_feed_deletes:
-            self._merge_persisted = persisted = keyed = keyed.persist()
-        if self.bloom_index and affected:
-            if persisted is None:
-                self._merge_persisted = persisted = keyed = keyed.persist()
-            affected, bloom_skipped = self._prune_by_bloom(
-                affected, keyed, prev.key_stats
-            )
-            untouched = untouched + bloom_skipped
-        existing = self._read_files(affected, read_schema_json, dvs=prev.dvs,
-                                    defaults=prev.column_defaults)
-        if parallelism > 0:
-            existing = existing.repartition(parallelism, RECORD_KEY_COL)
-
-        kept = existing.join(
-            keyed.select(RECORD_KEY_COL), on=RECORD_KEY_COL, how="left_anti"
-        )
-        dels = keyed.filter(F.col(op_col) == "D")
-        tombstones = ([] if not self.change_feed_deletes or dels.isEmpty()
-                      else self._write_tombstones(dels))
-        incoming = keyed.filter(F.col(op_col) != "D").drop(op_col, *drop_cols)
-        merged = kept.unionByName(incoming, allowMissingColumns=True)
-        prev_cols = [c for c in existing.columns]
-        merged = merged.select(
-            *prev_cols, *[c for c in merged.columns if c not in prev_cols]
-        )
-        boundaries = self._merge_boundaries(affected, prev)
-        with self._range_write_cache(
-                merged, affected if boundaries is None else [],
-                prev) as merged:
-            files = self._write_files(
-                merged, cid,
-                n_files=(max(1, len(affected))
-                         if not self.partition_keys else None),
-                boundaries=boundaries,
-            )
-        if persisted is not None:
-            persisted.unpersist()
-            self._merge_persisted = None
-        new_key_stats, new_col_stats = self._collect_file_stats(files)
-        key_stats = {f: prev.key_stats[f] for f in untouched if f in prev.key_stats}
-        key_stats.update(new_key_stats)
-        col_stats = {f: prev.col_stats[f] for f in untouched if f in prev.col_stats}
-        col_stats.update(new_col_stats)
-        return self._commit(
-            cid, "merge", untouched + files, [], merged.schema.json(),
-            {"files_rewritten": len(affected), "files_carried": len(untouched),
-             **(extra_stats or {})},
-            key_stats,
-            col_stats,
-            tombstones=tombstones,
-        )
+        return self._keyed_rewrite(
+            batch, prev, "merge", upserted, deleted,
+            persist=self.change_feed_deletes, prune_values=prune_values,
+            parallelism=parallelism, extra_stats=extra_stats)
 
     def merge_into(
         self,
@@ -4845,18 +4738,11 @@ class NativeTable:
             pack_bytes = sum(sizes[f] for f in to_pack)
             width = max(1, -(-pack_bytes // target_bytes))  # ceil
             files = self._write_files(df, cid, n_files=width)
-        key_stats, col_stats = self._collect_file_stats(files)
-        key_stats = {**{f: commit.key_stats[f] for f in carried
-                        if f in commit.key_stats}, **key_stats}
-        col_stats = {**{f: commit.col_stats[f] for f in carried
-                        if f in commit.col_stats}, **col_stats}
-        return self._commit(
-            cid, "bin_pack", carried + files,
-            [dict(d) for d in commit.deltas], commit.schema_json,
+        return self._commit_carried(
+            cid, "bin_pack", commit, carried, files, commit.schema_json,
             {"packed_files": len(to_pack), "new_files": len(files),
              "carried_files": len(carried)},
-            key_stats, col_stats,
-        )
+            deltas=commit.deltas)
 
     def rewrite_data_files(self, prune: dict | None = None,
                            only_legacy_spec: bool = False,
@@ -4914,18 +4800,11 @@ class NativeTable:
                               defaults=commit.column_defaults)
         cid = self.timeline.next_commit_id()
         files = self._write_files(df, cid)
-        key_stats, col_stats = self._collect_file_stats(files)
-        key_stats = {**{f: commit.key_stats[f] for f in carried
-                        if f in commit.key_stats}, **key_stats}
-        col_stats = {**{f: commit.col_stats[f] for f in carried
-                        if f in commit.col_stats}, **col_stats}
-        return self._commit(
-            cid, "rewrite_files", carried + files,
-            [dict(d) for d in commit.deltas], commit.schema_json,
+        return self._commit_carried(
+            cid, "rewrite_files", commit, carried, files, commit.schema_json,
             {"rewritten_files": len(selected), "new_files": len(files),
              "carried_files": len(carried)},
-            key_stats, col_stats,
-        )
+            deltas=commit.deltas)
 
     # --------------------------------------------- schema evolution (DDL)
 

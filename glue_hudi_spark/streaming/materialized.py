@@ -343,13 +343,15 @@ class MaterializedJoin:
         batch = batch.localCheckpoint(eager=False)
         # one atomic commit applies the window's upserts AND deletes,
         # with the watermarks in its stats
-        committed = self.state.merge(
-            batch, op_col="_mj_op", extra_stats=marker,
-            prune_values=({self.join_col: sorted(prune_keys)}
-                          if prune_keys else None))
-        release_checkpoint(batch)
-        if ff_persisted is not None:
-            ff_persisted.unpersist()
+        try:
+            committed = self.state.merge(
+                batch, op_col="_mj_op", extra_stats=marker,
+                prune_values=({self.join_col: sorted(prune_keys)}
+                              if prune_keys else None))
+        finally:
+            release_checkpoint(batch)
+            if ff_persisted is not None:
+                ff_persisted.unpersist()
         if committed is None:
             # empty window (heads moved without row changes, or dim
             # churn touching no fact): advance the watermark with a
@@ -536,9 +538,11 @@ class MaterializedJoinAgg:
         batch = merged.withColumn(
             "_ja_op", F.when(F.col("cnt") > 0, F.lit("U"))
             .otherwise(F.lit("D"))).localCheckpoint(eager=False)
-        committed = self.state.merge(batch, op_col="_ja_op",
-                                     extra_stats=marker)
-        release_checkpoint(batch)
+        try:
+            committed = self.state.merge(batch, op_col="_ja_op",
+                                         extra_stats=marker)
+        finally:
+            release_checkpoint(batch)
         if committed is None:
             # empty window: metadata-only watermark commit keeps the
             # converged cadence O(1)

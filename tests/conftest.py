@@ -56,3 +56,24 @@ def spark():
 @pytest.fixture()
 def tmp_table_dir(tmp_path):
     return tmp_path / "curated" / "db" / "schema" / "tbl"
+
+
+@pytest.fixture()
+def persistent_rdds(spark):
+    """Count of persisted RDDs, read once unpersists issued without
+    blocking have landed (polls until two reads 0.1 s apart agree)."""
+    import time
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def count() -> int:
+        n = jsc.getPersistentRDDs().size()
+        for _ in range(20):
+            time.sleep(0.1)
+            m = jsc.getPersistentRDDs().size()
+            if m == n:
+                return m
+            n = m
+        return n
+
+    return count

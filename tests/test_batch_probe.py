@@ -153,6 +153,10 @@ def test_plan_determinism_detection(spark):
     assert not _plan_is_deterministic(
         base.withColumn("f", F.input_file_name())
         .withColumn("r", F.rand()))
+    # a node non-deterministic in its own right stays a culprit even
+    # when its children are non-deterministic too
+    assert not _plan_is_deterministic(
+        base.withColumn("f", F.shuffle(F.array(F.input_file_name()))))
 
 
 def test_nondeterministic_batch_merges_consistently(spark, tmp_table_dir):

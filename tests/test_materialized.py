@@ -3,6 +3,8 @@ after every commit; idempotent refresh; atomic overwrite semantics."""
 
 from __future__ import annotations
 
+import pytest
+
 from glue_hudi_spark.operators import ivm
 from glue_hudi_spark.storage.native import NativeTable
 from glue_hudi_spark.streaming import MaterializedAgg
@@ -628,3 +630,27 @@ def test_join_agg_random_churn_property(spark, tmp_path, seed):
         assert ja.refresh() is not None
         assert _ja_state(ja) == _ja_recompute(fact, dim), \
             f"seed {seed} wave {wave} diverged"
+
+
+@pytest.mark.parametrize("kind", ["join", "join_agg"])
+def test_failed_state_merge_releases_refresh_storage(
+        spark, tmp_path, monkeypatch, persistent_rdds, kind):
+    """A refresh whose state merge fails (OCC conflict, write error)
+    must still release the window's batch checkpoint and the persisted
+    fact feed — not leave them for ContextCleaner GC."""
+    if kind == "join":
+        fact, _, view = _mk_clustered_pair(spark, tmp_path)
+    else:
+        fact, _, view = _mk_ja(spark, tmp_path)
+    view.refresh()
+    fact.upsert(spark.createDataFrame(
+        [(200, 1, 9.0, 1)], "oid long, ckey long, amt double, seq int"))
+    before = persistent_rdds()
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected state-merge failure")
+
+    monkeypatch.setattr(view.state, "merge", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        view.refresh()
+    assert persistent_rdds() <= before

@@ -1186,3 +1186,60 @@ def test_rewrite_persist_knob_on_path(spark, tmp_table_dir):
     # cache released after the write (unpersist ran; other fixtures may
     # hold their own caches — compare against the entry count)
     assert jsc.getPersistentRDDs().size() <= cached_before
+
+
+def _shape_upsert(spark, t):
+    return t.upsert(_rows(spark, [dict(id=3, v="new", seq=2, pt="a")]))
+
+
+def _shape_partial(spark, t):
+    return t.upsert(spark.createDataFrame(
+        [(3, None, 2, "a")], "id bigint, v string, seq bigint, pt string"),
+        partial=True)
+
+
+def _shape_delete(spark, t):
+    return t.delete(_rows(spark, [dict(id=3, v="", seq=2, pt="a")]))
+
+
+def _shape_merge(spark, t):
+    return t.merge(_rows(spark, [dict(id=3, v="upd", seq=2, pt="a", op="U"),
+                                 dict(id=4, v="", seq=2, pt="a", op="D")]))
+
+
+def _shape_delete_where(spark, t):
+    return t.delete_where(F.col("id") == 3, prune={"id": (3, 3)})
+
+
+def _shape_dv_miss(spark, t):
+    # a partition no file lives in: nothing is affected, no file is read
+    return t.delete(_rows(spark, [dict(id=99, v="", seq=2, pt="c")]))
+
+
+@pytest.mark.parametrize("dv, write, shape", [
+    # (action, files_rewritten, files_carried, tombstones?, dv_rows_marked)
+    (False, _shape_upsert, ("upsert", 1, 1, False, None)),
+    (False, _shape_partial, ("upsert", 1, 1, False, None)),
+    (False, _shape_delete, ("delete", 1, 1, True, None)),
+    (False, _shape_merge, ("merge", 1, 1, True, None)),
+    (False, _shape_delete_where, ("delete", 1, 1, True, None)),
+    (True, _shape_delete, ("delete", 0, 2, True, 1)),
+    (True, _shape_dv_miss, ("delete", 0, None, True, 0)),
+], ids=["upsert", "partial", "delete", "merge", "delete_where",
+        "dv_delete", "dv_delete_miss"])
+def test_commit_shape_per_write_path(spark, tmp_path, dv, write, shape):
+    """The manifest each keyed write path publishes: action, rewrite and
+    carry counts, whether delete keys reached the change feed, and the
+    DV mark count. Two partitions of one file each; every batch
+    touches partition ``a`` only."""
+    t = _mk(spark, tmp_path / "t", files_per_partition=1, stats_cols=["id"],
+            change_feed_deletes=True, deletion_vectors=dv)
+    t.bulk_insert(_rows(spark, [
+        dict(id=i, v=f"v{i}", seq=1, pt="a" if i < 10 else "b")
+        for i in range(20)]))
+    assert len(t.timeline.latest().files) == 2
+    c = write(spark, t)
+    assert (c.action, c.stats.get("files_rewritten"),
+            c.stats.get("files_carried"), bool(c.tombstones),
+            c.stats.get("dv_rows_marked")) == shape
+    assert t.validate()["ok"]
