@@ -37,8 +37,10 @@ def _sql_in_literal(v) -> str | None:
         return "true" if v else "false"
     if isinstance(v, int):
         # py4j ships int32-sized ints as INT and the rest as BIGINT;
-        # the SQL parser types bare integer literals identically
-        if -(1 << 63) <= v < (1 << 63):
+        # the SQL parser types bare integer literals identically — except
+        # Long.MIN_VALUE, whose digits overflow BIGINT before the unary
+        # minus applies and parse as a DECIMAL (widening the whole list)
+        if -(1 << 63) < v < (1 << 63):
             return str(v)
         return None
     if isinstance(v, float):
@@ -61,7 +63,10 @@ def in_values(col: str | Column, values) -> Column:
     lists; exact ``isin`` semantics (falls back to it whenever a value
     has no provably identical SQL rendering, or the list is small)."""
     vals = list(values)
-    if len(vals) >= _SQL_TEXT_MIN and isinstance(col, str):
+    # a dotted name is a nested-field path to F.col; the SQL text would
+    # quote it whole as one (missing) column, so leave it to isin
+    if len(vals) >= _SQL_TEXT_MIN and isinstance(col, str) \
+            and "." not in col:
         lits = [_sql_in_literal(v) for v in vals]
         if all(lit is not None for lit in lits):
             name = "`" + col.replace("`", "``") + "`"

@@ -18,21 +18,19 @@ Scale shape:
   columns. All filters are also RETURNED to Spark (partial pushdown):
   file-level stats pruning is conservative, so Spark re-evaluates —
   correctness never depends on the stats.
-* The stream has TWO tiers sharing one offset contract (offsets are
-  commit ids, each micro-batch is the rows newer than the last offset —
-  CoW incremental-query semantics, same contract as
-  ``NativeTable.read_incremental``). The DEFAULT is the partition-based
-  ``GhsChangeFeedPartitionedStreamReader``: the driver plans one
-  ``InputPartition`` per changed file from the manifest and every
-  executor task reads its own file via pyarrow — row bytes never pass
-  through the driver, so replication can tail high-churn tables at
-  cluster bandwidth. ``option("simpleStream", "true")`` selects the
-  legacy ``SimpleDataSourceStreamReader`` (driver-side prefetch/cache)
-  instead. MoR tables stream WITHOUT compacting on both tiers: a
-  pending delta file holds exactly one commit's precombine-deduped,
-  stamped changes — it IS that commit's change set (delete markers flow
-  only with ``emitDeletes``). Replay after a crash re-plans the same
-  range deterministically from the immutable manifests.
+* The stream (``GhsChangeFeedPartitionedStreamReader``) uses the same
+  offset contract as ``NativeTable.read_incremental``: offsets are
+  commit ids, and each micro-batch is the rows newer than the last
+  offset (CoW incremental-query semantics). The driver plans one
+  ``InputPartition`` per changed file from the manifest (``change_range``
+  is the rule) and every executor task reads its own file via pyarrow —
+  row bytes never pass through the driver. MoR tables stream WITHOUT
+  compacting: a pending delta file holds exactly one commit's
+  precombine-deduped, stamped changes — it IS that commit's change set
+  (delete markers flow only with ``emitDeletes``). Replay after a crash
+  re-plans the same range deterministically from the immutable
+  manifests. ``streaming.replicate`` drains the same ``change_range``
+  as a native batch DataFrame instead of through this reader.
 
 BATCH reads of MoR tables with UNCOMPACTED deltas are rejected (a
 snapshot needs the engine's precombine merge; compact first, or read
@@ -45,6 +43,7 @@ from __future__ import annotations
 
 import json
 from pathlib import Path
+from typing import NamedTuple
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -56,7 +55,6 @@ from pyspark.sql.datasource import (
     InputPartition,
     LessThan,
     LessThanOrEqual,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StructType
 
@@ -342,149 +340,53 @@ def _prune_by_stats(files, col_stats, prune):
     return kept
 
 
-class GhsChangeFeedStreamReader(SimpleDataSourceStreamReader):
-    """Offsets are commit ids; each batch = rows stamped by commits in
-    (start, latest] — the CoW incremental query as a streaming source.
+class ChangeRange(NamedTuple):
+    """What changed in a commit range ``(s, e]`` (see ``change_range``)."""
 
-    With ``option("emitDeletes", "true")`` (requires ``withMeta``) the
-    batch ALSO carries one row per key deleted by commits in the range,
-    read from the manifests' tombstone files (``_changes/``): key
-    columns populated, ``_ghs_delta_op = 'd'``, ``_ghs_commit_time`` =
-    the deleting commit's token, everything else NULL — a downstream
-    replica resolves per key by max commit time and applies deletes
-    in-stream, no reconciliation scan. Deletes are retention-bounded
-    like any CDC log: a range commit whose manifest was cleaned raises
-    (its tombstones are unrecoverable) — seed long-lived replicas from
-    a snapshot and ``startingCommit`` at the seed, per the replication
-    module's 100-TB pattern."""
+    commit: object  # the end commit e: its schema, DVs and defaults apply
+    files: list  # data-file rels that can hold a row stamped in (s, e]
+    tombstones: list  # (deleting commit's time token, tombstone rel)
 
-    def __init__(self, options, schema: StructType):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("ghs_table: option('path') is required")
-        # tail a named branch's change feed instead of main's — the
-        # staging-pipeline pattern: consumers validate a branch's stream
-        # before it fast-forwards
-        self.branch = options.get("branch")
-        self.start = int(options.get("startingcommit", 0))
-        self.columns = [f.name for f in schema.fields]
-        self.emit_deletes = (
-            str(options.get("emitdeletes", "")).lower() == "true")
-        if self.emit_deletes and "_ghs_delta_op" not in self.columns:
-            raise ValueError(
-                "ghs_table stream: emitDeletes requires "
-                "option('withMeta', 'true') — delete rows are "
-                "distinguished by _ghs_delta_op = 'd'")
 
-    def initialOffset(self):
-        return {"commit_id": self.start}
+def change_range(tl, s: int, e: int, tombstones: bool) -> ChangeRange:
+    """The change set of commits ``(s, e]`` on timeline ``tl`` — the one
+    planning rule behind the ``ghs_table`` stream and the replica drain
+    of ``streaming.replicate``.
 
-    def _rows_between(self, start_id: int, end_commit):
-        """Version rows of commits in (start, end]: base-file rows with a
-        newer stamp, PLUS pending MoR delta rows (a delta file holds
-        exactly one commit's changes, already precombine-deduped and
-        stamped — it IS the change feed for that commit; compaction folds
-        deltas into base files with stamps preserved, so a row is never
-        served twice). MoR delete markers ('d' rows) emit only with
-        emitDeletes; without it they are skipped — CoW incremental
-        semantics, deletes not surfaced."""
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
+    * Base files of commit ``e`` whose directory commit is > ``s``: a
+      file's dir commit upper-bounds its row stamps (carried rows keep
+      older stamps), so files of commits ≤ ``s`` cannot hold a row the
+      reader's ``stamp > s`` filter keeps — planning is O(files written
+      in the window), never the live file set.
+    * Pending MoR delta files of commits > ``s``, delete markers
+      included (a delta file IS one commit's change set).
+    * With ``tombstones``, the ``_changes/`` key files of every commit
+      in ``s+1..e``. Deletes are retention-bounded like any CDC log: a
+      range commit whose manifest was cleaned raises (its tombstones
+      are unrecoverable) instead of silently dropping deletes."""
+    from glue_hudi_spark.storage.native import file_dir_commit
 
-        from glue_hudi_spark.storage.native import file_dir_commit
-
-        token = f"{start_id:020d}"
-        out = []
-        m = end_commit.column_mapping
-        cols = list(dict.fromkeys(
-            [*self.columns, "_ghs_commit_time", "_ghs_delta_op"]))
-        phys = [m.get(c, c) for c in cols]
-        delta_files = [f for d in end_commit.deltas
-                       if d["commit_id"] > start_id for f in d["files"]]
-        # a file's dir commit id upper-bounds its row stamps (carried
-        # rows keep OLDER stamps) — files of commits ≤ start can't hold
-        # a row the stamp filter keeps, so each micro-batch reads
-        # O(files written in the window), never the live file set
-        live = [f for f in end_commit.files
-                if file_dir_commit(f) > start_id]
-        for rel in [*live, *delta_files]:
-            fpath = str(Path(self.path) / rel)
-            # a delete-marker delta file carries only the delete batch's
-            # columns — read what the file has, null-fill the rest
-            avail = set(pq.read_schema(fpath).names)
-            have = [(c, p) for c, p in zip(cols, phys) if p in avail]
-            fills = _default_fills(end_commit, rel, cols, phys)
-            t = pq.read_table(fpath, columns=[p for _, p in have])
-            dv_rels = end_commit.dvs.get(rel, {}).get("files", ())
-            if dv_rels:
-                # rows DV-deleted within the window must not re-surface
-                # as inserts (a rewrite-delete would have removed them
-                # from the file; position marks do it here)
-                t = _drop_dv_positions(t, self.path, rel, dv_rels)
-            t = t.rename_columns([c for c, _ in have])
-            t = t.filter(pc.greater(t.column("_ghs_commit_time"), token))
-            if not self.emit_deletes:
-                t = t.filter(pc.not_equal(t.column("_ghs_delta_op"), "d"))
-            if t.num_rows:
-                have_names = {c for c, _ in have}
-                out.extend(
-                    tuple(d.get(c) if c in have_names else fills.get(c)
-                          for c in self.columns)
-                    for d in t.to_pylist())
-        return iter(out)
-
-    def _tombstone_rows(self, start_id: int, end_id: int):
-        """Delete rows for commits in (start, end]: key columns from the
-        tombstone parquet, _ghs_delta_op='d', _ghs_commit_time=the
-        deleting commit's token, other columns NULL."""
-        import pyarrow.parquet as pq
-
-        tl = _timeline(self.path, self.branch)
-        out = []
-        for cid in range(start_id + 1, end_id + 1):
+    commit = tl.at(e)
+    if commit is None:
+        raise ValueError(
+            f"ghs_table change feed: commit {e} no longer retained — "
+            "increase retain_commits for streaming")
+    files = ([f for f in commit.files if file_dir_commit(f) > s]
+             + [f for d in commit.deltas if d["commit_id"] > s
+                for f in d["files"]])
+    tombs = []
+    if tombstones:
+        for cid in range(s + 1, e + 1):
             c = tl.at(cid)
             if c is None:
                 raise ValueError(
-                    f"ghs_table stream: commit {cid} no longer retained — "
-                    "its delete tombstones are unrecoverable. Increase "
-                    "retain_commits, or seed the consumer from a snapshot "
-                    "and startingCommit at the seed (see streaming."
-                    "replicate's 100-TB pattern)")
-            for rel in c.tombstones:
-                t = pq.read_table(str(Path(self.path) / rel))
-                for d in t.to_pylist():
-                    out.append(tuple(
-                        c.commit_time if col == "_ghs_commit_time"
-                        else "d" if col == "_ghs_delta_op"
-                        else d.get(col)
-                        for col in self.columns))
-        return out
-
-    def read(self, start):
-        tl = _timeline(self.path, self.branch)
-        latest = tl.latest()
-        if latest is None or latest.commit_id <= start["commit_id"]:
-            return iter([]), start
-        rows = list(self._rows_between(start["commit_id"], latest))
-        if self.emit_deletes:
-            rows.extend(
-                self._tombstone_rows(start["commit_id"], latest.commit_id))
-        return iter(rows), {"commit_id": latest.commit_id}
-
-    def readBetweenOffsets(self, start, end):
-        commit = _timeline(self.path, self.branch).at(end["commit_id"])
-        if commit is None:
-            raise ValueError(
-                f"ghs_table stream replay: commit {end['commit_id']} no "
-                "longer retained — increase retain_commits for streaming")
-        rows = list(self._rows_between(start["commit_id"], commit))
-        if self.emit_deletes:
-            rows.extend(
-                self._tombstone_rows(start["commit_id"], end["commit_id"]))
-        return iter(rows)
-
-    def commit(self, end):
-        pass
+                    f"ghs_table change feed: commit {cid} no longer "
+                    "retained — its delete tombstones are unrecoverable. "
+                    "Increase retain_commits, or seed the consumer from a "
+                    "snapshot and start it at the seed commit (see "
+                    "streaming.replicate's 100-TB pattern)")
+            tombs.extend((c.commit_time, rel) for rel in c.tombstones)
+    return ChangeRange(commit, files, tombs)
 
 
 class _ChangeSlice(InputPartition):
@@ -507,22 +409,25 @@ class _ChangeSlice(InputPartition):
 
 
 class GhsChangeFeedPartitionedStreamReader(DataSourceStreamReader):
-    """Partition-based change-feed reader: the HIGH-THROUGHPUT tier.
+    """The ``readStream.format("ghs_table")`` change-feed source.
 
-    Same offset/replay semantics as ``GhsChangeFeedStreamReader`` (offsets
-    are commit ids, each batch = changes in ``(start, latest]``), but
-    micro-batch planning emits one ``InputPartition`` per changed file —
-    each EXECUTOR task then reads its own parquet file via pyarrow and
-    yields Arrow batches, exactly the batch reader's path. The driver
-    touches only the manifest: ``partitions()`` lists O(files changed in
-    the window) slices (a file dir's commit id upper-bounds its row
-    stamps, so files of commits ≤ start never enter the plan), and row
-    bytes never pass through the driver — this is what lets replication
-    tail a high-churn table at cluster bandwidth instead of the
-    SimpleDataSourceStreamReader driver funnel. Replay after a crash
-    re-plans the same (start, end] from the immutable manifests;
-    retention-cleaned range commits raise rather than silently dropping
-    their tombstones."""
+    Offsets are commit ids; each micro-batch is the rows stamped by
+    commits in ``(start, latest]`` — the CoW incremental query as a
+    streaming source. ``partitions()`` plans ``change_range`` as one
+    slice per changed file (and per tombstone file); each EXECUTOR task
+    reads its own parquet file via pyarrow and yields Arrow batches,
+    exactly the batch reader's path, so row bytes never pass through the
+    driver. Replay after a crash re-plans the same ``(start, end]`` from
+    the immutable manifests.
+
+    With ``option("emitDeletes", "true")`` (requires ``withMeta``) the
+    batch ALSO carries one row per key deleted by commits in the range,
+    read from the manifests' tombstone files (``_changes/``): key
+    columns populated, ``_ghs_delta_op = 'd'``, ``_ghs_commit_time`` =
+    the deleting commit's token, everything else NULL — a downstream
+    consumer resolves per key by max commit time and applies deletes
+    in-stream, no reconciliation scan. Retention-cleaned range commits
+    raise rather than silently dropping their tombstones."""
 
     def __init__(self, options, schema: StructType):
         self.path = options.get("path")
@@ -555,19 +460,13 @@ class GhsChangeFeedPartitionedStreamReader(DataSourceStreamReader):
         return {"commit_id": cid}
 
     def partitions(self, start, end):
-        from glue_hudi_spark.storage.native import file_dir_commit
-
         s, e = start["commit_id"], end["commit_id"]
         if e <= s:
             return []
-        tl = _timeline(self.path, self.branch)
-        commit = tl.at(e)
-        if commit is None:
-            raise ValueError(
-                f"ghs_table stream: commit {e} no longer retained — "
-                "increase retain_commits for streaming")
+        rng = change_range(_timeline(self.path, self.branch), s, e,
+                           self.emit_deletes)
         token = f"{s:020d}"
-        m = commit.column_mapping
+        m = rng.commit.column_mapping
         cols = list(dict.fromkeys(
             [*self.columns, "_ghs_commit_time", "_ghs_delta_op"]))
         cols_phys = [(c, m.get(c, c)) for c in cols]
@@ -575,29 +474,15 @@ class GhsChangeFeedPartitionedStreamReader(DataSourceStreamReader):
         phys = [p for _, p in cols_phys]
         parts = [
             _ChangeSlice(self.path, rel, "file", token, cols_phys,
-                         commit.dvs.get(rel, {}).get("files", ()),
-                         fills=_default_fills(commit, rel, logical, phys))
-            for rel in (
-                [f for f in commit.files if file_dir_commit(f) > s]
-                + [f for d in commit.deltas
-                   if d["commit_id"] > s for f in d["files"]])
-        ]
-        if self.emit_deletes:
-            for cid in range(s + 1, e + 1):
-                c = tl.at(cid)
-                if c is None:
-                    raise ValueError(
-                        f"ghs_table stream: commit {cid} no longer "
-                        "retained — its delete tombstones are "
-                        "unrecoverable. Increase retain_commits, or seed "
-                        "the consumer from a snapshot and startingCommit "
-                        "at the seed (see streaming.replicate's 100-TB "
-                        "pattern)")
-                parts.extend(
-                    _ChangeSlice(self.path, rel, "tombstone", token,
-                                 [(col, col) for col in self.columns],
-                                 commit_token=c.commit_time)
-                    for rel in c.tombstones)
+                         rng.commit.dvs.get(rel, {}).get("files", ()),
+                         fills=_default_fills(rng.commit, rel, logical,
+                                              phys))
+            for rel in rng.files]
+        parts.extend(
+            _ChangeSlice(self.path, rel, "tombstone", token,
+                         [(col, col) for col in self.columns],
+                         commit_token=ct)
+            for ct, rel in rng.tombstones)
         return parts
 
     def read(self, part: _ChangeSlice):
@@ -624,9 +509,9 @@ class GhsChangeFeedPartitionedStreamReader(DataSourceStreamReader):
                 pa.table(arrays, names=list(self.columns)),
                 self._arrow_types).to_batches()
             return
-        # version rows: same per-file logic as the simple reader, one
-        # executor task per file, arrow end to end; the scan reads only
-        # projected + filter columns (column pruning at the parquet read)
+        # version rows: one executor task per file, arrow end to end; the
+        # scan reads only projected + filter columns (column pruning at
+        # the parquet read)
         avail = set(pq.read_schema(fpath).names)
         have = {c: p for c, p in part.cols_phys if p in avail}
         t = pq.read_table(fpath, columns=list(dict.fromkeys(have.values())))
@@ -708,21 +593,7 @@ class GhsTableDataSource(DataSource):
         return cls(self.options, schema)
 
     def streamReader(self, schema):
-        # default streaming tier: partition-based, executor-side reads.
-        # option("simpleStream", "true") falls back to the driver-side
-        # SimpleDataSourceStreamReader (prefetch/cache pattern — handy
-        # for debugging, and the low-throughput contract some tests pin).
-        if str(self.options.get("simplestream", "")).lower() == "true":
-            from pyspark.errors import PySparkNotImplementedError
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
         return GhsChangeFeedPartitionedStreamReader(self.options, schema)
-
-    def simpleStreamReader(self, schema):
-        return GhsChangeFeedStreamReader(self.options, schema)
 
 
 def register(spark) -> None:

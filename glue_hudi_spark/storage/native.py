@@ -3851,13 +3851,14 @@ class NativeTable:
             m = m.select(*[f.name for f in sch.fields])
             matched = m if matched is None else matched.unionByName(m)
             hits = h if hits is None else hits.unionByName(h)
-        tombstones = self._write_tombstones(
-            matched.withColumn(
-                RECORD_KEY_COL,
-                F.coalesce(F.col(RECORD_KEY_COL),
-                           record_key_expr(self.record_keys))))
-        hits = self._subtract_prior_marks(hits, affected, prev.dvs)
-        return self._dv_commit(prev, cid, hits, tombstones, extra_stats)
+        with ExitStack() as stack:
+            tombstones = self._drop_on_error(stack, self._write_tombstones(
+                matched.withColumn(
+                    RECORD_KEY_COL,
+                    F.coalesce(F.col(RECORD_KEY_COL),
+                               record_key_expr(self.record_keys)))))
+            hits = self._subtract_prior_marks(hits, affected, prev.dvs)
+            return self._dv_commit(prev, cid, hits, tombstones, extra_stats)
 
     def purge_deleted(self, min_dv_rows: int = 1) -> Commit | None:
         """Materialize deletion vectors (Delta ``REORG TABLE … APPLY
@@ -4565,32 +4566,36 @@ class NativeTable:
             # base (narrow, scan-upcast) + delta (wide) consistently
             widened_json, keyed = self._apply_type_widening(prev, keyed)
         has_dels = op == "d" or op_col is not None
-        tombstones = (self._write_tombstones(
-            keyed.filter(F.col(DELTA_OP_COL) == "d"))
-            if has_dels and self.change_feed_deletes else [])
-        files = self._write_files(keyed, cid, build_blooms=False)
-        if prev is None:
-            base_files, deltas, schema = [], [], keyed.schema.json()
-        else:
-            # schema-evolution union (the CoW path gets this from
-            # unionByName): stored fields keep their order, genuinely new
-            # batch columns append. A delta batch MISSING an evolved
-            # column must not regress the table schema — base files would
-            # silently read without it.
-            stored = T.StructType.fromJson(json.loads(widened_json))
-            have = {f.name for f in stored.fields}
-            evolved = T.StructType(
-                stored.fields
-                + [f for f in keyed.schema.fields if f.name not in have]
+        with ExitStack() as stack:
+            tombstones = (self._drop_on_error(stack, self._write_tombstones(
+                keyed.filter(F.col(DELTA_OP_COL) == "d")))
+                if has_dels and self.change_feed_deletes else [])
+            files = self._write_files(keyed, cid, build_blooms=False)
+            if prev is None:
+                base_files, deltas, schema = [], [], keyed.schema.json()
+            else:
+                # schema-evolution union (the CoW path gets this from
+                # unionByName): stored fields keep their order, genuinely
+                # new batch columns append. A delta batch MISSING an
+                # evolved column must not regress the table schema — base
+                # files would silently read without it.
+                stored = T.StructType.fromJson(json.loads(widened_json))
+                have = {f.name for f in stored.fields}
+                evolved = T.StructType(
+                    stored.fields
+                    + [f for f in keyed.schema.fields if f.name not in have]
+                )
+                base_files, deltas, schema = (prev.files, list(prev.deltas),
+                                              evolved.json())
+            deltas.append({"commit_id": cid, "action": action,
+                           "files": files})
+            commit = self._commit(
+                cid, action, base_files, deltas, schema,
+                dict(extra_stats or {}),
+                dict(prev.key_stats) if prev else {},
+                dict(prev.col_stats) if prev else {},
+                tombstones=tombstones,
             )
-            base_files, deltas, schema = prev.files, list(prev.deltas), evolved.json()
-        deltas.append({"commit_id": cid, "action": action, "files": files})
-        commit = self._commit(
-            cid, action, base_files, deltas, schema, dict(extra_stats or {}),
-            dict(prev.key_stats) if prev else {},
-            dict(prev.col_stats) if prev else {},
-            tombstones=tombstones,
-        )
         if len(deltas) >= self.compact_every or (
             self.compact_delta_bytes is not None
             and self._delta_bytes(deltas) >= self.compact_delta_bytes

@@ -1,47 +1,63 @@
-"""Continuous table→table replication: tail one NativeTable's commit
-timeline, merge each batch of changed rows into another table.
+"""Table→table replication: tail one NativeTable's commit timeline and
+merge each drained range of changed rows into another table.
 
 The downstream-sync pattern the change feed exists for (a reporting copy,
-a region replica, a redacted projection) — composed entirely from two
-engine pieces: the ``ghs_table`` streaming source (offsets = commit ids,
-CoW incremental semantics, deterministic replay from immutable manifests)
-and the keyed ``upsert`` merge sink. Exactly-once lands the same way as
-every other streaming sink here: the micro-batch id travels inside the
-destination's commit stats, atomic with the data publish, so an
-at-least-once foreachBatch replay is detected and skipped.
+a region replica, a redacted projection) — composed from two engine
+pieces: the change-range rule the ``ghs_table`` stream also plans with
+(``sources.datasource.change_range``: CoW incremental semantics,
+deterministic replay from immutable manifests) and the keyed ``merge``
+sink. A drain (``run_available``) is a plain batch loop, no Structured
+Streaming query:
 
-Deletes travel IN-STREAM when the SOURCE table opted into the change
+1. the watermark ``s`` is the newest ``replicated_through`` source
+   commit in the destination's commit stats, else ``starting_commit``;
+2. ``e`` is the source head — nothing to do when ``e <= s``;
+3. the range ``(s, e]`` is read as a native Spark DataFrame (parquet
+   scans of the changed files and tombstones, with deletion vectors,
+   column defaults and column mapping applied);
+4. one ``_apply_batch`` merges it, and the marker it commits with —
+   ``replicated_through: e`` plus the drain's ``stream_batch_id`` —
+   lands atomically with the data. An empty range records the
+   watermark with a metadata-only ``touch`` commit.
+
+Exactly-once therefore lives wholly in the destination's commit stats:
+a drain that fails before its commit leaves the watermark where it was,
+and the next drain re-plans the same range from immutable manifests.
+
+Deletes travel IN-RANGE when the SOURCE table opted into the change
 feed (``NativeTable(change_feed_deletes=True)``, the Delta
-``enableChangeDataFeed`` analogue — off by default): the feed runs with
-``emitDeletes`` — every delete commit's tombstone keys (``_changes/``,
-Delta-CDF-style) arrive
-as ``_ghs_delta_op='d'`` rows, resolved per key against version rows by
-commit time and applied in the SAME atomic merge as the batch's
+``enableChangeDataFeed`` analogue — off by default): every delete
+commit's tombstone keys (``_changes/``, Delta-CDF-style) arrive as
+``_ghs_delta_op='d'`` rows, resolved per key against version rows by
+commit time and applied in the SAME atomic merge as the range's
 upserts. ``sync_deletes_every`` is thereby demoted to a consistency
 check (an anti-join of destination keys vs source keys — two
 key-projection scans, no data columns); it exists for replicas of
 tables written with ``change_feed_deletes=False`` and as an fsck-grade
 invariant probe.
 
-Scale shape: per micro-batch cost is the changed-row read (file-pruned by
-the source's own manifest) + one keyed merge into the destination
-(partition/key-range/bloom pruned like any upsert). The reconciliation
-pass is the only table-sized step, and it ships key projections only.
+Scale shape: per drain cost is the changed-row read (file-pruned by the
+source's own manifest, executor-parallel parquet scans) + one keyed
+merge into the destination (partition/key-range/bloom pruned like any
+upsert). The reconciliation pass is the only table-sized step, and it
+ships key projections only.
 
-100-TB seeding: the simple stream reader serves rows through the driver
-(the documented low-throughput CDC tail), so do NOT replay a huge
-table's FULL history through it — seed the replica out-of-band
-(``NativeTable.clone_to`` on shared storage, or a bulk
-``format("ghs_table")`` batch read → ``bulk_insert``, both
-executor-parallel) and start the stream at the seed commit with
-``starting_commit``; only the ongoing delta then flows through the tail.
+100-TB seeding: do not replay a huge table's FULL history through a
+drain — seed the replica out-of-band (``NativeTable.clone_to`` on shared
+storage, or a bulk ``format("ghs_table")`` batch read →
+``bulk_insert``) and start it at the seed commit with
+``starting_commit``; only the ongoing delta then flows through the
+drains. Tombstones are retention-bounded: a drain whose range reaches a
+cleaned source commit raises "no longer retained".
 """
 
 from __future__ import annotations
 
+import json
 from pathlib import Path
 
-from pyspark.sql import SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import types as T
 
 from glue_hudi_spark.sources import datasource as DS
 from glue_hudi_spark.storage.native import (
@@ -53,8 +69,15 @@ from glue_hudi_spark.storage.native import (
 
 
 class TableReplicationStream:
-    """readStream(ghs_table src, emitDeletes) → foreachBatch(one atomic
-    merge of the range's upserts and deletes into dest)."""
+    """Drain ``(watermark, source head]`` of ``src_path`` into ``dest``
+    as one atomic merge of the range's upserts and deletes.
+
+    ``checkpoint_dir`` is accepted for compatibility and not written:
+    the watermark lives in ``dest``'s commit stats. A replica whose
+    history predates the ``replicated_through`` marker (or whose marker
+    aged out with ``dest``'s commit retention) restarts at
+    ``starting_commit`` — an idempotent-by-key re-merge, never data
+    loss."""
 
     def __init__(
         self,
@@ -70,6 +93,11 @@ class TableReplicationStream:
         self.spark = spark
         self.src_path = str(src_path)
         self.dest = dest
+        # a read-only handle on the source: the range read reuses its
+        # scan path (DVs, defaults, column mapping); record keys matter
+        # only for bootstrapped files, which carry no key column
+        self._src = NativeTable(spark, self.src_path,
+                                record_keys=dest.record_keys)
         self.checkpoint_dir = str(checkpoint_dir)
         self.starting_commit = starting_commit
         # optional per-batch projection (redaction, column subset) —
@@ -81,12 +109,17 @@ class TableReplicationStream:
         # let the cadence skip the key anti-join?
         self.last_sync_skipped_join: bool | None = None
 
-    def _apply_batch(self, batch_df, batch_id: int) -> None:
+    def _apply_batch(self, batch_df, batch_id: int,
+                     through: int | None = None) -> None:
         last = self.dest.last_stream_batch_id()
+        # a redelivered id (at-least-once caller) is already applied
         replayed = last is not None and batch_id <= last
-        if not replayed:  # replay = crash between commit and checkpoint
+        if not replayed:
             marker = {"stream_batch_id": int(batch_id),
                       "replicated_from": self.src_path}
+            if through is not None:
+                marker["replicated_through"] = int(through)
+            merged = None
             if not batch_df.isEmpty():
                 meta = [COMMIT_TIME_COL, RECORD_KEY_COL, DELTA_OP_COL]
                 # a key can appear as several changes in one drained
@@ -107,8 +140,16 @@ class TableReplicationStream:
                 # one atomic commit applies the range's upserts AND
                 # deletes (CoW; MoR dest splits into its documented
                 # delta pair) — the batch-id marker rides inside it
-                self.dest.merge(opb, op_col="_ghs_rep_op",
-                                extra_stats=marker)
+                merged = self.dest.merge(opb, op_col="_ghs_rep_op",
+                                         extra_stats=marker)
+            if merged is None and through is not None \
+                    and self.dest.exists():
+                # a range that changes nothing here (empty, or filtered
+                # away by the transform) still moves the watermark: else
+                # every later drain re-plans it until its tombstones age
+                # out of retention. An empty replica has no head to
+                # touch; re-planning its range is harmless.
+                self.dest.touch(extra_stats=marker)
         # The consistency-check cadence runs regardless of batch contents:
         # a delete-only commit on a change_feed_deletes=False source (no
         # tombstones) arrives as exactly an EMPTY micro-batch, so gating
@@ -161,18 +202,50 @@ class TableReplicationStream:
         self.dest.delete(gone)
         return n
 
+    def _watermark(self) -> tuple[int, int]:
+        """(source commit the replica reflects, next batch id), from the
+        destination's retained commit stats."""
+        through = last = None
+        for c in reversed(self.dest.timeline.history()):
+            if through is None and "replicated_through" in c.stats:
+                through = int(c.stats["replicated_through"])
+            if last is None and "stream_batch_id" in c.stats:
+                last = int(c.stats["stream_batch_id"])
+            if through is not None and last is not None:
+                break
+        return (self.starting_commit if through is None else through,
+                0 if last is None else last + 1)
+
+    def _range_rows(self, s: int, e: int) -> DataFrame:
+        """Source changes in ``(s, e]`` as one native DataFrame in the
+        end commit's logical schema with meta columns: version rows
+        stamped after ``s`` (MoR delete markers kept) plus one ``'d'``
+        row per tombstoned key, stamped with its deleting commit."""
+        src = self._src
+        rng = DS.change_range(src.timeline, s, e, tombstones=True)
+        c = rng.commit
+        rows = src._read_files(rng.files, c.schema_json, dvs=c.dvs,
+                               defaults=c.column_defaults)
+        rows = rows.filter(F.col(COMMIT_TIME_COL) > f"{s:020d}")
+        by_commit: dict[str, list[str]] = {}
+        for ct, rel in rng.tombstones:
+            by_commit.setdefault(ct, []).append(str(src.root / rel))
+        # tombstone files hold the key columns only: read under the full
+        # schema, every other column comes back NULL
+        schema = T.StructType.fromJson(json.loads(c.schema_json))
+        for ct, paths in by_commit.items():
+            rows = rows.unionByName(
+                self.spark.read.schema(schema).parquet(*paths)
+                .withColumn(COMMIT_TIME_COL, F.lit(ct))
+                .withColumn(DELTA_OP_COL, F.lit("d")))
+        return src._to_logical(rows, c)
+
     def run_available(self) -> None:
-        """Drain all pending source commits (availableNow), then stop."""
-        q = (
-            self.spark.readStream.format("ghs_table")
-            .option("path", self.src_path)
-            .option("startingCommit", str(self.starting_commit))
-            .option("withMeta", "true")
-            .option("emitDeletes", "true")
-            .load()
-            .writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        """Drain every source commit past the watermark in one merge
+        commit (no-op when the source head is not past it)."""
+        s, batch_id = self._watermark()
+        head = self._src.timeline.latest()
+        if head is None or head.commit_id <= s:
+            return
+        e = head.commit_id
+        self._apply_batch(self._range_rows(s, e), batch_id, through=e)

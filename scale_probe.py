@@ -16,8 +16,8 @@ paths the round-2 verdict called out, printing one JSON line per probe:
 
 Run: python scale_probe.py   (~3-5 min on local[32])
 
-``python scale_probe.py --stream`` times the two change-feed stream
-tiers (partitioned vs driver-simple) on a 3.65M-row history + 10k tail.
+``python scale_probe.py --stream`` times the change-feed stream
+(partitioned reader) on a 3.65M-row history + 10k tail.
 
 ``python scale_probe.py --decade`` runs the 100× points instead (60M-row
 CoW merge, 500k-doc MinHash) — one decade past the 10× rig on exactly
@@ -531,14 +531,13 @@ def main() -> None:
 
 
 def main_stream() -> None:
-    """Round-9 probe: change-feed STREAM tier throughput.
+    """Change-feed STREAM throughput.
 
-    The partitioned DataSourceStreamReader (one InputPartition per
-    changed file, executor pyarrow reads) exists to remove the
-    SimpleDataSourceStreamReader's driver funnel. Measure both tiers
-    draining (a) a 1.2M-row full history and (b) an incremental 10k-row
-    tail from the same table — the ratio on (a) is the funnel cost, and
-    (b) pins that both tiers stay O(changed files) on a tail."""
+    The partitioned DataSourceStreamReader plans one InputPartition per
+    changed file and reads it executor-side with pyarrow, so no row
+    passes through the driver. Measure it draining (a) a 1.2M-row full
+    history and (b) an incremental 10k-row tail from the same table —
+    (b) pins that a tail stays O(changed files)."""
     from glue_hudi_spark.sources import datasource as DS
 
     spark = get_spark(app_name="glue_hudi_spark-scale-probe-stream")
@@ -563,14 +562,12 @@ def main_stream() -> None:
     t.bulk_insert(big)
     n_rows = t.read_snapshot().count()
 
-    def drain(tag: str, simple: bool, starting: int | None = None,
+    def drain(tag: str, starting: int | None = None,
               sink: str = "noop") -> tuple[float, int]:
         out, ck = f"{work}/out_{tag}", f"{work}/ck_{tag}"
         t0 = time.time()
         r = (spark.readStream.format("ghs_table")
              .option("path", str(t.root)))
-        if simple:
-            r = r.option("simpleStream", "true")
         if starting is not None:
             r = r.option("startingCommit", str(starting))
         w = r.load().writeStream.format(sink)
@@ -584,28 +581,20 @@ def main_stream() -> None:
         return sec, n
 
     # correctness anchor once (parquet sink), then timing via the noop
-    # sink so the probe measures the READ tiers, not parquet encoding
-    _, anchor_n = drain("anchor", simple=False, sink="parquet")
+    # sink so the probe measures the READ, not parquet encoding
+    _, anchor_n = drain("anchor", sink="parquet")
     assert anchor_n == n_rows, (anchor_n, n_rows)
-    p_s, _ = drain("hist_part", simple=False)
-    s_s, _ = drain("hist_simple", simple=True)
+    p_s, _ = drain("hist_part")
     probe("stream_full_history_partitioned", p_s, rows=n_rows,
           rows_per_sec=int(n_rows / p_s))
-    probe("stream_full_history_simple", s_s, rows=n_rows,
-          rows_per_sec=int(n_rows / s_s),
-          partitioned_speedup=round(s_s / p_s, 2))
 
     # incremental tail: 10k-key upsert, drain ONLY the new window (fresh
-    # checkpoint pinned at the pre-tail head) — O(changed files) on both
-    # tiers; the partitioned tier must not regress the tail case
+    # checkpoint pinned at the pre-tail head) — O(changed files)
     head = t.timeline.latest().commit_id
     tail = big.limit(10_000).select("k", (F.col("q") + 1).alias("q"))
     t.upsert(tail)
-    tp_s, _ = drain("tail_part", simple=False, starting=head)
-    ts_s, _ = drain("tail_simple", simple=True, starting=head)
+    tp_s, _ = drain("tail_part", starting=head)
     probe("stream_tail_partitioned", tp_s, rows=10_000)
-    probe("stream_tail_simple", ts_s, rows=10_000,
-          partitioned_speedup=round(ts_s / tp_s, 2))
 
     shutil.rmtree(work, ignore_errors=True)
     spark.stop()

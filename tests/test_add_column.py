@@ -94,8 +94,11 @@ def test_drop_column_clears_its_default(spark, tmp_path):
 
 
 def test_ghs_table_reads_serve_defaults(spark, tmp_path):
-    """Both datasource tiers agree with the engine read: pre-add files
-    fill the default, post-add explicit NULL stays NULL."""
+    """The datasource batch and stream readers and a replica drain agree
+    with the engine read: pre-add files fill the default, post-add
+    explicit NULL stays NULL."""
+    from glue_hudi_spark.streaming.replicate import TableReplicationStream
+
     DS.register(spark)
     t = _mk(spark, tmp_path / "t", files_per_partition=4)
     t.add_column("tier", "string", default="legacy")
@@ -117,18 +120,13 @@ def test_ghs_table_reads_serve_defaults(spark, tmp_path):
     srows = {r["id"]: r["tier"]
              for r in spark.read.parquet(str(out)).collect()}
     assert srows == want
-    # simple stream tier
-    out2 = tmp_path / "out2"
-    q = (spark.readStream.format("ghs_table")
-         .option("path", str(t.root))
-         .option("simpleStream", "true").load()
-         .writeStream.format("parquet").option("path", str(out2))
-         .option("checkpointLocation", str(tmp_path / "ck2"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    s2 = {r["id"]: r["tier"]
-          for r in spark.read.parquet(str(out2)).collect()}
-    assert s2 == want
+    # replica drain (full history into an empty table)
+    dest = NativeTable(spark, tmp_path / "dest", record_keys=["id"],
+                       precombine="seq")
+    TableReplicationStream(spark, t.root, dest, tmp_path / "rck") \
+        .run_available()
+    assert {r["id"]: r["tier"] for r in dest.read_snapshot().collect()} \
+        == want
 
 
 # ---- round-10: DEFAULTs must survive every rewrite path (r9 advice) ----

@@ -117,21 +117,23 @@ def test_mor_with_deltas_rejected(spark, tmp_path):
 
 
 def test_stream_emit_deletes_requires_with_meta(spark, tmp_path):
-    from glue_hudi_spark.sources.datasource import GhsChangeFeedStreamReader
+    from glue_hudi_spark.sources.datasource import \
+        GhsChangeFeedPartitionedStreamReader
     from pyspark.sql.types import StructType, StructField, StringType
 
     import pytest as _pytest
 
     schema = StructType([StructField("id", StringType())])  # no meta cols
     with _pytest.raises(ValueError, match="withMeta"):
-        GhsChangeFeedStreamReader(
+        GhsChangeFeedPartitionedStreamReader(
             {"path": str(tmp_path), "emitdeletes": "true"}, schema)
 
 
 def test_stream_tombstones_unrecoverable_after_clean(spark, tmp_path):
     """emitDeletes is retention-bounded like any CDC log: a range commit
     whose manifest was cleaned must raise, not silently lose deletes."""
-    from glue_hudi_spark.sources.datasource import GhsChangeFeedStreamReader
+    from glue_hudi_spark.sources.datasource import \
+        GhsChangeFeedPartitionedStreamReader
     from glue_hudi_spark.storage.native import NativeTable
 
     import pytest as _pytest
@@ -142,12 +144,13 @@ def test_stream_tombstones_unrecoverable_after_clean(spark, tmp_path):
     t.bulk_insert(spark.createDataFrame([("a", 1)], "id string, s int"))
     for i in range(4):  # roll the retention window past commit 1
         t.upsert(spark.createDataFrame([(f"k{i}", 1)], "id string, s int"))
-    reader = GhsChangeFeedStreamReader(
+    reader = GhsChangeFeedPartitionedStreamReader(
         {"path": str(t.root), "emitdeletes": "true"},
         spark.read.format("ghs_table").option("path", str(t.root))
         .option("withMeta", "true").load().schema)
     with _pytest.raises(ValueError, match="no longer retained"):
-        reader._tombstone_rows(0, t.timeline.latest().commit_id)
+        reader.partitions({"commit_id": 0},
+                          {"commit_id": t.timeline.latest().commit_id})
 
 
 def test_stream_serves_uncompacted_mor_deltas(spark, tmp_path):
@@ -288,17 +291,18 @@ def test_pushdown_option_false_with_conf_on(spark, table):
         f"k{i:03d}" for i in range(90, 95)]
 
 
-def test_stream_uses_partitioned_reader_by_default(spark, table, tmp_path,
-                                                   monkeypatch):
-    """The default streaming tier is the partition-based reader
-    (executor-side pyarrow file reads) — poison the driver-side simple
-    reader to prove it is never constructed, then drain a stream."""
-    def boom(self, options, schema):
-        raise AssertionError(
-            "driver-side SimpleDataSourceStreamReader constructed — the "
-            "default tier must be the partitioned reader")
+def test_stream_uses_partitioned_reader_by_default(spark, table, tmp_path):
+    """The one streaming tier is the partition-based reader
+    (executor-side pyarrow file reads): the source leaves
+    ``simpleStreamReader`` to the base class, so no driver-side reader
+    exists to fall back to, and a drain serves every row."""
+    from pyspark.sql.datasource import DataSource
 
-    monkeypatch.setattr(DS.GhsChangeFeedStreamReader, "__init__", boom)
+    assert DS.GhsTableDataSource.simpleStreamReader \
+        is DataSource.simpleStreamReader
+    src = DS.GhsTableDataSource({"path": str(table.root)})
+    assert isinstance(src.streamReader(src.schema()),
+                      DS.GhsChangeFeedPartitionedStreamReader)
     out = tmp_path / "pout"
     q = (spark.readStream.format("ghs_table")
          .option("path", str(table.root))
@@ -306,22 +310,6 @@ def test_stream_uses_partitioned_reader_by_default(spark, table, tmp_path,
          .writeStream.format("parquet")
          .option("path", str(out))
          .option("checkpointLocation", str(tmp_path / "pckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    assert spark.read.parquet(str(out)).count() == 100
-
-
-def test_stream_simple_tier_on_request(spark, table, tmp_path):
-    """option('simpleStream','true') falls back to the driver-side
-    SimpleDataSourceStreamReader tier — same rows."""
-    out = tmp_path / "sout"
-    q = (spark.readStream.format("ghs_table")
-         .option("path", str(table.root))
-         .option("simpleStream", "true")
-         .load()
-         .writeStream.format("parquet")
-         .option("path", str(out))
-         .option("checkpointLocation", str(tmp_path / "sckpt"))
          .trigger(availableNow=True).start())
     q.awaitTermination()
     assert spark.read.parquet(str(out)).count() == 100

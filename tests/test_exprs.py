@@ -87,3 +87,28 @@ def test_pushdown_shape_preserved(spark, tmp_path):
     plan = df.filter(in_values("id", vals))._jdf.queryExecution() \
         .executedPlan().toString()
     assert "PushedFilters: [In(id" in plan
+
+
+def test_long_min_value_falls_back(spark):
+    """Long.MIN_VALUE has no BIGINT SQL literal (its digits parse as a
+    DECIMAL under the unary minus): it falls the call back to isin, so
+    the IN list keeps the column's type and its pushdown."""
+    lo = -(1 << 63)
+    assert _sql_in_literal(lo) is None
+    assert _sql_in_literal(lo + 1) == str(lo + 1)
+    vals = list(range(40)) + [lo]
+    assert "IN (" not in str(in_values("id", vals))
+    df = spark.range(100).select(F.col("id"))
+    assert _parity(spark, df, "id", vals) == list(range(40))
+
+
+def test_dotted_column_name_falls_back(spark):
+    """A dotted name resolves as a nested field through F.col; the SQL
+    text path would quote it whole and fail, so it takes isin."""
+    df = spark.range(100).select(F.struct(F.col("id")).alias("s"))
+    vals = list(range(0, 100, 2))
+    assert len(vals) >= _SQL_TEXT_MIN
+    assert "IN (" not in str(in_values("s.id", vals))
+    got = sorted(r["s"]["id"] for r in df.filter(
+        in_values("s.id", vals)).collect())
+    assert got == vals

@@ -3,6 +3,7 @@ projection, replay idempotence, delete reconciliation."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from glue_hudi_spark.storage.native import NativeTable
@@ -187,3 +188,112 @@ def test_sync_deletes_checksum_gate_skips_join_when_converged(
     # and converged again afterwards
     assert rep.sync_deletes() == 0
     assert rep.last_sync_skipped_join is True
+
+
+def test_drain_starts_no_streaming_query(spark, tmp_path, monkeypatch):
+    """A drain is a plain batch loop: no Structured Streaming query is
+    started, the checkpoint directory is never written, and the
+    watermark commits inside the merge's own stats."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    def no_stream(*a, **kw):
+        raise AssertionError("a drain started a streaming query")
+
+    monkeypatch.setattr(DataStreamWriter, "start", no_stream)
+    src = _mk(spark, tmp_path / "src")
+    src.bulk_insert(_rows(spark, [dict(id=f"k{i}", v=1.0, seq=1)
+                                  for i in range(5)]))
+    dest = _mk(spark, tmp_path / "dest")
+    rep = TableReplicationStream(spark, src.root, dest, tmp_path / "ckpt")
+    rep.run_available()
+    src.upsert(_rows(spark, [dict(id="k9", v=2.0, seq=2)]))
+    rep.run_available()
+    assert spark.streams.active == []
+    assert not (tmp_path / "ckpt").exists()
+    assert dest.read_snapshot().count() == 6
+    head = dest.timeline.latest()
+    assert head.stats["replicated_through"] == \
+        src.timeline.latest().commit_id
+    assert head.stats["stream_batch_id"] == 1
+
+
+def test_failed_merge_keeps_watermark_and_next_drain_converges(
+        spark, tmp_path, monkeypatch):
+    """A drain whose destination merge raises publishes nothing: the
+    replica head and watermark stay put, and the next drain re-plans
+    the same range and lands it in exactly one commit."""
+    src = _mk(spark, tmp_path / "src")
+    src.bulk_insert(_rows(spark, [dict(id=f"k{i}", v=1.0, seq=1)
+                                  for i in range(6)]))
+    dest = _mk(spark, tmp_path / "dest")
+    rep = TableReplicationStream(spark, src.root, dest, tmp_path / "ckpt")
+    rep.run_available()
+    src.upsert(_rows(spark, [dict(id="k0", v=5.0, seq=2)]))
+    src.delete(_rows(spark, [dict(id="k1", v=1.0, seq=2)]).select("id"))
+    head, mark = dest.timeline.latest().commit_id, rep._watermark()
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected merge failure")
+
+    monkeypatch.setattr(dest, "merge", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        rep.run_available()
+    monkeypatch.undo()
+    assert dest.timeline.latest().commit_id == head
+    assert rep._watermark() == mark
+    n = len(dest.timeline.history())
+    rep.run_available()
+    assert len(dest.timeline.history()) == n + 1
+    got = {(r["id"], r["v"]) for r in dest.read_snapshot().collect()}
+    want = {(r["id"], r["v"]) for r in src.read_snapshot().collect()}
+    assert got == want and ("k0", 5.0) in got
+
+
+def test_drain_over_cleaned_commit_raises(spark, tmp_path):
+    """Tombstones are retention-bounded: a range whose middle commits'
+    manifests were cleaned must raise, not silently drop deletes."""
+    src = _mk(spark, tmp_path / "src", retain_commits=2)
+    src.bulk_insert(_rows(spark, [dict(id="a", v=1.0, seq=1)]))
+    dest = _mk(spark, tmp_path / "dest")
+    rep = TableReplicationStream(spark, src.root, dest, tmp_path / "ckpt")
+    rep.run_available()
+    for i in range(4):  # roll the retention window past the watermark
+        src.upsert(_rows(spark, [dict(id=f"k{i}", v=1.0, seq=1)]))
+    assert src.timeline.at(2) is None
+    assert src.timeline.latest().commit_id > 3
+    with pytest.raises(ValueError, match="no longer retained"):
+        rep.run_available()
+
+
+def test_drain_that_merges_nothing_still_moves_watermark(spark, tmp_path):
+    """A range with no row to apply — a source commit that changed no
+    row, or rows the transform filters away — records the watermark in
+    a metadata-only commit, so the next drain does not re-plan it; an
+    empty replica with nothing to apply stays empty."""
+    src = _mk(spark, tmp_path / "src")
+    src.bulk_insert(_rows(spark, [dict(id="a", v=1.0, seq=1)]))
+    dest = _mk(spark, tmp_path / "dest")
+    rep = TableReplicationStream(
+        spark, src.root, dest, tmp_path / "ckpt",
+        transform=lambda df: df.filter(F.col("v") < 100.0))
+    rep.run_available()
+    assert dest.read_snapshot().count() == 1
+    for change in (lambda: src.touch(),
+                   lambda: src.upsert(_rows(spark, [
+                       dict(id="a", v=500.0, seq=2)]))):
+        change()
+        rep.run_available()
+        head = dest.timeline.latest()
+        assert head.action == "touch"
+        assert head.stats["replicated_through"] == \
+            src.timeline.latest().commit_id
+        n = len(dest.timeline.history())
+        rep.run_available()
+        assert len(dest.timeline.history()) == n
+    assert dest.read_snapshot().first()["v"] == 1.0
+    empty = _mk(spark, tmp_path / "empty")
+    TableReplicationStream(
+        spark, src.root, empty, tmp_path / "ck2",
+        starting_commit=src.timeline.latest().commit_id - 1,
+        transform=lambda df: df.filter(F.col("v") < 100.0)).run_available()
+    assert not empty.exists()

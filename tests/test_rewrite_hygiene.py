@@ -1,12 +1,13 @@
 """Error-path and same-handle hygiene of the keyed write paths.
 
 Every keyed write (upsert, partial upsert, delete, merge, merge_into and
-the deletion-vector delete) persists the batch for the extra actions it
-runs over it (bloom probe, tombstone write). These tests pin that a
-write failing after that persist leaves nothing behind: no pinned
-frame, no new commit, no orphan file, and the next writer proceeds —
-and that two calls sharing one table handle each release their OWN
-persisted frame.
+the deletion-vector deletes) persists the batch for the extra actions it
+runs over it (bloom probe, tombstone write), and the delete paths — MoR
+delta appends included — land ``_changes/`` tombstones before their
+data. These tests pin that a write failing after that leaves nothing
+behind: no pinned frame, no new commit, no orphan file, and the next
+writer proceeds — and that two calls sharing one table handle each
+release their OWN persisted frame.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from __future__ import annotations
 import threading
 
 import pytest
+from pyspark.sql import functions as F
 
 from glue_hudi_spark.storage.native import NativeTable
 
@@ -57,21 +59,31 @@ def _merge_into(spark, t):
                         when_matched_update="*")
 
 
-@pytest.mark.parametrize("write, dv", [
-    (_upsert, False), (_partial, False), (_delete, False),
-    (_merge, False), (_merge_into, False), (_delete, True),
-], ids=["upsert", "partial", "delete", "merge", "merge_into", "dv_delete"])
+def _delete_where(spark, t):
+    return t.delete_where(F.col("id").isin("k005", "k017"))
+
+
+_DV = {"deletion_vectors": True}
+_MOR = {"storage_type": "mor"}
+
+
+@pytest.mark.parametrize("write, kw", [
+    (_upsert, {}), (_partial, {}), (_delete, {}), (_merge, {}),
+    (_merge_into, {}), (_delete, _DV), (_delete_where, _DV),
+    (_upsert, _MOR), (_delete, _MOR), (_merge, _MOR),
+], ids=["upsert", "partial", "delete", "merge", "merge_into", "dv_delete",
+        "dv_delete_where", "mor_upsert", "mor_delete", "mor_merge"])
 def test_failed_write_leaves_no_trace(spark, tmp_path, monkeypatch,
-                                     persistent_rdds, write, dv):
-    t = _table(spark, tmp_path / "t", deletion_vectors=dv)
+                                     persistent_rdds, write, kw):
+    t = _table(spark, tmp_path / "t", **kw)
     head = t.timeline.latest()
     before = persistent_rdds()
 
-    def boom(*a, **kw):
+    def boom(*_a, **_kw):
         raise RuntimeError("injected write failure")
 
-    monkeypatch.setattr(t, "_write_dv_sidecar" if dv else "_write_files",
-                        boom)
+    monkeypatch.setattr(
+        t, "_write_dv_sidecar" if kw is _DV else "_write_files", boom)
     with pytest.raises(RuntimeError, match="injected"):
         write(spark, t)
     monkeypatch.undo()
