@@ -17,8 +17,8 @@ re-expressed Spark-first:
 * ``sources``   — incremental batch scan with a processed-file ledger
                   (replaces Glue job bookmarks, processData.py:293-298).
 * ``pipeline``  — the per-table driver loop (processData.py:272-402).
-* ``streaming`` — Structured Streaming variant (readStream + foreachBatch
-                  merge) of the same CDC semantics.
+* ``streaming`` — continuous variant of the same CDC semantics: repeated
+                  batch-log drains of the landing dir, each batch merged.
 
 Everything here is public-API PySpark; no Glue, boto3, or Hudi jars required.
 """

@@ -15,9 +15,12 @@ downstream write succeeds — same at-least-once-per-file, at-most-once-on-
 success contract as Glue bookmarks.
 
 At 100 TB the file listing is the scale concern, not the data: listing is
-O(files) driver metadata, the ledger is append-only JSON. (For streaming
-arrival, ``glue_hudi_spark.streaming`` offers the Structured Streaming file
-source whose checkpoint subsumes this ledger.)
+O(files) driver metadata, the ledger is append-only JSON.
+
+``drain_batches`` cuts the same bookmark into numbered, replayable batches
+for the ``streaming`` file sources. The pipeline and COPY INTO keep the
+plain ledger, so a corrected file under a new name can replace a batch
+the quality gate rejected.
 """
 
 from __future__ import annotations
@@ -31,16 +34,25 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 _FORMATS = {
-    # fmt -> (glob suffixes, reader)
-    "parquet": ((".parquet",), lambda spark, files: spark.read.parquet(*files)),
-    "csv": ((".csv", ".csv.gz"), lambda spark, files: spark.read.options(
+    # fmt -> (glob suffixes, reader over a DataFrameReader)
+    "parquet": ((".parquet",), lambda r, files: r.parquet(*files)),
+    "csv": ((".csv", ".csv.gz"), lambda r, files: r.options(
         header="true", inferSchema="true").csv(list(files))),
-    "json": ((".json", ".jsonl", ".json.gz"), lambda spark, files:
-        spark.read.json(list(files))),
+    "json": ((".json", ".jsonl", ".json.gz"), lambda r, files:
+        r.json(list(files))),
     # ORC ships in Spark core (no external package, unlike avro) —
     # the columnar landing format DMS/Flink sinks commonly emit
-    "orc": ((".orc",), lambda spark, files: spark.read.orc(*files)),
+    "orc": ((".orc",), lambda r, files: r.orc(*files)),
 }
+
+
+def _swap_json(path: Path, obj) -> None:
+    """Publish ``obj`` as ``path`` atomically (temp file + rename)."""
+    path.parent.mkdir(parents=True, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=path.parent, suffix=".tmp")
+    with os.fdopen(fd, "w") as f:
+        json.dump(obj, f)
+    os.rename(tmp, path)
 
 
 class BookmarkedScan:
@@ -89,8 +101,12 @@ class BookmarkedScan:
             return set(json.loads(self.ledger_path.read_text()))
         return set()
 
-    def list_unprocessed(self) -> list[str]:
-        seen = self._processed()
+    def list_unprocessed(self, seen: set[str] | None = None) -> list[str]:
+        """Landed files not in ``seen`` (default: the ledger), sorted. As
+        in Spark's file index, a path with any component under the raw
+        dir starting with ``_`` or ``.`` is skipped, so a writer's
+        in-flight ``_temporary/`` or hidden staging files are never read."""
+        seen = self._processed() if seen is None else seen
         suffixes = _FORMATS[self.fmt][0]
         files = sorted(
             str(p)
@@ -99,7 +115,8 @@ class BookmarkedScan:
             for p in d.rglob("*")
             if p.is_file()
             and p.name.lower().endswith(suffixes)
-            and not p.name.startswith("_")
+            and not any(c.startswith(("_", "."))
+                        for c in p.relative_to(d).parts)
             and str(p) not in seen
         )
         return files
@@ -109,19 +126,15 @@ class BookmarkedScan:
         self._pending = self.list_unprocessed()
         if not self._pending:
             return None
-        return _FORMATS[self.fmt][1](self.spark, self._pending)
+        return _FORMATS[self.fmt][1](self.spark.read, self._pending)
 
     def commit(self) -> None:
         """Mark the last read batch processed (atomic ledger swap). Call
         only after the downstream table write committed."""
         if not self._pending:
             return
-        done = sorted(self._processed() | set(self._pending))
-        self.ledger_path.parent.mkdir(parents=True, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=self.ledger_path.parent, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(done, f)
-        os.rename(tmp, self.ledger_path)
+        _swap_json(self.ledger_path,
+                   sorted(self._processed() | set(self._pending)))
         self._pending = []
 
     def reset(self) -> None:
@@ -129,3 +142,45 @@ class BookmarkedScan:
         if self.ledger_path.exists():
             self.ledger_path.unlink()
         self._pending = []
+
+
+def drain_batches(spark: SparkSession, raw_dir: str | Path,
+                  checkpoint_dir: str | Path, schema, handler,
+                  max_files: int | None = None) -> None:
+    """``handler(df, batch_id)`` over every unprocessed file under
+    ``raw_dir``, in sorted batches of up to ``max_files`` files read with
+    ``schema``.
+
+    ``<checkpoint_dir>/batch_log.json`` is Spark's offsets and commits
+    logs in one file: ``done`` files, ``next_id`` and at most one
+    ``open`` batch. A batch is written open before its handler runs and
+    marked done after it returns (an atomic swap each), so a failed
+    handler's batch replays first on the next drain, with the same id
+    and files; the handler skips it by the batch id its sink committed."""
+    ckpt = Path(checkpoint_dir)
+    scan = BookmarkedScan(spark, raw_dir, ckpt / "batch_log.json")
+    log = scan.ledger_path
+    if not log.exists() and (ckpt / "offsets").is_dir():
+        raise ValueError(
+            f"checkpoint_dir {ckpt} holds a Structured Streaming "
+            "checkpoint (offsets/) and no batch log; the drain does not "
+            f"guess which files it covered. Seed {log.name} with "
+            '{"done": [those files], "next_id": <past the sink\'s last '
+            'batch id>, "open": null}')
+    state = (json.loads(log.read_text()) if log.exists()
+             else {"done": [], "next_id": 0, "open": None})
+    reader = spark.read.schema(schema)
+    while True:
+        if state["open"] is None:
+            files = scan.list_unprocessed(set(state["done"]))
+            if not files:
+                return
+            state["open"] = {"id": state["next_id"],
+                             "files": files[:max_files or None]}
+            state["next_id"] += 1
+            _swap_json(log, state)
+        batch = state["open"]
+        handler(_FORMATS[scan.fmt][1](reader, batch["files"]), batch["id"])
+        state["done"] += batch["files"]
+        state["open"] = None
+        _swap_json(log, state)

@@ -1260,10 +1260,20 @@ class NativeTable:
         )
         return {tuple(r[f.name] for f in self._pfields) for r in rows}
 
-    def _prune_files_by_partition(self, files: list[str],
-                                  prune: dict | None,
-                                  pfields: "list[PartitionField] | None"
-                                  = None) -> list[str]:
+    def _prune_files(self, files: list[str], prune: dict | None,
+                     commit: "Commit") -> list[str]:
+        """``files`` of ``commit`` a ``prune`` range can touch: partition
+        dirs first (under the spec in force at ``commit``), then
+        column stats."""
+        if not prune:
+            return files
+        files = self._prune_files_by_partition(
+            files, prune, self._pfields_of(commit))
+        return self._prune_files_by_col_stats(files, commit.col_stats, prune)
+
+    def _prune_files_by_partition(self, files: list[str], prune: dict,
+                                  pfields: "list[PartitionField]"
+                                  ) -> list[str]:
         """Hidden-partition pruning (the Iceberg promise): a range
         predicate on a transform's SOURCE column drops whole partition
         dirs before Spark lists a file — no derived column in the query,
@@ -1272,9 +1282,8 @@ class NativeTable:
         sort like their sources); files in the hive default partition
         (null/uncastable sources) or written under an older spec
         (evolution — path lacks the field) are conservatively kept."""
-        if not prune or not files:
+        if not files:
             return files
-        pfields = pfields if pfields is not None else self._pfields
         bounds = []
         for i, fld in enumerate(pfields):
             rng = prune.get(fld.source)
@@ -2484,12 +2493,7 @@ class NativeTable:
         if min_file_commit is not None:
             base_files = [f for f in base_files
                           if file_dir_commit(f) > min_file_commit]
-        if prune:
-            base_files = self._prune_files_by_partition(
-                base_files, prune, self._pfields_of(commit))
-            base_files = self._prune_files_by_col_stats(
-                base_files, commit.col_stats, prune
-            )
+        base_files = self._prune_files(base_files, prune, commit)
         base = self._read_files(base_files, commit.schema_json,
                                 dvs=commit.dvs,
                                 defaults=commit.column_defaults)
@@ -2555,10 +2559,7 @@ class NativeTable:
         if commit is None:
             return (0, 0)
         files = commit.files
-        kept = self._prune_files_by_partition(
-            files, prune, self._pfields_of(commit))
-        kept = self._prune_files_by_col_stats(
-            kept, commit.col_stats, prune)
+        kept = self._prune_files(files, prune, commit)
         return (len(kept), len(files))
 
     def read_incremental(self, since_commit: int,
@@ -3809,11 +3810,7 @@ class NativeTable:
         if prev is None:
             raise ValueError(f"table {self.root} has no commits")
         cid = self.timeline.next_commit_id()
-        affected = prev.files
-        if prune:
-            affected = self._prune_files_by_partition(affected, prune)
-            affected = self._prune_files_by_col_stats(
-                affected, prev.col_stats, prune)
+        affected = self._prune_files(prev.files, prune, prev)
         if not affected:
             return self._dv_commit(
                 prev, cid, self.spark.createDataFrame(
@@ -4204,10 +4201,7 @@ class NativeTable:
         affected = prev.files
         untouched: list[str] = []
         if prune:
-            affected = self._prune_files_by_partition(prev.files, prune)
-            affected = self._prune_files_by_col_stats(
-                affected, prev.col_stats, prune
-            )
+            affected = self._prune_files(prev.files, prune, prev)
             untouched = [f for f in prev.files if f not in set(affected)]
         existing = self._read_files(affected, prev.schema_json, dvs=prev.dvs,
                                     defaults=prev.column_defaults)
@@ -4707,12 +4701,7 @@ class NativeTable:
         commit = self.timeline.latest()
         if commit is None:
             raise ValueError(f"table {self.root} has no commits")
-        candidates = commit.files
-        if prune:
-            candidates = self._prune_files_by_partition(
-                candidates, prune, self._pfields_of(commit))
-            candidates = self._prune_files_by_col_stats(
-                candidates, commit.col_stats, prune)
+        candidates = self._prune_files(commit.files, prune, commit)
         # manifest-carried sizes: zero per-file metadata calls on a table
         # whose manifests record them; stat() only fills pre-field gaps
         sizes: dict[str, int] = {}
@@ -4786,11 +4775,7 @@ class NativeTable:
         commit = self.timeline.latest()
         if commit is None:
             raise ValueError(f"table {self.root} has no commits")
-        selected = list(commit.files)
-        if prune:
-            selected = self._prune_files_by_partition(selected, prune)
-            selected = self._prune_files_by_col_stats(
-                selected, commit.col_stats, prune)
+        selected = self._prune_files(commit.files, prune, commit)
         if only_legacy_spec:
             selected = [f for f in selected
                         if "" in self._file_partition(f)]

@@ -1,5 +1,7 @@
-"""Structured Streaming surface: CDC pipeline, watermarked analytics,
-stateful profiles, streaming dedup + sessionization."""
+"""Streaming surface: batch-log drains of landing dirs (CDC merge,
+corpus, embeddings, enrichment, sketches) and change-feed consumers
+(replicas, materialized views), plus Structured Streaming operators
+(watermarked analytics, stateful profiles, dedup + sessionization)."""
 
 from glue_hudi_spark.streaming.cdc_stream import CdcStream
 from glue_hudi_spark.streaming.corpus import CorpusIngestStream

@@ -1,8 +1,10 @@
-"""Always-on CDC ingestion: Structured Streaming file source + foreachBatch
-merge — the streaming equivalent of the reference's micro-batch job
-(SURVEY §2.5: the reference has no streaming; its bookmark semantics map to
-the file-source checkpoint, and each discovered batch goes through exactly
-the same dedup → route → merge path as ``CdcPipeline``).
+"""Always-on CDC ingestion: a batch-log drain of the landing dir, each batch
+merged — the continuous twin of the reference's micro-batch job (SURVEY
+§2.5: the reference has no streaming; its bookmark semantics map to the
+batch log of ``sources.batch.drain_batches``, and each batch goes through
+exactly the same dedup → route → merge path as ``CdcPipeline``). A
+continuous run is ``run_available()`` on the caller's schedule, as the
+reference's Glue trigger runs its job.
 
 Late data: the reference's contract is "every batch fully merged regardless
 of event time — late rows lose at merge time via transaction_id ordering"
@@ -21,11 +23,13 @@ from pyspark.sql import types as T
 
 from glue_hudi_spark.config import JobControl
 from glue_hudi_spark.operators import cdc
+from glue_hudi_spark.sources.batch import drain_batches
 from glue_hudi_spark.storage.native import NativeTable
 
 
 class CdcStream:
-    """readStream(raw dir) → foreachBatch(dedup + merge into NativeTable)."""
+    """Drain the raw dir in batches; each batch dedup + merge into a
+    NativeTable."""
 
     def __init__(
         self,
@@ -48,21 +52,21 @@ class CdcStream:
         self.max_files_per_trigger = max_files_per_trigger
         self.single_commit = single_commit
         # called as on_batch_merged(table, batch_id) AFTER each batch's
-        # data commit publishes and BEFORE the streaming checkpoint —
-        # the hook downstream maintenance (e.g. MaterializedAgg.refresh)
-        # attaches to; it must be idempotent, since a crash between the
-        # commit and the checkpoint replays the trigger
+        # data commit publishes and BEFORE the batch is marked done in
+        # the batch log — the hook downstream maintenance (e.g.
+        # MaterializedAgg.refresh) attaches to; it must be idempotent,
+        # since a crash between the commit and the mark replays the batch
         self.on_batch_merged = on_batch_merged
         self.table = NativeTable.for_control(spark, curated_root, ctl)
 
     def _infer_schema(self) -> T.StructType:
-        # file-source streams need an explicit schema; infer once from the
+        # every batch reads with one schema; infer it once from the
         # current contents (same inference the batch path does implicitly)
         return self.spark.read.parquet(self.raw_dir).schema
 
     def _merge_batch(self, batch_df, batch_id: int) -> None:
-        # exactly-once: foreachBatch is at-least-once (a crash between the
-        # merge and the streaming checkpoint commit replays the batch).
+        # exactly-once: the drain is at-least-once (a crash between the
+        # merge and marking the batch done replays the batch).
         # The batch id is written INSIDE the data commit's stats — atomic
         # with the publish — so a replayed batch is detected here and
         # skipped instead of double-applied (bulk_insert replay would
@@ -105,27 +109,8 @@ class CdcStream:
         if self.on_batch_merged:
             self.on_batch_merged(self.table, batch_id)
 
-    def start(self, trigger_available_now: bool = True):
-        """Start the stream. ``trigger_available_now=True`` processes the
-        backlog then stops — the batch-job-shaped run; False → continuous."""
-        reader = (
-            self.spark.readStream.schema(self.schema)
-            .format("parquet")
-            .option("recursiveFileLookup", "true")
-        )
-        if self.max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        stream = reader.load(self.raw_dir)
-        writer = (
-            stream.writeStream.foreachBatch(self._merge_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .outputMode("update")
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
     def run_available(self) -> None:
         """Process everything currently in the landing dir, then return."""
-        q = self.start(trigger_available_now=True)
-        q.awaitTermination()
+        drain_batches(self.spark, self.raw_dir, self.checkpoint_dir,
+                      self.schema, self._merge_batch,
+                      self.max_files_per_trigger)

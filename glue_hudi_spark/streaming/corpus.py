@@ -1,19 +1,21 @@
 """Streaming corpus ingestion with arrival-time dedup.
 
 The training-data analog of ``CdcStream``: documents land continuously in
-a directory; each micro-batch is deduplicated against the already-ingested
-corpus (``operators.dedup.incremental_exact`` — normalized-content-hash
-anti-join) and only genuinely new documents append to the ``NativeTable``.
-Re-crawls and re-delivered files add zero rows, so the corpus stays
-exact-dedup-clean without ever rewriting history.
+a directory; each ``run_available()`` drains the new files in batches
+(``sources.batch.drain_batches``), each batch is deduplicated against the
+already-ingested corpus (``operators.dedup.incremental_exact`` —
+normalized-content-hash anti-join) and only genuinely new documents
+append to the ``NativeTable``. Re-crawls and re-delivered files add zero
+rows, so the corpus stays exact-dedup-clean without ever rewriting
+history.
 
-Exactly-once composes the same way as the CDC stream: foreachBatch is
-at-least-once, so the streaming batch id is written inside the data
-commit's stats — atomic with the manifest publish — and a replayed batch
-is detected and skipped rather than re-appended.
+Exactly-once composes the same way as the CDC stream: the drain is
+at-least-once, so the batch id is written inside the data commit's
+stats — atomic with the manifest publish — and a replayed batch is
+detected and skipped rather than re-appended.
 
 Scale: the dedup side carries one DISTINCT md5 projection of the corpus
-(narrow column, never the text bytes) per micro-batch; the append is a
+(narrow column, never the text bytes) per batch; the append is a
 plain bulk write of the surviving rows. Nothing in the loop grows with
 corpus size except that hash projection, which is the theoretical floor
 for exact dedup.
@@ -28,11 +30,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from glue_hudi_spark.operators import dedup
+from glue_hudi_spark.sources.batch import drain_batches
 from glue_hudi_spark.storage.native import NativeTable
 
 
 class CorpusIngestStream:
-    """readStream(docs dir) → foreachBatch(incremental dedup + append)."""
+    """Drain the docs dir in batches; each batch incremental dedup +
+    append."""
 
     def __init__(
         self,
@@ -56,11 +60,11 @@ class CorpusIngestStream:
         self.id_col = id_col
         self.text_col = text_col
         # optional curation-at-the-edge: drop low-quality docs inside the
-        # micro-batch (map-side expressions) BEFORE the dedup join, so
+        # batch (map-side expressions) BEFORE the dedup join, so
         # rejected docs never cost a corpus-hash comparison or a write
         self.min_quality = min_quality
         # full curation at the edge: a CurationPipeline whose stages run
-        # over each micro-batch's FRESH slice (after the corpus dedup
+        # over each batch's FRESH slice (after the corpus dedup
         # anti-join) — the config-driven batch pipeline, applied
         # continuously. Per-batch stages must be batch-local by nature
         # (filters/dedup); a corpus-relative stage like token_budget
@@ -89,7 +93,7 @@ class CorpusIngestStream:
     def _ingest_batch(self, batch_df, batch_id: int) -> None:
         last = self.table.last_stream_batch_id()
         if last is not None and batch_id <= last:
-            return  # replayed batch (crash between commit and checkpoint)
+            return  # replayed batch (crash between commit and done mark)
         if batch_df.isEmpty():
             return
         if self.min_quality is not None:
@@ -141,24 +145,7 @@ class CorpusIngestStream:
             else:
                 ix.build()
 
-    def start(self, trigger_available_now: bool = True):
-        reader = (
-            self.spark.readStream.schema(self.schema)
-            .format("parquet")
-            .option("recursiveFileLookup", "true")
-        )
-        if self.max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        stream = reader.load(self.docs_dir)
-        writer = (
-            stream.writeStream.foreachBatch(self._ingest_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .outputMode("append")
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
     def run_available(self) -> None:
-        q = self.start(trigger_available_now=True)
-        q.awaitTermination()
+        drain_batches(self.spark, self.docs_dir, self.checkpoint_dir,
+                      self.schema, self._ingest_batch,
+                      self.max_files_per_trigger)

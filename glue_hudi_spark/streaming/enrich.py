@@ -18,10 +18,10 @@ whose sentinel end (2200-01-01) would fan out into ~1.5 M hourly
 buckets each. Events earlier than a key's first version get NULL
 attributes (no dimension existed yet) — preserved, not dropped.
 
-Runs inside ``foreachBatch``: the dimension snapshot is re-read per
-micro-batch, so a CDC-merged dimension table picks up new versions with
-at most one batch of lag; per-batch cost is one window over
-(batch ∪ dim-versions), partitioned by key.
+Runs once per batch of ``sources.batch.drain_batches``: the dimension
+snapshot is re-read per batch, so a CDC-merged dimension table picks up
+new versions with at most one batch of lag; per-batch cost is one window
+over (batch ∪ dim-versions), partitioned by key.
 """
 
 from __future__ import annotations
@@ -31,6 +31,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from glue_hudi_spark.operators import asof
+from glue_hudi_spark.sources.batch import drain_batches
 
 
 def enrich_asof(
@@ -51,13 +52,14 @@ def enrich_asof(
 
 
 class EnrichStream:
-    """readStream(events dir) → foreachBatch(as-of enrich → sink dir).
+    """Drain the events dir in batches; each batch as-of enrich → sink
+    dir.
 
     ``dim_loader`` is a zero-arg callable returning the CURRENT SCD2
-    DataFrame — called once per micro-batch so dimension updates flow
+    DataFrame — called once per batch so dimension updates flow
     through without restarting the stream.
 
-    Sink layout: each micro-batch lands in its own hive-style
+    Sink layout: each batch lands in its own hive-style
     ``stream_batch_id=<id>/`` subdirectory of ``out_dir`` (so replays
     overwrite instead of double-appending), which means readers of
     ``out_dir`` see an extra ``stream_batch_id`` partition column. A
@@ -109,8 +111,8 @@ class EnrichStream:
         out = enrich_asof(
             batch_df, self.dim_loader(), self.key_cols,
             self.event_ts, self.attrs)
-        # Idempotent sink: foreachBatch is at-least-once, so a crash between
-        # the write and the checkpoint commit replays the batch. A plain
+        # Idempotent sink: the drain is at-least-once, so a crash between
+        # the write and marking the batch done replays the batch. A plain
         # mode("append") into out_dir would re-append the whole batch; landing
         # each batch in its own hive-style stream_batch_id=<id> directory with
         # overwrite makes the replay rewrite the same files instead — the
@@ -121,14 +123,5 @@ class EnrichStream:
             f"{self.out_dir}/stream_batch_id={int(batch_id)}")
 
     def run_available(self) -> None:
-        q = (
-            self.spark.readStream.schema(self.schema)
-            .format("parquet")
-            .load(self.events_dir)
-            .writeStream.foreachBatch(self._enrich_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain_batches(self.spark, self.events_dir, self.checkpoint_dir,
+                      self.schema, self._enrich_batch)

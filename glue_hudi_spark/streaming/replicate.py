@@ -89,7 +89,6 @@ class TableReplicationStream:
         transform=None,
         sync_deletes_every: int | None = None,
     ):
-        DS.register(spark)
         self.spark = spark
         self.src_path = str(src_path)
         self.dest = dest
@@ -180,13 +179,10 @@ class TableReplicationStream:
         """
         from glue_hudi_spark.operators.recon import table_checksum
 
-        src_keys = (
-            self.spark.read.format("ghs_table")
-            .option("path", self.src_path)
-            .option("withMeta", "true")
-            .load()
-            .select(F.col(RECORD_KEY_COL).alias("_k"))
-        )
+        # the native snapshot, not the ghs_table batch reader: that one
+        # rejects a MoR source with pending deltas
+        src_keys = self._src.read_snapshot(with_meta=True).select(
+            F.col(RECORD_KEY_COL).alias("_k"))
         dest_keys = self.dest.read_snapshot(with_meta=True).select(
             F.col(RECORD_KEY_COL).alias("_k"), *self.dest.record_keys)
         cs = table_checksum(src_keys, [], ["_k"]).first()

@@ -1,19 +1,21 @@
-"""Streaming sketch maintenance: a mergeable sketch LOG over micro-batches.
+"""Streaming sketch maintenance: a mergeable sketch LOG over drained batches.
 
 Continuous "how many distinct users / how hot is key X" without ever
-holding the key space: each micro-batch reduces to its own tiny sketch
-delta (HLL registers + Count-Min counters, `functions.sketches`) and
-APPENDS it to a NativeTable — the lakehouse version of a mergeable
-sketch store. Reads merge on the fly (HLL: max rho per register; CMS:
-sum per counter), which is exactly the sketches' algebra, so the log
-needs no rewrite path: compaction is just the table's normal clustering.
+holding the key space: each ``run_available()`` drains the new event
+files in batches (``sources.batch.drain_batches``), and each batch
+reduces to its own tiny sketch delta (HLL registers + Count-Min
+counters, `functions.sketches`) and APPENDS it to a NativeTable — the
+lakehouse version of a mergeable sketch store. Reads merge on the fly
+(HLL: max rho per register; CMS: sum per counter), which is exactly the
+sketches' algebra, so the log needs no rewrite path: compaction is just
+the table's normal clustering.
 
-Exactly-once composes like every foreachBatch sink here: the streaming
-batch id rides inside the commit's stats — atomic with the manifest
-publish — and a replayed batch is detected and skipped. Sketch deltas
-are a few hundred rows per batch whatever the batch size, so the state
-table grows with BATCH COUNT, not data volume; `read-side merge cost`
-is one narrow aggregate over (batches × registers) rows.
+Exactly-once composes like every drained sink here: the batch id rides
+inside the commit's stats — atomic with the manifest publish — and a
+batch the drain replays after a crash is detected and skipped. Sketch
+deltas are a few hundred rows per batch whatever the batch size, so the
+state table grows with BATCH COUNT, not data volume; `read-side merge
+cost` is one narrow aggregate over (batches × registers) rows.
 """
 
 from __future__ import annotations
@@ -24,14 +26,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from glue_hudi_spark.functions import sketches as SK
+from glue_hudi_spark.sources.batch import drain_batches
 from glue_hudi_spark.storage.native import NativeTable
 
 _STATE_SCHEMA = "kind string, a bigint, b bigint, v bigint"
 
 
 class SketchStream:
-    """readStream(events dir) → foreachBatch(per-batch HLL + CMS deltas
-    appended to one state table). Rows: (kind, a, b, v) =
+    """Drain the events dir in batches; each batch's HLL + CMS deltas
+    append to one state table. Rows: (kind, a, b, v) =
     ('hll', idx, 0, rho) | ('cms', row, bucket, cnt)."""
 
     def __init__(
@@ -79,25 +82,9 @@ class SketchStream:
             self._delta(batch_df), extra_stats={"stream_batch_id": int(batch_id)}
         )
 
-    def start(self, trigger_available_now: bool = True):
-        stream = (
-            self.spark.readStream.schema(self.schema)
-            .format("parquet")
-            .option("recursiveFileLookup", "true")
-            .load(self.events_dir)
-        )
-        writer = (
-            stream.writeStream.foreachBatch(self._ingest_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .outputMode("append")
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
     def run_available(self) -> None:
-        q = self.start(trigger_available_now=True)
-        q.awaitTermination()
+        drain_batches(self.spark, self.events_dir, self.checkpoint_dir,
+                      self.schema, self._ingest_batch)
 
     # -- read side (merge-on-read over the sketch log) ---------------------
 

@@ -2,11 +2,12 @@
 
 The retrieval-side twin of ``CorpusIngestStream(use_index=True)``:
 embedding rows land continuously (an upstream encoder writes parquet);
-each micro-batch upserts into the vector NativeTable and catches the
-persisted IVF index (``operators.vector_index``) up off the table's
-change feed — so queries against the index are never stale by more than
-one in-flight batch, and a retrieval service can keep ``allow_stale``
-off permanently.
+each ``run_available()`` drains the new files in batches
+(``sources.batch.drain_batches``), and each batch upserts into the
+vector NativeTable and catches the persisted IVF index
+(``operators.vector_index``) up off the table's change feed — so queries
+against the index are never stale by more than one in-flight batch, and
+a retrieval service can keep ``allow_stale`` off permanently.
 
 Per-batch cost: one keyed merge (partition/key-range/bloom pruned) plus
 an index refresh that rewrites only the cells the batch's vectors moved
@@ -25,11 +26,13 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from glue_hudi_spark.operators.vector_index import VectorIndex
+from glue_hudi_spark.sources.batch import drain_batches
 from glue_hudi_spark.storage.native import NativeTable
 
 
 class EmbeddingIngestStream:
-    """readStream(embeddings dir) → foreachBatch(upsert + index refresh)."""
+    """Drain the embeddings dir in batches; each batch upsert + index
+    refresh."""
 
     def __init__(
         self,
@@ -73,22 +76,6 @@ class EmbeddingIngestStream:
                              n_centroids=self.n_centroids,
                              train_iters=self.train_iters)
 
-    def start(self, trigger_available_now: bool = True):
-        reader = (
-            self.spark.readStream.schema(self.schema)
-            .format("parquet")
-            .option("recursiveFileLookup", "true")
-        )
-        stream = reader.load(self.vectors_dir)
-        writer = (
-            stream.writeStream.foreachBatch(self._ingest_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .outputMode("append")
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
     def run_available(self) -> None:
-        q = self.start(trigger_available_now=True)
-        q.awaitTermination()
+        drain_batches(self.spark, self.vectors_dir, self.checkpoint_dir,
+                      self.schema, self._ingest_batch)

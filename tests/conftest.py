@@ -77,3 +77,14 @@ def persistent_rdds(spark):
         return n
 
     return count
+
+
+@pytest.fixture()
+def no_streaming_query(monkeypatch):
+    """Fail the test if anything starts a Structured Streaming query."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    def no_stream(*a, **kw):
+        raise AssertionError("a drain started a streaming query")
+
+    monkeypatch.setattr(DataStreamWriter, "start", no_stream)

@@ -82,3 +82,18 @@ def test_orc_scan_bookmarks_like_parquet(spark, tmp_path):
     assert first.count() == 10
     scan.commit()
     assert scan.read_batch() is None  # ledger advanced
+
+
+def test_listing_skips_underscore_and_dot_paths_under_root(spark, tmp_path):
+    """As in Spark's file index, a path component under the raw dir that
+    starts with ``_`` or ``.`` hides the file: a writer's in-flight
+    ``_temporary/`` attempt files and hidden staging are never listed.
+    The raw dir's own name may start with either."""
+    raw = tmp_path / "_raw"
+    for rel in ["a.parquet", "sub/b.parquet", "_temporary/0/part-0.parquet",
+                ".hidden/b.parquet", "sub/_c.parquet", "sub/.d.parquet"]:
+        (raw / rel).parent.mkdir(parents=True, exist_ok=True)
+        (raw / rel).write_bytes(b"PAR1")
+    scan = BookmarkedScan(spark, raw)
+    assert [Path(f).relative_to(raw).as_posix()
+            for f in scan.list_unprocessed()] == ["a.parquet", "sub/b.parquet"]

@@ -297,3 +297,20 @@ def test_drain_that_merges_nothing_still_moves_watermark(spark, tmp_path):
         starting_commit=src.timeline.latest().commit_id - 1,
         transform=lambda df: df.filter(F.col("v") < 100.0)).run_available()
     assert not empty.exists()
+
+
+def test_sync_deletes_on_mor_source_with_pending_deltas(spark, tmp_path):
+    """The source-key read serves a MoR source whose delete is still an
+    uncompacted delta: the replica converges on the source's keys."""
+    src = _mk(spark, tmp_path / "src", storage_type="mor",
+              compact_every=100)
+    src.bulk_insert(_rows(spark, [dict(id=f"k{i}", v=1.0, seq=1)
+                                  for i in range(4)]))
+    src.delete(_rows(spark, [dict(id="k1", v=1.0, seq=2)]))
+    assert src.timeline.latest().deltas
+    dest = _mk(spark, tmp_path / "dest")
+    rep = TableReplicationStream(spark, src.root, dest, tmp_path / "ckpt")
+    rep.run_available()
+    assert rep.sync_deletes() == 0
+    assert sorted(r["id"] for r in dest.read_snapshot().collect()) == \
+        ["k0", "k2", "k3"]

@@ -209,3 +209,33 @@ def test_embedding_stream_keeps_index_current(spark, tmp_path):
     assert not stream.index.status()["stale"]
     got = stream.index.query(q, k=40, nprobe=8)
     assert got.count() == 2 * 34  # all non-self neighbors reachable
+
+
+def test_corpus_drain_starts_no_streaming_query(
+        spark, tmp_path, no_streaming_query):
+    docs = tmp_path / "docs"
+    _land(spark, [dict(doc_id=1, text="alpha beta"),
+                  dict(doc_id=2, text="ALPHA beta")], docs, "B1")
+    stream = CorpusIngestStream(
+        spark, docs, tmp_path / "corpus", tmp_path / "ckpt")
+    stream.run_available()
+    assert spark.streams.active == []
+    assert {r["doc_id"] for r in stream.table.read_snapshot().collect()} \
+        == {1}
+    assert stream.table.last_stream_batch_id() == 0
+
+
+def test_embedding_drain_starts_no_streaming_query(
+        spark, tmp_path, no_streaming_query):
+    from glue_hudi_spark.streaming import EmbeddingIngestStream
+
+    vecs = tmp_path / "vecs"
+    _land(spark, [dict(vec_id=i, embedding=[float(i + 1), float(i % 3) - 1.5])
+                  for i in range(8)], vecs, "B1")
+    stream = EmbeddingIngestStream(
+        spark, vecs, tmp_path / "vtab", tmp_path / "ckpt", n_centroids=2)
+    stream.run_available()
+    assert spark.streams.active == []
+    assert stream.table.read_snapshot().count() == 8
+    assert stream.index.exists()
+    assert stream.table.last_stream_batch_id() == 0

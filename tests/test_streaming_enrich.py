@@ -102,3 +102,19 @@ def test_legacy_flat_out_dir_fails_loudly(spark, tmp_path):
             spark, events, out, tmp_path / "ckpt",
             dim_loader=lambda: None, key_cols=["k"], event_ts="ts",
             attrs=[])
+
+
+def test_enrich_drain_starts_no_streaming_query(
+        spark, tmp_path, no_streaming_query):
+    ev_dir = tmp_path / "events"
+    _land(spark, [(1, 1, dt.datetime(2024, 2, 15)),
+                  (2, 2, dt.datetime(2024, 1, 5))], ev_dir, "B1")
+    stream = EnrichStream(
+        spark, ev_dir, tmp_path / "out", tmp_path / "ckpt",
+        dim_loader=lambda: _dim(spark, 4),
+        key_cols=["user_id"], event_ts="ts", attrs=["tier"])
+    stream.run_available()
+    assert spark.streams.active == []
+    got = {(r["event_id"], r["tier"], r["stream_batch_id"]) for r in
+           spark.read.parquet(str(tmp_path / "out")).collect()}
+    assert got == {(1, "bronze", 0), (2, None, 0)}

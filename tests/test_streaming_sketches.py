@@ -3,8 +3,10 @@ replay idempotence, equivalence with the one-shot batch sketch."""
 
 from __future__ import annotations
 
+import json
 from pathlib import Path
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from glue_hudi_spark.functions import sketches as SK
@@ -70,3 +72,64 @@ def test_state_grows_with_batches_not_rows(spark, tmp_path):
     stream.run_available()
     n_state = stream.table.read_snapshot().count()
     assert n_state <= SK.HLL_M + SK.CMS_D * SK.CMS_W
+
+
+def test_sketch_drain_starts_no_streaming_query(
+        spark, tmp_path, no_streaming_query):
+    ev = tmp_path / "events"
+    _land(spark, [dict(user_id=i) for i in range(20)], ev, "B1")
+    stream = SketchStream(spark, ev, tmp_path / "sketches", tmp_path / "ckpt")
+    stream.run_available()
+    assert spark.streams.active == []
+    assert stream.table.last_stream_batch_id() == 0
+
+
+def test_batch_failed_after_commit_replays_same_id_and_files(spark, tmp_path):
+    """A handler that fails after its sink commit leaves the batch open
+    in the log; the next drain replays it with the same id and files
+    (skipped by the in-commit batch id), and a file landed after the
+    failure goes into the next id. No delta is counted twice."""
+    ev = tmp_path / "events"
+    b1 = [dict(user_id=i % 30) for i in range(120)]
+    b2 = [dict(user_id=(i % 20) + 25) for i in range(80)]
+    _land(spark, b1, ev, "B1")
+    stream = SketchStream(spark, ev, tmp_path / "sketches", tmp_path / "ckpt")
+    seen = []
+    ingest = stream._ingest_batch
+
+    def record(df, batch_id):
+        seen.append((batch_id, sorted(Path(f).name for f in df.inputFiles())))
+        ingest(df, batch_id)
+
+    stream._ingest_batch = record
+    commit = stream.table.bulk_insert
+
+    def commit_then_fail(*a, **kw):
+        commit(*a, **kw)
+        raise RuntimeError("crash after the sink commit")
+
+    stream.table.bulk_insert = commit_then_fail
+    with pytest.raises(RuntimeError, match="after the sink commit"):
+        stream.run_available()
+    del stream.table.bulk_insert
+    log_path = tmp_path / "ckpt" / "batch_log.json"
+    log = json.loads(log_path.read_text())
+    assert log["open"]["id"] == 0 and log["done"] == []
+    assert stream.table.last_stream_batch_id() == 0
+
+    _land(spark, b2, ev, "B2")
+    stream.run_available()
+    assert seen == [(0, ["B1_0.parquet"]), (0, ["B1_0.parquet"]),
+                    (1, ["B2_0.parquet"])]
+    assert [c.stats["stream_batch_id"]
+            for c in stream.table.timeline.history()] == [0, 1]
+    log = json.loads(log_path.read_text())
+    assert log["open"] is None and log["next_id"] == 2
+
+    whole = spark.createDataFrame([Row(**r) for r in b1 + b2])
+    assert stream.distinct_estimate() == SK.hll_estimate(
+        SK.hll_sketch(whole, "user_id")).collect()[0]["hll_estimate"]
+    # every event adds 1 to one counter per CMS row: a replayed delta
+    # would double the total
+    cms_total = stream._merged("cms").agg(F.sum("v")).first()[0]
+    assert cms_total == SK.CMS_D * (len(b1) + len(b2))
