@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from glue_hudi_spark.storage.native import local_batch
+
 # DMS-style envelope columns dropped before write (processData.py:334).
 ENVELOPE_COLS = ["db", "op", "schema_name", "transaction_id", "seq_by_pk"]
 
@@ -114,9 +116,14 @@ def apply_cdc_batch(
 
     ``split_upsert`` (C6): route 'I' rows through bulk_insert (no key-index
     lookup — cheap for fresh keys) and only 'U' rows through upsert.
+
+    The batch is derived once for all of its commits (the reference's C5
+    persist, processData.py:301,388): held on the driver when it fits
+    ``local_batch``'s row cap, else persisted on the executors.
     """
     commits = []
-    batch = batch.persist()
+    held = local_batch(batch)
+    batch = batch.persist() if held is None else held[0]
     try:
         if single_commit:
             # one atomic commit handles I/U/D together; the caller must
@@ -150,4 +157,5 @@ def apply_cdc_batch(
             commits.append(c)
         return commits
     finally:
-        batch.unpersist()
+        if held is None:
+            batch.unpersist()

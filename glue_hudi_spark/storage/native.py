@@ -40,6 +40,7 @@ import os
 import re
 import time
 import urllib.parse
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass
 from functools import lru_cache
@@ -62,6 +63,7 @@ from glue_hudi_spark.storage.commits import (
 # Bounded OCC retry: how many times a losing writer re-bases its commit
 # onto the new timeline head before surfacing ConcurrentWriteError.
 OCC_MAX_REBASES = 5
+FOOTER_READ_THREADS = 8  # concurrent parquet footer reads per commit
 
 # Meta columns (the role of Hudi's _hoodie_* columns, SURVEY §1.1.3).
 COMMIT_TIME_COL = "_ghs_commit_time"
@@ -245,9 +247,9 @@ def _file_footer_stats(
     root: str, rel: str, stats_cols: list[str]
 ) -> tuple[str, list[str] | None, dict]:
     """One file's footer stats: (rel, [key_lo, key_hi] | None,
-    {col: [lo, hi]}). Module-level and driver-free so it runs inside
-    executor tasks; a column missing stats in ANY row group is dropped
-    for the file (conservative)."""
+    {col: [lo, hi]}). Stateless, so ``_collect_file_stats``' thread pool
+    runs it concurrently; a column missing stats in ANY row group is
+    dropped for the file (conservative)."""
     import pyarrow.parquet as pq
 
     try:
@@ -575,6 +577,46 @@ def _plan_is_deterministic(df: DataFrame) -> bool:
             for i in range(kids.size()):
                 stack.append(kids.apply(i))
         return culprits <= _ROW_STABLE_ND
+    except Exception:
+        return False
+
+
+#: largest batch ``local_batch`` holds on the driver; above it the
+#: caller keeps its executor-side path (persist or re-derivation)
+LOCAL_BATCH_MAX_ROWS = 50_000
+
+
+def local_batch(df: DataFrame) -> "tuple[DataFrame, int] | None":
+    """``(frame, rows)``: ``df`` derived ONCE and held on the driver as a
+    ``LocalRelation``, or None when it has more than
+    ``LOCAL_BATCH_MAX_ROWS`` rows. The rows are collected and rebuilt on
+    the JVM side (``collectAsList`` → ``createDataFrame`` under ``df``'s
+    own schema), so they never cross into Python and every type keeps
+    its exact value. Every later action over the frame reads the held
+    rows instead of re-running the derivation, and nothing is stored in
+    executor memory — the small-batch replacement for a ``persist``.
+    A caller past the cap pays one bounded ``limit`` job, then runs its
+    executor-side path unchanged."""
+    cap = LOCAL_BATCH_MAX_ROWS
+    # toDF: a spark.range frame is a JVM Dataset of longs, not of rows
+    rows = df.limit(cap + 1)._jdf.toDF().collectAsList()
+    n = rows.size()
+    if n > cap:
+        return None
+    spark = df.sparkSession
+    jdf = spark._jsparkSession.createDataFrame(rows, df._jdf.schema())
+    return DataFrame(jdf, spark), n
+
+
+def _is_local_batch(df: DataFrame) -> bool:
+    """True when every leaf of ``df``'s analyzed plan is a
+    ``LocalRelation`` (a ``local_batch`` frame or a projection of one):
+    each execution then reads driver-held rows, so persisting the batch
+    saves no work."""
+    try:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        return all(leaves.apply(i).getClass().getSimpleName()
+                   == "LocalRelation" for i in range(leaves.size()))
     except Exception:
         return False
 
@@ -1072,14 +1114,18 @@ class NativeTable:
         elif width and self.partition_keys:
             # cluster each hive partition into at most N output files:
             # hash-repartition on (partition dirs, record-key bucket) —
-            # buckets of one dir landing in the same task coalesce further
+            # buckets of one dir landing in the same task coalesce further.
+            # The sort leads with the dir columns: the partitioned write
+            # requires that ordering and would otherwise re-sort on the
+            # dirs alone, scattering the key order inside each file
             bucket = F.pmod(
                 F.xxhash64(record_key_expr(self.record_keys)),
                 F.lit(width),
             )
             out = out.repartition(
                 *[F.col(c) for c in self._pp_cols()], bucket
-            ).sortWithinPartitions(*(self.sort_order or self.record_keys))
+            ).sortWithinPartitions(
+                *self._pp_cols(), *(self.sort_order or self.record_keys))
         elif width and self.sort_order:
             # declared SortOrder (Iceberg class): range-cluster on the
             # sort columns so each file covers a disjoint interval of
@@ -1347,27 +1393,21 @@ class NativeTable:
         are conservative, never wrong. Files/columns without usable stats
         are simply not indexed (always safe — pruning is an optimization).
 
-        Executor-side above a small file count: footer reads are
-        metadata-only, but a commit writing thousands of files on an
-        object store must not serialize thousands of driver round-trips —
-        the file list fans out as tasks and only the finished [min, max]
-        pairs come back (same pattern as ``_build_blooms``). Below the
-        threshold the driver loop wins (no job-scheduling overhead).
+        Footer reads are metadata-only round trips, so they run on a
+        driver thread pool (pyarrow releases the GIL while it reads): a
+        commit writing hundreds of files on an object store overlaps
+        their latencies. Not a Spark job: fanning the file list out as
+        tasks starts Python workers, seconds of startup for reads that
+        take milliseconds.
         """
         if not rel_files:
             return {}, {}
         root = str(self.root)
         cols = list(self.stats_cols or [])
-        if len(rel_files) <= 16:
-            results = [_file_footer_stats(root, rel, cols) for rel in rel_files]
-        else:
-            sc = self.spark.sparkContext
-            slices = min(len(rel_files), max(sc.defaultParallelism, 1) * 2)
-            results = (
-                sc.parallelize(sorted(rel_files), slices)
-                .map(lambda rel: _file_footer_stats(root, rel, cols))
-                .collect()
-            )
+        with ThreadPoolExecutor(
+                max_workers=min(len(rel_files), FOOTER_READ_THREADS)) as pool:
+            results = list(pool.map(
+                lambda rel: _file_footer_stats(root, rel, cols), rel_files))
         key_stats = {rel: kv for rel, kv, _ in results if kv}
         col_stats = {rel: cs for rel, _, cs in results if cs}
         return key_stats, col_stats
@@ -2622,7 +2662,7 @@ class NativeTable:
             kept = [f for f in files if f not in shared]
             df = self._read_files(
                 kept, c.schema_json,
-                dvs={f: e for f, e in c.dvs.items() if f in set(kept)},
+                dvs={f: c.dvs[f] for f in kept if f in c.dvs},
                 defaults=c.column_defaults)
             return self._to_logical(df, c)
 
@@ -3199,8 +3239,9 @@ class NativeTable:
         our_dvs = dvs or {}
         dv_delta = {f: e for f, e in our_dvs.items()
                     if e != base_dvs.get(f)}
+        winner_files = set(actual.files)
         for f in dv_delta:
-            if f not in set(actual.files):
+            if f not in winner_files:
                 _conflict("winner rewrote a file this commit attached "
                           "deletion vectors to")
             if actual.dvs.get(f) != base_dvs.get(f):
@@ -3242,8 +3283,8 @@ class NativeTable:
         # winner's DV state for surviving files, plus our own changes
         # (both verified disjoint above); entries for files we removed
         # die with them
-        rb_dvs = {f: e for f, e in actual.dvs.items()
-                  if f in set(rebased_files)}
+        rebased_set = set(rebased_files)
+        rb_dvs = {f: e for f, e in actual.dvs.items() if f in rebased_set}
         rb_dvs.update(dv_delta)
         return (new_cid, rebased_files, rebased_deltas, rb_key, rb_col,
                 rb_stats, rb_dvs, actual)
@@ -3750,14 +3791,14 @@ class NativeTable:
             probed = self._guarded_probe(stack, batch)
             if probed is None:
                 return None
-            batch, key_range, touched = probed
+            batch, key_range, touched, local = probed
             cid = self.timeline.next_commit_id()
             keyed = batch.withColumn(
                 RECORD_KEY_COL, record_key_expr(self.record_keys))
             # bloom probe + semi-join + tombstones share one
-            # materialization
+            # materialization (a driver-held batch already is one)
             keyed, affected, _ = self._prune_ladder(
-                stack, prev, keyed, touched, key_range, persist=True)
+                stack, prev, keyed, touched, key_range, persist=not local)
             tombstones = self._drop_on_error(
                 stack, self._write_tombstones(keyed))
             if not affected:
@@ -3874,7 +3915,8 @@ class NativeTable:
                     >= max(1, min_dv_rows)]
         if not to_purge:
             return None
-        carried = [f for f in commit.files if f not in set(to_purge)]
+        purged = set(to_purge)
+        carried = [f for f in commit.files if f not in purged]
         df = self._read_files(to_purge, commit.schema_json,
                               dvs=commit.dvs,
                               defaults=commit.column_defaults)
@@ -4011,21 +4053,24 @@ class NativeTable:
 
         ``tombstones(keyed)`` returns the frame whose keys the change
         feed records as deleted (None: none). ``persist`` materializes
-        the keyed batch once for paths that run extra actions over it.
-        Every persist lives on this call's own ``ExitStack``, so a
-        failure at any step releases it, and concurrent calls on one
-        handle never touch each other's frames."""
+        the keyed batch once for paths that run extra actions over it;
+        a batch held on the driver (``local_batch``) skips it, since
+        each of those actions already reads the held rows. Every
+        persist lives on this call's own ``ExitStack``, so a failure at
+        any step releases it, and concurrent calls on one handle never
+        touch each other's frames."""
         with ExitStack() as stack:
             probed = self._guarded_probe(stack, batch)
             if probed is None:
                 return None
-            batch, key_range, touched = probed
+            batch, key_range, touched, local = probed
             cid = self.timeline.next_commit_id()
             keyed = self._with_meta(batch, f"{cid:020d}")
             keyed = self._precombine_dedup(keyed)
             read_schema_json, keyed = self._apply_type_widening(prev, keyed)
             keyed, affected, untouched = self._prune_ladder(
-                stack, prev, keyed, touched, key_range, persist, prune_values)
+                stack, prev, keyed, touched, key_range,
+                persist and not local, prune_values)
             existing = self._read_files(affected, read_schema_json,
                                         dvs=prev.dvs,
                                         defaults=prev.column_defaults)
@@ -4053,14 +4098,20 @@ class NativeTable:
 
     def _guarded_probe(self, stack: ExitStack, batch: DataFrame):
         """The front every keyed write shares: None for an empty batch,
-        else ``(batch, key_range, touched)`` — the batch materialized on
-        the caller's ``stack`` when its plan is non-deterministic."""
+        else ``(batch, key_range, touched, local)`` — the batch
+        materialized on the caller's ``stack`` when its plan is
+        non-deterministic; ``local`` when it reads only driver-held rows
+        (``_is_local_batch``), so the caller's own persist would save
+        nothing."""
         # the probe, prune decisions, anti-join key set, and write leg
         # each execute the batch lineage; a non-deterministic derivation
         # (rand, monotonically_increasing_id) could prune files whose old
         # rows the re-derived write leg then hits — materialize it ONCE
         # first (Delta MERGE's source materialization). Deterministic
         # batches (the common case) keep the cheap unpersisted passes.
+        # Driver-held rows do not excuse a non-deterministic plan: an
+        # expression above a shuffle of them re-draws per execution.
+        local = _is_local_batch(batch)
         if not _plan_is_deterministic(batch):
             batch = batch.persist()
             stack.callback(batch.unpersist)
@@ -4080,7 +4131,7 @@ class NativeTable:
             key_range = None
             touched = (None if self.global_index
                        else self._batch_partitions(batch))
-        return batch, key_range, touched
+        return batch, key_range, touched, local
 
     def _prune_ladder(self, stack: ExitStack, prev: "Commit",
                       keyed: DataFrame, touched, key_range, persist: bool,
@@ -4107,8 +4158,8 @@ class NativeTable:
         if prune_values and affected:
             vkept = self._prune_candidates_by_values(
                 affected, prev.col_stats, prune_values)
-            untouched = untouched + [f for f in affected
-                                     if f not in set(vkept)]
+            vset = set(vkept)
+            untouched = untouched + [f for f in affected if f not in vset]
             affected = vkept
         if persist or (self.bloom_index and affected):
             keyed = keyed.persist()
@@ -4202,7 +4253,8 @@ class NativeTable:
         untouched: list[str] = []
         if prune:
             affected = self._prune_files(prev.files, prune, prev)
-            untouched = [f for f in prev.files if f not in set(affected)]
+            aset = set(affected)
+            untouched = [f for f in prev.files if f not in aset]
         existing = self._read_files(affected, prev.schema_json, dvs=prev.dvs,
                                     defaults=prev.column_defaults)
         with ExitStack() as stack:
@@ -4300,7 +4352,8 @@ class NativeTable:
         # (emptiness probe + key write); persist so the batch lineage —
         # often a window over the raw feed — computes ONCE for all of
         # probe, tombstone write, anti-join, and union (the r8 bench
-        # caught the unpersisted version re-deriving it per action)
+        # caught the unpersisted version re-deriving it per action);
+        # a driver-held batch (local_batch) computes once already
         return self._keyed_rewrite(
             batch, prev, "merge", upserted, deleted,
             persist=self.change_feed_deletes, prune_values=prune_values,
@@ -4721,7 +4774,8 @@ class NativeTable:
         ]
         if not to_pack:
             return None
-        carried = [f for f in commit.files if f not in set(to_pack)]
+        packed = set(to_pack)
+        carried = [f for f in commit.files if f not in packed]
         df = self._read_files(to_pack, commit.schema_json, dvs=commit.dvs,
                               defaults=commit.column_defaults)
         cid = self.timeline.next_commit_id()
@@ -4784,7 +4838,8 @@ class NativeTable:
             selected = selected[:max_files]
         if not selected:
             return None
-        carried = [f for f in commit.files if f not in set(selected)]
+        chosen = set(selected)
+        carried = [f for f in commit.files if f not in chosen]
         df = self._read_files(selected, commit.schema_json,
                               dvs=commit.dvs,
                               defaults=commit.column_defaults)

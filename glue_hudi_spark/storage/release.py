@@ -6,9 +6,10 @@ TOGETHER: one call tags every table (frozen, retention-protected
 manifests — see the refs machinery) and writes a single release
 manifest mapping table → (path, tag, commit id, instant). Any job, on
 any session, can then load the release and read exactly the bytes every
-other run of that release reads, forever — through the ``ghs_table``
-data source's ``tag`` option, so loading needs no table configuration
-at all, just the manifest.
+other run of that release reads, forever — through
+``NativeTable.read_snapshot(tag=...)``. The manifest records each
+table's record keys and precombine field, so loading needs no table
+configuration at all, just the manifest.
 
 This is the dataset-versioning primitive DVC/lakeFS-style tools bolt on
 externally, expressed natively: tags already survive retention cleaning
@@ -67,6 +68,8 @@ def create_release(name: str, tables: dict, root: str | Path) -> dict:
                 "tag": tag,
                 "commit_id": head.commit_id,
                 "wall_time": float(head.wall_time),
+                "record_keys": list(table.record_keys),
+                "precombine": table.precombine,
             }
     except Exception:
         for table in tagged:  # no half-releases
@@ -97,22 +100,24 @@ def create_release(name: str, tables: dict, root: str | Path) -> dict:
 
 
 def load_release(spark, root: str | Path, name: str) -> dict:
-    """{logical name: DataFrame} pinned at the release's tags, read
-    through the ``ghs_table`` data source — no table configuration
-    needed, the manifest + frozen tag manifests are the whole
-    protocol."""
-    from glue_hudi_spark.sources import datasource as DS
+    """{logical name: DataFrame} pinned at the release's tags — no
+    table configuration needed, the manifest + frozen tag manifests are
+    the whole protocol. Read natively, so a MoR table tagged with
+    pending deltas serves its merged rows."""
+    from glue_hudi_spark.storage.native import NativeTable
 
     path = _manifest_path(root, name)
     if not path.exists():
         raise ValueError(f"no release {name!r} under {root}")
     manifest = json.loads(path.read_text())
-    DS.register(spark)
     out = {}
     for tname, e in manifest["tables"].items():
-        out[tname] = (spark.read.format("ghs_table")
-                      .option("path", e["path"])
-                      .option("tag", e["tag"]).load())
+        # older manifests record neither: a read uses the keys only for
+        # bootstrapped files, the precombine field only for MoR deltas
+        table = NativeTable(spark, e["path"],
+                            record_keys=e.get("record_keys", []),
+                            precombine=e.get("precombine"))
+        out[tname] = table.read_snapshot(tag=e["tag"])
     return out
 
 

@@ -26,7 +26,7 @@ from pyspark.sql import SparkSession
 
 from glue_hudi_spark.checkpoints import release_checkpoint
 from glue_hudi_spark.operators import ivm
-from glue_hudi_spark.storage.native import NativeTable
+from glue_hudi_spark.storage.native import NativeTable, local_batch
 
 
 class MaterializedAgg:
@@ -120,19 +120,19 @@ class MaterializedAgg:
             delta.select(*self.group_cols), on=self.group_cols,
             how="left_semi")
         merged = ivm.merge_delta(touched, delta, self.group_cols)
-        # NO batch checkpoint here, unlike the two join-shaped views:
-        # this delta derives from ONE change feed + a map-side-combined
-        # aggregate — the round-14 interleaved A/B measured the
-        # checkpoint 1.4x SLOWER (sql_continuous_aggregate 4.78→6.61 s,
-        # sql_materialized_view 7.72→8.65 s) because the full-width
-        # materialization costs more than the cheap per-leg
-        # re-executions it saves. The join shapes' multi-join legs
-        # measured the opposite (orders_mv_join_agg 13.7→10.4 s).
+        # The batch is O(touched groups): held on the driver, the
+        # merge's probe, prune, anti-join and write legs read its rows
+        # instead of each re-deriving change feed → delta → semi-join.
+        # Not a localCheckpoint, as in the two join-shaped views: that
+        # executor-side materialization measured 1.4x SLOWER here in the
+        # round-14 A/B (sql_continuous_aggregate 4.78→6.61 s). A window
+        # touching more groups than local_batch's cap merges unheld.
         batch = merged.withColumn(
             "_ma_op", F.when(F.col("cnt") > 0, F.lit("U"))
             .otherwise(F.lit("D")))
-        committed = self.state.merge(batch, op_col="_ma_op",
-                                     extra_stats=marker)
+        held = local_batch(batch)
+        committed = self.state.merge(held[0] if held else batch,
+                                     op_col="_ma_op", extra_stats=marker)
         if committed is None:
             # empty window (head moved by compact/etc.): metadata-only
             # watermark commit keeps the converged cadence O(1)

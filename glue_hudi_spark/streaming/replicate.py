@@ -15,7 +15,8 @@ Streaming query:
 3. the range ``(s, e]`` is read as a native Spark DataFrame (parquet
    scans of the changed files and tombstones, with deletion vectors,
    column defaults and column mapping applied);
-4. one ``_apply_batch`` merges it, and the marker it commits with —
+4. one ``_apply_batch`` merges it (held on the driver when it fits
+   ``local_batch``'s row cap), and the marker it commits with —
    ``replicated_through: e`` plus the drain's ``stream_batch_id`` —
    lands atomically with the data. An empty range records the
    watermark with a metadata-only ``touch`` commit.
@@ -65,6 +66,7 @@ from glue_hudi_spark.storage.native import (
     DELTA_OP_COL,
     RECORD_KEY_COL,
     NativeTable,
+    local_batch,
 )
 
 
@@ -118,28 +120,32 @@ class TableReplicationStream:
                       "replicated_from": self.src_path}
             if through is not None:
                 marker["replicated_through"] = int(through)
+            meta = [COMMIT_TIME_COL, RECORD_KEY_COL, DELTA_OP_COL]
+            # a key can appear as several changes in one drained range
+            # (update then delete, delete then reinsert): the newest
+            # commit's row wins, THEN routes to its op
+            w = Window.partitionBy(RECORD_KEY_COL).orderBy(
+                F.col(COMMIT_TIME_COL).desc())
+            latest = (batch_df.withColumn("_ghs_rn", F.row_number().over(w))
+                      .filter(F.col("_ghs_rn") == 1).drop("_ghs_rn"))
+            ups = latest.filter(F.col(DELTA_OP_COL) != "d").drop(*meta)
+            if self.transform is not None:
+                ups = self.transform(ups)
+            dels = latest.filter(F.col(DELTA_OP_COL) == "d").drop(*meta)
+            opb = ups.withColumn("_ghs_rep_op", F.lit("U")).unionByName(
+                dels.withColumn("_ghs_rep_op", F.lit("D")),
+                allowMissingColumns=True)
+            # derive the range once, held on the driver: the merge's legs
+            # read the held rows, and its size is the emptiness test. A
+            # range past the cap is non-empty and merges unheld.
+            held = local_batch(opb)
             merged = None
-            if not batch_df.isEmpty():
-                meta = [COMMIT_TIME_COL, RECORD_KEY_COL, DELTA_OP_COL]
-                # a key can appear as several changes in one drained
-                # range (update then delete, delete then reinsert):
-                # the newest commit's row wins, THEN routes to its op
-                w = Window.partitionBy(RECORD_KEY_COL).orderBy(
-                    F.col(COMMIT_TIME_COL).desc())
-                latest = (batch_df.withColumn(
-                    "_ghs_rn", F.row_number().over(w))
-                    .filter(F.col("_ghs_rn") == 1).drop("_ghs_rn"))
-                ups = latest.filter(F.col(DELTA_OP_COL) != "d").drop(*meta)
-                if self.transform is not None:
-                    ups = self.transform(ups)
-                dels = latest.filter(F.col(DELTA_OP_COL) == "d").drop(*meta)
-                opb = ups.withColumn("_ghs_rep_op", F.lit("U")).unionByName(
-                    dels.withColumn("_ghs_rep_op", F.lit("D")),
-                    allowMissingColumns=True)
+            if held is None or held[1]:
                 # one atomic commit applies the range's upserts AND
                 # deletes (CoW; MoR dest splits into its documented
                 # delta pair) — the batch-id marker rides inside it
-                merged = self.dest.merge(opb, op_col="_ghs_rep_op",
+                merged = self.dest.merge(held[0] if held else opb,
+                                         op_col="_ghs_rep_op",
                                          extra_stats=marker)
             if merged is None and through is not None \
                     and self.dest.exists():

@@ -1243,3 +1243,51 @@ def test_commit_shape_per_write_path(spark, tmp_path, dv, write, shape):
             c.stats.get("files_carried"), bool(c.tombstones),
             c.stats.get("dv_rows_marked")) == shape
     assert t.validate()["ok"]
+
+
+def _job_ids(spark) -> set[int]:
+    """Ids of every job the status tracker knows, once the listener bus
+    has delivered all events posted so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def test_footer_stats_start_no_spark_job(spark, tmp_table_dir):
+    from glue_hudi_spark.storage.native import _file_footer_stats
+
+    t = _mk(spark, tmp_table_dir, partition_keys=["pt"],
+            files_per_partition=1, stats_cols=["v", "n"])
+    t.bulk_insert(spark.range(300).selectExpr(
+        "id", "format_string('v%03d', id) AS v", "id * 2 AS n",
+        "1 AS seq", "CAST(id % 30 AS int) AS pt"))
+    files = t.timeline.latest().files
+    assert len(files) == 30
+    before = _job_ids(spark)
+    key_stats, col_stats = t._collect_file_stats(files)
+    assert _job_ids(spark) == before
+    per_file = [_file_footer_stats(str(t.root), f, ["v", "n"])
+                for f in files]
+    assert key_stats == {rel: kv for rel, kv, _ in per_file if kv}
+    assert col_stats == {rel: cs for rel, _, cs in per_file if cs}
+    assert len(key_stats) == len(col_stats) == 30
+
+
+def test_partitioned_upsert_files_sorted_by_record_key(spark, tmp_table_dir):
+    """The planned write's own sort on the partition dirs must not undo
+    the per-file key order (it used to replace the key sort)."""
+    import pyarrow.parquet as pq
+
+    t = _mk(spark, tmp_table_dir, partition_keys=["pt"],
+            files_per_partition=1)
+    t.bulk_insert(spark.range(0, 4000, 2, numPartitions=4).selectExpr(
+        "id", "'a' AS v", "1 AS seq", "CAST(id % 3 AS int) AS pt"))
+    t.upsert(spark.range(1, 4000, 2, numPartitions=4).selectExpr(
+        "id", "'b' AS v", "2 AS seq", "CAST(id % 3 AS int) AS pt")
+        .repartition(4))
+    files = t.timeline.latest().files
+    assert len(files) == 3
+    for f in files:
+        ids = pq.read_table(str(t.root / f), columns=["id"]) \
+            .column("id").to_pylist()
+        assert ids == sorted(ids), f

@@ -76,3 +76,19 @@ def test_drop_release_frees_files(spark, tmp_path):
     assert docs.validate()["ok"]
     with pytest.raises(ValueError, match="no release"):
         R.load_release(spark, tmp_path, "old")
+
+
+def test_load_release_of_mor_table_with_pending_deltas(spark, tmp_path):
+    """A release tagging a MoR commit with an uncompacted delta delete
+    loads the merged rows."""
+    t = NativeTable(spark, tmp_path / "mor", record_keys=["k"],
+                    precombine="s", storage_type="mor", compact_every=100)
+    t.bulk_insert(spark.range(4).selectExpr(
+        "format_string('k%04d', id) AS k", "id AS v", "1 AS s"))
+    t.delete(spark.createDataFrame([("k0001",)], "k string"))
+    assert t.timeline.latest().deltas
+    R.create_release("mor", {"mor": t}, tmp_path)
+    rows = R.load_release(spark, tmp_path, "mor")["mor"].collect()
+    assert sorted((r.k, r.v) for r in rows) == [
+        ("k0000", 0), ("k0002", 2), ("k0003", 3)]
+    assert sorted(rows[0].asDict()) == ["k", "s", "v"]
