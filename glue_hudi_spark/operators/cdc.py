@@ -118,8 +118,9 @@ def apply_cdc_batch(
     lookup — cheap for fresh keys) and only 'U' rows through upsert.
 
     The batch is derived once for all of its commits (the reference's C5
-    persist, processData.py:301,388): held on the driver when it fits
-    ``local_batch``'s row cap, else persisted on the executors.
+    persist, processData.py:301,388): held on the driver when Spark's
+    size estimate of it fits ``local_batch``'s cap, else persisted on the
+    executors.
     """
     commits = []
     held = local_batch(batch)

@@ -17,9 +17,9 @@ Run shape (entry point A/B in SURVEY §3):
 
 The reference's per-batch ``persist``/``unpersist`` (C5,
 processData.py:301,388) lives inside ``apply_cdc_batch``: a deduped batch
-under ``storage.native.local_batch``'s row cap is derived once and held
-on the driver instead, and only a larger one is persisted on the
-executors. The logging
+whose estimated size fits ``storage.native.local_batch``'s cap is derived
+once and held on the driver instead, and only a larger one is persisted
+on the executors. The logging
 ``count()`` (processData.py:303) is intentionally not reproduced — it costs
 a full extra job (SURVEY §4 known inefficiency).
 """

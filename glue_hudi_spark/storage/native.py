@@ -63,7 +63,9 @@ from glue_hudi_spark.storage.commits import (
 # Bounded OCC retry: how many times a losing writer re-bases its commit
 # onto the new timeline head before surfacing ConcurrentWriteError.
 OCC_MAX_REBASES = 5
-FOOTER_READ_THREADS = 8  # concurrent parquet footer reads per commit
+# concurrent parquet footer reads per commit: at an emulated 20 ms a
+# read, 8 threads read 300 footers in 0.85 s against 6.3 s serially
+FOOTER_READ_THREADS = 8
 
 # Meta columns (the role of Hudi's _hoodie_* columns, SURVEY §1.1.3).
 COMMIT_TIME_COL = "_ghs_commit_time"
@@ -581,42 +583,70 @@ def _plan_is_deterministic(df: DataFrame) -> bool:
         return False
 
 
-#: largest batch ``local_batch`` holds on the driver; above it the
-#: caller keeps its executor-side path (persist or re-derivation)
-LOCAL_BATCH_MAX_ROWS = 50_000
+#: largest batch ``local_batch`` holds on the driver, by Spark's size
+#: estimate; past it the caller keeps its executor-side path (persist or
+#: re-derivation). Measured on a 4-core host with 6-column CDC rows
+#: (about 90 estimated bytes a row): ``apply_cdc_batch``, where holding
+#: replaces a persist, ran level with it at 100 KB and slower from
+#: 270 KB (+10-20%) to 860 KB (+50%); a replica drain, where holding
+#: replaces a re-derivation per merge leg, ran faster up to about 5,000
+#: rows and level at 20,000.
+LOCAL_BATCH_MAX_BYTES = 256 << 10
+
+#: plan nodes that re-derive held rows identically on every execution:
+#: no shuffle, so no operator whose result depends on arrival order
+_HELD_PLAN_NODES = frozenset(
+    {"LocalRelation", "Project", "Filter", "Union", "SubqueryAlias"})
 
 
-def local_batch(df: DataFrame) -> "tuple[DataFrame, int] | None":
+def local_batch(df: DataFrame,
+                max_rows: int | None = None) -> "tuple[DataFrame, int] | None":
     """``(frame, rows)``: ``df`` derived ONCE and held on the driver as a
-    ``LocalRelation``, or None when it has more than
-    ``LOCAL_BATCH_MAX_ROWS`` rows. The rows are collected and rebuilt on
-    the JVM side (``collectAsList`` → ``createDataFrame`` under ``df``'s
-    own schema), so they never cross into Python and every type keeps
-    its exact value. Every later action over the frame reads the held
-    rows instead of re-running the derivation, and nothing is stored in
-    executor memory — the small-batch replacement for a ``persist``.
-    A caller past the cap pays one bounded ``limit`` job, then runs its
-    executor-side path unchanged."""
-    cap = LOCAL_BATCH_MAX_ROWS
-    # toDF: a spark.range frame is a JVM Dataset of longs, not of rows
-    rows = df.limit(cap + 1)._jdf.toDF().collectAsList()
-    n = rows.size()
-    if n > cap:
+    ``LocalRelation``, or None when its estimated size passes
+    ``LOCAL_BATCH_MAX_BYTES``. The estimate is Spark's ``sizeInBytes``
+    for the optimized plan (file sizes under a scan, row widths under a
+    ``LocalRelation``) or, when the caller knows from its manifests that
+    ``df`` has at most ``max_rows`` rows, that many rows at Spark's row
+    width for the schema, whichever is smaller. Deciding costs no Spark
+    job, so a caller past the cap runs exactly its executor-side path.
+
+    The rows are collected and rebuilt on the JVM side
+    (``collectAsList`` → ``createDataFrame`` under ``df``'s own
+    schema), so they never cross into Python and every type keeps its
+    exact value. Every later action over the frame reads the held rows
+    instead of re-running the derivation, and nothing is stored in
+    executor memory: the small-batch replacement for a ``persist``."""
+    jdf = df._jdf
+    est = jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if max_rows is not None:
+        est = min(est, max_rows * (8 + jdf.schema().defaultSize()))
+    if est > LOCAL_BATCH_MAX_BYTES:
         return None
+    # toDF: a spark.range frame is a JVM Dataset of longs, not of rows
+    rows = jdf.toDF().collectAsList()
     spark = df.sparkSession
-    jdf = spark._jsparkSession.createDataFrame(rows, df._jdf.schema())
-    return DataFrame(jdf, spark), n
+    held = spark._jsparkSession.createDataFrame(rows, jdf.schema())
+    return DataFrame(held, spark), rows.size()
 
 
 def _is_local_batch(df: DataFrame) -> bool:
-    """True when every leaf of ``df``'s analyzed plan is a
-    ``LocalRelation`` (a ``local_batch`` frame or a projection of one):
-    each execution then reads driver-held rows, so persisting the batch
-    saves no work."""
+    """True when ``df``'s analyzed plan is held rows (``LocalRelation``
+    leaves) under projections, filters and unions only: each execution
+    then reads the same driver-held rows in the same order, so
+    persisting the batch saves no work. A window, aggregate, join or
+    dedup above them shuffles, and its result can depend on the order
+    rows arrive in (ties in a ``row_number``, ``dropDuplicates``), so
+    such a plan is not held."""
     try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        return all(leaves.apply(i).getClass().getSimpleName()
-                   == "LocalRelation" for i in range(leaves.size()))
+        stack = [df._jdf.queryExecution().analyzed()]
+        while stack:
+            node = stack.pop()
+            if (node.nodeName() not in _HELD_PLAN_NODES
+                    or not node.subqueries().isEmpty()):
+                return False
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+        return True
     except Exception:
         return False
 
@@ -2646,28 +2676,70 @@ class NativeTable:
         either commit has MoR deltas (delta rows merge across files) or
         the column mapping changed between the commits (a rename makes
         every file's logical rows differ)."""
-        old_c, new_c = self.timeline.at(from_commit), \
-            self.timeline.at(to_commit)
-        if (old_c is None or new_c is None or old_c.deltas or new_c.deltas
-                or old_c.column_mapping != new_c.column_mapping
-                or old_c.retired_cols != new_c.retired_cols):
+        sides = self._diff_files(from_commit, to_commit)
+        if sides is None:
             return self._align_old_side(
                 self.read_snapshot(with_meta=True, as_of=from_commit),
                 self.read_snapshot(with_meta=True, as_of=to_commit))
-        new_files = set(new_c.files)
-        shared = {f for f in old_c.files if f in new_files
-                  and old_c.dvs.get(f) == new_c.dvs.get(f)}
 
-        def side(c, files):
-            kept = [f for f in files if f not in shared]
+        def side(c, kept):
             df = self._read_files(
                 kept, c.schema_json,
                 dvs={f: c.dvs[f] for f in kept if f in c.dvs},
                 defaults=c.column_defaults)
             return self._to_logical(df, c)
 
-        return self._align_old_side(side(old_c, old_c.files),
-                                    side(new_c, new_c.files))
+        return self._align_old_side(*(side(c, kept) for c, kept in sides))
+
+    def _diff_files(self, from_commit: int, to_commit: int):
+        """``((old commit, old files), (new commit, new files))``: the
+        files each side of a diff reads (``_diff_sides``), or None when
+        the diff reads full snapshots."""
+        old_c, new_c = self.timeline.at(from_commit), \
+            self.timeline.at(to_commit)
+        if (old_c is None or new_c is None or old_c.deltas or new_c.deltas
+                or old_c.column_mapping != new_c.column_mapping
+                or old_c.retired_cols != new_c.retired_cols):
+            return None
+        new_files = set(new_c.files)
+        shared = {f for f in old_c.files if f in new_files
+                  and old_c.dvs.get(f) == new_c.dvs.get(f)}
+        return tuple((c, [f for f in c.files if f not in shared])
+                     for c in (old_c, new_c))
+
+    def change_feed_max_rows(self, from_commit: int, to_commit: int,
+                             group_by: list[str] | None = None
+                             ) -> int | None:
+        """An upper bound, read from the manifests without a Spark job,
+        on the rows of ``change_feed(from_commit, to_commit)``: the diff
+        files' recorded row counts, since an update pairs one row of
+        each side into its two images. With ``group_by``, a bound on
+        the feed's distinct ``group_by`` values instead: when those are
+        identity partition columns, the count of their distinct dirs
+        among the diff files. None when a side reads full snapshots or
+        a file has no recorded count."""
+        sides = self._diff_files(from_commit, to_commit)
+        if sides is None:
+            return None
+        if group_by:
+            dirs: set | None = set()
+            for c, kept in sides:
+                pfields = self._pfields_of(c)
+                at = {f.name: i for i, f in enumerate(pfields)
+                      if f.transform == "identity"}
+                if not set(group_by) <= set(at):
+                    dirs = None
+                    break
+                for f in kept:
+                    vals = self._file_partition(f, pfields)
+                    dirs.add(tuple(vals[at[g]] for g in group_by))
+            # "": a file written before the column was a partition dir
+            if dirs is not None and all("" not in d for d in dirs):
+                return len(dirs)
+        try:
+            return sum(c.row_counts[f] for c, kept in sides for f in kept)
+        except KeyError:
+            return None
 
     @staticmethod
     def _align_old_side(old: DataFrame, new: DataFrame):
@@ -3787,18 +3859,19 @@ class NativeTable:
         prev = self.timeline.latest()
         if prev is None:
             return None
+        # bloom probe + semi-join + tombstones share one
+        # materialization; held rows (_is_local_batch) already are one
+        persist = not _is_local_batch(batch)
         with ExitStack() as stack:
             probed = self._guarded_probe(stack, batch)
             if probed is None:
                 return None
-            batch, key_range, touched, local = probed
+            batch, key_range, touched = probed
             cid = self.timeline.next_commit_id()
             keyed = batch.withColumn(
                 RECORD_KEY_COL, record_key_expr(self.record_keys))
-            # bloom probe + semi-join + tombstones share one
-            # materialization (a driver-held batch already is one)
             keyed, affected, _ = self._prune_ladder(
-                stack, prev, keyed, touched, key_range, persist=not local)
+                stack, prev, keyed, touched, key_range, persist=persist)
             tombstones = self._drop_on_error(
                 stack, self._write_tombstones(keyed))
             if not affected:
@@ -4053,24 +4126,24 @@ class NativeTable:
 
         ``tombstones(keyed)`` returns the frame whose keys the change
         feed records as deleted (None: none). ``persist`` materializes
-        the keyed batch once for paths that run extra actions over it;
-        a batch held on the driver (``local_batch``) skips it, since
-        each of those actions already reads the held rows. Every
-        persist lives on this call's own ``ExitStack``, so a failure at
-        any step releases it, and concurrent calls on one handle never
-        touch each other's frames."""
+        the keyed batch once for paths that run extra actions over it,
+        a batch held on the driver (``local_batch``) included: the
+        precombine dedup above it is a shuffle, so a key present twice
+        with tied precombine values could resolve differently per
+        action. Every persist lives on this call's own ``ExitStack``,
+        so a failure at any step releases it, and concurrent calls on
+        one handle never touch each other's frames."""
         with ExitStack() as stack:
             probed = self._guarded_probe(stack, batch)
             if probed is None:
                 return None
-            batch, key_range, touched, local = probed
+            batch, key_range, touched = probed
             cid = self.timeline.next_commit_id()
             keyed = self._with_meta(batch, f"{cid:020d}")
             keyed = self._precombine_dedup(keyed)
             read_schema_json, keyed = self._apply_type_widening(prev, keyed)
             keyed, affected, untouched = self._prune_ladder(
-                stack, prev, keyed, touched, key_range,
-                persist and not local, prune_values)
+                stack, prev, keyed, touched, key_range, persist, prune_values)
             existing = self._read_files(affected, read_schema_json,
                                         dvs=prev.dvs,
                                         defaults=prev.column_defaults)
@@ -4098,20 +4171,14 @@ class NativeTable:
 
     def _guarded_probe(self, stack: ExitStack, batch: DataFrame):
         """The front every keyed write shares: None for an empty batch,
-        else ``(batch, key_range, touched, local)`` — the batch
-        materialized on the caller's ``stack`` when its plan is
-        non-deterministic; ``local`` when it reads only driver-held rows
-        (``_is_local_batch``), so the caller's own persist would save
-        nothing."""
+        else ``(batch, key_range, touched)`` — the batch materialized on
+        the caller's ``stack`` when its plan is non-deterministic."""
         # the probe, prune decisions, anti-join key set, and write leg
         # each execute the batch lineage; a non-deterministic derivation
         # (rand, monotonically_increasing_id) could prune files whose old
         # rows the re-derived write leg then hits — materialize it ONCE
         # first (Delta MERGE's source materialization). Deterministic
         # batches (the common case) keep the cheap unpersisted passes.
-        # Driver-held rows do not excuse a non-deterministic plan: an
-        # expression above a shuffle of them re-draws per execution.
-        local = _is_local_batch(batch)
         if not _plan_is_deterministic(batch):
             batch = batch.persist()
             stack.callback(batch.unpersist)
@@ -4131,7 +4198,7 @@ class NativeTable:
             key_range = None
             touched = (None if self.global_index
                        else self._batch_partitions(batch))
-        return batch, key_range, touched, local
+        return batch, key_range, touched
 
     def _prune_ladder(self, stack: ExitStack, prev: "Commit",
                       keyed: DataFrame, touched, key_range, persist: bool,
@@ -4352,8 +4419,7 @@ class NativeTable:
         # (emptiness probe + key write); persist so the batch lineage —
         # often a window over the raw feed — computes ONCE for all of
         # probe, tombstone write, anti-join, and union (the r8 bench
-        # caught the unpersisted version re-deriving it per action);
-        # a driver-held batch (local_batch) computes once already
+        # caught the unpersisted version re-deriving it per action)
         return self._keyed_rewrite(
             batch, prev, "merge", upserted, deleted,
             persist=self.change_feed_deletes, prune_values=prune_values,

@@ -125,12 +125,17 @@ class MaterializedAgg:
         # instead of each re-deriving change feed → delta → semi-join.
         # Not a localCheckpoint, as in the two join-shaped views: that
         # executor-side materialization measured 1.4x SLOWER here in the
-        # round-14 A/B (sql_continuous_aggregate 4.78→6.61 s). A window
-        # touching more groups than local_batch's cap merges unheld.
+        # round-14 A/B (sql_continuous_aggregate 4.78→6.61 s). Spark's
+        # own size estimate of this join is a product of its sides, so
+        # the size comes from the base's manifests: one batch row per
+        # group the feed touches. A window past local_batch's cap
+        # merges unheld.
         batch = merged.withColumn(
             "_ma_op", F.when(F.col("cnt") > 0, F.lit("U"))
             .otherwise(F.lit("D")))
-        held = local_batch(batch)
+        derived_keys = set(self.group_cols) & set(self.derive)
+        held = local_batch(batch, max_rows=self.base.change_feed_max_rows(
+            since, upto, None if derived_keys else self.group_cols))
         committed = self.state.merge(held[0] if held else batch,
                                      op_col="_ma_op", extra_stats=marker)
         if committed is None:

@@ -15,8 +15,9 @@ Streaming query:
 3. the range ``(s, e]`` is read as a native Spark DataFrame (parquet
    scans of the changed files and tombstones, with deletion vectors,
    column defaults and column mapping applied);
-4. one ``_apply_batch`` merges it (held on the driver when it fits
-   ``local_batch``'s row cap), and the marker it commits with —
+4. one ``_apply_batch`` merges it (held on the driver when its
+   estimated size fits ``local_batch``'s cap), and the marker it
+   commits with —
    ``replicated_through: e`` plus the drain's ``stream_batch_id`` —
    lands atomically with the data. An empty range records the
    watermark with a metadata-only ``touch`` commit.
@@ -137,15 +138,18 @@ class TableReplicationStream:
                 allowMissingColumns=True)
             # derive the range once, held on the driver: the merge's legs
             # read the held rows, and its size is the emptiness test. A
-            # range past the cap is non-empty and merges unheld.
+            # range past the cap merges unheld after an emptiness probe.
             held = local_batch(opb)
+            if held is not None:
+                opb, nonempty = held[0], held[1] > 0
+            else:
+                nonempty = not batch_df.isEmpty()
             merged = None
-            if held is None or held[1]:
+            if nonempty:
                 # one atomic commit applies the range's upserts AND
                 # deletes (CoW; MoR dest splits into its documented
                 # delta pair) — the batch-id marker rides inside it
-                merged = self.dest.merge(held[0] if held else opb,
-                                         op_col="_ghs_rep_op",
+                merged = self.dest.merge(opb, op_col="_ghs_rep_op",
                                          extra_stats=marker)
             if merged is None and through is not None \
                     and self.dest.exists():

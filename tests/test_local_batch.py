@@ -1,22 +1,25 @@
 """Small keyed batches held on the driver (``native.local_batch``).
 
-A batch under ``LOCAL_BATCH_MAX_ROWS`` is derived once, rebuilt on the
-JVM as a ``LocalRelation``, and merged without any executor-side
-persist; a larger one keeps the persist path. These tests pin the exact
-round trip of every type class, that both paths write the same rows in
-the same commit shape, that a non-deterministic derivation is drawn
-once, and that neither path leaves a persisted frame behind.
+A batch whose estimated size fits ``LOCAL_BATCH_MAX_BYTES`` is derived
+once and rebuilt on the JVM as a ``LocalRelation`` in place of a
+persist; a larger one keeps the persist path, decided without a Spark
+job. These tests pin the exact round trip of every type class, that
+both paths write the same rows in the same commit shape, that a
+non-deterministic derivation is drawn once, which plans count as held
+rows, that a change-feed merge still persists its deduped keyed batch,
+and that neither path leaves a persisted frame behind.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from glue_hudi_spark.operators import cdc
 from glue_hudi_spark.storage import native as N
 from glue_hudi_spark.storage.native import NativeTable, local_batch
+from glue_hudi_spark.streaming.materialized import MaterializedAgg
 
 ROUND_TRIP_SQL = """
 SELECT CAST('12345678901234567890.123456789012345678' AS decimal(38,18)) d,
@@ -46,14 +49,31 @@ def test_round_trip_is_exact(spark):
     assert _hashes(held) == _hashes(df)
     assert N._is_local_batch(held)
     assert N._is_local_batch(held.filter("d IS NULL").drop("a"))
+    assert N._is_local_batch(held.unionByName(held))
     assert not N._is_local_batch(df)
+    # a shuffle above held rows can order them differently per execution
+    assert not N._is_local_batch(held.dropDuplicates(["d"]))
+    assert not N._is_local_batch(held.groupBy("d").count())
 
 
-def test_over_cap_returns_none(spark, monkeypatch):
-    monkeypatch.setattr(N, "LOCAL_BATCH_MAX_ROWS", 3)
+def _job_ids(spark) -> set[int]:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def test_over_cap_returns_none_without_a_job(spark, monkeypatch):
+    # Spark sizes spark.range(n) at 8 bytes a row
+    monkeypatch.setattr(N, "LOCAL_BATCH_MAX_BYTES", 31)
+    before = _job_ids(spark)
     assert local_batch(spark.range(4)) is None
+    assert _job_ids(spark) == before
     held, n = local_batch(spark.range(3))
     assert n == 3 and sorted(r.id for r in held.collect()) == [0, 1, 2]
+    # a caller's row bound tightens the plan's estimate: one row of
+    # 8 + 8 bytes
+    assert local_batch(spark.range(2, 7).filter("id < 3"),
+                       max_rows=1)[1] == 1
 
 
 def _mk(spark, path):
@@ -115,16 +135,15 @@ def test_over_cap_path_matches_held_path(spark, tmp_path, monkeypatch,
     held_t = _mk(spark, tmp_path / "held")
     cdc.apply_cdc_batch(held_t, _cdc_batch(spark),
                         single_commit=single_commit)
-    # the held batch replaces both the C5 persist and the merge's
-    # keyed-copy persist (change_feed_deletes)
-    assert persist_calls == []
+    held_persists = len(persist_calls)
     assert persistent_rdds() <= before
 
-    monkeypatch.setattr(N, "LOCAL_BATCH_MAX_ROWS", 1)
+    monkeypatch.setattr(N, "LOCAL_BATCH_MAX_BYTES", 0)
     cap_t = _mk(spark, tmp_path / "cap")
     cdc.apply_cdc_batch(cap_t, _cdc_batch(spark),
                         single_commit=single_commit)
-    assert persist_calls  # the over-cap path persists, as before
+    # the held batch replaces exactly the C5 persist of the batch
+    assert len(persist_calls) == 2 * held_persists + 1
     assert persistent_rdds() <= before
 
     assert _hashes(held_t.read_snapshot()) == _hashes(cap_t.read_snapshot())
@@ -132,8 +151,7 @@ def test_over_cap_path_matches_held_path(spark, tmp_path, monkeypatch,
     assert held_t.read_snapshot().count() == 60 - 10 + 10
 
 
-def test_random_batch_held_on_driver_merges_consistently(spark, tmp_path,
-                                                         persist_calls):
+def test_random_batch_held_on_driver_merges_consistently(spark, tmp_path):
     t = _mk(spark, tmp_path / "t")
     # every execution of this derivation draws different ops and values;
     # holding it draws them once, so the probe, prune, anti-join and
@@ -147,7 +165,6 @@ def test_random_batch_held_on_driver_merges_consistently(spark, tmp_path,
     rows = {r.k: r for r in held.collect()}
     assert rows == {r.k: r for r in held.collect()}
     t.merge(held, op_col="op")
-    assert persist_calls == []
     want = sorted((k, r.v) for k, r in rows.items() if r.op == "U")
     got = sorted((r.k, r.v) for r in t.read_snapshot().collect())
     assert got == want
@@ -167,3 +184,86 @@ def test_random_plan_over_held_rows_still_persists(spark, tmp_path,
     assert persist_calls
     assert persistent_rdds() <= before
     assert t.read_snapshot().count() == 60
+
+
+def test_window_over_held_rows_still_persists(spark, tmp_path,
+                                              persistent_rdds,
+                                              persist_calls):
+    """A window over held rows is not held rows: a tie in its order
+    could pick a different row per execution, so the change-feed merge
+    and the deletion-vector delete persist their keyed batch. The same
+    delete of the held rows themselves persists nothing."""
+    before = persistent_rdds()
+    t = _mk(spark, tmp_path / "t")
+    # 30 keys, each twice with the same precombine value
+    rows, _ = local_batch(spark.range(60).selectExpr(
+        "format_string('k%03d', id % 30 * 2) AS k", "CAST(id % 3 AS int) AS d",
+        "id AS v", "2 AS s", "IF(id % 30 * 2 % 4 = 0, 'D', 'U') AS op"))
+    w = Window.partitionBy("k").orderBy("s")
+    latest = (rows.withColumn("rn", F.row_number().over(w))
+              .filter("rn = 1").drop("rn"))
+    assert not N._is_local_batch(latest)
+    t.merge(latest, op_col="op")
+    assert persist_calls
+    assert persistent_rdds() <= before
+    assert t.read_snapshot().count() == 60 - 15
+
+    dv = NativeTable(spark, tmp_path / "dv", record_keys=["k"],
+                     precombine="s", deletion_vectors=True)
+    dv.bulk_insert(rows.select("k", "v", "s").dropDuplicates(["k"]))
+    del persist_calls[:]
+    dv.delete(latest.filter("op = 'D'"))
+    assert len(persist_calls) == 1
+    held, _ = local_batch(rows.filter("op = 'U'"))
+    dv.delete(held)
+    assert len(persist_calls) == 1
+    assert persistent_rdds() <= before
+    assert dv.read_snapshot().count() == 0
+
+
+def test_change_feed_merge_of_held_rows_persists_keyed_batch(
+        spark, tmp_path, persist_calls):
+    """Held rows with a key twice go through the precombine dedup, a
+    shuffle, so the change-feed merge persists its keyed batch once."""
+    t = _mk(spark, tmp_path / "t")
+    held, _ = local_batch(spark.range(60).selectExpr(
+        "format_string('k%03d', id % 30) AS k", "CAST(id % 3 AS int) AS d",
+        "id AS v", "CAST(2 + id DIV 30 AS int) AS s", "'U' AS op"))
+    assert N._is_local_batch(held)
+    t.merge(held, op_col="op")
+    assert len(persist_calls) == 1
+    got = {r.k: r.v for r in t.read_snapshot().collect()}
+    assert len(got) == 60
+    assert all(got[f"k{i:03d}"] == i + 30 for i in range(30))
+
+
+def test_view_refresh_merges_held_batch(spark, tmp_path, monkeypatch):
+    base = _mk(spark, tmp_path / "base")
+    view = MaterializedAgg(spark, base, tmp_path / "view", ["d"], "v")
+    view.refresh()
+    since = base.timeline.latest().commit_id
+    cdc.apply_cdc_batch(base, _cdc_batch(spark), single_commit=True)
+    upto = base.timeline.latest().commit_id
+    feed = base.change_feed(since, upto)
+    assert base.change_feed_max_rows(since, upto) >= feed.count() > 3
+    # d is an identity partition column: one group per changed dir (the
+    # batch's keys all fall in d = 0)
+    assert base.change_feed_max_rows(since, upto, ["d"]) == 1 \
+        == feed.select("d").distinct().count()
+    assert base.change_feed_max_rows(since, upto, ["v"]) \
+        == base.change_feed_max_rows(since, upto)
+    seen = []
+    orig = NativeTable.merge
+
+    def spy(self, batch, *a, **kw):
+        seen.append(N._is_local_batch(batch))
+        return orig(self, batch, *a, **kw)
+
+    monkeypatch.setattr(NativeTable, "merge", spy)
+    view.refresh()
+    assert seen == [True]
+    want = {r.d: (r.n, r.total) for r in base.read_snapshot()
+            .groupBy("d").agg(F.count("*").alias("n"),
+                              F.sum("v").alias("total")).collect()}
+    got = {r.d: (r.cnt, int(r.total)) for r in view.read().collect()}
+    assert got == want
