@@ -2174,9 +2174,7 @@ def cdc_retention_delete(spark, sf_dir):
         partition_keys=[], files_per_partition=8, stats_cols=["event_id"],
     )
     table.bulk_insert(ev)
-    table.delete_where(
-        F.col("event_id") < 300, prune={"event_id": (None, 299)}
-    )
+    table.delete_where(F.col("event_id") < 300)
     return table.read_snapshot().select("event_id", "ts", "user_id", "value")
 
 
@@ -2210,8 +2208,7 @@ def cdc_deletion_vectors(spark, sf_dir):
     table.bulk_insert(ev)
     base_files = list(table.timeline.latest().files)
     table.delete(ev.filter(F.col("event_id") % 97 == 0).select("ek"))
-    table.delete_where(
-        F.col("event_id") < 300, prune={"event_id": (None, 299)})
+    table.delete_where(F.col("event_id") < 300)
     after = table.timeline.latest()
     # the DV contract, asserted in-query: both deletes rewrote nothing
     assert after.files == base_files, "DV delete rewrote data files"

@@ -16,11 +16,14 @@ Statement skeletons are recognized with anchored regexes;
 **expressions are never parsed here** — WHERE predicates, SET
 right-hand sides, MERGE clause conditions and VALUES lists are handed
 verbatim to Spark (``F.expr`` / ``spark.sql``), so the full Spark SQL
-expression language works everywhere an expression can appear. Scale
-shape: each form lands on the same pruned/indexed NativeTable paths the
-Python API uses (a SQL ``DELETE ... WHERE`` gets the same column-stats
-file pruning as ``delete_where``); the dispatcher adds zero driver-side
-data movement.
+expression language works everywhere an expression can appear. File
+prune bounds are read back from Catalyst's optimized plan
+(``NativeTable.scan_bounds`` for reads, ``NativeTable._cond_bounds``
+for WHERE texts), never from the text. Scale shape: each form lands on
+the same pruned/indexed NativeTable paths the Python API uses (a SQL
+``DELETE ... WHERE`` is ``delete_where``, pruned by the bounds its
+condition implies); the dispatcher adds zero driver-side data
+movement.
 
 Table-shape options ride Hudi's spark-sql CREATE TABLE convention
 (TBLPROPERTIES ``primaryKey``, ``preCombineField``, ``type``='cow|mor'
@@ -143,24 +146,6 @@ def _mask_literals(text: str) -> str:
             q = ch
         i += 1
     return "".join(out)
-
-
-def _split_and_top(text: str) -> list[str]:
-    """Split a predicate on top-level ``AND`` — word-boundary, outside
-    quotes AND outside parens (a nested ``f(a AND b)`` stays whole)."""
-    masked = _mask_literals(text)
-    parts, depth, start = [], 0, 0
-    for m in re.finditer(r"[()\[\]]|\bAND\b", masked, re.IGNORECASE):
-        tok = m.group(0)
-        if tok in "([":
-            depth += 1
-        elif tok in ")]":
-            depth -= 1
-        elif depth == 0:
-            parts.append(text[start:m.start()].strip())
-            start = m.end()
-    parts.append(text[start:].strip())
-    return parts
 
 
 def _parse_props(text: str) -> dict[str, str]:
@@ -1075,75 +1060,32 @@ class GhsSql:
         s = self._TVF_DEDUP_PROBE.sub(probe, s)
         return self._TVF_VECTOR_SEARCH.sub(search, s)
 
-    _KEYWORD_ALIAS = (
-        "WHERE|GROUP|ORDER|HAVING|LIMIT|WINDOW|UNION|INTERSECT|EXCEPT|"
-        "VERSION|TIMESTAMP|JOIN|LEFT|RIGHT|FULL|INNER|CROSS|ON")
-
-    def _select_prune(self, s: str) -> tuple[str, dict] | None:
-        """``(table, bounds)`` when ``s`` is a single-table SELECT whose
-        WHERE yields manifest prune bounds — the SQL read path's
-        equivalent of ``delete_where``'s ``_where_bounds`` hookup, so a
-        selective ``SELECT ... WHERE day = X`` skips files through the
-        partition layout + column-stats index instead of listing every
-        live file (round-10 verdict: SELECT was the one unpruned read
-        path). Conservative at every step: any shape this can't prove —
-        joins, multiple FROMs, comma lists, subqueries, time travel —
-        returns None and the read binds the plain (unpruned) view.
-        Bounds are a SUPERSET of the WHERE's matching rows by
-        ``_where_bounds``'s construction, and Spark still applies the
-        full WHERE row-level, so pruning never changes results."""
-        masked = _mask_literals(s)
-        if not re.match(r"^\s*SELECT\b", masked, re.IGNORECASE):
-            return None
-        if re.search(r"\b(JOIN|UNION|INTERSECT|EXCEPT|LATERAL)\b"
-                     r"|\bAS\s+OF\b", masked, re.IGNORECASE):
-            return None
-        froms = list(re.finditer(
-            rf"\bFROM\s+(?P<name>{_IDENT})"
-            rf"(?:\s+(?:AS\s+)?(?!(?:{self._KEYWORD_ALIAS})\b)"
-            rf"(?P<alias>{_IDENT}))?",
-            masked, re.IGNORECASE))
-        if len(froms) != 1:
-            return None
-        fm = froms[0]
-        if re.match(r"\s*,", masked[fm.end():]):
-            return None  # comma join: FROM a, b
-        name = _unq(s[fm.start("name"):fm.end("name")])
-        t = self.tables.get(name)
-        if t is None or t.timeline.latest() is None:
-            return None
-        wm = re.search(r"\bWHERE\b", masked[fm.end():], re.IGNORECASE)
-        if not wm:
-            return None
-        wstart = fm.end() + wm.end()
-        # WHERE span ends at the first TOP-LEVEL clause keyword
-        # (terminators inside parens — e.g. IN (...) lists — don't end it)
-        wend, depth = len(s), 0
-        for tok in re.finditer(
-                r"[()\[\]]|\b(GROUP|HAVING|ORDER|LIMIT|WINDOW)\b",
-                masked[wstart:], re.IGNORECASE):
-            if tok.group(0) in "([":
-                depth += 1
-            elif tok.group(0) in ")]":
-                depth -= 1
-            elif depth == 0:
-                wend = wstart + tok.start()
-                break
-        where = s[wstart:wend].strip()
-        # strip table/alias qualifiers (quote-aware: spans located on the
-        # mask) so `t.day >= X` terms contribute bounds
-        quals = [q for q in (name, s[fm.start("alias"):fm.end("alias")]
-                             if fm.group("alias") else None) if q]
-        wmasked = _mask_literals(where)
-        out, last = [], 0
-        for qm in re.finditer(
-                r"\b(" + "|".join(re.escape(q) for q in quals) + r")\.",
-                wmasked, re.IGNORECASE):
-            out.append(where[last:qm.start()])
-            last = qm.end()
-        out.append(where[last:])
-        bounds = self._where_bounds(t, "".join(out))
-        return (name, bounds) if bounds else None
+    def _select_prune(self, q: str) -> tuple[DataFrame, dict]:
+        """``(spark.sql(q), {table: bounds})``: each registered table
+        ``q`` names that ``NativeTable.scan_bounds`` bounds — the filters
+        Catalyst pushes to its one scan — is rebound manifest-pruned
+        (partition dirs + column-stats index) before the frame is
+        planned. Every row that scan passes on meets the bounds, and
+        Spark still applies the full WHERE: pruning never changes
+        results. A CACHE TABLE pin maps to None: its data is already in
+        executor memory, and rebinding would drop the pin."""
+        df = self.spark.sql(q)
+        found: dict = {}
+        for name, t in self.tables.items():
+            if not re.search(rf"\b{re.escape(name)}\b", q, re.IGNORECASE):
+                continue  # not read by name (backticks included)
+            if name in self._cached:
+                found[name] = None
+                continue
+            bounds = t.scan_bounds(df)
+            if bounds:
+                t.read_snapshot(prune=bounds).createOrReplaceTempView(name)
+                # the next statement re-binds the plain view
+                self._view_cache.pop(name, None)
+                found[name] = bounds
+        if any(found.values()):
+            df = self.spark.sql(q)
+        return df, found
 
     # metadata-only COUNT(*): Delta answers a bare count from stats;
     # the manifest carries per-file row counts AND per-file column
@@ -1247,18 +1189,8 @@ class GhsSql:
             if out is not None:
                 return out
         self._with_views()
-        pr = self._select_prune(s)
-        if pr and pr[0] not in self._cached:
-            # (a CACHE TABLE pin beats file pruning: the data is already
-            # in executor memory, and rebinding would drop the pin)
-            name, bounds = pr
-            # bind THIS statement's view manifest-pruned; invalidate the
-            # cache entry so the next statement re-binds the plain view
-            self.tables[name].read_snapshot(
-                prune=bounds).createOrReplaceTempView(name)
-            self._view_cache.pop(name, None)
-        return self.spark.sql(
-            self._rewrite_tvfs(self._rewrite_time_travel(s)))
+        return self._select_prune(
+            self._rewrite_tvfs(self._rewrite_time_travel(s)))[0]
 
     _EXPLAIN = re.compile(
         r"^EXPLAIN(?:\s+(?P<mode>FORMATTED|EXTENDED|CODEGEN|COST))?\s+"
@@ -1278,40 +1210,27 @@ class GhsSql:
             raise ValueError(
                 f"ghs.sql: cannot parse EXPLAIN: {s[:80]!r} — use "
                 "EXPLAIN [FORMATTED|EXTENDED|CODEGEN|COST] SELECT ...")
-        q = m.group("q")
         self._with_views()
-        pr = self._select_prune(q)
-        if pr and pr[0] in self._cached:
-            # same rule as _read: a CACHE TABLE pin beats file pruning,
-            # and rebinding here would silently destroy the pin
-            name = pr[0]
-            note = (
-                "== GHS Manifest Pruning ==\n"
-                f"table {name} is pinned by CACHE TABLE: reads serve "
-                "the in-memory snapshot; manifest pruning skipped")
-        elif pr:
-            name, bounds = pr
-            t = self.tables[name]
-            kept, total = t.pruned_file_count(bounds)
-            t.read_snapshot(prune=bounds).createOrReplaceTempView(name)
-            self._view_cache.pop(name, None)
-            note = (
-                "== GHS Manifest Pruning ==\n"
-                f"table {name}: WHERE bounds {bounds} -> "
-                f"{kept}/{total} base files survive partition-dir + "
-                "column-stats skipping (applied before Spark plans the "
-                "scan)")
-        else:
-            note = (
-                "== GHS Manifest Pruning ==\n"
-                "none derived (not a single-table SELECT with "
-                "range-bound WHERE terms): full live-file listing; "
-                "parquet row-group pushdown still applies")
+        q = self._rewrite_tvfs(self._rewrite_time_travel(m.group("q")))
+        notes = []
+        for name, bounds in self._select_prune(q)[1].items():
+            if bounds is None:
+                notes.append(
+                    f"table {name} is pinned by CACHE TABLE: reads serve "
+                    "the in-memory snapshot; manifest pruning skipped")
+                continue
+            kept, total = self.tables[name].pruned_file_count(bounds)
+            notes.append(
+                f"table {name}: WHERE bounds {bounds} -> {kept}/{total} "
+                "base files survive partition-dir + column-stats skipping "
+                "(applied before Spark plans the scan)")
+        note = "== GHS Manifest Pruning ==\n" + ("\n".join(notes) or (
+            "none derived (no registered table is read in one scan "
+            "filtered by column-vs-constant terms): full live-file "
+            "listing; parquet row-group pushdown still applies"))
         mode = (m.group("mode") or "").upper()
-        rewritten = self._rewrite_tvfs(
-            self._rewrite_time_travel(q))
         plan = self.spark.sql(
-            f"EXPLAIN {mode} {rewritten}".replace("EXPLAIN  ", "EXPLAIN "))
+            f"EXPLAIN {mode} {q}".replace("EXPLAIN  ", "EXPLAIN "))
         return self.spark.createDataFrame(
             [(note,)], "plan string").unionAll(plan)
 
@@ -2239,132 +2158,17 @@ class GhsSql:
         self._after_write(m.group("name"))
         return None
 
-    _BOUND = re.compile(
-        rf"^\s*(?P<col>{_IDENT})\s*(?P<op><=|>=|=|<|>)\s*(?P<rhs>.+?)\s*$",
-        re.DOTALL)
-    _BETWEEN_TERM = re.compile(
-        rf"^\s*(?P<col>{_IDENT})\s+BETWEEN\s+(?P<a>.+)\s+AND\s+"
-        rf"(?P<b>.+?)\s*$", re.IGNORECASE | re.DOTALL)
-    _IN_TERM = re.compile(
-        rf"^\s*(?P<col>{_IDENT})\s+IN\s*\((?P<body>.+)\)\s*$",
-        re.IGNORECASE | re.DOTALL)
-
-    @staticmethod
-    def _has_toplevel_kw(text: str, kw: str) -> bool:
-        """True when ``kw`` appears at paren depth 0 of the
-        literal-masked ``text`` (a BETWEEN buried in function args must
-        not trigger fragment merging)."""
-        depth = 0
-        for m in re.finditer(r"[()\[\]]|\b" + kw + r"\b",
-                             _mask_literals(text), re.IGNORECASE):
-            tok = m.group(0)
-            if tok in "([":
-                depth += 1
-            elif tok in ")]":
-                depth -= 1
-            elif depth == 0:
-                return True
-        return False
-
-    @classmethod
-    def _merge_between_terms(cls, terms: list[str]) -> list[str]:
-        """Re-join the two fragments a top-level ``col BETWEEN a AND b``
-        becomes under the AND split, so the term loop can bound it. A
-        merged term that still isn't a recognizable BETWEEN simply
-        contributes no bound (sound — pruning only narrows)."""
-        out, i = [], 0
-        while i < len(terms):
-            t = terms[i]
-            if i + 1 < len(terms) and cls._has_toplevel_kw(t, "BETWEEN"):
-                out.append(f"{t} AND {terms[i + 1]}")
-                i += 2
-            else:
-                out.append(t)
-                i += 1
-        return out
-
     def _where_bounds(self, t: NativeTable,
                       where: str | None) -> dict | None:
-        """Best-effort ``{col: (lo, hi)}`` bounds from a WHERE
-        CONJUNCTION, for manifest-level file pruning (partition dirs +
-        column-stats index) on DELETE/UPDATE. Pruning is an
-        OPTIMIZATION, never a correctness dependency: any term or whole
-        predicate this can't bound simply returns fewer/no bounds and
-        the engine scans more files. Conservative by construction —
-        OR/NOT anywhere disables it, a term only contributes
-        when its left side is a table column, its right side evaluates
-        as a constant (``SELECT rhs`` succeeds) and mentions no table
-        column (guards columns shadowing SQL function names, e.g. a
-        column literally named ``current_date``). Strict < / > use the
-        inclusive bound — a slightly wider range, still sound.
-        ``col BETWEEN a AND b`` bounds both sides (the AND-split
-        fragments re-merge first); ``col IN (v1, ...)`` bounds
-        [min(v), max(v)] when every list item is a constant.
-
-        All keyword scans run on a literal-masked copy of the text
-        (``_mask_literals``) and the AND split is quote/paren-aware —
-        a string literal containing ``' AND seq = 5'`` must not parse
-        as a conjunction term (it would yield a bogus bound and prune
-        files that DO hold matching rows)."""
-        if not where or re.search(r"\b(OR|NOT)\b",
-                                  _mask_literals(where), re.IGNORECASE):
+        """``{col: (lo, hi)}`` manifest prune bounds a WHERE text implies
+        over ``t``'s logical columns (UPDATE, ``OPTIMIZE ... WHERE``):
+        its column-vs-constant conjuncts, constants folded, read from
+        Catalyst's optimized plan by ``NativeTable._cond_bounds`` — no
+        Spark job. OR/NOT and column-vs-column terms bound nothing."""
+        head = t.timeline.latest()
+        if not where or head is None:
             return None
-        cols = set(self._data_types(t))
-        colpat = re.compile(
-            r"\b(" + "|".join(re.escape(c) for c in sorted(cols)) + r")\b",
-            re.IGNORECASE) if cols else None
-
-        def const(expr: str):
-            """expr's value when it is a column-free constant, else
-            None (the column-mention guard runs on the literal-masked
-            text: a column NAME inside a string constant is not a
-            reference)."""
-            if colpat and colpat.search(_mask_literals(expr)):
-                return None
-            try:
-                return self.spark.sql(f"SELECT {expr}").first()[0]
-            except Exception:
-                return None  # not a constant — can't bound this term
-
-        def narrow(col, lo_v, hi_v):
-            lo, hi = bounds.get(col, (None, None))
-            try:
-                if lo_v is not None:
-                    lo = lo_v if lo is None else max(lo, lo_v)
-                if hi_v is not None:
-                    hi = hi_v if hi is None else min(hi, hi_v)
-            except TypeError:
-                return  # mixed incomparable bounds — leave previous
-            bounds[col] = (lo, hi)
-
-        bounds: dict = {}
-        for term in self._merge_between_terms(_split_and_top(where)):
-            m = self._BOUND.match(term)
-            if m and _unq(m.group("col")) in cols:
-                val = const(m.group("rhs"))
-                if val is None:
-                    continue
-                op = m.group("op")
-                narrow(_unq(m.group("col")),
-                       val if op in (">", ">=", "=") else None,
-                       val if op in ("<", "<=", "=") else None)
-                continue
-            m = self._BETWEEN_TERM.match(term)
-            if m and _unq(m.group("col")) in cols:
-                a, b = const(m.group("a")), const(m.group("b"))
-                if a is not None and b is not None:
-                    narrow(_unq(m.group("col")), a, b)
-                continue
-            m = self._IN_TERM.match(term)
-            if m and _unq(m.group("col")) in cols:
-                vals = [const(item) for item in
-                        _split_top(m.group("body"))]
-                if vals and all(v is not None for v in vals):
-                    try:
-                        narrow(_unq(m.group("col")), min(vals), max(vals))
-                    except TypeError:
-                        pass  # mixed types in the list — skip
-        return bounds or None
+        return t._cond_bounds(where, head, logical=True)
 
     def _data_defaults(self, t: NativeTable) -> dict[str, object]:
         head = t.timeline.latest()
@@ -2469,8 +2273,7 @@ class GhsSql:
         if not m:
             raise ValueError(f"ghs.sql: cannot parse DELETE: {s[:80]!r}")
         t = self._target(m.group("name"))
-        t.delete_where(F.expr(m.group("where") or "true"),
-                       prune=self._where_bounds(t, m.group("where")))
+        t.delete_where(F.expr(m.group("where") or "true"))
         self._after_write(m.group("name"))
         return None
 

@@ -35,6 +35,7 @@ Scale design (100 TB target):
 
 from __future__ import annotations
 
+import datetime as _dt
 import json
 import os
 import re
@@ -46,7 +47,7 @@ from dataclasses import dataclass
 from functools import lru_cache
 from pathlib import Path
 
-from pyspark import StorageLevel
+from pyspark import SparkContext, StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -355,11 +356,28 @@ class PartitionField:
         return F.when(c.isNull() | s.isNull(),
                       F.lit(HIVE_DEFAULT_PARTITION)).otherwise(s)
 
+    def dir_bounds(self, lo, hi, source_type: str | None):
+        """``(parse, lo, hi)``: dirs ``v`` with ``parse(v)`` outside
+        [lo, hi] hold no row in that SOURCE range. Identity dirs parse
+        as ``source_type`` (a schema JSON type name), transform dirs
+        stay strings; None when no dir can be ruled out."""
+        if self.transform != "identity":
+            b = self.transform_bounds(lo, hi)
+            return b and (str, *b)
+        parse = _IDENTITY_DIR_PARSE.get(source_type)
+        if parse is None:
+            return None
+        try:
+            return (parse, *(parse(v) if isinstance(v, str) else v
+                             for v in (lo, hi)))
+        except ValueError:
+            return None
+
     def transform_bounds(self, lo, hi):
         """Map a [lo, hi] predicate range on the SOURCE column to a dir
         string range, for order-preserving transforms — None when the
         transform can't serve range pruning (bucket, identity — identity
-        is already served exactly by the column-stats index)."""
+        dirs are ranged by ``dir_bounds``)."""
         if self.transform in _TIME_PYFMTS:
             fmt = _TIME_PYFMTS[self.transform]
 
@@ -387,6 +405,11 @@ class PartitionField:
 
 
 _SKIP = object()  # sentinel: unrenderable bound → no pruning (safe)
+
+#: identity dir string → its source value, by schema JSON type name
+_IDENTITY_DIR_PARSE = {"date": _dt.date.fromisoformat, "string": str,
+                       "byte": int, "short": int, "integer": int,
+                       "long": int}
 
 
 def _parse_partition_field(spec: str) -> PartitionField:
@@ -581,6 +604,123 @@ def _plan_is_deterministic(df: DataFrame) -> bool:
         return culprits <= _ROW_STABLE_ND
     except Exception:
         return False
+
+
+#: Catalyst comparison → (bounds below, bounds above) for ``attr <op> lit``
+_COMPARISONS = {"EqualTo": (True, True), "GreaterThan": (True, False),
+                "GreaterThanOrEqual": (True, False),
+                "LessThan": (False, True), "LessThanOrEqual": (False, True)}
+_TIME_TYPES = {"date": T.DateType(), "timestamp": T.TimestampType(),
+               "timestamp_ntz": T.TimestampNTZType()}
+
+
+def _internal_value(v, tn: str):
+    """The Python value ``collect()`` returns for Catalyst internal value
+    ``v`` of type ``tn``; None for a null, a NaN or an unbounded type."""
+    if v is None or tn in ("float", "double") and v != v:
+        return None
+    if tn == "string":
+        return v.toString()  # UTF8String
+    if tn.startswith("decimal("):
+        return v.toJavaBigDecimal()
+    if tn in _TIME_TYPES:
+        return _TIME_TYPES[tn].fromInternal(v)
+    return v if tn in ("tinyint", "smallint", "int", "bigint", "float",
+                       "double", "boolean") else None
+
+
+def _conjunct_bound(e, scan_out):
+    """``(column, lo, hi)`` (None = open) for a filter conjunct that
+    compares a column of the scan (in ``scan_out``) with literals:
+    ``attr <op> lit`` either way round, ``attr IN (lits)`` or its
+    ``InSet`` form; else None. Strict ``<``/``>`` give the inclusive
+    bound: wider, still sound."""
+    def is_col(a):
+        return (a.getClass().getSimpleName() == "AttributeReference"
+                and scan_out.contains(a))
+
+    kind = e.getClass().getSimpleName()
+    lo = hi = True
+    if kind in _COMPARISONS:
+        (lo, hi), a, lits = _COMPARISONS[kind], e.left(), [e.right()]
+        if not is_col(a):
+            (hi, lo), a, lits = (lo, hi), e.right(), [e.left()]
+    elif kind == "In":
+        a, items = e.value(), e.list()
+        lits = [items.apply(i) for i in range(items.size())]
+    elif kind == "InSet":  # past ten items: min and max on the JVM side
+        a, lits, hs, dt = e.child(), None, e.hset(), e.child().dataType()
+        order = SparkContext._jvm.org.apache.spark.sql.catalyst.util \
+            .TypeUtils.getInterpretedOrdering(dt)
+        vals = [] if hs.contains(None) else [
+            _internal_value(v, dt.simpleString())
+            for v in (hs.min(order), hs.max(order))]
+    else:
+        return None
+    if lits is not None:
+        if any(x.getClass().getSimpleName() != "Literal" for x in lits):
+            return None
+        vals = [_internal_value(x.value(), x.dataType().simpleString())
+                for x in lits]
+    if not is_col(a) or not vals or None in vals:
+        return None
+    try:
+        return a.name(), min(vals) if lo else None, max(vals) if hi else None
+    except TypeError:
+        return None
+
+
+def _scan_chains(plan) -> list:
+    """``(leaf, conds)`` for every leaf of ``plan`` and of its subquery
+    plans: ``conds`` are the conditions of the ``Filter`` nodes in the
+    Project/Filter chain directly above the leaf — the filters Spark
+    itself pushes to that scan, so a row failing one reaches nothing."""
+    out, stack = [], [(plan, [])]
+    while stack:
+        node, conds = stack.pop()
+        kind = node.getClass().getSimpleName()
+        kids, subs = node.children(), node.subqueries()
+        if kids.size() == 0:
+            out.append((node, conds))
+        elif kind == "Filter":
+            conds = conds + [node.condition()]
+        elif kind != "Project":
+            conds = []
+        stack.extend((kids.apply(i), conds) for i in range(kids.size()))
+        stack.extend((subs.apply(i), []) for i in range(subs.size()))
+    return out
+
+
+def _chain_bounds(leaf, conds, commit: "Commit") -> dict | None:
+    """``{column: (lo, hi)}`` that ``conds`` imply over ``leaf``'s own
+    columns, keyed by ``commit``'s LOGICAL names (a scan sees the files'
+    physical ones), meta and dropped columns left out; None when empty.
+    Constants are literals by now: Catalyst has folded ``BETWEEN``,
+    ``concat(...)`` and ``current_date() - n``."""
+    bounds: dict = {}
+    out, stack = leaf.outputSet(), list(conds)
+    while stack:
+        e = stack.pop()
+        if e.getClass().getSimpleName() == "And":
+            stack += [e.left(), e.right()]
+            continue
+        try:
+            b = _conjunct_bound(e, out)
+        except Exception:  # an unordered type, a changed Catalyst API
+            b = None
+        if b is None:
+            continue
+        lo, hi = bounds.get(b[0], (None, None))
+        try:
+            lo = b[1] if lo is None else lo if b[1] is None else max(lo, b[1])
+            hi = b[2] if hi is None else hi if b[2] is None else min(hi, b[2])
+        except TypeError:
+            continue  # incomparable bounds on one column: keep the first
+        bounds[b[0]] = (lo, hi)
+    inv = {p: lg for lg, p in commit.column_mapping.items()}
+    hidden = {*META_COLS, *commit.retired_cols}
+    return {inv.get(c, c): r for c, r in bounds.items()
+            if c not in hidden} or None
 
 
 #: largest batch ``local_batch`` holds on the driver, by Spark's size
@@ -1336,6 +1476,63 @@ class NativeTable:
         )
         return {tuple(r[f.name] for f in self._pfields) for r in rows}
 
+    def _cond_bounds(self, cond, commit: "Commit",
+                     logical: bool = False) -> dict | None:
+        """``{column: (lo, hi)}`` prune bounds ``cond`` implies over
+        ``commit``'s physical columns (the frame ``delete_where``
+        filters) or, with ``logical``, the logical ones a snapshot read
+        shows; None for none, or when ``cond`` does not resolve. It
+        filters an empty RDD under the commit's schema: Catalyst folds
+        it like any WHERE, and no Spark job runs."""
+        if not commit.schema_json:
+            return None
+        js = self.spark._jsparkSession
+        try:
+            rel = DataFrame(js.createDataFrame(
+                self.spark._jsc.emptyRDD(),
+                js.parseDataType(commit.schema_json)), self.spark)
+            if logical:
+                rel = self._to_logical(rel, commit)
+            (leaf, conds), = _scan_chains(
+                rel.filter(cond)._jdf.queryExecution().optimizedPlan())
+        except Exception:
+            return None
+        return _chain_bounds(leaf, conds, commit)
+
+    def scan_bounds(self, df: DataFrame) -> dict | None:
+        """``{column: (lo, hi)}`` prune bounds for the head snapshot: the
+        filters ``df``'s optimized plan pushes to each of its scans of the
+        head's base files (one per ADD COLUMN default group), where every
+        scan has the same bound. None for none, or when a base file is
+        scanned twice, subquery plans counted (self-join, UNION, subquery
+        over the table): one scan may keep rows the other drops. No
+        Spark job runs."""
+        commit = self.timeline.latest()
+        if commit is None:
+            return None
+        root, files = str(self.root).rstrip("/") + "/", set(commit.files)
+        seen: set = set()
+        hits = []
+        for leaf, conds in _scan_chains(
+                df._jdf.queryExecution().optimizedPlan()):
+            if leaf.getClass().getSimpleName() != "LogicalRelation":
+                continue
+            try:
+                paths = leaf.relation().location().rootPaths()
+            except Exception:
+                continue  # not a file scan
+            rels = {p.partition(root)[2]
+                    for p in paths.mkString("\n").split("\n")}
+            if "" in rels or not rels <= files:
+                continue
+            if rels & seen:
+                return None
+            seen |= rels
+            hits.append(_chain_bounds(leaf, conds, commit) or {})
+        # a bound every scan shares holds for every row any scan passes on
+        return {c: r for c, r in hits[0].items()
+                if all(b.get(c) == r for b in hits)} or None if hits else None
+
     def _prune_files(self, files: list[str], prune: dict | None,
                      commit: "Commit") -> list[str]:
         """``files`` of ``commit`` a ``prune`` range can touch: partition
@@ -1343,46 +1540,47 @@ class NativeTable:
         column stats."""
         if not prune:
             return files
-        files = self._prune_files_by_partition(
-            files, prune, self._pfields_of(commit))
+        files = self._prune_files_by_partition(files, prune, commit)
         return self._prune_files_by_col_stats(files, commit.col_stats, prune)
 
     def _prune_files_by_partition(self, files: list[str], prune: dict,
-                                  pfields: "list[PartitionField]"
-                                  ) -> list[str]:
-        """Hidden-partition pruning (the Iceberg promise): a range
-        predicate on a transform's SOURCE column drops whole partition
-        dirs before Spark lists a file — no derived column in the query,
-        no column-stats needed. Order-preserving transforms only
-        (days/months/years/hours, string truncate: their dir strings
-        sort like their sources); files in the hive default partition
-        (null/uncastable sources) or written under an older spec
-        (evolution — path lacks the field) are conservatively kept."""
+                                  commit: "Commit") -> list[str]:
+        """Partition pruning before Spark lists a file, under the spec in
+        force at ``commit``: a range on a field's SOURCE column drops the
+        dirs no matching row can live in (the Iceberg hidden-partitioning
+        promise). Identity dirs compare as the source column's type —
+        date, integral (``"10"`` after ``"9"``) or string; transform dirs
+        as their order-preserving strings. Files in the hive default
+        partition, written under an older spec (path lacks the field) or
+        whose dir does not parse as its type are conservatively kept."""
         if not files:
             return files
+        types = ({f["name"]: f["type"]
+                  for f in json.loads(commit.schema_json)["fields"]}
+                 if commit.schema_json else {})
+        pfields = self._pfields_of(commit)
         bounds = []
         for i, fld in enumerate(pfields):
             rng = prune.get(fld.source)
-            if rng is None:
-                continue
-            b = fld.transform_bounds(rng[0], rng[1])
-            if b is not None:
-                bounds.append((i, b))
+            b = rng and fld.dir_bounds(rng[0], rng[1], types.get(fld.source))
+            if b:
+                bounds.append((i, *b))
         if not bounds:
             return files
         kept = []
         for f in files:
             pv = self._file_partition(f, pfields)
-            keep = True
-            for i, (lo, hi) in bounds:
-                v = pv[i]
-                if v in ("", HIVE_DEFAULT_PARTITION):
+            for i, parse, lo, hi in bounds:
+                if pv[i] in ("", HIVE_DEFAULT_PARTITION):
                     continue
-                if (lo is not None and v < lo) or (
-                        hi is not None and v > hi):
-                    keep = False
-                    break
-            if keep:
+                try:
+                    v = parse(pv[i])
+                    if (lo is not None and v < lo) or (
+                            hi is not None and v > hi):
+                        break
+                except (TypeError, ValueError):
+                    continue  # unparseable dir or a bound of another type
+            else:
                 kept.append(f)
         return kept
 
@@ -2532,13 +2730,13 @@ class NativeTable:
         only (Hudi's ``_ro`` view, processData.py:131-132).
 
         ``prune``: {col: (lo, hi)} range predicates (None = open bound)
-        served from the column-stats index (``stats_cols``): base files
-        whose per-file [min,max] can't intersect are dropped BEFORE Spark
-        lists them — driver-side metadata pruning, the manifest-level
-        analog of parquet row-group skipping. The equivalent row filter is
-        also applied, so results are exact even for files kept only
-        because they lack stats (and for MoR delta rows, which are always
-        read — deltas are small by construction).
+        served from the partition dirs and the column-stats index
+        (``stats_cols``): base files that can't intersect are dropped
+        BEFORE Spark lists them — driver-side metadata pruning, the
+        manifest-level analog of parquet row-group skipping. The
+        equivalent row filter is also applied, so results are exact even
+        for files kept only because they lack stats (and for MoR delta
+        rows, which are always read — deltas are small by construction).
         """
         if tag is not None:
             # VERSION AS OF a named tag: the frozen manifest copy — exact
@@ -3913,18 +4111,19 @@ class NativeTable:
             *[str(self.root / r) for r in prior_rels]).select("file", "pos")
         return hits.join(prior, ["file", "pos"], "left_anti")
 
-    def _dv_delete_where(self, cond, prune: dict | None = None,
+    def _dv_delete_where(self, cond,
                          extra_stats: dict | None = None) -> Commit:
-        """Predicate delete as position marks: column-stats pruning
-        picks candidate files, matching rows' positions land in a
-        sidecar — retention sweeps / right-to-be-forgotten on a 100-TB
-        table without rewriting a file. SQL-DELETE null semantics (NULL
-        predicate rows are kept), like ``delete_where``."""
+        """Predicate delete as position marks: the bounds ``cond``
+        implies prune the candidate files, matching rows' positions land
+        in a sidecar — retention sweeps / right-to-be-forgotten on a
+        100-TB table without rewriting a file. SQL-DELETE null semantics
+        (NULL predicate rows are kept), like ``delete_where``."""
         prev = self.timeline.latest()
         if prev is None:
             raise ValueError(f"table {self.root} has no commits")
         cid = self.timeline.next_commit_id()
-        affected = self._prune_files(prev.files, prune, prev)
+        affected = self._prune_files(
+            prev.files, self._cond_bounds(cond, prev), prev)
         if not affected:
             return self._dv_commit(
                 prev, cid, self.spark.createDataFrame(
@@ -4293,17 +4492,16 @@ class NativeTable:
             cid, action, carried + files, [dict(d) for d in deltas or []],
             schema_json, stats, key_stats, col_stats, tombstones=tombstones)
 
-    def delete_where(self, cond, prune: dict | None = None,
+    def delete_where(self, cond,
                      extra_stats: dict | None = None) -> Commit:
         """Predicate delete (retention / right-to-be-forgotten): drop every
         row matching ``cond``, rewriting only the files that can hold one.
 
-        ``prune``: the same {col: (lo, hi)} form ``read_snapshot`` takes,
-        served from the column-stats index — pass the predicate's bounds
-        (e.g. ``{"ts": (None, cutoff)}`` for ``ts < cutoff``) and files
-        whose ranges can't match are carried untouched. SQL-DELETE null
-        semantics: rows where ``cond`` is NULL are KEPT (a plain
-        ``filter(~cond)`` would silently drop them).
+        The bounds ``cond`` implies over the files' physical columns
+        (``_cond_bounds``) prune through the partition dirs and the
+        column-stats index; files that can't match are carried untouched.
+        SQL-DELETE null semantics: rows where ``cond`` is NULL are KEPT
+        (a plain ``filter(~cond)`` would silently drop them).
 
         CoW only; MoR tables compact first (a predicate delete must see
         merged rows to decide) — documented cost, not a surprise.
@@ -4311,17 +4509,15 @@ class NativeTable:
         if self.storage_type == "mor" and (self.timeline.latest() or Commit(0, "", [])).deltas:
             self.compact()
         if self.deletion_vectors:
-            return self._dv_delete_where(cond, prune, extra_stats)
+            return self._dv_delete_where(cond, extra_stats)
         prev = self.timeline.latest()
         if prev is None:
             raise ValueError(f"table {self.root} has no commits")
         cid = self.timeline.next_commit_id()
-        affected = prev.files
-        untouched: list[str] = []
-        if prune:
-            affected = self._prune_files(prev.files, prune, prev)
-            aset = set(affected)
-            untouched = [f for f in prev.files if f not in aset]
+        affected = self._prune_files(
+            prev.files, self._cond_bounds(cond, prev), prev)
+        aset = set(affected)
+        untouched = [f for f in prev.files if f not in aset]
         existing = self._read_files(affected, prev.schema_json, dvs=prev.dvs,
                                     defaults=prev.column_defaults)
         with ExitStack() as stack:

@@ -80,6 +80,20 @@ def persistent_rdds(spark):
 
 
 @pytest.fixture()
+def job_ids(spark):
+    """Ids of every job the status tracker knows, read once the listener
+    bus has delivered all events posted so far — equal sets before and
+    after a call mean the call started no Spark job."""
+    sc = spark.sparkContext
+
+    def ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    return ids
+
+
+@pytest.fixture()
 def no_streaming_query(monkeypatch):
     """Fail the test if anything starts a Structured Streaming query."""
     from pyspark.sql.streaming.readwriter import DataStreamWriter

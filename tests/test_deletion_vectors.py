@@ -84,7 +84,7 @@ def test_dv_delete_where(spark, tmp_path):
     t = _mk(spark, tmp_path / "t", stats_cols=["v"])
     _seed(spark, t, n=30)
     before = t.timeline.latest()
-    c = t.delete_where(F.col("v") >= 25.0, prune={"v": (25.0, None)})
+    c = t.delete_where(F.col("v") >= 25.0)
     assert c.files == before.files
     assert c.stats["dv_rows_marked"] == 5
     assert t.read_snapshot().count() == 25

@@ -56,18 +56,12 @@ def test_round_trip_is_exact(spark):
     assert not N._is_local_batch(held.groupBy("d").count())
 
 
-def _job_ids(spark) -> set[int]:
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return set(sc.statusTracker().getJobIdsForGroup(None))
-
-
-def test_over_cap_returns_none_without_a_job(spark, monkeypatch):
+def test_over_cap_returns_none_without_a_job(spark, monkeypatch, job_ids):
     # Spark sizes spark.range(n) at 8 bytes a row
     monkeypatch.setattr(N, "LOCAL_BATCH_MAX_BYTES", 31)
-    before = _job_ids(spark)
+    before = job_ids()
     assert local_batch(spark.range(4)) is None
-    assert _job_ids(spark) == before
+    assert job_ids() == before
     held, n = local_batch(spark.range(3))
     assert n == 3 and sorted(r.id for r in held.collect()) == [0, 1, 2]
     # a caller's row bound tightens the plan's estimate: one row of

@@ -519,7 +519,7 @@ def test_delete_where_predicate_retention(spark, tmp_table_dir):
                     files_per_partition=4, stats_cols=["d"])
     t.bulk_insert(spark.createDataFrame(
         [(f"{i:04d}", i, 1) for i in range(1000)], "id string, d int, s int"))
-    c = t.delete_where(F.col("d") < 100, prune={"d": (None, 99)})
+    c = t.delete_where(F.col("d") < 100)
     assert c.stats["files_rewritten"] == 1
     assert c.stats["files_carried"] == 3
     snap = t.read_snapshot()
@@ -1208,7 +1208,7 @@ def _shape_merge(spark, t):
 
 
 def _shape_delete_where(spark, t):
-    return t.delete_where(F.col("id") == 3, prune={"id": (3, 3)})
+    return t.delete_where(F.col("id") == 3)
 
 
 def _shape_dv_miss(spark, t):
@@ -1245,15 +1245,7 @@ def test_commit_shape_per_write_path(spark, tmp_path, dv, write, shape):
     assert t.validate()["ok"]
 
 
-def _job_ids(spark) -> set[int]:
-    """Ids of every job the status tracker knows, once the listener bus
-    has delivered all events posted so far."""
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return set(sc.statusTracker().getJobIdsForGroup(None))
-
-
-def test_footer_stats_start_no_spark_job(spark, tmp_table_dir):
+def test_footer_stats_start_no_spark_job(spark, tmp_table_dir, job_ids):
     from glue_hudi_spark.storage.native import _file_footer_stats
 
     t = _mk(spark, tmp_table_dir, partition_keys=["pt"],
@@ -1263,9 +1255,9 @@ def test_footer_stats_start_no_spark_job(spark, tmp_table_dir):
         "1 AS seq", "CAST(id % 30 AS int) AS pt"))
     files = t.timeline.latest().files
     assert len(files) == 30
-    before = _job_ids(spark)
+    before = job_ids()
     key_stats, col_stats = t._collect_file_stats(files)
-    assert _job_ids(spark) == before
+    assert job_ids() == before
     per_file = [_file_footer_stats(str(t.root), f, ["v", "n"])
                 for f in files]
     assert key_stats == {rel: kv for rel, kv, _ in per_file if kv}

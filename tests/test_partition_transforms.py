@@ -144,8 +144,7 @@ def test_delete_where_hidden_partition_prune(spark, tmp_path):
                     precombine="v", partition_keys=["days(ts)"],
                     files_per_partition=1)
     t.bulk_insert(_events(spark))
-    c = t.delete_where(F.col("ts") >= F.lit(_ts(2)),
-                       prune={"ts": (_ts(2), None)})
+    c = t.delete_where(F.col("ts") >= F.lit(_ts(2)))
     assert c.stats["files_rewritten"] == 1  # only day 2 touched
     assert t.read_snapshot().count() == 24
 
