@@ -12,18 +12,22 @@ full DDL/DML surface: Spark's own Python DataSource API is read-only
 (``sources/datasource.py`` raises on ``writer()`` by API design), so a
 SQL-only user previously had no write path at all.
 
-Statement skeletons are recognized with anchored regexes;
-**expressions are never parsed here** — WHERE predicates, SET
-right-hand sides, MERGE clause conditions and VALUES lists are handed
-verbatim to Spark (``F.expr`` / ``spark.sql``), so the full Spark SQL
-expression language works everywhere an expression can appear. File
-prune bounds are read back from Catalyst's optimized plan
-(``NativeTable.scan_bounds`` for reads, ``NativeTable._cond_bounds``
-for WHERE texts), never from the text. Scale shape: each form lands on
-the same pruned/indexed NativeTable paths the Python API uses (a SQL
-``DELETE ... WHERE`` is ``delete_where``, pruned by the bounds its
-condition implies); the dispatcher adds zero driver-side data
-movement.
+DML, ALTER TABLE, TRUNCATE and reads are parsed by Spark's own parser
+(``sqlParser().parsePlan``; no Spark job) and dispatched on the node it
+returns. WHERE predicates, SET right-hand sides, MERGE clause conditions
+and source queries reach ``F.expr`` / ``spark.sql`` as their exact
+source text, sliced by the nodes' spans, so the full Spark SQL
+expression language works everywhere an expression can appear and a
+string literal is never read as syntax. The relations a read names
+(CTE bodies and subqueries included) decide time travel, view
+replanning and DROP guards. The engine's own grammar (CREATE, MV and
+index DDL, RESTORE, COPY, OPTIMIZE, VACUUM, SHOW/DESCRIBE, the TVFs) is
+still matched by anchored regexes. File prune bounds are read back from
+Catalyst's optimized plan (``NativeTable.scan_bounds`` for reads,
+``NativeTable._cond_bounds`` for WHERE texts), never from the text.
+Scale shape: each form lands on the same pruned/indexed NativeTable
+paths the Python API uses (a SQL ``DELETE ... WHERE`` is
+``delete_where``); the dispatcher adds zero driver-side data movement.
 
 Table-shape options ride Hudi's spark-sql CREATE TABLE convention
 (TBLPROPERTIES ``primaryKey``, ``preCombineField``, ``type``='cow|mor'
@@ -52,6 +56,7 @@ import re
 from contextlib import contextmanager
 from pathlib import Path
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -83,8 +88,9 @@ def _stable_token(text: str) -> str:
 
 
 def _split_top(text: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` at paren/quote depth 0 (column lists, SET lists,
-    VALUES tuples)."""
+    """Split on ``sep`` at paren/quote depth 0 (statements, column lists,
+    props). A ``--`` comment outside quotes is dropped to the end of its
+    line; inside a literal or identifier it is text."""
     parts, depth, cur, i, q = [], 0, [], 0, None
     while i < len(text):
         ch = text[i]
@@ -103,6 +109,11 @@ def _split_top(text: str, sep: str = ",") -> list[str]:
         elif ch in "'\"`":
             q = ch
             cur.append(ch)
+        elif text.startswith("--", i):
+            i = text.find("\n", i)
+            if i < 0:
+                break
+            continue
         elif ch in "([":
             depth += 1
             cur.append(ch)
@@ -121,33 +132,6 @@ def _split_top(text: str, sep: str = ",") -> list[str]:
     return parts
 
 
-def _mask_literals(text: str) -> str:
-    """Same-length copy with the CONTENTS of quoted literals (and
-    backtick identifiers) replaced by spaces, so keyword regexes can run
-    on the mask while substring spans still index into the original —
-    a WHERE like ``note = 'x AND y'`` must not look like a conjunction
-    (round-10 advice: the unmasked scan produced bogus prune bounds)."""
-    out, i, q, n = list(text), 0, None, len(text)
-    while i < n:
-        ch = text[i]
-        if q:
-            if ch == "\\" and q != "`" and i + 1 < n:
-                out[i] = out[i + 1] = " "
-                i += 1
-            elif ch == q and not (q != "`" and i + 1 < n
-                                  and text[i + 1] == q):
-                q = None
-            else:
-                out[i] = " "
-                if ch == q:  # doubled quote ('' inside a literal)
-                    out[i + 1] = " "
-                    i += 1
-        elif ch in "'\"`":
-            q = ch
-        i += 1
-    return "".join(out)
-
-
 def _parse_props(text: str) -> dict[str, str]:
     """TBLPROPERTIES / OPTIONS body: 'k'='v' [, ...] (quotes optional)."""
     props = {}
@@ -159,31 +143,94 @@ def _parse_props(text: str) -> dict[str, str]:
     return props
 
 
-def _strip_comments(text: str) -> str:
-    return re.sub(r"--[^\n]*", "", text)
+# ------------------------------------------- Spark's parsed plan (py4j)
 
 
-def _balanced_end(text: str) -> int | None:
-    """Index one past the paren that closes ``text[0] == '('``, honoring
-    single/double-quoted literals; None when unbalanced."""
-    depth, i, q = 0, 0, None
-    while i < len(text):
-        ch = text[i]
-        if q:
-            if ch == "\\" and i + 1 < len(text):
-                i += 1  # escaped char can't close the literal
-            elif ch == q:
-                q = None
-        elif ch in "'\"":
-            q = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    return None
+def _seq(s) -> list:
+    """A Scala ``Seq`` from the JVM as a list."""
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _span(node) -> tuple[int, int]:
+    """``[start, stop)`` of the text a parsed node came from."""
+    o = node.origin()
+    return o.startIndex().get(), o.stopIndex().get() + 1
+
+
+def _splice(s: str, a: int, b: int, subs=()) -> str:
+    """``s[a:b]``, each disjoint ``(start, stop, text)`` inside replaced."""
+    out = []
+    for x, y, r in sorted(subs):
+        if a <= x and y <= b:
+            out += [s[a:x], r]
+            a = y
+    return "".join(out) + s[a:b]
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _start(s: str, expr) -> int:
+    """Where the text of a parsed expression starts. A predicate (BETWEEN,
+    IN, LIKE, IS NULL, ...) spans from its keyword, so it starts where
+    its value operand does, parentheses around that operand included."""
+    a, kids = _span(expr)[0], _seq(expr.children())
+    k = _start(s, kids[0]) if kids else a
+    if k >= a:
+        return a
+    for _ in range(s.count(")", _span(kids[0])[1], a)):
+        k = s.rindex("(", 0, k)
+    return k
+
+
+def _rewrite(s: str, expr, rename=lambda parts: None) -> str:
+    """The exact source text of the parsed expression ``expr``, each
+    column reference whose name parts ``rename`` maps to a text replaced
+    by it. Only references are touched: a string literal that looks like
+    one stays as written, and a lambda variable is its own node kind."""
+    subs, stack = [], [expr]
+    while stack:
+        e = stack.pop()
+        stack += _seq(e.children())
+        if _kind(e) == "UnresolvedAttribute":
+            subs.append((*_span(e), rename(_seq(e.nameParts()))))
+    return _splice(s, _start(s, expr), _span(expr)[1],
+                   [x for x in subs if x[2] is not None])
+
+
+def _relations(plan) -> list:
+    """The ``UnresolvedRelation`` and ``RelationTimeTravel`` nodes of a
+    parsed query: under its children, its subquery expressions (``IN``,
+    ``EXISTS``, scalar) and its CTE bodies, which only
+    ``UnresolvedWith.cteRelations`` reaches."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if _kind(node) in ("UnresolvedRelation", "RelationTimeTravel"):
+            out.append(node)
+            continue
+        stack += _seq(node.children()) + _seq(node.subqueries())
+        if _kind(node) == "UnresolvedWith":
+            stack += [c._2() for c in _seq(node.cteRelations())]
+    return out
+
+
+def _rel_name(node) -> str:
+    """The table a relation, alias or time-travel node names, dotted."""
+    while _kind(node) not in ("UnresolvedRelation", "UnresolvedTable"):
+        node = (node.relation() if _kind(node) == "RelationTimeTravel"
+                else node.children().apply(0))
+    return ".".join(_seq(node.multipartIdentifier()))
+
+
+def _refs(plan) -> set[str]:
+    """Lower-cased names of all a parsed query reads (CTE names too)."""
+    return {_rel_name(r).lower() for r in _relations(plan)}
 
 
 class GhsSql:
@@ -289,7 +336,7 @@ class GhsSql:
         from glue_hudi_spark.storage.commits import WRITER_TAG
 
         out = None
-        for stmt in _split_top(_strip_comments(text), ";"):
+        for stmt in _split_top(text, ";"):
             if stmt.strip():
                 token = WRITER_TAG.set(self._writer_tag)
                 try:
@@ -396,12 +443,6 @@ class GhsSql:
                                and s.upper().split()[:2]
                                == ["START", "TRANSACTION"]):
             return self._begin(s)
-        if head == "COMMIT":
-            return self._commit_txn(s)
-        if head == "SAVEPOINT":
-            return self._savepoint(s)
-        if head == "RELEASE":
-            return self._release_savepoint(s)
         if head == "ROLLBACK":
             self._require_txn("ROLLBACK")
             rm = self._ROLLBACK_TO.match(s)
@@ -425,46 +466,23 @@ class GhsSql:
                 "protocol, so a rolled-back transaction would strand "
                 "the batch as 'already loaded' (COMMIT or ROLLBACK "
                 "first; COPY is itself idempotent)")
-        if head == "CREATE":
-            return self._create(s)
-        if head == "REFRESH":
-            return self._refresh_mv(s)
-        if head == "INSERT":
-            return self._insert(s)
-        if head == "UPDATE":
-            return self._update(s)
-        if head == "DELETE":
-            return self._delete(s)
-        if head == "MERGE":
-            return self._merge(s)
-        if head == "ALTER":
-            return self._alter(s)
-        if head == "DROP":
-            return self._drop(s)
-        if head == "TRUNCATE":
-            return self._truncate(s)
-        if head == "SHOW":
-            return self._show(s)
-        if head in ("DESCRIBE", "DESC"):
-            return self._describe(s)
-        if head == "OPTIMIZE":
-            return self._optimize(s)
-        if head == "ANALYZE":
-            return self._analyze(s)
-        if head == "CACHE":
-            return self._cache_table(s)
-        if head == "UNCACHE":
-            return self._uncache_table(s)
-        if head == "VACUUM":
-            return self._vacuum(s)
-        if head == "EXPLAIN":
-            return self._explain(s)
-        if head == "COPY":
-            return self._copy_into(s)
-        if head == "RESTORE":
-            return self._restore(s)
-        if head in ("SELECT", "WITH", "VALUES", "TABLE"):
-            return self._read(s)
+        handler = {
+            "COMMIT": self._commit_txn, "SAVEPOINT": self._savepoint,
+            "RELEASE": self._release_savepoint,
+            "CREATE": self._create, "REFRESH": self._refresh_mv,
+            "DROP": self._drop, "SHOW": self._show,
+            "DESCRIBE": self._describe, "DESC": self._describe,
+            "OPTIMIZE": self._optimize, "ANALYZE": self._analyze,
+            "CACHE": self._cache_table, "UNCACHE": self._uncache_table,
+            "VACUUM": self._vacuum, "EXPLAIN": self._explain,
+            "COPY": self._copy_into, "RESTORE": self._restore,
+            **dict.fromkeys(("INSERT", "UPDATE", "DELETE", "MERGE",
+                             "ALTER", "TRUNCATE"), self._dml),
+            **dict.fromkeys(("SELECT", "WITH", "VALUES", "TABLE"),
+                            self._read),
+        }.get(head)
+        if handler is not None:
+            return handler(s)
         raise ValueError(f"ghs.sql: unsupported statement: {s[:80]!r}")
 
     # ------------------------------------------------------------- helpers
@@ -524,62 +542,62 @@ class GhsSql:
             # unrelated work. Transitive: a view over a replanned view
             # replans too (insertion order = creation order, so
             # upstream views precede their dependents).
-            replanned: set[str] = set(moved)
+            replanned = {n.lower() for n in moved}
             for vname, q in self.views.items():
-                if vname in self._views_pending or \
-                        self._mentions(q, replanned):
+                plan = self._parse(q)
+                if vname in self._views_pending or _refs(plan) & replanned:
                     try:
-                        self.spark.sql(self._rewrite_tvfs(
-                            self._rewrite_time_travel(q))
-                        ).createOrReplaceTempView(vname)
+                        self.spark.sql(self._bind(q, plan)[0]
+                                       ).createOrReplaceTempView(vname)
                     except Exception as e:
                         raise ValueError(
                             f"ghs.sql: stored view {vname!r} failed to "
                             f"bind against the current catalog ({e}) — "
                             f"DROP VIEW {vname} or restore its bases"
                         ) from e
-                    replanned.add(vname)
+                    replanned.add(vname.lower())
             self._views_pending = set()
 
-    @staticmethod
-    def _mentions(text: str, names: set) -> bool:
-        """Word-boundary reference check on the literal-masked text —
-        the dependency notion DROP guards and view replanning share. A
-        name inside a string constant is not a reference; a column that
-        happens to share a table's name is a FALSE POSITIVE we accept
-        (over-replanning is cheap, over-guarding a DROP is safe)."""
-        if not names:
-            return False
-        pat = r"\b(" + "|".join(re.escape(n) for n in sorted(names)) \
-            + r")\b"
-        return re.search(pat, _mask_literals(text),
-                         re.IGNORECASE) is not None
+    def _parse(self, s: str):
+        """Spark's own parse of ``s``: its unresolved plan, each node
+        carrying its span of ``s``. No Spark job runs."""
+        try:
+            return self.spark._jsparkSession.sessionState().sqlParser() \
+                .parsePlan(s)
+        except ParseException as e:
+            raise ValueError(
+                f"ghs.sql: cannot parse {s[:80]!r}: "
+                f"{str(e).strip().splitlines()[0]}") from e
 
-    # time travel in reads: Delta/Iceberg SQL's ``t VERSION AS OF n`` /
-    # ``t TIMESTAMP AS OF 'ts'`` — each occurrence binds a temp view over
-    # the manifest-resolved historical snapshot (an O(manifest) driver
-    # lookup; the scan itself stays lazy/pruned) and the reference is
-    # rewritten to that view before Spark parses the text.
-    _TIME_TRAVEL = re.compile(
-        rf"\b(?P<name>{_IDENT})\s+(?P<kind>VERSION|TIMESTAMP)\s+AS\s+OF"
-        rf"\s+(?P<val>\d+|'[^']*')", re.IGNORECASE)
-
-    def _rewrite_time_travel(self, s: str) -> str:
-        def sub(m: "re.Match[str]") -> str:
-            name = _unq(m.group("name"))
+    def _bind(self, s: str, plan, a: int = 0,
+              b: int | None = None) -> tuple[str, set[str]]:
+        """The text Spark runs for the query ``plan`` parsed from
+        ``s[a:b]``, and the lower-cased names it reads at their heads.
+        Time travel (Delta/Iceberg's ``t VERSION|TIMESTAMP AS OF x``) of
+        a registered table binds a temp view over that snapshot (an
+        O(manifest) lookup; the scan stays lazy/pruned), which replaces
+        the text from the table's name to the clause's end; then the
+        TVFs rewrite."""
+        subs, names = [], set()
+        for rel in _relations(plan):
+            name = _rel_name(rel)
             t = self.tables.get(name)
+            if _kind(rel) == "UnresolvedRelation":
+                names.add(name.lower())
+                continue
             if t is None:
-                return m.group(0)
-            if m.group("kind").upper() == "VERSION":
-                alias = f"{name}__v{m.group('val')}"
-                df = t.read_snapshot(as_of=int(m.group("val")))
+                continue  # a foreign name: Spark rejects or reads it
+            v = rel.version()
+            if v.isDefined():
+                alias, df = f"{name}__v{v.get()}", t.read_snapshot(
+                    as_of=int(v.get()))
             else:
-                ts = m.group("val").strip("'")
-                alias = f"{name}__t{re.sub('[^0-9]', '', ts)}"
-                df = t.read_snapshot(as_of_timestamp=ts)
+                ts = _splice(s, *_span(rel.timestamp().get())).strip("'")
+                alias, df = (f"{name}__t{re.sub('[^0-9]', '', ts)}",
+                             t.read_snapshot(as_of_timestamp=ts))
             df.createOrReplaceTempView(alias)
-            return alias
-        return self._TIME_TRAVEL.sub(sub, s)
+            subs.append((_span(rel.relation())[0], _span(rel)[1], alias))
+        return self._rewrite_tvfs(_splice(s, a, b or len(s), subs)), names
 
     # Delta's CDC read TVF: ``table_changes('t', from [, to])`` in any
     # read (or DML source) binds a temp view over the table's
@@ -1060,9 +1078,10 @@ class GhsSql:
         s = self._TVF_DEDUP_PROBE.sub(probe, s)
         return self._TVF_VECTOR_SEARCH.sub(search, s)
 
-    def _select_prune(self, q: str) -> tuple[DataFrame, dict]:
+    def _select_prune(self, q: str, names: set) -> tuple[DataFrame, dict]:
         """``(spark.sql(q), {table: bounds})``: each registered table
-        ``q`` names that ``NativeTable.scan_bounds`` bounds — the filters
+        ``q`` reads at its head (``names``, from ``_bind``) that
+        ``NativeTable.scan_bounds`` bounds — the filters
         Catalyst pushes to its one scan — is rebound manifest-pruned
         (partition dirs + column-stats index) before the frame is
         planned. Every row that scan passes on meets the bounds, and
@@ -1072,8 +1091,8 @@ class GhsSql:
         df = self.spark.sql(q)
         found: dict = {}
         for name, t in self.tables.items():
-            if not re.search(rf"\b{re.escape(name)}\b", q, re.IGNORECASE):
-                continue  # not read by name (backticks included)
+            if name.lower() not in names:
+                continue
             if name in self._cached:
                 found[name] = None
                 continue
@@ -1094,14 +1113,6 @@ class GhsSql:
     # stats-based query answering). Anything the manifest cannot PROVE
     # (WHERE, expressions, un-indexed columns, MoR deltas, live DV
     # marks) falls through to the real scan.
-    _FAST_AGG = re.compile(
-        rf"^SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<name>{_IDENT})\s*$",
-        re.IGNORECASE | re.DOTALL)
-    _AGG_ITEM = re.compile(
-        rf"^(?:(?P<cnt>COUNT\s*\(\s*(?:\*|1)\s*\))"
-        rf"|(?P<fn>MIN|MAX)\s*\(\s*(?P<col>{_IDENT})\s*\))"
-        rf"(?:\s+AS\s+(?P<alias>{_IDENT}))?$",
-        re.IGNORECASE)
     # types whose parquet footer min/max are EXACT values from the data.
     # Strings are deliberately absent: writers may truncate long string
     # statistics (max rounded UP per the format spec) — safe for
@@ -1137,29 +1148,37 @@ class GhsSql:
             return _dt.date.fromisoformat(v) if isinstance(v, str) else v
         return _dt.datetime.fromisoformat(v) if isinstance(v, str) else v
 
-    def _try_fast_agg(self, m: "re.Match[str]") -> DataFrame | None:
-        t = self.tables.get(_unq(m.group("name")))
+    def _try_fast_agg(self, plan) -> DataFrame | None:
+        """``SELECT COUNT(*)|MIN(col)|MAX(col) [AS a], ... FROM t``."""
+        if _kind(plan) != "Project" or \
+                _kind(plan.child()) != "UnresolvedRelation":
+            return None
+        t = self.tables.get(_rel_name(plan.child()))
         if t is None or t.timeline.latest() is None:
             return None
-        parsed = []
-        for item in _split_top(m.group("items")):
-            im = self._AGG_ITEM.match(item.strip())
-            if im is None:
-                return None
-            parsed.append(im)
         types = self._data_types(t)
         fields: list[T.StructField] = []
         vals: list = []
         extrema: dict[str, tuple | None] = {}
-        for im in parsed:
-            if im.group("cnt"):
-                alias = (_unq(im.group("alias")) if im.group("alias")
-                         else "count(1)")
-                fields.append(T.StructField(alias, T.LongType(), False))
+        for item in _seq(plan.projectList()):
+            alias = item.name() if _kind(item) == "Alias" else None
+            f = (item.child() if _kind(item) in ("Alias", "UnresolvedAlias")
+                 else item)
+            if _kind(f) != "UnresolvedFunction" or f.isDistinct() or \
+                    f.filter().isDefined() or f.arguments().size() != 1:
+                return None
+            fn, arg = ".".join(_seq(f.nameParts())).lower(), \
+                f.arguments().head()
+            if fn == "count" and arg.toString() == "1":  # COUNT(*) too
+                fields.append(T.StructField(alias or "count(1)",
+                                            T.LongType(), False))
                 vals.append(int(t.count_rows()))
                 continue
-            col = _unq(im.group("col"))
-            fn = im.group("fn").lower()
+            if fn not in ("min", "max") or \
+                    _kind(arg) != "UnresolvedAttribute" or \
+                    arg.nameParts().size() != 1:
+                return None
+            col = arg.nameParts().head()
             tn = types.get(col)
             if tn not in self._STAT_TYPES:
                 return None  # unknown column / un-orderable stat type
@@ -1168,29 +1187,26 @@ class GhsSql:
             ext = extrema[col]
             if ext is None:
                 return None  # manifest can't prove it — real scan
-            alias = (_unq(im.group("alias")) if im.group("alias")
-                     else f"{fn}({col})")
-            fields.append(T.StructField(alias, self._STAT_TYPES[tn], True))
+            fields.append(T.StructField(alias or f"{fn}({col})",
+                                        self._STAT_TYPES[tn], True))
             vals.append(self._stat_to_py(ext[0 if fn == "min" else 1], tn))
         return self.spark.createDataFrame(
             [tuple(vals)], T.StructType(fields))
 
     def _read(self, s: str) -> DataFrame:
-        fa = self._FAST_AGG.match(s)
-        if fa:
-            try:
-                out = self._try_fast_agg(fa)
-            except Exception:
-                # the fast path is an OPTIMIZATION: anything it cannot
-                # handle (legacy manifest without schema_json, malformed
-                # stats) must fall through to the scan, never fail a
-                # query the slow path can answer
-                out = None
-            if out is not None:
-                return out
+        plan = self._parse(s)
+        try:
+            out = self._try_fast_agg(plan)
+        except Exception:
+            # the fast path is an OPTIMIZATION: anything it cannot
+            # handle (legacy manifest without schema_json, malformed
+            # stats) must fall through to the scan, never fail a
+            # query the slow path can answer
+            out = None
+        if out is not None:
+            return out
         self._with_views()
-        return self._select_prune(
-            self._rewrite_tvfs(self._rewrite_time_travel(s)))[0]
+        return self._select_prune(*self._bind(s, plan))[0]
 
     _EXPLAIN = re.compile(
         r"^EXPLAIN(?:\s+(?P<mode>FORMATTED|EXTENDED|CODEGEN|COST))?\s+"
@@ -1210,10 +1226,11 @@ class GhsSql:
             raise ValueError(
                 f"ghs.sql: cannot parse EXPLAIN: {s[:80]!r} — use "
                 "EXPLAIN [FORMATTED|EXTENDED|CODEGEN|COST] SELECT ...")
+        plan = self._parse(m.group("q"))
         self._with_views()
-        q = self._rewrite_tvfs(self._rewrite_time_travel(m.group("q")))
+        q, names = self._bind(m.group("q"), plan)
         notes = []
-        for name, bounds in self._select_prune(q)[1].items():
+        for name, bounds in self._select_prune(q, names)[1].items():
             if bounds is None:
                 notes.append(
                     f"table {name} is pinned by CACHE TABLE: reads serve "
@@ -1234,16 +1251,16 @@ class GhsSql:
         return self.spark.createDataFrame(
             [(note,)], "plan string").unionAll(plan)
 
-    def _query_df(self, q: str) -> DataFrame:
-        q = q.strip()
-        if q.upper().startswith("VALUES"):
-            return self.spark.sql(q)
-        self._with_views()
-        # DML sources get the same time-travel + change-feed rewrites as
-        # reads — INSERT INTO ... SELECT FROM t VERSION AS OF n restores
-        # history; ... FROM table_changes('t', a) replays a CDC window
-        return self.spark.sql(
-            self._rewrite_tvfs(self._rewrite_time_travel(q)))
+    def _query_df(self, s: str, plan=None, a: int = 0,
+                  b: int | None = None) -> DataFrame:
+        """The frame of the query ``s[a:b]`` parsed as ``plan`` (or here),
+        with the time-travel + change-feed rewrites of reads: INSERT ...
+        SELECT FROM t VERSION AS OF n restores history."""
+        if plan is None:
+            plan = self._parse(s)
+        if not s[a:b].lstrip().upper().startswith("VALUES"):
+            self._with_views()
+        return self.spark.sql(self._bind(s, plan, a, b)[0])
 
     # ------------------------------------------------------- transactions
 
@@ -1548,9 +1565,7 @@ class GhsSql:
                 "REPLACE VIEW)")
         # validate NOW against current bindings — a typo'd view must
         # fail at CREATE, not at first read
-        self._with_views()
-        self.spark.sql(self._rewrite_tvfs(
-            self._rewrite_time_travel(m.group("q"))))
+        self._query_df(m.group("q"))
         self.views[name] = m.group("q").strip()
         self._save_views()
         self._views_pending.add(name)
@@ -1992,22 +2007,49 @@ class GhsSql:
                 if mv.pending_commits() >= spec["every"]:
                     mv.refresh()
 
+    # ---------------------------------------------- DML / ALTER dispatch
+
+    _ALTERS = (
+        "ghs.sql: ALTER TABLE supports ADD COLUMN col type [DEFAULT expr]"
+        ", RENAME COLUMN old TO new, DROP COLUMN col, ADD CONSTRAINT name "
+        "CHECK (expr) (further maintenance: OPTIMIZE/VACUUM or the CLI)")
+
+    def _dml(self, s: str) -> None:
+        """INSERT, UPDATE, DELETE, MERGE, ALTER TABLE and TRUNCATE,
+        dispatched on the node Spark's parser returns."""
+        node = self._parse(s)
+        kind = _kind(node)
+        handler = {
+            "InsertIntoStatement": self._insert,
+            "UpdateTable": self._update,
+            "DeleteFromTable": self._delete,
+            "MergeIntoTable": self._merge,
+            **dict.fromkeys(("AddColumns", "RenameColumn", "DropColumns",
+                             "AddCheckConstraint"), self._alter),
+            "TruncateTable": lambda s, node, t: t.delete_where(
+                F.expr("true")),
+        }.get(kind)
+        if handler is None:
+            raise ValueError(
+                self._ALTERS if s[:5].upper() == "ALTER"
+                else f"ghs.sql: unsupported statement: {s[:80]!r}")
+        # every handled node names its target table first
+        name = _rel_name(node.productElement(0))
+        handler(s, node, self._target(name))
+        if kind != "AddCheckConstraint":
+            self._after_write(name)
+        return None
+
     # ------------------------------------------------------------- INSERT
 
-    _INSERT = re.compile(
-        rf"^INSERT\s+(?P<mode>INTO|OVERWRITE)\s+(?:TABLE\s+)?"
-        rf"(?P<name>{_IDENT})\s*(?:\((?P<cols>[^)]*)\))?\s*(?P<q>.+)$",
-        re.IGNORECASE | re.DOTALL)
-
-    def _insert(self, s: str) -> None:
-        m = self._INSERT.match(s)
-        if not m:
+    def _insert(self, s: str, node, t: NativeTable) -> None:
+        if node.partitionSpec().nonEmpty() or node.byName():
             raise ValueError(f"ghs.sql: cannot parse INSERT: {s[:80]!r}")
-        t = self._target(m.group("name"))
-        df = self._query_df(m.group("q"))
-        target_cols = ([_unq(c.strip()) for c in m.group("cols").split(",")]
-                       if m.group("cols")
-                       else [c for c in self._data_columns(t)])
+        # the query is the text after the INSERT clause: a query root's
+        # own span can cover only its last clause (ORDER BY, LIMIT)
+        df = self._query_df(s, node.query(), _span(node)[1])
+        target_cols = _seq(node.userSpecifiedCols()) or list(
+            self._data_types(t))
         if len(df.columns) != len(target_cols):
             raise ValueError(
                 f"ghs.sql: INSERT provides {len(df.columns)} columns, "
@@ -2022,12 +2064,10 @@ class GhsSql:
                 # declared DEFAULT (stored as a real value — this is a
                 # post-add write), else NULL
                 df = df.withColumn(c, F.lit(defaults.get(c)).cast(typ))
-        if m.group("mode").upper() == "OVERWRITE":
+        if node.overwrite():
             t.insert_overwrite(df)
         else:
             self._keyed_write(t, df)
-        self._after_write(m.group("name"))
-        return None
 
     @staticmethod
     def _keyed_write(t: NativeTable, df: DataFrame) -> None:
@@ -2053,9 +2093,6 @@ class GhsSql:
             df = (df.withColumn("_ghs_rn", F.row_number().over(w))
                   .filter(F.col("_ghs_rn") == 1).drop("_ghs_rn"))
         t.bulk_insert(df)
-
-    def _data_columns(self, t: NativeTable) -> list[str]:
-        return [c for c, _ in self._data_types(t).items()]
 
     # ---------------------------------------------------------- COPY INTO
 
@@ -2201,20 +2238,9 @@ class GhsSql:
 
     # ------------------------------------------------------------- UPDATE
 
-    _UPDATE = re.compile(
-        rf"^UPDATE\s+(?P<name>{_IDENT})\s+SET\s+(?P<sets>.+?)"
-        rf"(?:\s+WHERE\s+(?P<where>.+))?$",
-        re.IGNORECASE | re.DOTALL)
-
-    def _update(self, s: str) -> None:
-        m = self._UPDATE.match(s)
-        if not m:
-            raise ValueError(f"ghs.sql: cannot parse UPDATE: {s[:80]!r}")
-        t = self._target(m.group("name"))
-        assigns = {}
-        for item in _split_top(m.group("sets")):
-            k, _, v = item.partition("=")
-            assigns[_unq(k.strip())] = v.strip()
+    def _update(self, s: str, node, t: NativeTable) -> None:
+        assigns = {".".join(_seq(a.key().nameParts())):
+                   _rewrite(s, a.value()) for a in _seq(node.assignments())}
         # guard the identity columns: a SET on a record key re-upserts
         # the row under the NEW key, so the old row would survive —
         # silent duplication, not an update (Hudi likewise forbids
@@ -2243,13 +2269,13 @@ class GhsSql:
                     "would be rewritten into the new partition while "
                     "the old-partition copy survives (enable "
                     "global_index for relocating updates)")
-        cond = m.group("where") or "true"
+        where = (_rewrite(s, node.condition().get())
+                 if node.condition().isDefined() else None)
         # manifest-level prune (partition dirs + stats index) BEFORE the
         # scan when the WHERE yields bounds; the rewrite side is pruned
         # by upsert's key-range/bloom ladder regardless
         snap = t.read_snapshot(
-            prune=self._where_bounds(t, m.group("where"))
-        ).filter(F.expr(cond))
+            prune=self._where_bounds(t, where)).filter(F.expr(where or "true"))
         # SQL UPDATE: every RHS sees the OLD row — one simultaneous
         # projection, not a withColumn cascade
         out = snap.select(*[
@@ -2258,191 +2284,128 @@ class GhsSql:
             for c in snap.columns
         ])
         t.upsert(out)
-        self._after_write(m.group("name"))
-        return None
 
     # ------------------------------------------------------------- DELETE
 
-    _DELETE = re.compile(
-        rf"^DELETE\s+FROM\s+(?P<name>{_IDENT})"
-        rf"(?:\s+WHERE\s+(?P<where>.+))?$",
-        re.IGNORECASE | re.DOTALL)
-
-    def _delete(self, s: str) -> None:
-        m = self._DELETE.match(s)
-        if not m:
-            raise ValueError(f"ghs.sql: cannot parse DELETE: {s[:80]!r}")
-        t = self._target(m.group("name"))
-        t.delete_where(F.expr(m.group("where") or "true"))
-        self._after_write(m.group("name"))
-        return None
+    def _delete(self, s: str, node, t: NativeTable) -> None:
+        """``delete_where`` filters the files' physical columns, so each
+        column reference of the WHERE maps through the head's column
+        mapping (a renamed column reads its physical name). With no
+        WHERE the condition is the parser's shared TRUE, spanning no
+        text."""
+        cond, head = node.condition(), t.timeline.latest()
+        phys = {k.lower(): v for k, v in
+                (head.column_mapping if head else {}).items()}
+        where = "true" if cond.toString() == "true" else _rewrite(s, cond, (
+            lambda p: ".".join(map(_quote, [phys[p[0].lower()], *p[1:]]))
+            if p[0].lower() in phys else None))
+        t.delete_where(F.expr(where))
 
     # ------------------------------------------------------------- MERGE
 
-    _MERGE_HEAD = re.compile(
-        rf"^MERGE\s+INTO\s+(?P<tgt>{_IDENT})(?:\s+AS)?\s+(?P<ta>{_IDENT})\s+"
-        rf"USING\s+", re.IGNORECASE | re.DOTALL)
-    _MERGE_TAIL = re.compile(
-        rf"\s*(?:AS\s+)?(?P<sa>{_IDENT})\s+ON\s+(?P<on>.+?)\s+"
-        rf"(?P<clauses>WHEN\s+.+)$", re.IGNORECASE | re.DOTALL)
-    _WHEN = re.compile(
-        r"WHEN\s+(?P<not>NOT\s+)?MATCHED(?P<bysrc>\s+BY\s+SOURCE)?"
-        r"(?:\s+AND\s+(?P<cond>.+?))?\s+THEN\s+"
-        r"(?P<act>UPDATE\s+SET\s+\*|UPDATE\s+SET\s+.+?|DELETE|INSERT\s+\*"
-        r"|INSERT\s*\([^)]*\)\s*VALUES\s*\([^)]*\))"
-        r"(?=\s+WHEN\s|\s*$)",
-        re.IGNORECASE | re.DOTALL)
-
-    def _merge(self, s: str) -> None:
-        bad = ValueError(
-            "ghs.sql: MERGE must be of the form MERGE INTO tgt t "
-            "USING src s ON t.k = s.k WHEN [NOT] MATCHED [AND c] "
-            "THEN UPDATE SET ... | DELETE | INSERT *")
-        hm = self._MERGE_HEAD.match(s)
-        if not hm:
-            raise bad
-        # the USING source: a (subquery) — balanced-paren scanned, since
-        # expressions nest arbitrarily (CAST(x AS DECIMAL(10,2))) — or a
-        # bare table/view name
-        rest = s[hm.end():].lstrip()
-        if rest.startswith("("):
-            end = _balanced_end(rest)
-            if end is None:
-                raise bad
-            srcref, rest = rest[:end], rest[end:]
+    def _merge(self, s: str, node, t: NativeTable) -> None:
+        tgt, src = node.targetTable(), node.sourceTable()
+        if _kind(src) not in ("SubqueryAlias", "UnresolvedRelation"):
+            raise ValueError(  # USING (query) without an alias
+                "ghs.sql: MERGE must be of the form MERGE INTO tgt t "
+                "USING src s ON t.k = s.k WHEN [NOT] MATCHED [AND c] "
+                "THEN UPDATE SET ... | DELETE | INSERT *")
+        body = src.child() if _kind(src) == "SubqueryAlias" else src
+        if _kind(body) == "UnresolvedRelation":
+            source = self._ts_source("MERGE", _rel_name(body))
         else:
-            im = re.match(_IDENT, rest)
-            if not im:
-                raise bad
-            srcref, rest = im.group(0), rest[im.end():]
-        m = self._MERGE_TAIL.match(rest)
-        if not m:
-            raise bad
-        t = self._target(hm.group("tgt"))
-        ta, sa = _unq(hm.group("ta")), _unq(m.group("sa"))
-        source = (self._query_df(srcref[1:-1])
-                  if srcref.startswith("(") else self._view_df(srcref))
+            # USING (query) alias: the text in the first paren and the
+            # last before ON (a query root may span just its last clause)
+            source = self._query_df(
+                s, body, s.index("(") + 1,
+                s.rindex(")", 0, _span(node.mergeCondition())[0]))
+        # t.col / s.col -> tgt.col / src.col, on column references only;
+        # a side without an alias is qualified by its table name
+        quals = {(x.alias() if _kind(x) == "SubqueryAlias"
+                  else _rel_name(x).split(".")[-1]).lower(): q
+                 for x, q in ((tgt, "tgt"), (src, "src"))}
 
-        def norm(expr: str | None) -> str | None:
-            if expr is None:
-                return None
-            expr = re.sub(rf"\b{re.escape(ta)}\.", "tgt.", expr)
-            return re.sub(rf"\b{re.escape(sa)}\.", "src.", expr)
+        def norm(expr) -> str:
+            return _rewrite(s, expr, lambda p: (
+                quals[p[0].lower()] + "." + ".".join(map(_quote, p[1:]))
+                if len(p) > 1 and p[0].lower() in quals else None))
 
         # the ON clause must be exactly the record-key equality
         # conjunction — merge_into matches on the table's keys by design
-        on_keys = set()
-        for term in re.split(r"\s+AND\s+", m.group("on"),
-                             flags=re.IGNORECASE):
-            em = re.match(
-                rf"^\s*(?:{_IDENT})\.({_IDENT})\s*=\s*(?:{_IDENT})"
-                rf"\.({_IDENT})\s*$", term)
-            if not em or _unq(em.group(1)) != _unq(em.group(2)):
+        on_keys, stack = set(), [node.mergeCondition()]
+        while stack:
+            e = stack.pop()
+            if _kind(e) == "And":
+                stack += _seq(e.children())
+                continue
+            sides = [_seq(x.nameParts()) if _kind(x) == "UnresolvedAttribute"
+                     else [] for x in _seq(e.children())]
+            if _kind(e) != "EqualTo" or list(map(len, sides)) != [2, 2] \
+                    or sides[0][1] != sides[1][1]:
                 raise ValueError(
                     f"ghs.sql: MERGE ON must be a conjunction of "
-                    f"key equalities (t.k = s.k); got {term.strip()!r}")
-            on_keys.add(_unq(em.group(1)))
+                    f"key equalities (t.k = s.k); got "
+                    f"{_rewrite(s, e)!r}")
+            on_keys.add(sides[0][1])
         if on_keys != set(t.record_keys):
             raise ValueError(
                 f"ghs.sql: MERGE ON keys {sorted(on_keys)} must equal the "
                 f"table's record keys {sorted(t.record_keys)}")
-        kw: dict = {"when_not_matched_insert": False}
-        for wm in self._WHEN.finditer(m.group("clauses")):
-            act = wm.group("act")
-            actU = act.upper()
-            if wm.group("bysrc"):
-                # WHEN NOT MATCHED BY SOURCE: table rows absent from the
-                # source — Delta's reconciliation clauses (tgt-only
-                # expressions; merge_into widens the probe accordingly)
-                if not wm.group("not"):
-                    raise ValueError(
-                        "ghs.sql: BY SOURCE requires NOT MATCHED")
-                if actU == "DELETE":
-                    kw["when_not_matched_by_source_delete"] = \
-                        norm(wm.group("cond")) or True
-                elif actU.startswith("UPDATE"):
-                    body = re.sub(r"^UPDATE\s+SET\s+", "", act,
-                                  flags=re.IGNORECASE).strip()
-                    if body == "*":
-                        raise ValueError(
-                            "ghs.sql: BY SOURCE UPDATE needs explicit "
-                            "SET assignments (there is no source row)")
-                    kw["when_not_matched_by_source_update"] = {
-                        _unq(k.strip()).split(".")[-1]: norm(v.strip())
-                        for k, v in (item.partition("=")[::2]
-                                     for item in _split_top(body))
-                    }
-                    kw["by_source_update_condition"] = norm(wm.group("cond"))
-                else:
-                    raise ValueError(
-                        "ghs.sql: WHEN NOT MATCHED BY SOURCE supports "
-                        "DELETE or UPDATE SET only")
-                continue
-            if wm.group("not"):
-                if not actU.startswith("INSERT"):
-                    raise ValueError(
-                        "ghs.sql: WHEN NOT MATCHED supports INSERT only")
-                if actU.replace(" ", "") != "INSERT*" and "VALUES" in actU:
+        # each group's WHEN clauses in listed order. merge_into takes one
+        # clause of a kind and tries a group's DELETE before its UPDATE,
+        # so an UPDATE listed first claims its rows by a negated guard on
+        # the DELETE (SQL first-match; the parser rejects an unconditional
+        # clause that is not its group's last). By-source clauses see
+        # only ``tgt``; merge_into widens the probe for them.
+        kw: dict = {}
+        for upd, upd_cond, dele, always, actions in (
+                ("when_matched_update", "update_condition",
+                 "when_matched_delete", "true", node.matchedActions()),
+                ("when_not_matched_insert", "insert_condition", None, None,
+                 node.notMatchedActions()),
+                ("when_not_matched_by_source_update",
+                 "by_source_update_condition",
+                 "when_not_matched_by_source_delete", True,
+                 node.notMatchedBySourceActions())):
+            for act in _seq(actions):
+                kind = _kind(act)
+                if kind == "InsertAction":
                     raise ValueError(
                         "ghs.sql: WHEN NOT MATCHED THEN INSERT supports "
                         "INSERT * (column-list inserts: project the "
                         "USING source instead)")
-                kw["when_not_matched_insert"] = True
-                kw["insert_condition"] = norm(wm.group("cond"))
-            elif actU == "DELETE":
-                kw["when_matched_delete"] = norm(wm.group("cond")) or "true"
-            else:  # UPDATE SET ...
-                body = re.sub(r"^UPDATE\s+SET\s+", "", act,
-                              flags=re.IGNORECASE).strip()
-                if body == "*":
-                    kw["when_matched_update"] = "*"
-                else:
-                    kw["when_matched_update"] = {
-                        _unq(k.strip()).split(".")[-1]: norm(v.strip())
-                        for k, v in (item.partition("=")[::2]
-                                     for item in _split_top(body))
-                    }
-                kw["update_condition"] = norm(wm.group("cond"))
+                key = dele if kind == "DeleteAction" else upd
+                if key in kw:
+                    raise ValueError(
+                        f"ghs.sql: MERGE takes one {key.replace('_', ' ')}"
+                        " clause — fold their conditions into one")
+                c = (norm(act.condition().get())
+                     if act.condition().isDefined() else None)
+                if key == dele:
+                    if upd in kw:
+                        c = (f"NOT coalesce(({kw[upd_cond]}), false)"
+                             + (f" AND ({c})" if c else ""))
+                    kw[dele] = c or always
+                    continue
+                kw[upd] = {"UpdateStarAction": "*",
+                           "InsertStarAction": True}.get(kind) or {
+                    _seq(a.key().nameParts())[-1]: norm(a.value())
+                    for a in _seq(act.assignments())}
+                kw[upd_cond] = c
+        kw.setdefault("when_not_matched_insert", False)
         t.merge_into(source, **kw)
-        self._after_write(hm.group("tgt"))
-        return None
-
-    def _view_df(self, name: str) -> DataFrame:
-        name = _unq(name)
-        if name in self.tables:
-            return self.tables[name].read_snapshot()
-        return self.spark.table(name)
 
     # ------------------------------------------------------------- ALTER
 
-    _ALTER_ADD = re.compile(
-        rf"^ALTER\s+TABLE\s+(?P<name>{_IDENT})\s+ADD\s+COLUMNS?\s*"
-        rf"\(?\s*(?P<col>{_IDENT})\s+(?P<type>[A-Za-z0-9_(),\s]+?)"
-        rf"(?:\s+DEFAULT\s+(?P<def>.+?))?\s*\)?\s*$",
-        re.IGNORECASE | re.DOTALL)
-
-    _ALTER_RENAME = re.compile(
-        rf"^ALTER\s+TABLE\s+(?P<name>{_IDENT})\s+RENAME\s+COLUMN\s+"
-        rf"(?P<old>{_IDENT})\s+TO\s+(?P<new>{_IDENT})\s*$",
-        re.IGNORECASE)
-    _ALTER_DROP = re.compile(
-        rf"^ALTER\s+TABLE\s+(?P<name>{_IDENT})\s+DROP\s+COLUMNS?\s*"
-        rf"\(?\s*(?P<col>{_IDENT})\s*\)?\s*$", re.IGNORECASE)
-
-    _ALTER_CONSTRAINT = re.compile(
-        rf"^ALTER\s+TABLE\s+(?P<name>{_IDENT})\s+ADD\s+CONSTRAINT\s+"
-        rf"(?:{_IDENT})\s+CHECK\s*\((?P<expr>.+)\)\s*$",
-        re.IGNORECASE | re.DOTALL)
-
-    def _alter(self, s: str) -> None:
-        m = self._ALTER_CONSTRAINT.match(s)
-        if m:
+    def _alter(self, s: str, node, t: NativeTable) -> None:
+        """ADD CONSTRAINT, ADD COLUMNS, RENAME COLUMN, DROP COLUMNS (a
+        nested field name reaches the table dotted: no column of it)."""
+        if _kind(node) == "AddCheckConstraint":
             # Delta semantics: EXISTING rows must already satisfy the
             # constraint (one aggregate over the snapshot; NULL passes —
             # SQL CHECK), then future writes enforce it at the write
             # chokepoint. Persisted so reopened handles keep enforcing.
-            t = self._target(m.group("name"))
-            expr = m.group("expr").strip()
+            expr = node.checkConstraint().condition()
             bad = t.read_snapshot().filter(
                 ~F.coalesce(F.expr(expr), F.lit(True))).count()
             if bad:
@@ -2450,47 +2413,24 @@ class GhsSql:
                     f"ghs.sql: cannot ADD CONSTRAINT ({expr}): {bad} "
                     "existing rows violate it")
             t.constraints.append(expr)
-            t.save_properties()
+            return t.save_properties()
+        if _kind(node) == "RenameColumn":
+            return t.rename_column(".".join(_seq(node.column().name())),
+                                   node.newName())
+        if _kind(node) == "DropColumns":
+            for field in _seq(node.columnsToDrop()):
+                t.drop_column(".".join(_seq(field.name())))
             return None
-        m = self._ALTER_RENAME.match(s)
-        if m:
-            self._target(m.group("name")).rename_column(
-                _unq(m.group("old")), _unq(m.group("new")))
-            self._after_write(m.group("name"))
-            return None
-        m = self._ALTER_DROP.match(s)
-        if m:
-            self._target(m.group("name")).drop_column(_unq(m.group("col")))
-            self._after_write(m.group("name"))
-            return None
-        m = self._ALTER_ADD.match(s)
-        if not m:
-            raise ValueError(
-                "ghs.sql: ALTER TABLE supports ADD COLUMN col type "
-                "[DEFAULT expr], RENAME COLUMN old TO new, DROP COLUMN "
-                "col (further maintenance: OPTIMIZE/VACUUM or the CLI)")
-        t = self._target(m.group("name"))
-        ctype = m.group("type").strip()
-        default = None
-        if m.group("def") is not None:
-            default = self.spark.sql(
-                f"SELECT CAST({m.group('def')} AS {ctype})").first()[0]
-        t.add_column(_unq(m.group("col")), ctype, default=default)
-        self._after_write(m.group("name"))
+        for col in _seq(node.columnsToAdd()):
+            if col.path().isDefined() or col.position().isDefined():
+                raise ValueError(self._ALTERS)
+            ctype, d = col.dataType().catalogString(), col.default()
+            t.add_column(col.colName(), ctype, default=self.spark.sql(
+                f"SELECT CAST({d.get().originalSQL()} AS {ctype})"
+            ).first()[0] if d.isDefined() else None)
         return None
 
     # --------------------------------------- introspection / maintenance
-
-    _TRUNCATE = re.compile(
-        rf"^TRUNCATE\s+TABLE\s+(?P<name>{_IDENT})\s*$", re.IGNORECASE)
-
-    def _truncate(self, s: str) -> None:
-        m = self._TRUNCATE.match(s)
-        if not m:
-            raise ValueError(f"ghs.sql: cannot parse TRUNCATE: {s[:80]!r}")
-        self._target(m.group("name")).delete_where(F.expr("true"))
-        self._after_write(m.group("name"))
-        return None
 
     _SHOW_CREATE = re.compile(
         rf"^SHOW\s+CREATE\s+TABLE\s+(?P<name>{_IDENT})\s*$", re.IGNORECASE)
@@ -2884,11 +2824,11 @@ class GhsSql:
         return sorted(out)
 
     def _view_dependents(self, name: str) -> list[str]:
-        """Stored views whose TEXT references ``name`` (word-boundary,
-        literal-masked — conservative: a same-named column reads as a
-        dependency, which can only over-protect a DROP)."""
+        """Stored views whose parsed query reads ``name``, in a CTE body
+        or subquery too; a same-named column or string is no reference,
+        so it guards no DROP."""
         return sorted(v for v, q in self.views.items()
-                      if v != name and self._mentions(q, {name}))
+                      if v != name and name.lower() in _refs(self._parse(q)))
 
     def _drop(self, s: str) -> None:
         dim = self._DROP_INDEX.match(s)

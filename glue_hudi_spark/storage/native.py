@@ -1121,9 +1121,12 @@ class NativeTable:
         drop = [c for c in commit.retired_cols if c in df.columns]
         if drop:
             df = df.drop(*drop)
-        for logical, physical in commit.column_mapping.items():
-            if logical != physical and physical in df.columns:
-                df = df.withColumnRenamed(physical, logical)
+        # one projection: renamed one at a time, a swap (a->b, b->a)
+        # would give both columns the same name
+        inv = {p: lg for lg, p in commit.column_mapping.items() if lg != p}
+        if inv.keys() & set(df.columns):
+            df = df.select(*[F.col("`" + c.replace("`", "``") + "`").alias(
+                inv.get(c, c)) for c in df.columns])
         return df
 
     def _with_meta(self, df: DataFrame, commit_time: str, delta_op: str = "u") -> DataFrame:

@@ -9,7 +9,7 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from glue_hudi_spark.sql import GhsSql, _balanced_end, _split_top
+from glue_hudi_spark.sql import GhsSql, _split_top
 
 # strings that stress the splitter: with Spark's C-style escaping any
 # content is representable
@@ -39,19 +39,6 @@ def test_split_top_never_splits_inside_quotes(parts):
         assert g.strip() == f"SELECT {_sql_quote(p)} AS v".strip()
 
 
-@given(inner=_content, depth=st.integers(min_value=1, max_value=5))
-@settings(max_examples=200, deadline=None)
-def test_balanced_end_matches_nesting(inner, depth):
-    text = "(" * depth + _sql_quote(inner) + ")" * depth + " trailing"
-    end = _balanced_end(text)
-    assert end == depth * 2 + len(_sql_quote(inner))
-    assert text[:end].count("(") >= depth
-
-
-def test_split_top_unterminated_paren_is_single_piece():
-    assert _balanced_end("(SELECT 'x'") is None
-
-
 # ---- end-to-end value roundtrip through INSERT → SELECT ----
 
 _ids = st.from_regex(r"[a-z][a-z0-9_]{0,10}", fullmatch=True)
@@ -65,7 +52,8 @@ _ids = st.from_regex(r"[a-z][a-z0-9_]{0,10}", fullmatch=True)
 def test_insert_select_roundtrips_arbitrary_strings(spark, tmp_path_factory,
                                                     vals):
     """Arbitrary text survives the SQL path byte-identically: VALUES
-    literals (Spark-escaped) → upsert → SELECT."""
+    literals (Spark-escaped) → upsert → SELECT, and an UPDATE SET of
+    each value (reversed) → SELECT."""
     wh = tmp_path_factory.mktemp("sqlprop")
     g = GhsSql(spark, wh)
     g.sql("CREATE TABLE rt (id INT, s STRING) USING ghs_table "
@@ -74,6 +62,10 @@ def test_insert_select_roundtrips_arbitrary_strings(spark, tmp_path_factory,
     g.sql(f"INSERT INTO rt VALUES {values}")
     got = {r["id"]: r["s"] for r in g.sql("SELECT * FROM rt").collect()}
     assert got == dict(vals)
+    for i, s in vals:
+        g.sql(f"UPDATE rt SET s = {_sql_quote(s[::-1])} WHERE id = {i}")
+    got = {r["id"]: r["s"] for r in g.sql("SELECT * FROM rt").collect()}
+    assert got == {i: s[::-1] for i, s in vals}
 
 
 # ---- prune-derivation soundness: pruned DELETE ≡ plain filter ----
@@ -233,9 +225,10 @@ def test_string_prune_never_changes_delete_semantics(spark,
     """Same contract as the int-typed property, with ``s`` a
     stats-indexed STRING column whose values and whose predicate
     literals contain quotes, escapes, doubled quotes, and embedded
-    AND/BETWEEN/IN keywords. _mask_literals must keep the keyword
-    regexes off the literal contents (and parquet footer string stats
-    stay prune-only — soundness, never served as answers)."""
+    AND/BETWEEN/IN keywords. Only Catalyst's plan derives the prune
+    bounds, so literal contents never act as keywords (and parquet
+    footer string stats stay prune-only — soundness, never served as
+    answers)."""
     from pyspark.sql import functions as F  # noqa: F401
 
     from glue_hudi_spark.storage.native import NativeTable
