@@ -43,6 +43,13 @@ def get_spark(
     the hive-sync durability the reference gets from the Glue Data Catalog
     (processData.py:160-169). On a real cluster, point
     ``hive.metastore.uris`` at the shared metastore instead.
+
+    ``spark.sql.codegen.cache.maxEntries`` is 512, not Spark's 100: one
+    commit round (a change-feed merge, its replica drain and an
+    aggregate view refresh) generates about 184 distinct classes, so a
+    100-entry cache evicts and recompiles 160-odd of them every round.
+    The setting is static: it takes effect only when this call builds a
+    new session, not when ``getOrCreate`` returns a running one.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -66,6 +73,7 @@ def get_spark(
         # Python Data Source filter pushdown (sources/datasource.py's
         # manifest-stats file pruning) — off by default in Spark 4.1
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "512")
     )
     if hive_metastore_dir:
         builder = (

@@ -82,6 +82,18 @@ BLOOM_DIR = "_index/bloom"  # per-data-file bloom sidecars (immutable)
 CHANGES_DIR = "_changes"  # per-commit delete tombstones (change-feed CDC)
 DV_DIR = "_dv"  # deletion-vector position sidecars (carried in manifests)
 
+# Codec of every Parquet file the table format writes (data files, MoR
+# deltas, ``_changes/`` tombstones, DV sidecars). A writer option, not a
+# session conf: a table's file format must not depend on who built the
+# session. Parquet records the codec per column chunk, so older snappy
+# files keep reading and whatever a commit rewrites comes out zstd.
+PARQUET_CODEC = "zstd"
+
+
+def _parquet_writer(df: DataFrame, mode: str):
+    """``df.write`` in ``mode`` with the table format's Parquet codec."""
+    return df.write.mode(mode).option("compression", PARQUET_CODEC)
+
 
 def _bloom_hash_pair(key: str) -> tuple[int, int]:
     """(h1, h2) for double hashing (Kirsch-Mitzenmacher) from ONE md5 —
@@ -791,6 +803,36 @@ def _is_local_batch(df: DataFrame) -> bool:
         return False
 
 
+def live_schema(c: "Commit") -> str:
+    """``c``'s stored schema less its retired (dropped) columns. Logical
+    reads and delete conditions scan files under it, so no plan node
+    above the scan can supply a dropped column: hidden by a ``drop``
+    over the scan, Spark's analyzer would still resolve a Filter's
+    reference to it through the Project beneath."""
+    if not c.retired_cols or not c.schema_json:
+        return c.schema_json
+    st = T.StructType.fromJson(json.loads(c.schema_json))
+    return T.StructType([f for f in st.fields
+                         if f.name not in c.retired_cols]).json()
+
+
+def _rename_cols(df: DataFrame, ren: dict[str, str]) -> DataFrame:
+    """Rename ``df``'s columns by ``ren`` in ONE projection: renamed one
+    at a time, a swap (a->b, b->a) gives both columns the same name. A
+    column that is not renamed but takes a renamed column's new name
+    would shadow it: raise."""
+    if not ren.keys() & set(df.columns):
+        return df
+    names = [ren.get(c, c) for c in df.columns]
+    dup = sorted({n for n in names if names.count(n) > 1})
+    if dup:
+        raise ValueError(
+            f"column(s) {dup} would appear twice after the column mapping "
+            f"{ren} — rename the batch column")
+    return df.select(*[F.col("`" + c.replace("`", "``") + "`").alias(n)
+                       for c, n in zip(df.columns, names)])
+
+
 def record_key_expr(keys: list[str]):
     """Build the record-key string column.
 
@@ -1107,27 +1149,17 @@ class NativeTable:
                 "re-adding a dropped column's name is unsupported — "
                 "choose a different name, or compact() first to "
                 "materialize the drop")
-        for logical, physical in commit.column_mapping.items():
-            if logical != physical and logical in df.columns \
-                    and physical not in df.columns:
-                df = df.withColumnRenamed(logical, physical)
-        return df
+        return _rename_cols(df, {lg: p for lg, p in
+                                 commit.column_mapping.items() if lg != p})
 
     def _to_logical(self, df: DataFrame, commit: "Commit | None") -> DataFrame:
-        """Render a physical frame in the commit's LOGICAL schema: hide
-        retired (dropped) physical columns, rename mapped ones."""
+        """Render a frame read under ``live_schema(commit)`` (retired
+        columns already left out at the scan) in the commit's LOGICAL
+        schema: rename mapped physical columns."""
         if commit is None:
             return df
-        drop = [c for c in commit.retired_cols if c in df.columns]
-        if drop:
-            df = df.drop(*drop)
-        # one projection: renamed one at a time, a swap (a->b, b->a)
-        # would give both columns the same name
-        inv = {p: lg for lg, p in commit.column_mapping.items() if lg != p}
-        if inv.keys() & set(df.columns):
-            df = df.select(*[F.col("`" + c.replace("`", "``") + "`").alias(
-                inv.get(c, c)) for c in df.columns])
-        return df
+        return _rename_cols(df, {p: lg for lg, p in
+                                 commit.column_mapping.items() if lg != p})
 
     def _with_meta(self, df: DataFrame, commit_time: str, delta_op: str = "u") -> DataFrame:
         head = self.timeline.latest()
@@ -1206,6 +1238,10 @@ class NativeTable:
         boundaries: list[str] | None = None,
     ) -> list[str]:
         """Write one commit's data dir; return new file paths (rel to root).
+
+        Files are zstd Parquet (``PARQUET_CODEC``, set on the writer):
+        this one write serves bulk insert, every CoW rewrite, MoR deltas,
+        compaction, bin-pack and clustering.
 
         Directory layout uses mirrored ``_pp_*`` string columns (added here,
         stripped by ``partitionBy``) so the data files keep the *typed*
@@ -1321,7 +1357,7 @@ class NativeTable:
             out = self._range_cluster(
                 out, width, RECORD_KEY_COL
             ).sortWithinPartitions(*self.record_keys)
-        writer = out.write.mode("error")
+        writer = _parquet_writer(out, "error")
         if self.partition_keys:
             writer = writer.partitionBy(*self._pp_cols())
         writer.parquet(str(commit_dir))
@@ -1485,7 +1521,7 @@ class NativeTable:
         ``commit``'s physical columns (the frame ``delete_where``
         filters) or, with ``logical``, the logical ones a snapshot read
         shows; None for none, or when ``cond`` does not resolve. It
-        filters an empty RDD under the commit's schema: Catalyst folds
+        filters an empty RDD under ``live_schema(commit)``: Catalyst folds
         it like any WHERE, and no Spark job runs."""
         if not commit.schema_json:
             return None
@@ -1493,7 +1529,7 @@ class NativeTable:
         try:
             rel = DataFrame(js.createDataFrame(
                 self.spark._jsc.emptyRDD(),
-                js.parseDataType(commit.schema_json)), self.spark)
+                js.parseDataType(live_schema(commit))), self.spark)
             if logical:
                 rel = self._to_logical(rel, commit)
             (leaf, conds), = _scan_chains(
@@ -2574,7 +2610,7 @@ class NativeTable:
                     kept.append(f)
             candidates = kept
         out = self._to_logical(
-            self._read_files(candidates, commit.schema_json,
+            self._read_files(candidates, live_schema(commit),
                              dvs=commit.dvs,
                              defaults=commit.column_defaults), commit
         ).filter(in_values(RECORD_KEY_COL, key_list))
@@ -2676,7 +2712,7 @@ class NativeTable:
         candidates = self._prune_candidates_by_values(
             list(commit.files), commit.col_stats, probes)
         out = _exact(self._to_logical(
-            self._read_files(candidates, commit.schema_json,
+            self._read_files(candidates, live_schema(commit),
                              dvs=commit.dvs,
                              defaults=commit.column_defaults), commit))
         return out if with_meta else out.drop(*META_COLS)
@@ -2765,7 +2801,7 @@ class NativeTable:
             base_files = [f for f in base_files
                           if file_dir_commit(f) > min_file_commit]
         base_files = self._prune_files(base_files, prune, commit)
-        base = self._read_files(base_files, commit.schema_json,
+        base = self._read_files(base_files, live_schema(commit),
                                 dvs=commit.dvs,
                                 defaults=commit.column_defaults)
         if min_file_commit is not None and commit.deltas:
@@ -2791,7 +2827,7 @@ class NativeTable:
             # (Round-2 verdict: the previous whole-table window made every
             # _rt read pay a full-table exchange.)
             delta_files = [f for d in commit.deltas for f in d["files"]]
-            deltas = self._read_files(delta_files, commit.schema_json,
+            deltas = self._read_files(delta_files, live_schema(commit),
                                       defaults=commit.column_defaults)
             order = [F.col(COMMIT_TIME_COL).desc()]
             if self.precombine:
@@ -2885,7 +2921,7 @@ class NativeTable:
 
         def side(c, kept):
             df = self._read_files(
-                kept, c.schema_json,
+                kept, live_schema(c),
                 dvs={f: c.dvs[f] for f in kept if f in c.dvs},
                 defaults=c.column_defaults)
             return self._to_logical(df, c)
@@ -3953,8 +3989,8 @@ class NativeTable:
         out_dir = self.root / CHANGES_DIR / uid
         cols = [RECORD_KEY_COL] + [
             k for k in self.record_keys if k != RECORD_KEY_COL]
-        keyed.select(*cols).dropDuplicates([RECORD_KEY_COL]) \
-            .write.mode("overwrite").parquet(str(out_dir))
+        _parquet_writer(keyed.select(*cols).dropDuplicates([RECORD_KEY_COL]),
+                        "overwrite").parquet(str(out_dir))
         return sorted(
             str(p.relative_to(self.root))
             for p in out_dir.glob("*.parquet"))
@@ -3994,8 +4030,8 @@ class NativeTable:
         import uuid as _uuid
 
         out_dir = self.root / DV_DIR / f"{cid:020d}-{_uuid.uuid4().hex[:12]}"
-        hits.select("file", "pos").coalesce(1) \
-            .write.mode("overwrite").parquet(str(out_dir))
+        _parquet_writer(hits.select("file", "pos").coalesce(1),
+                        "overwrite").parquet(str(out_dir))
         return sorted(str(p.relative_to(self.root))
                       for p in out_dir.glob("*.parquet"))
 
@@ -4137,7 +4173,7 @@ class NativeTable:
         # apply (same dir-commit rule as _read_files) and fill per group:
         # a pre-add file physically lacks the column, so every row takes
         # the literal; post-add files serve stored values (incl. NULL).
-        sch = T.StructType.fromJson(json.loads(prev.schema_json))
+        sch = T.StructType.fromJson(json.loads(live_schema(prev)))
         dtypes = {f.name: f.dataType for f in sch.fields}
         groups: dict[tuple, list[str]] = {}
         for f in affected:
@@ -4521,7 +4557,8 @@ class NativeTable:
             prev.files, self._cond_bounds(cond, prev), prev)
         aset = set(affected)
         untouched = [f for f in prev.files if f not in aset]
-        existing = self._read_files(affected, prev.schema_json, dvs=prev.dvs,
+        existing = self._read_files(affected, live_schema(prev),
+                                    dvs=prev.dvs,
                                     defaults=prev.column_defaults)
         with ExitStack() as stack:
             # change feed: the dropped rows' keys — one extra filter pass
@@ -4737,7 +4774,7 @@ class NativeTable:
             tgt = self.read_snapshot()
         elif by_source:
             tgt = self._to_logical(
-                self._read_files(prev.files, prev.schema_json,
+                self._read_files(prev.files, live_schema(prev),
                                  dvs=prev.dvs,
                                  defaults=prev.column_defaults), prev
             ).drop(*META_COLS)
@@ -4745,7 +4782,7 @@ class NativeTable:
             files, _ = self._prune_by_key_range(
                 prev.files, prev.key_stats, self._batch_key_range(source))
             tgt = self._to_logical(
-                self._read_files(files, prev.schema_json,
+                self._read_files(files, live_schema(prev),
                                  dvs=prev.dvs,
                                  defaults=prev.column_defaults), prev
             ).drop(*META_COLS)

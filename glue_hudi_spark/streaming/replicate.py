@@ -67,6 +67,7 @@ from glue_hudi_spark.storage.native import (
     DELTA_OP_COL,
     RECORD_KEY_COL,
     NativeTable,
+    live_schema,
     local_batch,
 )
 
@@ -230,15 +231,16 @@ class TableReplicationStream:
         src = self._src
         rng = DS.change_range(src.timeline, s, e, tombstones=True)
         c = rng.commit
-        rows = src._read_files(rng.files, c.schema_json, dvs=c.dvs,
+        live = live_schema(c)
+        rows = src._read_files(rng.files, live, dvs=c.dvs,
                                defaults=c.column_defaults)
         rows = rows.filter(F.col(COMMIT_TIME_COL) > f"{s:020d}")
         by_commit: dict[str, list[str]] = {}
         for ct, rel in rng.tombstones:
             by_commit.setdefault(ct, []).append(str(src.root / rel))
-        # tombstone files hold the key columns only: read under the full
+        # tombstone files hold the key columns only: read under the live
         # schema, every other column comes back NULL
-        schema = T.StructType.fromJson(json.loads(c.schema_json))
+        schema = T.StructType.fromJson(json.loads(live))
         for ct, paths in by_commit.items():
             rows = rows.unionByName(
                 self.spark.read.schema(schema).parquet(*paths)

@@ -152,3 +152,86 @@ def test_strict_schema_rejects_unknown_columns(spark, tmp_path):
         t.upsert(spark.createDataFrame([("d", 1, 9.0)],
                                        "id string, seq int, v double"))
     assert t.read_snapshot().count() == 3
+
+
+def _swapped(spark, path):
+    """A table whose columns ``a`` and ``b`` were swapped by three
+    renames: logical ``a`` is physical ``b`` and the other way round."""
+    t = NativeTable(spark, path, record_keys=["id"], precombine="seq")
+    t.bulk_insert(spark.createDataFrame(
+        [(i, 1, i * 100, i * 10) for i in range(3)],
+        "id int, seq int, a int, b int"))
+    t.rename_column("a", "tmp")
+    t.rename_column("b", "a")
+    t.rename_column("tmp", "b")
+    return t
+
+
+def _ab(t):
+    return {r.id: (r.a, r.b) for r in t.read_snapshot().collect()}
+
+
+def test_upsert_after_swapped_rename_lands_in_its_columns(spark, tmp_path):
+    t = _swapped(spark, tmp_path / "t")
+    assert _ab(t) == {0: (0, 0), 1: (10, 100), 2: (20, 200)}
+    t.upsert(spark.createDataFrame([(3, 1, 300, 30), (1, 2, 111, 11)],
+                                   "id int, seq int, a int, b int"))
+    assert _ab(t) == {0: (0, 0), 1: (111, 11), 2: (20, 200), 3: (300, 30)}
+
+
+def test_merge_after_swapped_rename_lands_in_its_columns(spark, tmp_path):
+    t = _swapped(spark, tmp_path / "t")
+    t.merge(spark.createDataFrame(
+        [(3, 2, 300, 30, "I"), (2, 2, 222, 22, "U"), (0, 2, 0, 0, "D")],
+        "id int, seq int, a int, b int, op string"))
+    assert _ab(t) == {1: (10, 100), 2: (222, 22), 3: (300, 30)}
+    t.merge_into(spark.createDataFrame(
+        [(1, 3, 101, 1), (4, 3, 400, 40)], "id int, seq int, a int, b int"),
+        when_matched_update="*", when_not_matched_insert=True)
+    assert _ab(t) == {1: (101, 1), 2: (222, 22), 3: (300, 30),
+                      4: (400, 40)}
+
+
+def test_batch_column_shadowing_a_mapped_name_raises(spark, tmp_path):
+    """After ``v`` is renamed to ``val``, a batch carrying both ``val``
+    and a new column ``v`` would write two physical ``v`` columns."""
+    t = _seed(spark, tmp_path / "t")
+    t.rename_column("v", "val")
+    with pytest.raises(ValueError, match="twice"):
+        t.upsert(spark.createDataFrame(
+            [("k1", 2, 1.0, 2.0)], "id string, seq int, val double, v double"))
+
+
+@pytest.mark.parametrize("dv", [False, True])
+def test_dropped_column_does_not_resolve(spark, tmp_path, dv):
+    """After DROP COLUMN, UPDATE, DELETE and ``delete_where`` naming the
+    column fail to resolve it, on a CoW and a deletion-vector table; the
+    rows stay as they were."""
+    from pyspark.errors import AnalysisException
+
+    from glue_hudi_spark.sql import GhsSql
+
+    t = NativeTable(spark, tmp_path / "x", record_keys=["id"],
+                    deletion_vectors=dv, files_per_partition=2)
+    t.bulk_insert(spark.createDataFrame(
+        [(i, i * 10, i % 2) for i in range(6)], "id int, v int, c int"))
+    g = GhsSql(spark, tmp_path / "wh", tables={"x": t})
+    g.sql("ALTER TABLE x DROP COLUMN c")
+    head = t.timeline.latest().commit_id
+    for stmt in ("UPDATE x SET v = 100 WHERE c = 1",
+                 "DELETE FROM x WHERE c = 1"):
+        with pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN") as e:
+            g.sql(stmt)
+        assert "`c`" in str(e.value), stmt
+    with pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN"):
+        t.delete_where(F.expr("c = 1"))
+    assert t.timeline.latest().commit_id == head
+    want = [(i, i * 10) for i in range(6)]
+    assert sorted(tuple(r) for r in g.sql("SELECT * FROM x").collect()) == want
+    # the live columns still serve UPDATE and DELETE
+    g.sql("UPDATE x SET v = 100 WHERE v = 10")
+    t.delete_where(F.expr("v = 20"))
+    assert sorted(tuple(r) for r in t.read_snapshot().collect()) == [
+        (0, 0), (1, 100), (3, 30), (4, 40), (5, 50)]
+    # time travel before the drop still serves the column
+    assert t.read_snapshot(as_of=1).filter("id = 3").first()["c"] == 1
