@@ -56,6 +56,7 @@ from glue_hudi_spark.operators.dedup import (
     word_shingles,
 )
 from glue_hudi_spark.operators.vector_index import StaleIndexError
+from glue_hudi_spark.storage.native import _parquet_writer
 
 #: Bloom pre-filter modulus (probe_bloom_max path): the batch's hash
 #: set maps to ``pmod(xxhash64(h), _BLOOM_BUCKETS)`` buckets and the
@@ -199,12 +200,12 @@ class DedupIndex:
             # problem at any scale). Hash-sorted within each prefix +
             # parquet bloom filters so the probe's pushed In predicate
             # skips row groups by stats/bloom (see probe_pushdown_max).
-            (self._exact_rows(fp).repartition("hp")
-             .sortWithinPartitions("h").write.mode("overwrite")
+            (_parquet_writer(self._exact_rows(fp).repartition("hp")
+                             .sortWithinPartitions("h"), "overwrite")
              .option("parquet.bloom.filter.enabled#h", "true")
              .partitionBy("hp").parquet(str(self.exact_store)))
-            (self._band_rows(fp).repartition("bp")
-             .sortWithinPartitions("band_hash").write.mode("overwrite")
+            (_parquet_writer(self._band_rows(fp).repartition("bp")
+                             .sortWithinPartitions("band_hash"), "overwrite")
              .option("parquet.bloom.filter.enabled#band_hash", "true")
              .partitionBy("bp").parquet(str(self.bands_store)))
         finally:
@@ -234,8 +235,8 @@ class DedupIndex:
         refreshed partitions stay probe-pushdown-prunable."""
         keep = old_filtered.join(changed_ids, on="id", how="left_anti")
         out = keep.unionByName(new_rows).localCheckpoint(eager=True)
-        (out.repartition(part_col).sortWithinPartitions(sort_col)
-         .write.mode("overwrite")
+        (_parquet_writer(out.repartition(part_col)
+                         .sortWithinPartitions(sort_col), "overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .option(f"parquet.bloom.filter.enabled#{sort_col}", "true")
          .partitionBy(part_col).parquet(str(path)))

@@ -54,6 +54,7 @@ from glue_hudi_spark.operators.similarity import (
     _topk_per_query,
     kmeans_centroids,
 )
+from glue_hudi_spark.storage.native import _parquet_writer
 
 
 class StaleIndexError(RuntimeError):
@@ -143,7 +144,7 @@ class VectorIndex:
         if not cents:
             raise ValueError("build: empty corpus")
         assigned = self._assign(self._keyed(snap, id_col), cents)
-        (self._postings_df(assigned).write.mode("overwrite")
+        (_parquet_writer(self._postings_df(assigned), "overwrite")
          .partitionBy("cell").parquet(str(self.postings)))
         self._write_meta({
             "vec_col": self.vec_col,
@@ -218,7 +219,7 @@ class VectorIndex:
         # guard later readers against Spark's cached file listing)
         out = (keep.unionByName(self._postings_df(add))
                .localCheckpoint(eager=True))
-        (out.write.mode("overwrite")
+        (_parquet_writer(out, "overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("cell").parquet(str(self.postings)))
         self.spark.catalog.refreshByPath(str(self.postings))

@@ -25,7 +25,9 @@ Scale design (100 TB target):
   table with daily partitions and a single-day batch rewrites ~1/365th.
 * The existing↔batch merge is one anti-join on a single precomputed key
   string column (``_ghs_record_key``) — hash-partitionable, salted by AQE
-  skew handling, no row-by-row driver logic.
+  skew handling, no row-by-row driver logic. A small batch held on the
+  driver (``local_batch``) with distinct keys filters the affected rows
+  by its key set instead: no shuffle, no broadcast.
 * Data files keep the *typed* partition columns (directory layout uses
   mirrored ``_pp_*`` string columns), so snapshot reads never re-infer types
   from directory names.
@@ -39,6 +41,7 @@ import datetime as _dt
 import json
 import os
 import re
+import shutil
 import time
 import urllib.parse
 from concurrent.futures import ThreadPoolExecutor
@@ -767,7 +770,13 @@ def local_batch(df: DataFrame,
     schema), so they never cross into Python and every type keeps its
     exact value. Every later action over the frame reads the held rows
     instead of re-running the derivation, and nothing is stored in
-    executor memory: the small-batch replacement for a ``persist``."""
+    executor memory: the small-batch replacement for a ``persist``.
+
+    A keyed commit of the held frame (or of projections and filters of
+    it) runs as its write alone: its probe collects the key projection
+    without a Spark job, and with distinct keys it skips the precombine
+    dedup and the persist and filters the affected rows by the key set
+    (``_keyed_rewrite``)."""
     jdf = df._jdf
     est = jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     if max_rows is not None:
@@ -803,15 +812,17 @@ def _is_local_batch(df: DataFrame) -> bool:
         return False
 
 
-def live_schema(c: "Commit") -> str:
-    """``c``'s stored schema less its retired (dropped) columns. Logical
-    reads and delete conditions scan files under it, so no plan node
+def live_schema(c: "Commit", schema_json: str | None = None) -> str:
+    """``c``'s stored schema (or ``schema_json``, a type-widened copy of
+    it) less ``c``'s retired (dropped) columns. Logical reads, delete
+    conditions and keyed rewrites scan files under it, so no plan node
     above the scan can supply a dropped column: hidden by a ``drop``
     over the scan, Spark's analyzer would still resolve a Filter's
     reference to it through the Project beneath."""
-    if not c.retired_cols or not c.schema_json:
-        return c.schema_json
-    st = T.StructType.fromJson(json.loads(c.schema_json))
+    schema_json = schema_json or c.schema_json
+    if not c.retired_cols or not schema_json:
+        return schema_json
+    st = T.StructType.fromJson(json.loads(schema_json))
     return T.StructType([f for f in st.fields
                          if f.name not in c.retired_cols]).json()
 
@@ -845,6 +856,14 @@ def record_key_expr(keys: list[str]):
         v = F.coalesce(F.col(k).cast("string"), F.lit(NULL_KEY))
         parts.append(F.concat(F.lit(f"{k}:"), v) if len(keys) > 1 else v)
     return F.concat_ws(",", *parts)
+
+
+def _without_keys(df: DataFrame, keys: list[str]) -> DataFrame:
+    """``df`` less its rows whose record key is in ``keys``: the rows a
+    left-anti join on the key keeps, a NULL key included (``IN`` yields
+    NULL there, and the row stays), without broadcasting the key set."""
+    return df.filter(
+        ~F.coalesce(in_values(RECORD_KEY_COL, keys), F.lit(False)))
 
 
 def _partial_update(kept: DataFrame, existing: DataFrame,
@@ -1366,6 +1385,9 @@ class NativeTable:
             for p in commit_dir.rglob("*.parquet")
             if not p.name.startswith("_")
         )
+        if not rel_files:
+            # a partitioned write of no rows leaves only _SUCCESS behind
+            shutil.rmtree(commit_dir, ignore_errors=True)
         if build_blooms:  # delta writes skip: deltas merge by key anyway
             self._build_blooms(rel_files)
         return rel_files
@@ -1762,6 +1784,23 @@ class NativeTable:
             return None
         return row.lo, row.hi
 
+    def _probe_projection(self, batch: DataFrame, want_partitions: bool):
+        """``(frame, with_partitions)``: ``batch``'s record key as ``k``
+        plus, when ``want_partitions`` holds and the batch carries every
+        partition source column, the partition-field struct as ``p``.
+        ``(None, False)`` when the batch lacks the record key columns."""
+        if not all(k in batch.columns for k in self.record_keys):
+            return None, False
+        want_partitions = (
+            want_partitions and bool(self.partition_keys)
+            and all(f.source in batch.columns for f in self._pfields))
+        cols = [record_key_expr(self.record_keys).alias("k")]
+        if want_partitions:
+            cols.append(F.struct(
+                *[f.expr().alias(f.name) for f in self._pfields]
+            ).alias("p"))
+        return batch.select(*cols), want_partitions
+
     def _batch_probe(
         self, batch: DataFrame, want_partitions: bool = False
     ) -> "tuple[int, tuple[str, str] | None, set | None] | None":
@@ -1774,7 +1813,8 @@ class NativeTable:
         materialization (measured 2-3x slower across the CDC bench and
         reverted), this scans only the key (+ partition-source)
         projection, so column pruning reaches the batch's source scan
-        and nothing stages in executor storage.
+        and nothing stages in executor storage. A batch held on the
+        driver takes ``_held_probe`` instead, which runs no job.
 
         Touched partitions come back as a ``collect_set`` of the
         partition-field structs — same distinct tuple set as
@@ -1787,23 +1827,17 @@ class NativeTable:
         when the batch does not carry the record key columns — callers
         fall back to ``isEmpty`` + no pruning, exactly the old
         behavior."""
-        if not all(k in batch.columns for k in self.record_keys):
+        proj, want_partitions = self._probe_projection(batch, want_partitions)
+        if proj is None:
             return None
-        want_partitions = (
-            want_partitions and bool(self.partition_keys)
-            and all(f.source in batch.columns for f in self._pfields))
         aggs = [
             F.count(F.lit(1)).alias("n"),
             F.min("k").alias("lo"),
             F.max("k").alias("hi"),
         ]
-        cols = [record_key_expr(self.record_keys).alias("k")]
         if want_partitions:
-            cols.append(F.struct(
-                *[f.expr().alias(f.name) for f in self._pfields]
-            ).alias("p"))
             aggs.append(F.collect_set("p").alias("parts"))
-        row = batch.select(*cols).agg(*aggs).first()
+        row = proj.agg(*aggs).first()
         n = int(row["n"])
         key_range = ((row["lo"], row["hi"])
                      if n and row["lo"] is not None else None)
@@ -1811,6 +1845,29 @@ class NativeTable:
                     for p in row["parts"]}
                    if want_partitions else None)
         return n, key_range, touched
+
+    def _held_probe(self, batch: DataFrame, want_partitions: bool):
+        """``_batch_probe``'s facts for a batch held on the driver
+        (``_is_local_batch``), plus the batch's record keys: ``(row
+        count, hull, touched partitions, keys)``. Spark's
+        ``ConvertToLocalRelation`` folds the key projection of held rows
+        into a ``LocalRelation``, so collecting it runs no Spark job;
+        count, hull and partitions are computed here from the collected
+        rows (Python and Spark both order strings by code point). ``keys``
+        is the key list when every key is distinct and non-null, else
+        None. None outright when the batch lacks the record key
+        columns."""
+        proj, want_partitions = self._probe_projection(batch, want_partitions)
+        if proj is None:
+            return None
+        rows = proj.collect()
+        keys = [r["k"] for r in rows]
+        present = [k for k in keys if k is not None]
+        key_range = (min(present), max(present)) if present else None
+        touched = ({tuple(r["p"][f.name] for f in self._pfields)
+                    for r in rows} if want_partitions else None)
+        distinct = len(set(present)) == len(keys)
+        return len(rows), key_range, touched, keys if distinct else None
 
     def _prune_by_key_range(
         self,
@@ -3258,9 +3315,6 @@ class NativeTable:
         engine-registered. Meta columns (``_ghs_*``) are visible, like
         Hudi's ``_hoodie_*``. Refresh after each commit.
         """
-        import os
-        import shutil
-
         commit = self.timeline.latest()
         if commit is None:
             raise ValueError(f"table {self.root} has no commits")
@@ -3319,8 +3373,6 @@ class NativeTable:
         (delta files are files). Requires an empty/nonexistent
         destination.
         """
-        import shutil
-
         commit = self.timeline.latest()
         if commit is None:
             raise ValueError(f"table {self.root} has no commits")
@@ -3890,10 +3942,16 @@ class NativeTable:
         republish the empty frame's schema verbatim, bypassing the
         type-widening/strict-schema chokepoints.
         """
-        if df.isEmpty():
+        cid = self.timeline.next_commit_id()
+        out = self._with_meta(df, f"{cid:020d}")
+        if parallelism > 0:
+            out = out.repartition(parallelism, *self.record_keys)
+        out = out.sortWithinPartitions(*self.record_keys)
+        files = self._appended_files(out, cid)
+        prev = self.timeline.latest()
+        if files is None:
             if not allow_empty:
                 return None
-            prev = self.timeline.latest()
             if prev is not None:
                 # schema-only commits exist to make CREATE TABLE's
                 # declared schema readable BEFORE the first write; on a
@@ -3906,19 +3964,10 @@ class NativeTable:
                     "is the empty-table schema-publish path; this table "
                     "already has commits — an empty batch is a no-op "
                     "(call with allow_empty=False)")
-            cid = self.timeline.next_commit_id()
-            out = self._with_meta(df, f"{cid:020d}")
             return self._commit(
                 cid, "bulk_insert", [], [],
                 out.schema.json(), dict(extra_stats or {}), {}, {},
             )
-        cid = self.timeline.next_commit_id()
-        out = self._with_meta(df, f"{cid:020d}")
-        if parallelism > 0:
-            out = out.repartition(parallelism, *self.record_keys)
-        out = out.sortWithinPartitions(*self.record_keys)
-        files = self._write_files(out, cid)
-        prev = self.timeline.latest()
         return self._commit_carried(
             cid, "bulk_insert", prev, prev.files if prev else [], files,
             out.schema.json(), dict(extra_stats or {}),
@@ -3926,16 +3975,40 @@ class NativeTable:
 
     def insert(self, df: DataFrame) -> Commit | None:
         """Plain append (the reference defines but never routes to this —
-        processData.py:201-205; exposed for completeness)."""
-        if df.isEmpty():
-            return None
+        processData.py:201-205; exposed for completeness). An empty
+        ``df`` publishes nothing."""
         cid = self.timeline.next_commit_id()
         out = self._with_meta(df, f"{cid:020d}")
-        files = self._write_files(out, cid)
+        files = self._appended_files(out, cid)
+        if files is None:
+            return None
         prev = self.timeline.latest()
         return self._commit_carried(
             cid, "insert", prev, prev.files if prev else [], files,
             out.schema.json(), {}, deltas=prev.deltas if prev else [])
+
+    def _appended_files(self, out: DataFrame, cid: int) -> list[str] | None:
+        """Write ``out`` as commit ``cid``'s new files and return them,
+        or None when it held no rows. Emptiness is read from the written
+        files' footer row counts, not from a probe before the write: a
+        probe executes the whole derivation a second time. An empty
+        write's files are removed with its directory and any parent it
+        created, so it leaves no orphan; bloom sidecars are built only
+        for a non-empty write."""
+        made = [d for d in (self.root, self.root / DATA_DIR)
+                if not d.exists()]
+        files = self._write_files(out, cid, build_blooms=False)
+        if any(self._footer_rows(f) != 0 for f in files):
+            self._build_blooms(files)
+            return files
+        for d in {Path(f).parents[-3] for f in files}:  # data/<token>
+            shutil.rmtree(self.root / d, ignore_errors=True)
+        for d in reversed(made):
+            try:
+                d.rmdir()
+            except OSError:  # another writer's files landed meanwhile
+                pass
+        return None
 
     def upsert(self, batch: DataFrame, parallelism: int = 0,
                extra_stats: dict | None = None, partial: bool = False) -> Commit | None:
@@ -3955,8 +4028,8 @@ class NativeTable:
         if self.storage_type == "mor":
             # MoR routes still need the explicit take-1 guard (an empty
             # batch must not compact or delta-append); the CoW route's
-            # emptiness probe is folded into _keyed_rewrite's single
-            # count+hull aggregate (_batch_probe)
+            # emptiness probe is folded into _keyed_rewrite's probe
+            # (_guarded_probe)
             if batch.isEmpty():
                 return None
             if not partial:
@@ -4011,7 +4084,8 @@ class NativeTable:
         if prev is None:  # delete against an empty table is a no-op
             return None
         # the tombstone write is an extra action over the batch: persist
-        # so its lineage computes once for write + anti-join
+        # so its lineage computes once for write + anti-join (a held
+        # batch with distinct keys re-reads its rows instead)
         return self._keyed_rewrite(
             batch, prev, "delete", lambda kept, existing, keyed: kept,
             tombstones=lambda keyed: keyed,
@@ -4103,7 +4177,7 @@ class NativeTable:
             probed = self._guarded_probe(stack, batch)
             if probed is None:
                 return None
-            batch, key_range, touched = probed
+            batch, key_range, touched, _ = probed
             cid = self.timeline.next_commit_id()
             keyed = batch.withColumn(
                 RECORD_KEY_COL, record_key_expr(self.record_keys))
@@ -4254,8 +4328,6 @@ class NativeTable:
         keys actually touch — onboarding a 100-TB corpus costs metadata,
         not a rewrite. Unpartitioned tables only (adopting a foreign
         hive layout means trusting its dir encoding — out of scope)."""
-        import shutil
-
         if self.timeline.exists():
             raise ValueError(f"table {self.root} already has commits")
         if self.partition_keys:
@@ -4357,38 +4429,53 @@ class NativeTable:
                        extra_stats: dict | None = None) -> "Commit | None":
         """The copy-on-write keyed rewrite behind upsert, partial upsert,
         delete and merge: probe the batch (``_guarded_probe``), prune
-        the file set (``_prune_ladder``), read the affected files,
-        anti-join them against the batch keys, write ``output(kept,
-        existing, keyed)`` clustered like the files it replaces, and
-        publish with every untouched file carried by reference.
+        the file set (``_prune_ladder``), read the affected files under
+        ``live_schema`` (a dropped column's bytes are not rewritten),
+        take the batch keys out of them, write ``output(kept, existing,
+        keyed)`` clustered like the files it replaces, and publish with
+        every untouched file carried by reference. The commit carries
+        the stored schema, retired columns included, plus any column
+        the batch evolves.
+
+        A batch held on the driver with distinct keys (the probe hands
+        back its key list) runs as its write alone: the precombine dedup
+        is the identity on distinct keys and is skipped, nothing is
+        persisted (each action re-reads the held rows, no shuffle
+        between), and the keys leave the affected rows through a filter
+        on the key set instead of a broadcast left-anti join. Any other
+        batch is deduped by precombine and anti-joined.
 
         ``tombstones(keyed)`` returns the frame whose keys the change
         feed records as deleted (None: none). ``persist`` materializes
         the keyed batch once for paths that run extra actions over it,
-        a batch held on the driver (``local_batch``) included: the
-        precombine dedup above it is a shuffle, so a key present twice
-        with tied precombine values could resolve differently per
-        action. Every persist lives on this call's own ``ExitStack``,
-        so a failure at any step releases it, and concurrent calls on
-        one handle never touch each other's frames."""
+        a held batch with a duplicate key included: the precombine dedup
+        above it is a shuffle, so a key present twice with tied
+        precombine values could resolve differently per action. Every
+        persist lives on this call's own ``ExitStack``, so a failure at
+        any step releases it, and concurrent calls on one handle never
+        touch each other's frames."""
         with ExitStack() as stack:
             probed = self._guarded_probe(stack, batch)
             if probed is None:
                 return None
-            batch, key_range, touched = probed
+            batch, key_range, touched, keys = probed
             cid = self.timeline.next_commit_id()
             keyed = self._with_meta(batch, f"{cid:020d}")
-            keyed = self._precombine_dedup(keyed)
+            if keys is None:
+                keyed = self._precombine_dedup(keyed)
             read_schema_json, keyed = self._apply_type_widening(prev, keyed)
             keyed, affected, untouched = self._prune_ladder(
-                stack, prev, keyed, touched, key_range, persist, prune_values)
-            existing = self._read_files(affected, read_schema_json,
+                stack, prev, keyed, touched, key_range, persist,
+                prune_values, held=keys is not None)
+            existing = self._read_files(affected,
+                                        live_schema(prev, read_schema_json),
                                         dvs=prev.dvs,
                                         defaults=prev.column_defaults)
             if parallelism > 0:
                 existing = existing.repartition(parallelism, RECORD_KEY_COL)
-            kept = existing.join(keyed.select(RECORD_KEY_COL),
-                                 on=RECORD_KEY_COL, how="left_anti")
+            kept = (existing.join(keyed.select(RECORD_KEY_COL),
+                                  on=RECORD_KEY_COL, how="left_anti")
+                    if keys is None else _without_keys(existing, keys))
             merged = output(kept, existing, keyed)
             gone = tombstones(keyed) if tombstones else None
             written = ([] if gone is None else self._drop_on_error(
@@ -4401,46 +4488,61 @@ class NativeTable:
             merged = merged.select(
                 *prev_cols, *[c for c in merged.columns if c not in prev_cols])
             files = self._rewrite_files(merged, cid, affected, prev)
+            schema = merged.schema
+            if prev.retired_cols:
+                # retired columns stay in the stored schema at their place
+                have = {f.name: f for f in schema.fields}
+                schema = T.StructType(
+                    [have.pop(f.name, f) for f in T.StructType.fromJson(
+                        json.loads(read_schema_json)).fields]
+                    + list(have.values()))
             return self._commit_carried(
-                cid, action, prev, untouched, files, merged.schema.json(),
+                cid, action, prev, untouched, files, schema.json(),
                 {"files_rewritten": len(affected),
                  "files_carried": len(untouched), **(extra_stats or {})},
                 tombstones=written)
 
     def _guarded_probe(self, stack: ExitStack, batch: DataFrame):
         """The front every keyed write shares: None for an empty batch,
-        else ``(batch, key_range, touched)`` — the batch materialized on
-        the caller's ``stack`` when its plan is non-deterministic."""
-        # the probe, prune decisions, anti-join key set, and write leg
-        # each execute the batch lineage; a non-deterministic derivation
-        # (rand, monotonically_increasing_id) could prune files whose old
-        # rows the re-derived write leg then hits — materialize it ONCE
-        # first (Delta MERGE's source materialization). Deterministic
-        # batches (the common case) keep the cheap unpersisted passes.
-        if not _plan_is_deterministic(batch):
+        else ``(batch, key_range, touched, keys)``.
+
+        The probe, prune decisions, anti-join key set and write leg each
+        execute the batch lineage, so a non-deterministic derivation
+        (rand, monotonically_increasing_id) could prune files whose old
+        rows the re-derived write leg then hits: such a batch is
+        materialized ONCE first, on the caller's ``stack`` (Delta
+        MERGE's source materialization), and probed by one aggregate job
+        (``_batch_probe``), like any deterministic batch computed on the
+        executors. A deterministic batch held on the driver
+        (``_is_local_batch``) is probed without a Spark job
+        (``_held_probe``); ``keys`` is then its record-key list when
+        every key is distinct and non-null, and None in every other
+        case."""
+        held = _plan_is_deterministic(batch)
+        if not held:
             batch = batch.persist()
             stack.callback(batch.unpersist)
-        # one narrow aggregate decides emptiness, the key hull AND the
-        # touched partitions — a separate isEmpty probe (a take-1 that
-        # still runs the batch derivation) and the partition
-        # distinct-collect are folded in; see _batch_probe
-        probe = self._batch_probe(
-            batch, want_partitions=not self.global_index)
-        if probe is not None:
-            n_rows, key_range, touched = probe
-            if n_rows == 0:
-                return None
+        want_partitions = not self.global_index
+        if held and _is_local_batch(batch):
+            probe = self._held_probe(batch, want_partitions)
         else:
+            probe = self._batch_probe(batch, want_partitions)
+            probe = probe and (*probe, None)
+        if probe is None:
             if batch.isEmpty():
                 return None
-            key_range = None
-            touched = (None if self.global_index
-                       else self._batch_partitions(batch))
-        return batch, key_range, touched
+            return (batch, None,
+                    None if self.global_index
+                    else self._batch_partitions(batch), None)
+        n_rows, key_range, touched, keys = probe
+        if n_rows == 0:
+            return None
+        return batch, key_range, touched, keys
 
     def _prune_ladder(self, stack: ExitStack, prev: "Commit",
                       keyed: DataFrame, touched, key_range, persist: bool,
-                      prune_values: dict[str, list] | None = None):
+                      prune_values: dict[str, list] | None = None,
+                      held: bool = False):
         """(keyed, affected, untouched): the keyed writes' file pruning,
         cheapest level first — partition dirs, per-file key ranges (the
         record-level index: a narrow-key upsert on an unpartitioned
@@ -4455,7 +4557,9 @@ class NativeTable:
 
         ``keyed`` comes back persisted (on ``stack``) when ``persist``
         asks for it or the bloom pass runs — probing is an extra action
-        over the batch."""
+        over the batch — unless it is ``held``: held rows under
+        projections only, which every action re-reads without a
+        shuffle."""
         affected, untouched = self._split_files(prev.files, touched)
         affected, skipped = self._prune_by_key_range(
             affected, prev.key_stats, key_range)
@@ -4466,7 +4570,7 @@ class NativeTable:
             vset = set(vkept)
             untouched = untouched + [f for f in affected if f not in vset]
             affected = vkept
-        if persist or (self.bloom_index and affected):
+        if not held and (persist or (self.bloom_index and affected)):
             keyed = keyed.persist()
             stack.callback(keyed.unpersist)
         if self.bloom_index and affected:
@@ -4483,8 +4587,6 @@ class NativeTable:
         call fails before a manifest references them. Tombstone paths
         carry no commit id, so ``vacuum`` cannot tell a failed writer's
         from an in-flight one's — the writer cleans up after itself."""
-        import shutil
-
         def drop(exc_type, *_):
             if exc_type is None:
                 return
@@ -4655,7 +4757,9 @@ class NativeTable:
         # (emptiness probe + key write); persist so the batch lineage —
         # often a window over the raw feed — computes ONCE for all of
         # probe, tombstone write, anti-join, and union (the r8 bench
-        # caught the unpersisted version re-deriving it per action)
+        # caught the unpersisted version re-deriving it per action); a
+        # held batch with distinct keys re-reads its rows instead, and
+        # its emptiness probe reads them without a Spark job
         return self._keyed_rewrite(
             batch, prev, "merge", upserted, deleted,
             persist=self.change_feed_deletes, prune_values=prune_values,

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from glue_hudi_spark.operators import asof
 from glue_hudi_spark.sources.batch import drain_batches
+from glue_hudi_spark.storage.native import _parquet_writer
 
 
 def enrich_asof(
@@ -119,7 +120,7 @@ class EnrichStream:
         # exactly-once convention CorpusIngestStream implements with its
         # in-commit stream_batch_id marker. Readers of out_dir see
         # stream_batch_id as a partition column (batch lineage for free).
-        out.write.mode("overwrite").parquet(
+        _parquet_writer(out, "overwrite").parquet(
             f"{self.out_dir}/stream_batch_id={int(batch_id)}")
 
     def run_available(self) -> None:

@@ -10,6 +10,7 @@ entry point that now relies on it.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -207,3 +208,41 @@ def test_partitioned_merge_prunes_with_folded_probe(spark, tmp_table_dir):
     assert c.stats["files_carried"] >= 1  # partition b untouched
     got = {r["id"]: r["v"] for r in t.read_snapshot().collect()}
     assert got[1] == "new" and got[7] == "old" and len(got) == 10
+
+
+def test_empty_appends_decide_emptiness_after_the_write(spark, tmp_path,
+                                                        monkeypatch):
+    """``bulk_insert`` and ``insert`` run no emptiness probe before their
+    write (it would derive the whole load twice); they read it from the
+    written files' footers. An empty batch publishes nothing and leaves
+    no directory behind; ``allow_empty=True`` still publishes the
+    schema-only first commit, and still raises on a table with history."""
+    probes = []
+    cls = type(spark.range(1))
+    orig = cls.isEmpty
+    monkeypatch.setattr(cls, "isEmpty",
+                        lambda self: probes.append(1) or orig(self))
+    rows = spark.range(6).selectExpr(
+        "CAST(id AS string) AS id", "id % 2 AS pt", "CAST(id AS int) AS seq")
+    empty = rows.filter("seq < 0")
+    for pk in ([], ["pt"]):
+        root = tmp_path / f"t{len(pk)}"
+        t = _mk(spark, root, partition_keys=pk, bloom_index=True)
+        assert t.bulk_insert(empty) is None and t.insert(empty) is None
+        assert not root.exists()
+        c = t.bulk_insert(empty, allow_empty=True)
+        assert c.files == [] and t.read_snapshot().columns[:3] == [
+            "id", "pt", "seq"]
+        assert not (root / "data").exists()
+        t.bulk_insert(rows)
+        data = sorted(p.name for p in (root / "data").iterdir())
+        blooms = sorted((root / "_index").rglob("*.bloom"))
+        assert len(data) == 1 and blooms
+        assert t.bulk_insert(empty) is None and t.insert(empty) is None
+        with pytest.raises(ValueError, match="already has commits"):
+            t.bulk_insert(empty, allow_empty=True)
+        assert sorted(p.name for p in (root / "data").iterdir()) == data
+        assert sorted((root / "_index").rglob("*.bloom")) == blooms
+        c = t.insert(rows.selectExpr("id || 'x' AS id", "pt", "seq"))
+        assert len(c.files) > len(data) and t.read_snapshot().count() == 12
+    assert probes == []

@@ -9,6 +9,8 @@ so history reads with the names that were current then.
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -235,3 +237,71 @@ def test_dropped_column_does_not_resolve(spark, tmp_path, dv):
         (0, 0), (1, 100), (3, 30), (4, 40), (5, 50)]
     # time travel before the drop still serves the column
     assert t.read_snapshot(as_of=1).filter("id = 3").first()["c"] == 1
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_keyed_rewrites_leave_dropped_column_out(spark, tmp_path,
+                                                 partitioned):
+    """An upsert, merge, MERGE INTO and delete after DROP COLUMN rewrite
+    their files without the dropped column's bytes; each commit still
+    carries the stored schema with the retired column at its place, plus
+    a column the batch evolves."""
+    import pyarrow.parquet as pq
+
+    t = NativeTable(spark, tmp_path / "t", record_keys=["id"],
+                    precombine="seq",
+                    partition_keys=["tag"] if partitioned else None,
+                    files_per_partition=1)
+    t.bulk_insert(spark.createDataFrame(
+        [(f"k{i}", 1, float(i), f"tag{i % 3}", "x" * 50) for i in range(10)],
+        "id string, seq int, v double, tag string, blob string"))
+    t.drop_column("blob")
+    def names(c):
+        return [f["name"] for f in json.loads(c.schema_json)["fields"]]
+
+    stored = names(t.timeline.latest())
+
+    def new_file_columns(prev, c):
+        new = sorted(set(c.files) - set(prev.files))
+        assert new
+        return {tuple(pq.read_schema(str(t.root / f)).names) for f in new}
+
+    writes = [
+        lambda: t.upsert(spark.createDataFrame(
+            [("k1", 2, 10.0, "tag1")], "id string, seq int, v double, tag string")),
+        lambda: t.merge(spark.createDataFrame(
+            [("k2", 2, 20.0, "tag2", "U"), ("k4", 2, 0.0, "tag1", "D")],
+            "id string, seq int, v double, tag string, op string"),
+            op_col="op"),
+        lambda: t.merge_into(spark.createDataFrame(
+            [("k5", 2, 50.0, "tag2")], "id string, seq int, v double, tag string"),
+            when_matched_update="*"),
+        lambda: t.delete(spark.createDataFrame(
+            [("k7", "tag1")], "id string, tag string")),
+    ]
+    for write in writes:
+        prev = t.timeline.latest()
+        c = write()
+        for cols in new_file_columns(prev, c):
+            assert "blob" not in cols
+        assert names(c) == stored
+        assert c.retired_cols == ["blob"]
+
+    prev = t.timeline.latest()
+    c = t.upsert(spark.createDataFrame(
+        [("k3", 3, 30.0, "tag0", 7)],
+        "id string, seq int, v double, tag string, extra int"))
+    assert all("blob" not in n and "extra" in n
+               for n in new_file_columns(prev, c))
+    assert names(c) == stored + ["extra"]
+    snap = {r.id: r for r in t.read_snapshot().collect()}
+    assert "blob" not in t.read_snapshot().columns
+    assert sorted(snap) == sorted(f"k{i}" for i in range(10) if i not in (4, 7))
+    assert (snap["k1"].v, snap["k2"].v, snap["k5"].v, snap["k3"].extra) \
+        == (10.0, 20.0, 50.0, 7)
+    assert snap["k6"].extra is None
+    assert t.read_snapshot(as_of=1).filter("id = 'k1'").first()["blob"] \
+        == "x" * 50
+    t.compact()
+    assert "blob" not in t.read_snapshot().columns
+    assert t.validate()["ok"]

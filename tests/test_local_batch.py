@@ -6,8 +6,11 @@ persist; a larger one keeps the persist path, decided without a Spark
 job. These tests pin the exact round trip of every type class, that
 both paths write the same rows in the same commit shape, that a
 non-deterministic derivation is drawn once, which plans count as held
-rows, that a change-feed merge still persists its deduped keyed batch,
-and that neither path leaves a persisted frame behind.
+rows, that a held keyed commit with distinct keys starts no Spark job
+before its write and persists nothing, that its key-set filter keeps
+what the anti-join keeps, that a held batch with a duplicate key still
+dedups by precombine and persists once, and that neither path leaves a
+persisted frame behind.
 """
 
 from __future__ import annotations
@@ -129,15 +132,17 @@ def test_over_cap_path_matches_held_path(spark, tmp_path, monkeypatch,
     held_t = _mk(spark, tmp_path / "held")
     cdc.apply_cdc_batch(held_t, _cdc_batch(spark),
                         single_commit=single_commit)
-    held_persists = len(persist_calls)
+    # held with distinct keys: the keyed batch re-reads the held rows
+    assert len(persist_calls) == 0
     assert persistent_rdds() <= before
 
     monkeypatch.setattr(N, "LOCAL_BATCH_MAX_BYTES", 0)
     cap_t = _mk(spark, tmp_path / "cap")
     cdc.apply_cdc_batch(cap_t, _cdc_batch(spark),
                         single_commit=single_commit)
-    # the held batch replaces exactly the C5 persist of the batch
-    assert len(persist_calls) == 2 * held_persists + 1
+    # over the cap: the C5 persist of the batch, plus the keyed persist
+    # of the change-feed merge (or delete) for its tombstone pass
+    assert len(persist_calls) == 2
     assert persistent_rdds() <= before
 
     assert _hashes(held_t.read_snapshot()) == _hashes(cap_t.read_snapshot())
@@ -218,17 +223,178 @@ def test_window_over_held_rows_still_persists(spark, tmp_path,
 def test_change_feed_merge_of_held_rows_persists_keyed_batch(
         spark, tmp_path, persist_calls):
     """Held rows with a key twice go through the precombine dedup, a
-    shuffle, so the change-feed merge persists its keyed batch once."""
+    shuffle, so the change-feed merge persists its keyed batch once and
+    anti-joins it. The same merge with every key once persists nothing
+    and joins nothing."""
     t = _mk(spark, tmp_path / "t")
     held, _ = local_batch(spark.range(60).selectExpr(
         "format_string('k%03d', id % 30) AS k", "CAST(id % 3 AS int) AS d",
         "id AS v", "CAST(2 + id DIV 30 AS int) AS s", "'U' AS op"))
     assert N._is_local_batch(held)
-    t.merge(held, op_col="op")
-    assert len(persist_calls) == 1
+    joins = []
+    cls = type(held)  # the session's concrete DataFrame class
+    orig = cls.join
+
+    def spy(self, *a, **kw):
+        joins.append(kw.get("how"))
+        return orig(self, *a, **kw)
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(cls, "join", spy)
+        t.merge(held, op_col="op")
+        assert len(persist_calls) == 1 and joins == ["left_anti"]
+        got = {r.k: r.v for r in t.read_snapshot().collect()}
+        assert len(got) == 60
+        assert all(got[f"k{i:03d}"] == i + 30 for i in range(30))
+        # the precombine winner comes first in row order here: a
+        # last-row-wins merge would keep the older row
+        del joins[:]
+        held, _ = local_batch(spark.range(20).selectExpr(
+            "format_string('k%03d', id % 10) AS k",
+            "CAST(id % 10 % 3 AS int) AS d", "id AS v",
+            "CAST(9 - id DIV 10 AS int) AS s", "'U' AS op"))
+        t.merge(held, op_col="op")
+        assert len(persist_calls) == 2 and joins == ["left_anti"]
+        got = {r.k: r.v for r in t.read_snapshot().collect()}
+        assert all(got[f"k{i:03d}"] == i for i in range(10))
+        del joins[:]
+        held, _ = local_batch(spark.range(10).selectExpr(
+            "format_string('k%03d', id) AS k", "CAST(id % 3 AS int) AS d",
+            "id + 500 AS v", "10 AS s", "'U' AS op"))
+        t.merge(held, op_col="op")
+        assert len(persist_calls) == 2 and joins == []
     got = {r.k: r.v for r in t.read_snapshot().collect()}
     assert len(got) == 60
-    assert all(got[f"k{i:03d}"] == i + 30 for i in range(30))
+    assert all(got[f"k{i:03d}"] == i + 500 for i in range(10))
+
+
+def _date_table(spark, path):
+    t = NativeTable(spark, path, record_keys=["k"], precombine="s",
+                    partition_keys=["dt"], change_feed_deletes=True)
+    t.bulk_insert(spark.range(60).selectExpr(
+        "format_string('k%03d', id) AS k",
+        "date_add(DATE'2024-01-01', CAST(id % 4 AS int)) AS dt",
+        "id AS v", "1 AS s"))
+    return t
+
+
+def _held_rows(spark, lo, hi, *extra):
+    return local_batch(spark.range(lo, hi).selectExpr(
+        "format_string('k%03d', id) AS k",
+        "date_add(DATE'2024-01-01', CAST(id % 4 AS int)) AS dt",
+        "id * 10 AS v", "2 AS s", *extra))[0]
+
+
+def test_held_writes_start_no_job_before_their_write(spark, tmp_path,
+                                                     monkeypatch, job_ids,
+                                                     persist_calls):
+    """A held upsert, delete and change-feed merge on a date-partitioned
+    table probe, prune and plan without a Spark job: the first job of
+    each is its first write (a tombstone or data file write)."""
+    t = _date_table(spark, tmp_path / "t")
+    first = []
+    for name in ("_write_files", "_write_tombstones"):
+        orig = getattr(NativeTable, name)
+
+        def spy(self, *a, _orig=orig, **kw):
+            if not first:
+                first.append(job_ids())
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(NativeTable, name, spy)
+    ups = _held_rows(spark, 0, 10)
+    dels = _held_rows(spark, 50, 55).select("k", "dt")
+    mixed = _held_rows(spark, 10, 20, "IF(id % 2 = 0, 'D', 'U') AS op")
+    for write in (lambda: t.upsert(ups), lambda: t.delete(dels),
+                  lambda: t.merge(mixed, op_col="op")):
+        del first[:]
+        before = job_ids()
+        assert write() is not None
+        assert first == [before]
+        assert job_ids() != before
+    assert not persist_calls
+    got = {r.k: r.v for r in t.read_snapshot().collect()}
+    want = {f"k{i:03d}": i for i in range(60) if not 50 <= i < 55}
+    want.update({f"k{i:03d}": i * 10 for i in range(10)})
+    want.update({f"k{i:03d}": i * 10 for i in range(11, 20, 2)})
+    for i in range(10, 20, 2):
+        del want[f"k{i:03d}"]
+    assert got == want
+    gone = {r.k for c in t.timeline.history()[-2:] for r in
+            spark.read.parquet(*[str(t.root / f) for f in c.tombstones])
+            .collect()}
+    assert gone == {f"k{i:03d}" for i in [*range(50, 55), *range(10, 20, 2)]}
+
+
+ODD_KEYS = ["it's", "back\\slash", "tab\there", "bell\x07", "new\nline",
+            "plain"]
+
+
+PLAIN_KEYS = [f"p{i:02d}" for i in range(40)]
+
+
+@pytest.mark.parametrize("drop", [
+    ODD_KEYS[::2] + ["absent"],          # in_values falls back to isin
+    PLAIN_KEYS + ["absent"],             # rendered as SQL text
+    (ODD_KEYS + PLAIN_KEYS)[::2],
+], ids=["odd", "sql-text", "mixed"])
+def test_key_set_filter_keeps_what_the_anti_join_keeps(spark, drop):
+    """``_without_keys`` keeps exactly the rows the left-anti join on the
+    record key keeps: keys ``in_values`` cannot render as SQL text (a
+    quote, a backslash, a control character) through its ``isin``
+    fallback, a list long enough for the SQL text path, and an existing
+    row whose record key is NULL."""
+    existing = spark.createDataFrame(
+        [(k, i) for i, k in enumerate(
+            ODD_KEYS + PLAIN_KEYS + ["kept", "it", "back"])]
+        + [(None, -1)], f"{N.RECORD_KEY_COL} string, v int")
+    anti = existing.join(
+        spark.createDataFrame([(k,) for k in drop], [N.RECORD_KEY_COL]),
+        on=N.RECORD_KEY_COL, how="left_anti")
+    got = N._without_keys(existing, drop)
+    assert sorted(map(tuple, got.collect()), key=repr) \
+        == sorted(map(tuple, anti.select(*existing.columns).collect()),
+                  key=repr)
+    assert got.filter(f"{N.RECORD_KEY_COL} IS NULL").count() == 1
+    assert got.count() == existing.count() - len(set(drop) - {"absent"})
+
+
+def test_held_upsert_of_odd_keys_matches_over_cap_path(spark, tmp_path,
+                                                       monkeypatch):
+    def run(path):
+        t = NativeTable(spark, path, record_keys=["k"], precombine="s")
+        t.bulk_insert(spark.createDataFrame(
+            [(k, 1, 1) for k in ODD_KEYS + ["other"]], "k string, v int, s int"))
+        batch = spark.createDataFrame(
+            [(k, 2, 2) for k in ODD_KEYS[::2] + ["fresh'"]],
+            "k string, v int, s int")
+        held = local_batch(batch, max_rows=4)
+        t.upsert(held[0] if held else batch)
+        return sorted(map(tuple, t.read_snapshot().select("k", "v").collect()))
+
+    held = run(tmp_path / "held")
+    monkeypatch.setattr(N, "LOCAL_BATCH_MAX_BYTES", 0)
+    assert run(tmp_path / "cap") == held
+    assert dict(held)["it's"] == 2 and dict(held)["back\\slash"] == 1
+
+
+def test_view_refresh_after_small_upsert_runs_few_jobs(spark, tmp_path,
+                                                       job_ids):
+    """A ``MaterializedAgg`` refresh after a 10-row upsert: change feed,
+    delta, held batch and the state merge, at most 10 Spark jobs."""
+    base = _date_table(spark, tmp_path / "base")
+    view = MaterializedAgg(spark, base, tmp_path / "view", ["dt"], "v")
+    view.refresh()
+    for lo in (0, 10):
+        base.upsert(_held_rows(spark, lo, lo + 10))
+        before = job_ids()
+        view.refresh()
+        assert len(job_ids() - before) <= 10
+    want = {r.dt: (r.n, r.total) for r in base.read_snapshot()
+            .groupBy("dt").agg(F.count("*").alias("n"),
+                               F.sum("v").alias("total")).collect()}
+    got = {r.dt: (r.cnt, int(r.total)) for r in view.read().collect()}
+    assert got == want
 
 
 def test_view_refresh_merges_held_batch(spark, tmp_path, monkeypatch):

@@ -161,3 +161,57 @@ def test_footer_stats_do_not_depend_on_codec(spark, tmp_path, monkeypatch):
         stats[codec] = (sorted(map(repr, c.key_stats.values())),
                         sorted(map(repr, c.col_stats.values())))
     assert stats["snappy"] == stats["zstd"]
+
+
+def _store_codecs(root: Path) -> set[str]:
+    return _codecs(root, [p.relative_to(root) for p in root.rglob("*.parquet")])
+
+
+def test_operator_stores_are_zstd(spark, tmp_path):
+    """The dedup and vector index stores and the enrichment sink write
+    through the same writer as the table files, build and refresh."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from glue_hudi_spark.operators.dedup_index import DedupIndex
+    from glue_hudi_spark.operators.vector_index import VectorIndex
+    from glue_hudi_spark.streaming.enrich import EnrichStream
+
+    docs = NativeTable(spark, tmp_path / "docs", record_keys=["dk"],
+                       precombine="doc_id")
+    docs.bulk_insert(spark.range(20).selectExpr(
+        "format_string('%05d', id) AS dk", "id AS doc_id",
+        "concat('words of document ', id % 5, ' tail ', id) AS text"))
+    dix = DedupIndex(docs, id_col="doc_id")
+    dix.build()
+    docs.upsert(spark.createDataFrame(
+        [("00099", 99, "a brand new document with fresh tokens")],
+        "dk string, doc_id long, text string"))
+    assert dix.refresh()["refreshed"]
+    assert _store_codecs(dix.exact_store) == {"ZSTD"}
+    assert _store_codecs(dix.bands_store) == {"ZSTD"}
+
+    vecs = NativeTable(spark, tmp_path / "vecs", record_keys=["vk"],
+                       precombine="vec_id")
+    vecs.bulk_insert(spark.range(30).select(
+        F.format_string("%06d", "id").alias("vk"), F.col("id").alias("vec_id"),
+        F.array(*[((F.col("id") * 7 + j * 13) % 19 - 9).cast("double")
+                  for j in range(4)]).alias("embedding")))
+    vix = VectorIndex(vecs)
+    vix.build(id_col="vec_id", n_centroids=4)
+    vecs.delete(spark.createDataFrame([("000003",)], "vk string"))
+    assert vix.refresh()["refreshed"]
+    assert _store_codecs(vix.postings) == {"ZSTD"}
+
+    dim = spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 1), dt.datetime(2100, 1, 1), "gold")],
+        "user_id int, valid_from timestamp, valid_to timestamp, tier string")
+    stream = EnrichStream(
+        spark, "/dev/null", tmp_path / "out", tmp_path / "ckpt",
+        dim_loader=lambda: dim, key_cols=["user_id"], event_ts="ts",
+        attrs=["tier"], schema="event_id int, user_id int, ts timestamp")
+    stream._enrich_batch(spark.createDataFrame(
+        [(1, 1, dt.datetime(2024, 2, 15))],
+        "event_id int, user_id int, ts timestamp"), 0)
+    assert _store_codecs(tmp_path / "out") == {"ZSTD"}
