@@ -12,18 +12,27 @@ full DDL/DML surface: Spark's own Python DataSource API is read-only
 (``sources/datasource.py`` raises on ``writer()`` by API design), so a
 SQL-only user previously had no write path at all.
 
-DML, ALTER TABLE, TRUNCATE and reads are parsed by Spark's own parser
-(``sqlParser().parsePlan``; no Spark job) and dispatched on the node it
-returns. WHERE predicates, SET right-hand sides, MERGE clause conditions
-and source queries reach ``F.expr`` / ``spark.sql`` as their exact
-source text, sliced by the nodes' spans, so the full Spark SQL
-expression language works everywhere an expression can appear and a
-string literal is never read as syntax. The relations a read names
-(CTE bodies and subqueries included) decide time travel, view
-replanning and DROP guards. The engine's own grammar (CREATE, MV and
-index DDL, RESTORE, COPY, OPTIMIZE, VACUUM, SHOW/DESCRIBE, the TVFs) is
-still matched by anchored regexes. File prune bounds are read back from
-Catalyst's optimized plan (``NativeTable.scan_bounds`` for reads,
+Every statement of Spark's grammar — reads, DML, ALTER TABLE, TRUNCATE,
+CREATE TABLE (and CTAS), CREATE [MATERIALIZED] VIEW, EXPLAIN, the SHOW
+and DESCRIBE forms, ANALYZE, [UN]CACHE TABLE and DROP TABLE|VIEW — is
+parsed by Spark's own parser (``sqlParser().parsePlan``; no Spark job)
+and dispatched on the node it returns. Column types, DEFAULTs,
+PARTITIONED BY, LOCATION and TBLPROPERTIES come from the parsed CREATE;
+a materialized view's shape is read from its parsed query. WHERE
+predicates, SET right-hand sides, MERGE clause conditions and source
+queries reach ``F.expr`` / ``spark.sql`` as their exact source text,
+sliced by the nodes' spans, so the full Spark SQL expression language
+works everywhere an expression can appear and a string literal is never
+read as syntax. The relations a read names (CTE bodies and subqueries
+included) decide time travel, view replanning and DROP guards; its
+table-valued function nodes bind the engine's TVFs from their literal
+arguments. Only the engine's own grammar, which Spark rejects, is
+matched by anchored regexes: index DDL and SHOW INDEXES, REFRESH / DROP
+/ SHOW MATERIALIZED VIEW(S), SHALLOW CLONE, DESCRIBE HISTORY|DETAIL
+(Spark reads those as a column description), RESTORE, COPY INTO,
+OPTIMIZE, VACUUM and the transaction statements; ``;`` splits the text
+into statements. File prune bounds are read back from Catalyst's
+optimized plan (``NativeTable.scan_bounds`` for reads,
 ``NativeTable._cond_bounds`` for WHERE texts), never from the text.
 Scale shape: each form lands on the same pruned/indexed NativeTable
 paths the Python API uses (a SQL ``DELETE ... WHERE`` is
@@ -87,9 +96,9 @@ def _stable_token(text: str) -> str:
     return hashlib.md5(text.encode()).hexdigest()[:8]
 
 
-def _split_top(text: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` at paren/quote depth 0 (statements, column lists,
-    props). A ``--`` comment outside quotes is dropped to the end of its
+def _split_top(text: str, sep: str = ";") -> list[str]:
+    """Split on ``sep`` at paren/quote depth 0 (the statements of a
+    script). A ``--`` comment outside quotes is dropped to the end of its
     line; inside a literal or identifier it is text."""
     parts, depth, cur, i, q = [], 0, [], 0, None
     while i < len(text):
@@ -130,17 +139,6 @@ def _split_top(text: str, sep: str = ",") -> list[str]:
     if tail:
         parts.append(tail)
     return parts
-
-
-def _parse_props(text: str) -> dict[str, str]:
-    """TBLPROPERTIES / OPTIONS body: 'k'='v' [, ...] (quotes optional)."""
-    props = {}
-    for item in _split_top(text):
-        if not item:
-            continue
-        k, _, v = item.partition("=")
-        props[_unq(k.strip().strip("'\""))] = v.strip().strip("'\"")
-    return props
 
 
 # ------------------------------------------- Spark's parsed plan (py4j)
@@ -203,15 +201,19 @@ def _rewrite(s: str, expr, rename=lambda parts: None) -> str:
                    [x for x in subs if x[2] is not None])
 
 
+_TVF = "UnresolvedTableValuedFunction"
+_READS = ("SELECT", "WITH", "VALUES", "TABLE")  # head keywords of a query
+
+
 def _relations(plan) -> list:
-    """The ``UnresolvedRelation`` and ``RelationTimeTravel`` nodes of a
-    parsed query: under its children, its subquery expressions (``IN``,
-    ``EXISTS``, scalar) and its CTE bodies, which only
-    ``UnresolvedWith.cteRelations`` reaches."""
+    """The ``UnresolvedRelation``, ``RelationTimeTravel`` and table-valued
+    function nodes of a parsed query: under its children, its subquery
+    expressions (``IN``, ``EXISTS``, scalar) and its CTE bodies, which
+    only ``UnresolvedWith.cteRelations`` reaches."""
     out, stack = [], [plan]
     while stack:
         node = stack.pop()
-        if _kind(node) in ("UnresolvedRelation", "RelationTimeTravel"):
+        if _kind(node) in ("UnresolvedRelation", "RelationTimeTravel", _TVF):
             out.append(node)
             continue
         stack += _seq(node.children()) + _seq(node.subqueries())
@@ -221,16 +223,75 @@ def _relations(plan) -> list:
 
 
 def _rel_name(node) -> str:
-    """The table a relation, alias or time-travel node names, dotted."""
-    while _kind(node) not in ("UnresolvedRelation", "UnresolvedTable"):
+    """The table a relation, alias, time-travel node or statement target
+    names, dotted."""
+    while _kind(node) not in ("UnresolvedRelation", "UnresolvedTable",
+                              "UnresolvedTableOrView",
+                              "UnresolvedIdentifier"):
         node = (node.relation() if _kind(node) == "RelationTimeTravel"
                 else node.children().apply(0))
-    return ".".join(_seq(node.multipartIdentifier()))
+    return ".".join(_seq(node.nameParts()
+                         if _kind(node) == "UnresolvedIdentifier"
+                         else node.multipartIdentifier()))
 
 
 def _refs(plan) -> set[str]:
     """Lower-cased names of all a parsed query reads (CTE names too)."""
-    return {_rel_name(r).lower() for r in _relations(plan)}
+    return {_rel_name(r).lower() for r in _relations(plan)
+            if _kind(r) != _TVF}
+
+
+def _query_start(s: str, plan) -> int:
+    """Where the text of the parsed query ``plan`` starts in ``s``: at its
+    leftmost node (a query root can span only its last clause, ORDER BY
+    or LIMIT), widened over the parentheses opened before it."""
+    a, stack = len(s), [plan]
+    while stack:
+        node = stack.pop()
+        stack += _seq(node.children())
+        if node.origin().startIndex().isDefined():
+            a = min(a, node.origin().startIndex().get())
+    while s[:a].rstrip().endswith("("):
+        a = len(s[:a].rstrip()) - 1
+    return a
+
+
+def _props(m) -> dict[str, str]:
+    """A parsed ``TBLPROPERTIES`` map (Scala) as a dict."""
+    it, out = m.iterator(), {}
+    while it.hasNext():
+        kv = it.next()
+        out[kv._1()] = kv._2()
+    return out
+
+
+def _literal(e):
+    """The Python value of a parsed string or number literal (a decimal
+    one as float)."""
+    tn = e.dataType().typeName() if _kind(e) == "Literal" else ""
+    if tn == "string" or tn.startswith("decimal"):
+        v = e.value().toString()
+        return v if tn == "string" else float(v)
+    if tn in ("integer", "long", "double"):
+        return e.value()
+    raise ValueError(f"ghs.sql: table-valued function arguments are "
+                     f"string or number literals (got {e.toString()!r})")
+
+
+def _call(e) -> tuple[str, list] | None:
+    """``(lower-cased name, arguments)`` of a parsed plain function call
+    (no DISTINCT, no FILTER), else None."""
+    if _kind(e) != "UnresolvedFunction" or e.isDistinct() or \
+            e.filter().isDefined():
+        return None
+    return ".".join(_seq(e.nameParts())).lower(), _seq(e.arguments())
+
+
+def _column(e) -> str | None:
+    """The name of a one-part column reference, else None."""
+    if _kind(e) == "UnresolvedAttribute" and e.nameParts().size() == 1:
+        return e.nameParts().head()
+    return None
 
 
 class GhsSql:
@@ -336,7 +397,7 @@ class GhsSql:
         from glue_hudi_spark.storage.commits import WRITER_TAG
 
         out = None
-        for stmt in _split_top(text, ";"):
+        for stmt in _split_top(text):
             if stmt.strip():
                 token = WRITER_TAG.set(self._writer_tag)
                 try:
@@ -468,22 +529,62 @@ class GhsSql:
                 "first; COPY is itself idempotent)")
         handler = {
             "COMMIT": self._commit_txn, "SAVEPOINT": self._savepoint,
-            "RELEASE": self._release_savepoint,
-            "CREATE": self._create, "REFRESH": self._refresh_mv,
-            "DROP": self._drop, "SHOW": self._show,
-            "DESCRIBE": self._describe, "DESC": self._describe,
-            "OPTIMIZE": self._optimize, "ANALYZE": self._analyze,
-            "CACHE": self._cache_table, "UNCACHE": self._uncache_table,
-            "VACUUM": self._vacuum, "EXPLAIN": self._explain,
+            "RELEASE": self._release_savepoint, "REFRESH": self._refresh_mv,
+            "OPTIMIZE": self._optimize, "VACUUM": self._vacuum,
             "COPY": self._copy_into, "RESTORE": self._restore,
-            **dict.fromkeys(("INSERT", "UPDATE", "DELETE", "MERGE",
-                             "ALTER", "TRUNCATE"), self._dml),
-            **dict.fromkeys(("SELECT", "WITH", "VALUES", "TABLE"),
-                            self._read),
+            **dict.fromkeys(_READS, self._read),
+            **dict.fromkeys((
+                "INSERT", "UPDATE", "DELETE", "MERGE", "ALTER", "TRUNCATE",
+                "CREATE", "DROP", "SHOW", "DESCRIBE", "DESC", "EXPLAIN",
+                "ANALYZE", "CACHE", "UNCACHE"), self._parsed),
         }.get(head)
         if handler is not None:
             return handler(s)
         raise ValueError(f"ghs.sql: unsupported statement: {s[:80]!r}")
+
+    def _parsed(self, s: str) -> DataFrame | None:
+        """A statement of Spark's grammar, dispatched on the node Spark's
+        parser returns. The engine's own forms that share its head
+        keyword match first: Spark rejects them, or reads ``DESCRIBE
+        HISTORY|DETAIL t`` as a description of column ``t``."""
+        for rx, fn in ((self._CREATE_INDEX, self._create_index),
+                       (self._CREATE_CLONE, self._create_clone),
+                       (self._DROP_INDEX, self._drop_index),
+                       (self._DROP_MVIEW, self._drop_mview),
+                       (self._SHOW_INDEXES, self._show_indexes),
+                       (self._DESCRIBE_LOG, self._describe_log)):
+            m = rx.match(s)
+            if m:
+                return fn(m)
+        if s.upper().split() == ["SHOW", "MATERIALIZED", "VIEWS"]:
+            return self._show_mviews()
+        node = self._parse(s)
+        handler = {
+            **dict.fromkeys((
+                "InsertIntoStatement", "UpdateTable", "DeleteFromTable",
+                "MergeIntoTable", "AddColumns", "RenameColumn",
+                "DropColumns", "AddCheckConstraint", "TruncateTable"),
+                self._dml),
+            **dict.fromkeys(("CreateTable", "CreateTableAsSelect"),
+                            self._create_table),
+            "CreateView": self._create_view,
+            "CreateMaterializedViewAsSelect": self._create_mview,
+            "ExplainCommand": self._explain,
+            **dict.fromkeys((
+                "ShowCreateTable", "ShowPartitions", "ShowTableProperties",
+                "ShowTables", "ShowViews"), self._show),
+            "DescribeRelation": self._describe,
+            **dict.fromkeys(("AnalyzeTable", "AnalyzeColumn"),
+                            self._analyze),
+            "CacheTable": self._cache_table,
+            "UncacheTable": self._uncache_table,
+            **dict.fromkeys(("DropTable", "DropView"), self._drop),
+        }.get(_kind(node))
+        if handler is None:
+            raise ValueError(
+                self._ALTERS if s[:5].upper() == "ALTER"
+                else f"ghs.sql: unsupported statement: {s[:80]!r}")
+        return handler(s, node)
 
     # ------------------------------------------------------------- helpers
 
@@ -576,10 +677,16 @@ class GhsSql:
         Time travel (Delta/Iceberg's ``t VERSION|TIMESTAMP AS OF x``) of
         a registered table binds a temp view over that snapshot (an
         O(manifest) lookup; the scan stays lazy/pruned), which replaces
-        the text from the table's name to the clause's end; then the
-        TVFs rewrite."""
+        the text from the table's name to the clause's end; an engine
+        TVF call binds its view (``_bind_tvf``), which replaces the
+        call."""
         subs, names = [], set()
         for rel in _relations(plan):
+            if _kind(rel) == _TVF:
+                fn = ".".join(_seq(rel.name())).lower()
+                if fn in self._TVFS:
+                    subs.append(self._bind_tvf(s, rel, fn))
+                continue  # else one of Spark's own TVFs
             name = _rel_name(rel)
             t = self.tables.get(name)
             if _kind(rel) == "UnresolvedRelation":
@@ -597,70 +704,99 @@ class GhsSql:
                              t.read_snapshot(as_of_timestamp=ts))
             df.createOrReplaceTempView(alias)
             subs.append((_span(rel.relation())[0], _span(rel)[1], alias))
-        return self._rewrite_tvfs(_splice(s, a, b or len(s), subs)), names
+        return _splice(s, a, b or len(s), subs), names
 
-    # Delta's CDC read TVF: ``table_changes('t', from [, to])`` in any
-    # read (or DML source) binds a temp view over the table's
-    # PER-VERSION change feed — Delta-CDF rows (_change_type ∈ insert/
-    # update_preimage/update_postimage/delete) with _commit_version and
-    # _commit_timestamp attribution, so a windowed/sessionized SQL read
-    # can rank a key's changes by commit (r13: was the endpoint-diff
-    # change_feed, which collapses an update-then-delete key and
-    # carries no version column — Delta's TVF does not). Bounds: FROM
-    # commit exclusive, TO commit inclusive (omitted TO = head); either
-    # bound may be a quoted ISO-8601 timestamp (Delta's timestamp form),
-    # resolved to the newest commit published at or before it.
-    # Planning is O(window versions) pruned manifest diffs; the corpus
-    # is never rescanned.
-    _TABLE_CHANGES = re.compile(
-        r"\btable_changes\s*\(\s*'(?P<name>[^']+)'\s*,"
-        r"\s*(?:(?P<a>\d+)|'(?P<ats>[^']+)')\s*"
-        r"(?:,\s*(?:(?P<b>\d+)|'(?P<bts>[^']+)')\s*)?\)", re.IGNORECASE)
+    # The engine's read TVFs, each bound as a deterministic temp view
+    # plain SQL composes over (WHERE/JOIN), from its literal arguments:
+    # name -> parameters as (name, literal type[, default]). An optional
+    # parameter the next argument's type does not fit takes its default,
+    # so ``dedup_probe('t', 'b', 'allow_stale')`` skips the threshold.
+    _TVFS = {
+        "table_changes": (("name", str), ("start", (int, str)),
+                          ("end", (int, str), None)),
+        "time_bucket_gapfill": (("src", str), ("unit", str), ("ts", str),
+                                ("keys", str), ("aggs", str),
+                                ("opts", str, "")),
+        "lttb": (("src", str), ("ts", str), ("val", str), ("n", int),
+                 ("keys", str, ""), ("pack", int, None)),
+        "dedup_probe": (("tbl", str), ("batch", str),
+                        ("thr", (int, float), 0.5), ("opts", str, "")),
+        "vector_search": (("tbl", str), ("q", str), ("k", int, 10),
+                          ("nprobe", int, 1), ("col", str, None)),
+    }
 
-    def _rewrite_table_changes(self, s: str) -> str:
-        def ts_bound(t, name: str, ts: str, which: str) -> int:
-            # Delta's timestamp form: a bound string resolves to the
-            # newest commit published AT OR BEFORE it; FROM stays
-            # exclusive of that commit (changes strictly after the
-            # instant), TO inclusive — the same alignment as the id form
-            c = t.timeline.at_timestamp(ts)
+    def _bind_tvf(self, s: str, node, fn: str) -> tuple[int, int, str]:
+        """Bind the engine TVF call ``node`` (of ``fn``): the call's
+        ``(start, stop)`` in ``s`` — its node spans a trailing alias too,
+        so the call ends at the ``)`` after its last argument — and the
+        name of the view bound for it."""
+        args, sig = _seq(node.functionArgs()), self._TVFS[fn]
+        given = [_literal(x) for x in args]
+        vals, kw = list(given), {}
+        for name, typ, *default in sig:
+            if vals and isinstance(vals[0], typ):
+                kw[name] = vals.pop(0)
+            elif default:
+                kw[name] = default[0]
+        if vals or len(kw) < len(sig):
+            params = ", ".join(p[0] + "?" * (len(p) > 2) for p in sig)
+            raise ValueError(f"ghs.sql: {fn}: cannot bind arguments "
+                             f"{given} to {fn}({params})")
+        a = _span(node)[0]
+        b = s.index(")", _span(args[-1])[1]) + 1
+        return a, b, {
+            "table_changes": self._table_changes,
+            "time_bucket_gapfill": self._gapfill, "lttb": self._lttb,
+            "dedup_probe": self._dedup_probe,
+            "vector_search": self._vector_search,
+        }[fn](s[a:b], **kw)
+
+    def _table_changes(self, text: str, name: str, start, end) -> str:
+        """Delta's CDC read TVF ``table_changes('t', from [, to])``: a
+        view over the table's PER-VERSION change feed — Delta-CDF rows
+        (_change_type ∈ insert/update_preimage/update_postimage/delete)
+        with _commit_version and _commit_timestamp attribution, so a
+        windowed/sessionized SQL read can rank a key's changes by commit.
+        Bounds: FROM commit exclusive, TO commit inclusive (omitted TO =
+        head); either bound may be an ISO-8601 timestamp string (Delta's
+        timestamp form), resolved to the newest commit published at or
+        before it. Planning is O(window versions) pruned manifest diffs;
+        the corpus is never rescanned."""
+        t = self.tables.get(name)
+        if t is None:
+            raise ValueError(
+                f"ghs.sql: table_changes: unknown table {name!r}")
+
+        def commit(bound, which: str) -> int:
+            # a timestamp bound keeps the id form's alignment: FROM stays
+            # exclusive of the commit (changes strictly after the
+            # instant), TO inclusive
+            if isinstance(bound, int):
+                return bound
+            c = t.timeline.at_timestamp(bound)
             if c is None:
                 raise ValueError(
                     f"ghs.sql: table_changes: no retained commit of "
-                    f"{name!r} at or before {ts!r} ({which} bound)")
+                    f"{name!r} at or before {bound!r} ({which} bound)")
             return c.commit_id
 
-        def sub(m: "re.Match[str]") -> str:
-            t = self.tables.get(m.group("name"))
-            if t is None:
-                raise ValueError(
-                    f"ghs.sql: table_changes: unknown table "
-                    f"{m.group('name')!r}")
-            if m.group("ats") is not None:
-                a = ts_bound(t, m.group("name"), m.group("ats"), "FROM")
-            else:
-                a = int(m.group("a"))
-            head = t.timeline.latest()
-            if m.group("bts") is not None:
-                b = ts_bound(t, m.group("name"), m.group("bts"), "TO")
-            elif m.group("b"):
-                b = int(m.group("b"))
-            elif head is None:
-                raise ValueError(
-                    f"ghs.sql: table_changes: {m.group('name')!r} has "
-                    "no commits yet")
-            else:
-                b = head.commit_id
-            alias = f"{m.group('name')}__ch{a}_{b}"
-            t.table_changes(a, b).createOrReplaceTempView(alias)
-            return alias
-        return self._TABLE_CHANGES.sub(sub, s)
+        a, head = commit(start, "FROM"), t.timeline.latest()
+        if end is not None:
+            b = commit(end, "TO")
+        elif head is None:
+            raise ValueError(
+                f"ghs.sql: table_changes: {name!r} has no commits yet")
+        else:
+            b = head.commit_id
+        alias = f"{name}__ch{a}_{b}"
+        t.table_changes(a, b).createOrReplaceTempView(alias)
+        return alias
 
     # TimescaleDB-shaped time-series TVFs (SURVEY §2.5 extension; the
     # reference's one SQL entry point, processData.py:317-327, set the
     # precedent that SQL is a first-class face of this engine). Both
-    # rewrite to the existing operators in operators/timeseries.py —
-    # the SQL surface adds no second implementation:
+    # bind the existing operators in operators/timeseries.py — the SQL
+    # surface adds no second implementation:
     #
     #   time_bucket_gapfill('src', 'day', 'ts', 'k1,k2',
     #       'sum(value) AS day_value[; avg(x) AS m]'
@@ -674,16 +810,6 @@ class GhsSql:
     # 'src' is a registered table (read at head) or any bound view.
     # Options default to the operator defaults (locf on, interpolate
     # off, uncapped grid; lttb auto-sizes its pack buckets).
-    _TS_GAPFILL = re.compile(
-        r"\btime_bucket_gapfill\s*\(\s*'(?P<src>[^']+)'\s*,"
-        r"\s*'(?P<unit>[^']+)'\s*,\s*'(?P<ts>[^']+)'\s*,"
-        r"\s*'(?P<keys>[^']*)'\s*,\s*'(?P<aggs>[^']+)'"
-        r"(?:\s*,\s*'(?P<opts>[^']*)')?\s*\)", re.IGNORECASE)
-    _TS_LTTB = re.compile(
-        r"\blttb\s*\(\s*'(?P<src>[^']+)'\s*,\s*'(?P<ts>[^']+)'\s*,"
-        r"\s*'(?P<val>[^']+)'\s*,\s*(?P<n>\d+)"
-        r"(?:\s*,\s*'(?P<keys>[^']*)'(?:\s*,\s*(?P<pack>\d+))?)?\s*\)",
-        re.IGNORECASE)
     _TS_AGG_ITEM = re.compile(
         rf"^(?P<expr>.+?)\s+AS\s+(?P<out>{_IDENT})\s*$",
         re.IGNORECASE | re.DOTALL)
@@ -698,73 +824,57 @@ class GhsSql:
             raise ValueError(
                 f"ghs.sql: {who}: unknown table or view {name!r}")
 
-    def _rewrite_timeseries(self, s: str) -> str:
-        from glue_hudi_spark.operators.timeseries import (
-            lttb_downsample, resample_gapfill)
+    def _gapfill(self, text: str, src: str, unit: str, ts: str, keys: str,
+                 aggs: str, opts: str) -> str:
+        from glue_hudi_spark.operators.timeseries import resample_gapfill
 
-        def gapfill(m: "re.Match[str]") -> str:
-            keys = [k.strip() for k in m.group("keys").split(",")
-                    if k.strip()]
-            values = {}
-            for item in m.group("aggs").split(";"):
-                am = self._TS_AGG_ITEM.match(item.strip())
-                if not am:
-                    raise ValueError(
-                        "ghs.sql: time_bucket_gapfill: each aggregate "
-                        f"must be '<expr> AS <name>' (got {item!r}); "
-                        "separate several with ';'")
-                values[_unq(am.group("out"))] = F.expr(am.group("expr"))
-            locf, interp, max_buckets = True, False, None
-            for opt in (m.group("opts") or "").split(","):
-                opt = opt.strip().lower()
-                if not opt:
-                    continue
-                if opt == "locf":
-                    locf = True
-                elif opt == "nolocf":
-                    locf = False
-                elif opt == "interpolate":
-                    interp = True
-                elif opt.startswith("max_buckets="):
-                    max_buckets = int(opt.split("=", 1)[1])
-                else:
-                    raise ValueError(
-                        "ghs.sql: time_bucket_gapfill: unknown option "
-                        f"{opt!r} (locf | nolocf | interpolate | "
-                        "max_buckets=N)")
-            out = resample_gapfill(
-                self._ts_source("time_bucket_gapfill", m.group("src")),
-                keys=keys, ts_col=m.group("ts"), values=values,
-                unit=m.group("unit").lower(), locf=locf,
-                interpolate=interp, max_buckets=max_buckets)
-            alias = (f"{m.group('src')}__gf_"
-                     f"{_stable_token(m.group(0))}")
-            out.createOrReplaceTempView(alias)
-            return alias
+        values = {}
+        for item in aggs.split(";"):
+            am = self._TS_AGG_ITEM.match(item.strip())
+            if not am:
+                raise ValueError(
+                    "ghs.sql: time_bucket_gapfill: each aggregate "
+                    f"must be '<expr> AS <name>' (got {item!r}); "
+                    "separate several with ';'")
+            values[_unq(am.group("out"))] = F.expr(am.group("expr"))
+        locf, interp, max_buckets = True, False, None
+        for opt in opts.split(","):
+            opt = opt.strip().lower()
+            if not opt:
+                continue
+            if opt == "locf":
+                locf = True
+            elif opt == "nolocf":
+                locf = False
+            elif opt == "interpolate":
+                interp = True
+            elif opt.startswith("max_buckets="):
+                max_buckets = int(opt.split("=", 1)[1])
+            else:
+                raise ValueError(
+                    "ghs.sql: time_bucket_gapfill: unknown option "
+                    f"{opt!r} (locf | nolocf | interpolate | "
+                    "max_buckets=N)")
+        out = resample_gapfill(
+            self._ts_source("time_bucket_gapfill", src),
+            keys=[k.strip() for k in keys.split(",") if k.strip()],
+            ts_col=ts, values=values, unit=unit.lower(), locf=locf,
+            interpolate=interp, max_buckets=max_buckets)
+        alias = f"{src}__gf_{_stable_token(text)}"
+        out.createOrReplaceTempView(alias)
+        return alias
 
-        def lttb(m: "re.Match[str]") -> str:
-            keys = [k.strip() for k in (m.group("keys") or "").split(",")
-                    if k.strip()]
-            out = lttb_downsample(
-                self._ts_source("lttb", m.group("src")),
-                keys=keys, ts_col=m.group("ts"),
-                value_col=m.group("val"), n_out=int(m.group("n")),
-                pack_buckets=(int(m.group("pack"))
-                              if m.group("pack") else None))
-            alias = f"{m.group('src')}__lttb_{_stable_token(m.group(0))}"
-            out.createOrReplaceTempView(alias)
-            return alias
+    def _lttb(self, text: str, src: str, ts: str, val: str, n: int,
+              keys: str, pack: int | None) -> str:
+        from glue_hudi_spark.operators.timeseries import lttb_downsample
 
-        s = self._TS_GAPFILL.sub(gapfill, s)
-        return self._TS_LTTB.sub(lttb, s)
-
-    def _rewrite_tvfs(self, s: str) -> str:
-        """All read-side TVF rewrites, in one place: change-feed reads
-        first (a time-series TVF may not wrap one — its source must be
-        a name), then the time-series functions, then the secondary-
-        index probes."""
-        return self._rewrite_index_tvfs(
-            self._rewrite_timeseries(self._rewrite_table_changes(s)))
+        out = lttb_downsample(
+            self._ts_source("lttb", src),
+            keys=[k.strip() for k in keys.split(",") if k.strip()],
+            ts_col=ts, value_col=val, n_out=n, pack_buckets=pack)
+        alias = f"{src}__lttb_{_stable_token(text)}"
+        out.createOrReplaceTempView(alias)
+        return alias
 
     # ------------------------------------------------- secondary indexes
     #
@@ -974,8 +1084,8 @@ class GhsSql:
         shutil.rmtree(root, ignore_errors=True)
         return None
 
-    def _show_indexes(self, name: str) -> DataFrame:
-        t = self._table(name)
+    def _show_indexes(self, m: "re.Match[str]") -> DataFrame:
+        t = self._table(m.group("name"))
         head = t.timeline.latest()
         rows = []
         ix = self._dedup_index(t)
@@ -1008,75 +1118,45 @@ class GhsSql:
             "kind string, column string, options string, "
             "indexed_commit string, stale boolean")
 
-    _TVF_DEDUP_PROBE = re.compile(
-        r"\bdedup_probe\s*\(\s*'(?P<tbl>[^']+)'\s*,"
-        r"\s*'(?P<batch>[^']+)'"
-        r"(?:\s*,\s*(?P<thr>\d*\.?\d+))?"
-        r"(?:\s*,\s*'(?P<opts>[^']*)')?\s*\)", re.IGNORECASE)
-    _TVF_VECTOR_SEARCH = re.compile(
-        r"\bvector_search\s*\(\s*'(?P<tbl>[^']+)'\s*,"
-        r"\s*'(?P<q>[^']+)'"
-        r"(?:\s*,\s*(?P<k>\d+))?(?:\s*,\s*(?P<np>\d+))?"
-        r"(?:\s*,\s*'(?P<col>[^']*)')?\s*\)", re.IGNORECASE)
+    def _dedup_probe(self, text: str, tbl: str, batch: str, thr: float,
+                     opts: str) -> str:
+        """``dedup_probe('t', 'batch'[, threshold][, 'allow_stale'])``:
+        the batch rows that are NOVEL against t's dedup index."""
+        ix = self._dedup_index(self._table(tbl))
+        if ix is None:
+            raise ValueError(
+                f"ghs.sql: dedup_probe: table {_unq(tbl)!r} has no DEDUP "
+                "INDEX — CREATE DEDUP INDEX first")
+        opts = [o.strip().lower() for o in opts.split(",") if o.strip()]
+        bad = [o for o in opts if o != "allow_stale"]
+        if bad:
+            raise ValueError(
+                f"ghs.sql: dedup_probe: unknown option {bad[0]!r} "
+                "(allow_stale)")
+        out = ix.probe(self._ts_source("dedup_probe", batch),
+                       verify_threshold=float(thr),
+                       allow_stale="allow_stale" in opts)
+        alias = f"{tbl}__dprobe_{_stable_token(text)}"
+        out.createOrReplaceTempView(alias)
+        return alias
 
-    def _rewrite_index_tvfs(self, s: str) -> str:
-        """Read-side TVFs over the persisted indexes:
-        ``dedup_probe('t', 'batch'[, threshold[, 'allow_stale']])`` —
-        the batch rows that are NOVEL against t's dedup index; and
-        ``vector_search('t', 'queries'[, k[, nprobe[, 'vec_col']]])``
-        — (query_id, neighbor_id, rank, sim) top-k off t's IVF index,
-        reading only the probed cell partitions. Both bind
-        deterministic temp views plain SQL composes over, exactly like
-        the time-series TVFs."""
-
-        def probe(m: "re.Match[str]") -> str:
-            t = self._table(m.group("tbl"))
-            ix = self._dedup_index(t)
-            if ix is None:
-                raise ValueError(
-                    f"ghs.sql: dedup_probe: table "
-                    f"{_unq(m.group('tbl'))!r} has no DEDUP INDEX — "
-                    "CREATE DEDUP INDEX first")
-            opts = [o.strip().lower()
-                    for o in (m.group("opts") or "").split(",")
-                    if o.strip()]
-            bad = [o for o in opts if o != "allow_stale"]
-            if bad:
-                raise ValueError(
-                    f"ghs.sql: dedup_probe: unknown option {bad[0]!r} "
-                    "(allow_stale)")
-            out = ix.probe(
-                self._ts_source("dedup_probe", m.group("batch")),
-                verify_threshold=(float(m.group("thr"))
-                                  if m.group("thr") else 0.5),
-                allow_stale="allow_stale" in opts)
-            alias = (f"{m.group('tbl')}__dprobe_"
-                     f"{_stable_token(m.group(0))}")
-            out.createOrReplaceTempView(alias)
-            return alias
-
-        def search(m: "re.Match[str]") -> str:
-            t = self._table(m.group("tbl"))
-            ix = self._one_vector_index(
-                t, m.group("col"), "vector_search")
-            qdf = self._ts_source("vector_search", m.group("q"))
-            others = [c for c in qdf.columns if c != ix.vec_col]
-            if ix.vec_col not in qdf.columns or len(others) != 1:
-                raise ValueError(
-                    "ghs.sql: vector_search: the query source must "
-                    f"have exactly two columns — an id and "
-                    f"{ix.vec_col!r} (got {qdf.columns})")
-            out = ix.query(
-                qdf, id_col=others[0],
-                k=int(m.group("k")) if m.group("k") else 10,
-                nprobe=int(m.group("np")) if m.group("np") else 1)
-            alias = (f"{m.group('tbl')}__vsearch_"
-                     f"{_stable_token(m.group(0))}")
-            out.createOrReplaceTempView(alias)
-            return alias
-
-        s = self._TVF_DEDUP_PROBE.sub(probe, s)
-        return self._TVF_VECTOR_SEARCH.sub(search, s)
+    def _vector_search(self, text: str, tbl: str, q: str, k: int,
+                       nprobe: int, col: str | None) -> str:
+        """``vector_search('t', 'queries'[, k[, nprobe]][, 'vec_col'])``:
+        (query_id, neighbor_id, rank, sim) top-k off t's IVF index,
+        reading only the probed cell partitions."""
+        ix = self._one_vector_index(self._table(tbl), col, "vector_search")
+        qdf = self._ts_source("vector_search", q)
+        others = [c for c in qdf.columns if c != ix.vec_col]
+        if ix.vec_col not in qdf.columns or len(others) != 1:
+            raise ValueError(
+                "ghs.sql: vector_search: the query source must "
+                f"have exactly two columns — an id and "
+                f"{ix.vec_col!r} (got {qdf.columns})")
+        out = ix.query(qdf, id_col=others[0], k=k, nprobe=nprobe)
+        alias = f"{tbl}__vsearch_{_stable_token(text)}"
+        out.createOrReplaceTempView(alias)
+        return alias
 
     def _select_prune(self, q: str, names: set) -> tuple[DataFrame, dict]:
         """``(spark.sql(q), {table: bounds})``: each registered table
@@ -1164,21 +1244,17 @@ class GhsSql:
             alias = item.name() if _kind(item) == "Alias" else None
             f = (item.child() if _kind(item) in ("Alias", "UnresolvedAlias")
                  else item)
-            if _kind(f) != "UnresolvedFunction" or f.isDistinct() or \
-                    f.filter().isDefined() or f.arguments().size() != 1:
+            fn, args = _call(f) or ("", [])
+            if len(args) != 1:
                 return None
-            fn, arg = ".".join(_seq(f.nameParts())).lower(), \
-                f.arguments().head()
-            if fn == "count" and arg.toString() == "1":  # COUNT(*) too
+            if fn == "count" and args[0].toString() == "1":  # COUNT(*) too
                 fields.append(T.StructField(alias or "count(1)",
                                             T.LongType(), False))
                 vals.append(int(t.count_rows()))
                 continue
-            if fn not in ("min", "max") or \
-                    _kind(arg) != "UnresolvedAttribute" or \
-                    arg.nameParts().size() != 1:
+            col = _column(args[0])
+            if fn not in ("min", "max") or col is None:
                 return None
-            col = arg.nameParts().head()
             tn = types.get(col)
             if tn not in self._STAT_TYPES:
                 return None  # unknown column / un-orderable stat type
@@ -1208,12 +1284,7 @@ class GhsSql:
         self._with_views()
         return self._select_prune(*self._bind(s, plan))[0]
 
-    _EXPLAIN = re.compile(
-        r"^EXPLAIN(?:\s+(?P<mode>FORMATTED|EXTENDED|CODEGEN|COST))?\s+"
-        r"(?P<q>(?:SELECT|WITH|VALUES|TABLE)\b.*)$",
-        re.IGNORECASE | re.DOTALL)
-
-    def _explain(self, s: str) -> DataFrame:
+    def _explain(self, s: str, node) -> DataFrame:
         """``EXPLAIN [FORMATTED|EXTENDED|CODEGEN|COST] <query>``:
         Spark's own plan over the bound views, PREFIXED by one row
         reporting the dispatcher's manifest-level file-prune decision —
@@ -1221,14 +1292,14 @@ class GhsSql:
         on the driver before the scan relation is even planned. The
         pruned binding is the same one ``_read`` would use, so the plan
         matches what the SELECT will actually run."""
-        m = self._EXPLAIN.match(s)
-        if not m:
+        plan = node.logicalPlan()
+        a = _query_start(s, plan)
+        if (s[a:].split(None, 1) or [""])[0].upper() not in _READS:
             raise ValueError(
                 f"ghs.sql: cannot parse EXPLAIN: {s[:80]!r} — use "
                 "EXPLAIN [FORMATTED|EXTENDED|CODEGEN|COST] SELECT ...")
-        plan = self._parse(m.group("q"))
         self._with_views()
-        q, names = self._bind(m.group("q"), plan)
+        q, names = self._bind(s, plan, a)
         notes = []
         for name, bounds in self._select_prune(q, names)[1].items():
             if bounds is None:
@@ -1245,9 +1316,9 @@ class GhsSql:
             "none derived (no registered table is read in one scan "
             "filtered by column-vs-constant terms): full live-file "
             "listing; parquet row-group pushdown still applies"))
-        mode = (m.group("mode") or "").upper()
+        mode = node.mode().name()
         plan = self.spark.sql(
-            f"EXPLAIN {mode} {q}".replace("EXPLAIN  ", "EXPLAIN "))
+            f"EXPLAIN {'' if mode == 'simple' else mode.upper()} {q}")
         return self.spark.createDataFrame(
             [(note,)], "plan string").unionAll(plan)
 
@@ -1489,26 +1560,41 @@ class GhsSql:
 
     # ------------------------------------------------------------- CREATE
 
-    _CREATE = re.compile(
-        rf"^CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>{_IDENT})\s*"
-        rf"\((?P<cols>.*)\)\s*USING\s+ghs_table"
-        rf"(?P<rest>.*)$",
-        re.IGNORECASE | re.DOTALL)
-    _CREATE_AS = re.compile(
-        rf"^CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>{_IDENT})\s+"
-        rf"USING\s+ghs_table(?P<rest>.*?)\s+AS\s+"
-        rf"(?P<q>(?:SELECT|WITH|VALUES|TABLE)\b.*)$",
-        re.IGNORECASE | re.DOTALL)
+    _CREATE_FORM = (
+        "ghs.sql: CREATE TABLE must be of the form CREATE TABLE "
+        "name (col type, ...) USING ghs_table [PARTITIONED BY "
+        "(...)] [LOCATION '...'] [TBLPROPERTIES (...)] — or the "
+        "CTAS form CREATE TABLE name USING ghs_table "
+        "[options] AS SELECT ...")
 
-    def _build_table(self, name: str, rest: str) -> NativeTable:
-        """Shared CREATE machinery: parse PARTITIONED BY / LOCATION /
-        TBLPROPERTIES and construct the (not-yet-committed) handle."""
-        pm = re.search(r"PARTITIONED\s+BY\s*\(([^)]*)\)", rest,
-                       re.IGNORECASE)
-        lm = re.search(r"LOCATION\s+'([^']+)'", rest, re.IGNORECASE)
-        tm = re.search(r"TBLPROPERTIES\s*\((.*)\)", rest,
-                       re.IGNORECASE | re.DOTALL)
-        props = _parse_props(tm.group(1)) if tm else {}
+    def _new_name(self, ident) -> str:
+        """The one-part name a CREATE TABLE or MATERIALIZED VIEW gives
+        (``ident`` as parsed), which no stored view holds."""
+        parts = _seq(ident.nameParts())
+        if len(parts) != 1:
+            raise ValueError(self._CREATE_FORM)
+        if parts[0] in self.views:
+            raise ValueError(
+                f"ghs.sql: {parts[0]!r} is a stored view — DROP VIEW it "
+                "first")
+        return parts[0]
+
+    def _create_table(self, s: str, node) -> None:
+        """``CREATE TABLE [IF NOT EXISTS] name (col type [DEFAULT expr],
+        ...) USING ghs_table [PARTITIONED BY (cols)] [LOCATION '...']
+        [TBLPROPERTIES (...)]``, or the CTAS form ``... AS <query>``."""
+        spec = node.tableSpec()
+        if not spec.provider().isDefined() or \
+                spec.provider().get().lower() != "ghs_table" or any(
+                    tr.name() != "identity"
+                    for tr in _seq(node.partitioning())):
+            raise ValueError(self._CREATE_FORM)
+        name = self._new_name(node.name())
+        if name in self.tables:
+            if node.ignoreIfExists():
+                return None
+            raise ValueError(f"ghs.sql: table {name!r} already exists")
+        props = _props(spec.properties())
         keys = [k.strip() for k in
                 props.get("primaryKey", "").replace(";", ",").split(",")
                 if k.strip()]
@@ -1518,12 +1604,14 @@ class GhsSql:
                 "('primaryKey'='col[,col2]') — every ghs_table is keyed "
                 "(the reference's control table likewise mandates "
                 "primary_key per table)")
-        path = Path(lm.group(1)) if lm else self.warehouse / name
-        return NativeTable(
-            self.spark, path, record_keys=keys,
+        t = NativeTable(
+            self.spark, (Path(spec.location().get())
+                         if spec.location().isDefined()
+                         else self.warehouse / name),
+            record_keys=keys,
             precombine=props.get("preCombineField") or None,
-            partition_keys=([c.strip() for c in pm.group(1).split(",")]
-                            if pm else []),
+            partition_keys=[".".join(tr.references()[0].fieldNames())
+                            for tr in _seq(node.partitioning())],
             storage_type=props.get("type", "cow"),
             stats_cols=[c.strip() for c in
                         props.get("statsCols", "").split(",") if c.strip()],
@@ -1533,19 +1621,49 @@ class GhsSql:
             files_per_partition=(int(props["filesPerPartition"])
                                  if props.get("filesPerPartition") else None),
         )
+        cols = []
+        if _kind(node) == "CreateTableAsSelect":
+            t.bulk_insert(self._query_df(s, node.query(),
+                                         _query_start(s, node.query())))
+        else:
+            # an empty first commit publishes the declared schema, so the
+            # table is immediately readable/alterable like any SQL table.
+            # (The allow_empty guard raises when the root already holds a
+            # table with history.) A column with a DEFAULT is added after
+            # it, so its default is recorded.
+            cols = _seq(node.columns())
+            t.bulk_insert(self.spark.createDataFrame([], ", ".join(
+                f"{_quote(c.name())} {c.dataType().sql()}"
+                for c in cols if not c.defaultValue().isDefined())),
+                allow_empty=True)
+        # durable catalog entry (see __init__) — written only AFTER the
+        # first commit succeeds: a failing CREATE over an existing root
+        # (e.g. LOCATION pointing at a live external table whose keys
+        # differ) must not clobber that table's _table.json
+        t.save_properties()
+        for c in cols:
+            if c.defaultValue().isDefined():
+                self._add_column(t, c.name(), c.dataType(),
+                                 c.defaultValue())
+        self.tables[name] = t
+        if self._txn is not None:
+            self._txn_created.add(name)
+        return None
 
-    _CREATE_VIEW = re.compile(
-        rf"^CREATE\s+(?P<rep>OR\s+REPLACE\s+)?VIEW\s+"
-        rf"(?P<name>{_IDENT})\s+AS\s+"
-        rf"(?P<q>(?:SELECT|WITH|VALUES|TABLE)\b.*)$",
-        re.IGNORECASE | re.DOTALL)
+    def _add_column(self, t: NativeTable, name: str, dtype, default) -> None:
+        """Add column ``name`` of the parsed type ``dtype``; a parsed
+        ``DEFAULT`` is stored as its value cast to that type."""
+        ctype = dtype.catalogString()
+        t.add_column(name, ctype, default=self.spark.sql(
+            f"SELECT CAST({default.get().originalSQL()} AS {ctype})"
+        ).first()[0] if default.isDefined() else None)
 
     def _save_views(self) -> None:
         self.warehouse.mkdir(parents=True, exist_ok=True)
         (self.warehouse / "_views.json").write_text(
             json.dumps(self.views))
 
-    def _create_view(self, m: "re.Match[str]", s: str) -> None:
+    def _create_view(self, s: str, node) -> None:
         """``CREATE [OR REPLACE] VIEW name AS SELECT ...``: a stored
         query, not a table — the text persists (``_views.json``) and is
         re-planned at every bind, so reads always see the CURRENT
@@ -1553,164 +1671,64 @@ class GhsSql:
         work inside the text). Views are read-only names: writes fail
         with 'unknown table'. A transaction snapshots the view registry
         at BEGIN, so CREATE/REPLACE VIEW rolls back with it."""
-        name = _unq(m.group("name"))
+        parts = _seq(node.child().nameParts())
+        if len(parts) != 1 or node.userSpecifiedColumns().nonEmpty() or \
+                node.comment().isDefined() or \
+                not node.properties().isEmpty() or node.allowExisting():
+            raise ValueError(
+                "ghs.sql: CREATE VIEW must be of the form CREATE [OR "
+                "REPLACE] VIEW name AS SELECT ...")
+        name = parts[0]
         if name in self.tables:
             raise ValueError(
                 f"ghs.sql: {name!r} is a table"
                 + (" (materialized view)" if name in self.mviews else "")
                 + " — view names must not shadow tables")
-        if name in self.views and not m.group("rep"):
+        if name in self.views and not node.replace():
             raise ValueError(
                 f"ghs.sql: view {name!r} already exists (use CREATE OR "
                 "REPLACE VIEW)")
         # validate NOW against current bindings — a typo'd view must
         # fail at CREATE, not at first read
-        self._query_df(m.group("q"))
-        self.views[name] = m.group("q").strip()
+        q = node.originalText().get()
+        self._query_df(q)
+        self.views[name] = q
         self._save_views()
         self._views_pending.add(name)
         return None
 
     _CREATE_CLONE = re.compile(
-        rf"^CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>{_IDENT})"
-        rf"\s+SHALLOW\s+CLONE\s+(?P<src>{_IDENT})\s*$", re.IGNORECASE)
+        rf"^CREATE\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+        rf"(?P<name>{_IDENT})\s+SHALLOW\s+CLONE\s+(?P<src>{_IDENT})\s*$",
+        re.IGNORECASE)
 
-    def _create(self, s: str) -> None:
-        im = self._CREATE_INDEX.match(s)
-        if im:
-            return self._create_index(im)
-        if re.match(r"^CREATE\s+MATERIALIZED\s+VIEW\b", s, re.IGNORECASE):
-            return self._create_mview(s)
-        vm = self._CREATE_VIEW.match(s)
-        if vm:
-            return self._create_view(vm, s)
-        cm = self._CREATE_CLONE.match(s)
-        if cm:
-            # Delta's SHALLOW CLONE: zero-copy branch of the CURRENT
-            # snapshot (hardlinked data files + one fresh manifest —
-            # clone_to's O(metadata) contract); the clone is an
-            # independent table from here on.
-            name = _unq(cm.group("name"))
-            if name in self.views:
-                raise ValueError(
-                    f"ghs.sql: {name!r} is a stored view — DROP VIEW "
-                    "it first")
-            if name in self.tables:
-                if re.search(r"IF\s+NOT\s+EXISTS", s[:cm.end("name")],
-                             re.IGNORECASE):
-                    return None
-                raise ValueError(f"ghs.sql: table {name!r} already exists")
-            src_name = _unq(cm.group("src"))
-            if src_name in self.mviews:
-                raise ValueError(
-                    f"ghs.sql: {src_name!r} is a materialized view — "
-                    "clone its base table, or snapshot the view with "
-                    "CREATE TABLE ... AS SELECT")
-            t = self._table(src_name).clone_to(self.warehouse / name)
-            t.save_properties()
-            self.tables[name] = t
-            if self._txn is not None:
-                self._txn_created.add(name)
-            return None
-        m = self._CREATE.match(s)
-        ctas = None if m else self._CREATE_AS.match(s)
-        if not m and not ctas:
-            raise ValueError(
-                "ghs.sql: CREATE TABLE must be of the form CREATE TABLE "
-                "name (col type, ...) USING ghs_table [PARTITIONED BY "
-                "(...)] [LOCATION '...'] [TBLPROPERTIES (...)] — or the "
-                "CTAS form CREATE TABLE name USING ghs_table "
-                "[options] AS SELECT ...")
-        mm = m or ctas
-        name = _unq(mm.group("name"))
+    def _create_clone(self, m: "re.Match[str]") -> None:
+        """Delta's SHALLOW CLONE: zero-copy branch of the CURRENT
+        snapshot (hardlinked data files + one fresh manifest —
+        clone_to's O(metadata) contract); the clone is an independent
+        table from here on."""
+        name = _unq(m.group("name"))
         if name in self.views:
             raise ValueError(
-                f"ghs.sql: {name!r} is a stored view — DROP VIEW it "
-                "first")
-        if_not_exists = re.search(
-            r"IF\s+NOT\s+EXISTS", s[:mm.end("name")],
-            re.IGNORECASE) is not None
+                f"ghs.sql: {name!r} is a stored view — DROP VIEW it first")
         if name in self.tables:
-            if if_not_exists:
+            if m.group("ine"):
                 return None
             raise ValueError(f"ghs.sql: table {name!r} already exists")
-        t = self._build_table(name, mm.group("rest"))
-        if ctas:
-            t.bulk_insert(self._query_df(ctas.group("q")))
-            # durable catalog entry (see __init__) — written only AFTER
-            # the first commit succeeds: a failing CREATE over an
-            # existing root (e.g. LOCATION pointing at a live external
-            # table whose keys differ) must not clobber that table's
-            # _table.json with the new config
-            t.save_properties()
-            self.tables[name] = t
-            if self._txn is not None:
-                self._txn_created.add(name)
-            return None
-        schema_fields = []
-        defaults: list[tuple[str, str, object]] = []
-        for coldef in _split_top(m.group("cols")):
-            parts = coldef.split(None, 2)
-            cname, ctype = _unq(parts[0]), parts[1]
-            tail = parts[2] if len(parts) > 2 else ""
-            dm = re.match(r"DEFAULT\s+(.+)$", tail.strip(), re.IGNORECASE)
-            if dm:
-                defaults.append((cname, ctype, dm.group(1)))
-                continue  # added post-create so the default is recorded
-            schema_fields.append(f"{cname} {ctype}")
-        # an empty first commit publishes the declared schema, so the
-        # table is immediately readable/alterable like any SQL table.
-        # (The allow_empty guard raises when the root already holds a
-        # table with history — save_properties runs only after, so a
-        # failing CREATE can't clobber the existing _table.json.)
-        t.bulk_insert(
-            self.spark.createDataFrame([], ", ".join(schema_fields)),
-            allow_empty=True)
-        t.save_properties()  # durable catalog entry (see __init__)
-        for cname, ctype, dexpr in defaults:
-            lit = self.spark.sql(f"SELECT CAST({dexpr} AS {ctype})").first()[0]
-            t.add_column(cname, ctype, default=lit)
+        src_name = _unq(m.group("src"))
+        if src_name in self.mviews:
+            raise ValueError(
+                f"ghs.sql: {src_name!r} is a materialized view — "
+                "clone its base table, or snapshot the view with "
+                "CREATE TABLE ... AS SELECT")
+        t = self._table(src_name).clone_to(self.warehouse / name)
+        t.save_properties()
         self.tables[name] = t
         if self._txn is not None:
             self._txn_created.add(name)
         return None
 
     # ------------------------------------------------- MATERIALIZED VIEW
-
-    _CREATE_MV = re.compile(
-        rf"^CREATE\s+MATERIALIZED\s+VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-        rf"(?P<name>{_IDENT})\s*"
-        rf"(?:TBLPROPERTIES\s*\((?P<props>.*?)\)\s*)?"
-        rf"AS\s+(?P<q>SELECT\b.*)$", re.IGNORECASE | re.DOTALL)
-    _MV_AGG = re.compile(
-        rf"^SELECT\s+(?P<sel>.+?)\s+FROM\s+(?P<base>{_IDENT})\s+"
-        rf"GROUP\s+BY\s+(?P<grp>.+?)\s*$", re.IGNORECASE | re.DOTALL)
-    _MV_AGG_CNT = re.compile(
-        r"^COUNT\s*\(\s*(?:\*|1)\s*\)\s+AS\s+cnt$", re.IGNORECASE)
-    _MV_AGG_SUM = re.compile(
-        rf"^SUM\s*\(\s*(?P<col>{_IDENT})\s*\)\s+AS\s+total$",
-        re.IGNORECASE)
-    _MV_AGG_BUCKET = re.compile(
-        rf"^DATE_TRUNC\s*\(\s*'(?P<unit>hour|day|week|month|year)'\s*,"
-        rf"\s*(?P<col>{_IDENT})\s*\)\s+AS\s+(?P<alias>{_IDENT})$",
-        re.IGNORECASE)
-    _MV_GRP_BUCKET = re.compile(
-        rf"^DATE_TRUNC\s*\(\s*'(?P<unit>hour|day|week|month|year)'\s*,"
-        rf"\s*(?P<col>{_IDENT})\s*\)$", re.IGNORECASE)
-    _MV_JOIN = re.compile(
-        rf"^SELECT\s+\*\s+FROM\s+(?P<fact>{_IDENT})\s+"
-        rf"LEFT\s+(?:OUTER\s+)?JOIN\s+(?P<dim>{_IDENT})\s+"
-        rf"(?:ON\s+(?P<on>.+?)|USING\s*\(\s*(?P<using>{_IDENT})\s*\))"
-        rf"\s*$", re.IGNORECASE | re.DOTALL)
-    _MV_JOINAGG = re.compile(
-        rf"^SELECT\s+(?P<sel>.+?)\s+FROM\s+(?P<fact>{_IDENT})\s+"
-        rf"(?P<jkind>LEFT\s+(?:OUTER\s+)?|INNER\s+)?"
-        rf"JOIN\s+(?P<dim>{_IDENT})\s+"
-        rf"(?:ON\s+(?P<on>.+?)|USING\s*\(\s*(?P<using>{_IDENT})\s*\))\s+"
-        rf"GROUP\s+BY\s+(?P<grp>.+?)\s*$", re.IGNORECASE | re.DOTALL)
-    _MV_ON = re.compile(
-        rf"^\s*(?P<q1>{_IDENT})\.(?P<c1>{_IDENT})\s*=\s*"
-        rf"(?P<q2>{_IDENT})\.(?P<c2>{_IDENT})\s*$")
 
     _MV_SHAPES = (
         "ghs.sql: CREATE MATERIALIZED VIEW supports exactly three "
@@ -1740,17 +1758,28 @@ class GhsSql:
                 "materialized view")
         return name
 
-    def _mv_on_col(self, m: "re.Match[str]", fact: str, dim: str) -> str:
-        """Resolve a matched MV join's ON/USING clause to the single
-        same-named join column both view classes key their state and
-        merge pruning by."""
-        if m.group("using"):
-            return _unq(m.group("using"))
-        om = self._MV_ON.match(m.group("on"))
-        if not om:
+    def _mv_join(self, join) -> tuple[str, str, str]:
+        """``(fact, dim, join column)`` of a parsed MV join: two plain
+        table names (no aliases), joined USING one column or ON one
+        same-named column equality qualified by the two tables — the
+        single column both view classes key their state and merge
+        pruning by."""
+        sides = _seq(join.children())
+        if any(_kind(x) != "UnresolvedRelation" for x in sides):
             raise ValueError(self._MV_SHAPES)
-        q1, c1 = _unq(om.group("q1")), _unq(om.group("c1"))
-        q2, c2 = _unq(om.group("q2")), _unq(om.group("c2"))
+        fact, dim = (self._mv_base(_rel_name(x)) for x in sides)
+        jt, on = join.joinType(), join.condition()
+        if _kind(jt) == "UsingJoin":
+            using = _seq(jt.usingColumns())
+            if len(using) != 1:
+                raise ValueError(self._MV_SHAPES)
+            return fact, dim, using[0]
+        refs = ([_seq(x.nameParts()) if _kind(x) == "UnresolvedAttribute"
+                 else [] for x in _seq(on.get().children())]
+                if on.isDefined() and _kind(on.get()) == "EqualTo" else [])
+        if list(map(len, refs)) != [2, 2]:
+            raise ValueError(self._MV_SHAPES)
+        (q1, c1), (q2, c2) = refs
         if c1 != c2:
             raise ValueError(
                 "ghs.sql: the join column must have the SAME "
@@ -1762,114 +1791,108 @@ class GhsSql:
                 f"ghs.sql: ON qualifiers {sorted({q1, q2})} must "
                 f"be the joined tables {sorted({fact, dim})} "
                 "(aliases are not supported in MV definitions)")
-        return c1
+        return fact, dim, c1
 
-    def _parse_mv_query(self, q: str, props: dict) -> dict:
-        """Recognize the two maintainable shapes (see _MV_SHAPES) and
-        return the durable spec dict. Conservative on purpose: anything
-        unrecognized raises rather than silently materializing a
-        non-refreshable snapshot."""
-        q = re.sub(r"\s+", " ", q.strip())
-        jm = self._MV_JOIN.match(q)
-        if jm:
-            fact = self._mv_base(jm.group("fact"))
-            dim = self._mv_base(jm.group("dim"))
-            join_col = self._mv_on_col(jm, fact, dim)
-            dim_cols = ([c.strip() for c in props["dimCols"].split(",")]
-                        if props.get("dimCols") else None)
-            return {"kind": "join", "fact": fact, "dim": dim,
-                    "join_col": join_col, "dim_cols": dim_cols,
-                    "cluster_by": props.get("clusterBy") or None,
-                    **self._refresh_props(props),
-                    "query": q}
-        jam = self._MV_JOINAGG.match(q)
-        if jam:
-            if jam.group("jkind") and \
-                    jam.group("jkind").upper().startswith("LEFT"):
-                raise ValueError(
-                    "ghs.sql: the aggregate-over-join view is INNER "
-                    "join only (a LEFT join's NULL groups have no "
-                    "keyed-state identity) — drop LEFT, or use the "
-                    "plain join view + aggregate reads")
-            fact = self._mv_base(jam.group("fact"))
-            dim = self._mv_base(jam.group("dim"))
-            join_col = self._mv_on_col(jam, fact, dim)
-            items = _split_top(jam.group("sel"))
-            if len(items) < 3 or not self._MV_AGG_CNT.match(items[-2]) \
-                    or not self._MV_AGG_SUM.match(items[-1]):
-                raise ValueError(self._MV_SHAPES)
-            sum_col = _unq(self._MV_AGG_SUM.match(items[-1]).group("col"))
-            group_cols = []
-            for it in items[:-2]:
-                if not re.fullmatch(_IDENT, it):
-                    raise ValueError(self._MV_SHAPES)
-                group_cols.append(_unq(it))
-            grp = [_unq(g.strip()) for g in _split_top(jam.group("grp"))]
-            if grp != group_cols:
-                raise ValueError(
-                    f"ghs.sql: GROUP BY columns {grp} must equal the "
-                    f"select list's leading columns {group_cols} — the "
-                    "state table is keyed by exactly the group columns")
-            dim_cols = ([c.strip() for c in props["dimCols"].split(",")]
-                        if props.get("dimCols") else None)
-            return {"kind": "joinagg", "fact": fact, "dim": dim,
-                    "join_col": join_col, "group_cols": group_cols,
-                    "sum_col": sum_col, "dim_cols": dim_cols,
-                    **self._refresh_props(props),
-                    "query": q}
-        am = self._MV_AGG.match(q)
-        if not am:
+    def _mv_groups(self, agg) -> tuple[list[str], str, dict]:
+        """``(group columns, SUM column, derived buckets)`` of a parsed MV
+        aggregate ``SELECT g1[, g2...], COUNT(*) AS cnt, SUM(col) AS
+        total ... GROUP BY g1[, g2...]``. A group item may be a
+        continuous-aggregate bucket ``DATE_TRUNC('unit', col) AS name``
+        (TimescaleDB's time_bucket): a DERIVED group column, re-projected
+        onto every change-feed row at refresh — deterministic and
+        row-local, so the signed IVM algebra is unchanged. GROUP BY
+        names it or repeats its expression."""
+
+        def bucket(e) -> str | None:
+            fn, args = _call(e) or ("", [])
+            if fn != "date_trunc" or len(args) != 2 or \
+                    _kind(args[0]) != "Literal" or \
+                    _column(args[1]) is None or args[0].toString().lower() \
+                    not in ("hour", "day", "week", "month", "year"):
+                return None
+            # the source column is always backquoted: a quoted name
+            # (space, reserved word) survives into F.expr at refresh
+            return (f"date_trunc('{args[0].toString().lower()}', "
+                    f"{_quote(_column(args[1]))})")
+
+        def agg_of(e, fn: str, alias: str) -> list | None:
+            call = (_call(e.child()) if _kind(e) == "Alias"
+                    and e.name().lower() == alias else None)
+            return call[1] if call and call[0] == fn else None
+
+        items = _seq(agg.aggregateExpressions())
+        cnt, total = ((agg_of(items[-2], "count", "cnt"),
+                       agg_of(items[-1], "sum", "total"))
+                      if len(items) >= 3 else (None, None))
+        if cnt is None or [x.toString() for x in cnt] != ["1"] or \
+                total is None or len(total) != 1 or \
+                _column(total[0]) is None:
             raise ValueError(self._MV_SHAPES)
-        base = self._mv_base(am.group("base"))
-        items = _split_top(am.group("sel"))
-        if len(items) < 3 or not self._MV_AGG_CNT.match(items[-2]) \
-                or not self._MV_AGG_SUM.match(items[-1]):
-            raise ValueError(self._MV_SHAPES)
-        sum_col = _unq(self._MV_AGG_SUM.match(items[-1]).group("col"))
         group_cols, derive = [], {}
         for it in items[:-2]:
-            dm = self._MV_AGG_BUCKET.match(it)
-            if dm:
-                # continuous-aggregate bucket (TimescaleDB's
-                # time_bucket): a DERIVED group column, re-projected
-                # onto every change-feed row at refresh — deterministic
-                # and row-local, so the signed IVM algebra is unchanged
-                alias = _unq(dm.group("alias"))
-                group_cols.append(alias)
-                # always backquote the source column: a quoted
-                # identifier (space, reserved word) must survive the
-                # round-trip into F.expr at refresh time
-                derive[alias] = (f"date_trunc('{dm.group('unit').lower()}'"
-                                 f", `{_unq(dm.group('col'))}`)")
-                continue
-            if not re.fullmatch(_IDENT, it):
+            ex = bucket(it.child()) if _kind(it) == "Alias" else None
+            if ex is not None:
+                derive[it.name()] = ex
+            elif _column(it) is None:
                 raise ValueError(self._MV_SHAPES)
-            group_cols.append(_unq(it))
+            group_cols.append(it.name() if ex else _column(it))
         grp = []
-        for g in _split_top(am.group("grp")):
-            g = g.strip()
-            gm = self._MV_GRP_BUCKET.match(g)
-            if gm:
-                # GROUP BY repeats the bucket expression: resolve it to
-                # the alias that declared the same derivation
-                ex = (f"date_trunc('{gm.group('unit').lower()}'"
-                      f", `{_unq(gm.group('col'))}`)")
-                match = [a for a, e in derive.items() if e == ex]
-                if not match:
-                    raise ValueError(self._MV_SHAPES)
-                grp.append(match[0])
-            else:
-                grp.append(_unq(g))
+        for g in _seq(agg.groupingExpressions()):
+            ex = bucket(g)
+            match = [a for a, e in derive.items() if e == ex]
+            if _column(g) is None and not match:
+                raise ValueError(self._MV_SHAPES)
+            grp.append(_column(g) or match[0])
         if grp != group_cols:
             raise ValueError(
                 f"ghs.sql: GROUP BY columns {grp} must equal the "
                 f"select list's leading columns {group_cols} — the "
                 "state table is keyed by exactly the group columns")
-        return {"kind": "agg", "base": base, "group_cols": group_cols,
-                "sum_col": sum_col,
-                **({"derive": derive} if derive else {}),
-                **self._refresh_props(props),
-                "query": q}
+        return group_cols, _column(total[0]), derive
+
+    def _parse_mv_query(self, plan, props: dict) -> dict:
+        """Recognize the three maintainable shapes (see _MV_SHAPES) in the
+        parsed view query and return the durable spec dict. Conservative
+        on purpose: anything unrecognized raises rather than silently
+        materializing a non-refreshable snapshot."""
+        kind = _kind(plan)
+        rel = plan.child() if kind in ("Project", "Aggregate") else plan
+        refresh = self._refresh_props(props)
+        dim_cols = ([c.strip() for c in props["dimCols"].split(",")]
+                    if props.get("dimCols") else None)
+        if _kind(rel) == "UnresolvedRelation" and kind == "Aggregate":
+            base = self._mv_base(_rel_name(rel))
+            group_cols, sum_col, derive = self._mv_groups(plan)
+            return {"kind": "agg", "base": base, "group_cols": group_cols,
+                    "sum_col": sum_col,
+                    **({"derive": derive} if derive else {}), **refresh}
+        how = ""
+        if _kind(rel) == "Join":
+            jt = rel.joinType()
+            how = (jt.tpe() if _kind(jt) == "UsingJoin" else jt).toString()
+        star = [(_kind(x), x.target().isDefined()) for x in
+                _seq(plan.projectList())] if kind == "Project" else []
+        if how == "LeftOuter" and star == [("UnresolvedStar", False)]:
+            fact, dim, join_col = self._mv_join(rel)
+            return {"kind": "join", "fact": fact, "dim": dim,
+                    "join_col": join_col, "dim_cols": dim_cols,
+                    "cluster_by": props.get("clusterBy") or None,
+                    **refresh}
+        if kind != "Aggregate" or how not in ("Inner", "LeftOuter"):
+            raise ValueError(self._MV_SHAPES)
+        if how == "LeftOuter":
+            raise ValueError(
+                "ghs.sql: the aggregate-over-join view is INNER "
+                "join only (a LEFT join's NULL groups have no "
+                "keyed-state identity) — drop LEFT, or use the "
+                "plain join view + aggregate reads")
+        fact, dim, join_col = self._mv_join(rel)
+        group_cols, sum_col, derive = self._mv_groups(plan)
+        if derive:
+            raise ValueError(self._MV_SHAPES)
+        return {"kind": "joinagg", "fact": fact, "dim": dim,
+                "join_col": join_col, "group_cols": group_cols,
+                "sum_col": sum_col, "dim_cols": dim_cols, **refresh}
 
     @staticmethod
     def _refresh_props(props: dict) -> dict:
@@ -1924,35 +1947,31 @@ class GhsSql:
         self.tables[name] = mv.state
         return mv
 
-    def _create_mview(self, s: str) -> None:
-        """``CREATE MATERIALIZED VIEW name [TBLPROPERTIES (...)] AS
-        SELECT ...``: binds the engine's incrementally-maintained view
-        machinery (``streaming/materialized.py``) to the SQL surface —
+    def _create_mview(self, s: str, node) -> None:
+        """``CREATE MATERIALIZED VIEW [IF NOT EXISTS] name [TBLPROPERTIES
+        (...)] AS SELECT ...``: binds the engine's incrementally-maintained
+        view machinery (``streaming/materialized.py``) to the SQL surface —
         the Materialize/Snowflake-DMT form. The view materializes NOW
         (Postgres semantics) and goes STALE as its bases change;
         ``REFRESH MATERIALIZED VIEW`` absorbs the bases' change feeds —
         O(changes), never a recompute. TBLPROPERTIES: ``clusterBy`` (the
         join column — state laid out for dim-churn merge pruning),
-        ``dimCols`` (projection of the dim side). The definition
-        persists as ``_mview.json`` so a fresh GhsSql re-attaches it."""
-        m = self._CREATE_MV.match(s)
-        if not m:
+        ``dimCols`` (projection of the dim side), ``refresh``. The
+        definition persists as ``_mview.json`` so a fresh GhsSql
+        re-attaches it."""
+        if node.columns().nonEmpty() or node.partitioning().nonEmpty():
             raise ValueError(
                 "ghs.sql: cannot parse CREATE MATERIALIZED VIEW — use "
                 "CREATE MATERIALIZED VIEW name [TBLPROPERTIES (...)] "
                 "AS SELECT ...")
-        name = _unq(m.group("name"))
-        if name in self.views:
-            raise ValueError(
-                f"ghs.sql: {name!r} is a stored view — DROP VIEW it "
-                "first")
+        name = self._new_name(node.name())
         if name in self.tables:
-            if re.search(r"IF\s+NOT\s+EXISTS", s[:m.end("name")],
-                         re.IGNORECASE):
+            if node.ifNotExists():
                 return None
             raise ValueError(f"ghs.sql: table {name!r} already exists")
-        props = _parse_props(m.group("props")) if m.group("props") else {}
-        spec = self._parse_mv_query(m.group("q"), props)
+        spec = {**self._parse_mv_query(
+            node.query(), _props(node.tableSpec().properties())),
+            "query": node.originalText()}
         mv = self._attach_mview(name, spec)
         mv.refresh()
         Path(mv.state.root).mkdir(parents=True, exist_ok=True)
@@ -2014,25 +2033,18 @@ class GhsSql:
         ", RENAME COLUMN old TO new, DROP COLUMN col, ADD CONSTRAINT name "
         "CHECK (expr) (further maintenance: OPTIMIZE/VACUUM or the CLI)")
 
-    def _dml(self, s: str) -> None:
-        """INSERT, UPDATE, DELETE, MERGE, ALTER TABLE and TRUNCATE,
-        dispatched on the node Spark's parser returns."""
-        node = self._parse(s)
+    def _dml(self, s: str, node) -> None:
+        """INSERT, UPDATE, DELETE, MERGE, ALTER TABLE and TRUNCATE, by
+        their parsed node."""
         kind = _kind(node)
         handler = {
             "InsertIntoStatement": self._insert,
             "UpdateTable": self._update,
             "DeleteFromTable": self._delete,
             "MergeIntoTable": self._merge,
-            **dict.fromkeys(("AddColumns", "RenameColumn", "DropColumns",
-                             "AddCheckConstraint"), self._alter),
             "TruncateTable": lambda s, node, t: t.delete_where(
                 F.expr("true")),
-        }.get(kind)
-        if handler is None:
-            raise ValueError(
-                self._ALTERS if s[:5].upper() == "ALTER"
-                else f"ghs.sql: unsupported statement: {s[:80]!r}")
+        }.get(kind, self._alter)
         # every handled node names its target table first
         name = _rel_name(node.productElement(0))
         handler(s, node, self._target(name))
@@ -2424,75 +2436,69 @@ class GhsSql:
         for col in _seq(node.columnsToAdd()):
             if col.path().isDefined() or col.position().isDefined():
                 raise ValueError(self._ALTERS)
-            ctype, d = col.dataType().catalogString(), col.default()
-            t.add_column(col.colName(), ctype, default=self.spark.sql(
-                f"SELECT CAST({d.get().originalSQL()} AS {ctype})"
-            ).first()[0] if d.isDefined() else None)
+            self._add_column(t, col.colName(), col.dataType(), col.default())
         return None
 
     # --------------------------------------- introspection / maintenance
 
-    _SHOW_CREATE = re.compile(
-        rf"^SHOW\s+CREATE\s+TABLE\s+(?P<name>{_IDENT})\s*$", re.IGNORECASE)
+    _SHOWS = (
+        "ghs.sql: SHOW supports SHOW TABLES, SHOW VIEWS, SHOW "
+        "MATERIALIZED VIEWS, SHOW PARTITIONS t, SHOW TBLPROPERTIES t, "
+        "SHOW CREATE TABLE t, and SHOW INDEXES ON t")
 
-    _SHOW_PARTITIONS = re.compile(
-        rf"^SHOW\s+PARTITIONS\s+(?P<name>{_IDENT})\s*$", re.IGNORECASE)
-
-    def _show(self, s: str) -> DataFrame:
-        cm = self._SHOW_CREATE.match(s)
-        if cm:
-            return self._show_create(_unq(cm.group("name")))
-        sim = self._SHOW_INDEXES.match(s)
-        if sim:
-            return self._show_indexes(sim.group("name"))
-        pm = self._SHOW_PARTITIONS.match(s)
-        if pm:
-            # metadata-only: partition tuples come from the manifest's
-            # file paths — no file is listed or opened (at 100 TB,
-            # SHOW PARTITIONS must not touch data)
-            t = self._table(pm.group("name"))
-            if not t.partition_keys:
-                raise ValueError(
-                    f"ghs.sql: table {_unq(pm.group('name'))!r} is not "
-                    "partitioned")
-            # delegate to the Iceberg-style metadata table — ONE
-            # implementation of the manifest partition walk
-            names = [f.name for f in t._pfields]
-            return t.metadata_table("partitions").select(
-                F.concat_ws("/", *[
-                    F.concat_ws("=", F.lit(n), F.col("partition")[n])
-                    for n in names]).alias("partition")
-            ).orderBy("partition")
-        tp = re.match(rf"^SHOW\s+TBLPROPERTIES\s+(?P<name>{_IDENT})\s*$",
-                      s, re.IGNORECASE)
-        if tp:
-            t = self._table(tp.group("name"))
-            rows = sorted(self._table_props(t).items())
+    def _show(self, s: str, node) -> DataFrame:
+        kind = _kind(node)
+        if kind in ("ShowTables", "ShowViews"):
+            if _kind(node.namespace()) != "CurrentNamespace$" or \
+                    node.pattern().isDefined():
+                raise ValueError(self._SHOWS)
+            if kind == "ShowViews":
+                return self.spark.createDataFrame(
+                    [(n,) for n in sorted(self.views)] or [],
+                    "viewName string")
             return self.spark.createDataFrame(
-                rows, "key string, value string")
-        if re.match(r"^SHOW\s+VIEWS\s*$", s, re.IGNORECASE):
+                [(n,) for n in sorted(self.tables)] or [],
+                "tableName string")
+        # AS SERDE, PARTITION (...) and ('key') are not supported
+        if (kind == "ShowCreateTable" and node.asSerde()) or (
+                kind == "ShowPartitions" and node.pattern().isDefined()) or (
+                kind == "ShowTableProperties"
+                and node.propertyKey().isDefined()):
+            raise ValueError(self._SHOWS)
+        name = _rel_name(node.productElement(0))
+        if kind == "ShowCreateTable":
+            return self._show_create(name)
+        t = self._table(name)
+        if kind == "ShowTableProperties":
             return self.spark.createDataFrame(
-                [(n,) for n in sorted(self.views)] or [],
-                "viewName string")
-        if re.match(r"^SHOW\s+MATERIALIZED\s+VIEWS\s*$", s, re.IGNORECASE):
-            rows = []
-            for n in sorted(self.mviews):
-                spec = self._mv_specs[n]
-                bases = ([spec["base"]] if spec["kind"] == "agg"
-                         else [spec["fact"], spec["dim"]])
-                rows.append((n, spec["kind"], ",".join(bases),
-                             bool(spec.get("auto"))))
-            return self.spark.createDataFrame(
-                rows or [], "name string, kind string, bases string, "
-                            "auto_refresh boolean")
-        if not re.match(r"^SHOW\s+TABLES\s*$", s, re.IGNORECASE):
+                sorted(self._table_props(t).items()),
+                "key string, value string")
+        # metadata-only: partition tuples come from the manifest's file
+        # paths — no file is listed or opened (at 100 TB, SHOW PARTITIONS
+        # must not touch data)
+        if not t.partition_keys:
             raise ValueError(
-                "ghs.sql: SHOW supports SHOW TABLES, SHOW VIEWS, SHOW "
-                "MATERIALIZED VIEWS, SHOW PARTITIONS t, SHOW "
-                "TBLPROPERTIES t, and SHOW CREATE TABLE t")
+                f"ghs.sql: table {name!r} is not partitioned")
+        # delegate to the Iceberg-style metadata table — ONE
+        # implementation of the manifest partition walk
+        names = [f.name for f in t._pfields]
+        return t.metadata_table("partitions").select(
+            F.concat_ws("/", *[
+                F.concat_ws("=", F.lit(n), F.col("partition")[n])
+                for n in names]).alias("partition")
+        ).orderBy("partition")
+
+    def _show_mviews(self) -> DataFrame:
+        rows = []
+        for n in sorted(self.mviews):
+            spec = self._mv_specs[n]
+            bases = ([spec["base"]] if spec["kind"] == "agg"
+                     else [spec["fact"], spec["dim"]])
+            rows.append((n, spec["kind"], ",".join(bases),
+                         bool(spec.get("auto"))))
         return self.spark.createDataFrame(
-            [(n,) for n in sorted(self.tables)] or [],
-            "tableName string")
+            rows or [], "name string, kind string, bases string, "
+                        "auto_refresh boolean")
 
     @staticmethod
     def _sql_literal(v: object) -> str:
@@ -2578,14 +2584,8 @@ class GhsSql:
         return self.spark.createDataFrame(
             [(stmt,)], "createtab_stmt string")
 
-    _DESCRIBE_HISTORY = re.compile(
-        rf"^DESC(?:RIBE)?\s+HISTORY\s+(?P<name>{_IDENT})\s*$",
-        re.IGNORECASE)
-    _DESCRIBE_DETAIL = re.compile(
-        rf"^DESC(?:RIBE)?\s+DETAIL\s+(?P<name>{_IDENT})\s*$",
-        re.IGNORECASE)
-    _DESCRIBE = re.compile(
-        rf"^DESC(?:RIBE)?\s+(?:TABLE\s+)?(?P<name>{_IDENT})\s*$",
+    _DESCRIBE_LOG = re.compile(
+        rf"^DESC(?:RIBE)?\s+(?P<what>HISTORY|DETAIL)\s+(?P<name>{_IDENT})\s*$",
         re.IGNORECASE)
 
     def _describe_detail(self, name: str) -> DataFrame:
@@ -2621,25 +2621,23 @@ class GhsSql:
             "num_delta_files int, size_bytes long, num_rows long, "
             "head_commit long, num_commits int, properties string")
 
-    def _describe(self, s: str) -> DataFrame:
-        dm = self._DESCRIBE_DETAIL.match(s)
-        if dm:
-            return self._describe_detail(_unq(dm.group("name")))
-        hm = self._DESCRIBE_HISTORY.match(s)
-        if hm:
-            # Delta's DESCRIBE HISTORY: the commit timeline, newest first
-            t = self._table(hm.group("name"))
-            rows = [(c.commit_id, c.action,
-                     float(c.wall_time), len(c.files),
-                     json.dumps(c.stats, sort_keys=True, default=str))
-                    for c in reversed(t.timeline.history())]
-            return self.spark.createDataFrame(
-                rows, "version long, operation string, timestamp double, "
-                      "n_files int, stats string")
-        m = self._DESCRIBE.match(s)
-        if not m:
-            raise ValueError(f"ghs.sql: cannot parse DESCRIBE: {s[:80]!r}")
+    def _describe_log(self, m: "re.Match[str]") -> DataFrame:
+        if m.group("what").upper() == "DETAIL":
+            return self._describe_detail(_unq(m.group("name")))
+        # Delta's DESCRIBE HISTORY: the commit timeline, newest first
         t = self._table(m.group("name"))
+        rows = [(c.commit_id, c.action,
+                 float(c.wall_time), len(c.files),
+                 json.dumps(c.stats, sort_keys=True, default=str))
+                for c in reversed(t.timeline.history())]
+        return self.spark.createDataFrame(
+            rows, "version long, operation string, timestamp double, "
+                  "n_files int, stats string")
+
+    def _describe(self, s: str, node) -> DataFrame:
+        if node.isExtended() or node.partitionSpec().nonEmpty():
+            raise ValueError(f"ghs.sql: cannot parse DESCRIBE: {s[:80]!r}")
+        t = self._table(_rel_name(node.relation()))
         rows = [(c, typ, "") for c, typ in self._data_types(t).items()]
         rows += [("# record_keys", ",".join(t.record_keys), ""),
                  ("# partition_keys", ",".join(t.partition_keys), ""),
@@ -2648,13 +2646,7 @@ class GhsSql:
         return self.spark.createDataFrame(
             rows, "col_name string, data_type string, comment string")
 
-    _ANALYZE = re.compile(
-        rf"^ANALYZE\s+TABLE\s+(?P<name>{_IDENT})\s+COMPUTE\s+STATISTICS"
-        rf"(?:\s+FOR\s+(?:(?P<all>ALL\s+COLUMNS)|COLUMNS\s+(?P<cols>.+?)))?"
-        rf"\s*$",
-        re.IGNORECASE | re.DOTALL)
-
-    def _analyze(self, s: str) -> DataFrame:
+    def _analyze(self, s: str, node) -> DataFrame:
         """Spark's ``ANALYZE TABLE t COMPUTE STATISTICS [FOR COLUMNS c, …
         | FOR ALL COLUMNS]`` bound to :meth:`NativeTable.analyze`: ONE
         aggregate pass over one snapshot scan computes row count plus
@@ -2666,23 +2658,22 @@ class GhsSql:
         returns the row count only), so a SQL session can inspect what it
         just computed. Allowed inside a transaction: the sidecar is
         derived, advisory state outside the commit protocol."""
-        m = self._ANALYZE.match(s)
-        if not m:
+        name = _rel_name(node.child())
+        if _kind(node) == "AnalyzeTable" and (
+                node.noScan() or node.partitionSpec().nonEmpty()):
             raise ValueError(f"ghs.sql: cannot parse ANALYZE: {s[:80]!r}")
-        t = self._table(m.group("name"))
-        if m.group("all"):
+        t = self._table(name)
+        if _kind(node) == "AnalyzeTable":
+            cols = []
+        elif node.allColumns():
             cols = None
-        elif m.group("cols"):
-            cols = [_unq(c.strip())
-                    for c in _split_top(m.group("cols")) if c.strip()]
+        else:
+            cols = _seq(node.columnNames().get())
             known = set(self._data_types(t))
             missing = [c for c in cols if c not in known]
             if missing:
                 raise ValueError(
-                    f"ghs.sql: ANALYZE columns not in "
-                    f"{_unq(m.group('name'))!r}: {missing}")
-        else:
-            cols = []
+                    f"ghs.sql: ANALYZE columns not in {name!r}: {missing}")
         out = t.analyze(cols)
         rows = [(c, st["ndv_est"], st["null_count"], st["min"], st["max"],
                  out["row_count"], out["as_of_commit"])
@@ -2695,14 +2686,7 @@ class GhsSql:
                   "min string, max string, row_count long, "
                   "as_of_commit long")
 
-    _CACHE = re.compile(
-        rf"^CACHE\s+(?P<lazy>LAZY\s+)?TABLE\s+(?P<name>{_IDENT})\s*$",
-        re.IGNORECASE)
-    _UNCACHE = re.compile(
-        rf"^UNCACHE\s+TABLE\s+(?:IF\s+EXISTS\s+)?(?P<name>{_IDENT})\s*$",
-        re.IGNORECASE)
-
-    def _cache_table(self, s: str) -> None:
+    def _cache_table(self, s: str, node) -> None:
         """Spark's ``CACHE [LAZY] TABLE``: pin the CURRENT snapshot in
         executor memory and bind the view to the pinned frame — repeated
         reads skip the scan entirely. Session-scoped (Spark semantics);
@@ -2710,11 +2694,10 @@ class GhsSql:
         ``_with_views`` rather than serving the pre-write snapshot. The
         default is EAGER (Spark parity): the pin materializes now, not
         on first read."""
-        m = self._CACHE.match(s)
-        if not m:
+        if not node.options().isEmpty():
             raise ValueError(f"ghs.sql: cannot parse CACHE: {s[:80]!r} — "
                              "use CACHE [LAZY] TABLE name")
-        name = _unq(m.group("name"))
+        name = _rel_name(node.table())
         t = self._table(name)
         head = t.timeline.latest()
         if head is None:
@@ -2722,20 +2705,16 @@ class GhsSql:
                              "nothing to cache")
         self._release_cache(name)
         df = t.read_snapshot().persist()
-        if not m.group("lazy"):
+        if not node.isLazy():
             df.count()
         df.createOrReplaceTempView(name)
         self._view_cache[name] = (head.commit_id, head.wall_time)
         self._cached[name] = df
         return None
 
-    def _uncache_table(self, s: str) -> None:
-        m = self._UNCACHE.match(s)
-        if not m:
-            raise ValueError(f"ghs.sql: cannot parse UNCACHE: {s[:80]!r}")
-        name = _unq(m.group("name"))
-        if name not in self.tables and re.search(
-                r"IF\s+EXISTS", s, re.IGNORECASE):
+    def _uncache_table(self, s: str, node) -> None:
+        name = _rel_name(node.table())
+        if name not in self.tables and node.ifExists():
             return None  # Spark parity: IF EXISTS makes it a no-op
         self._table(name)  # unknown table still raises (Spark parity)
         if name in self._cached:
@@ -2809,10 +2788,9 @@ class GhsSql:
 
     # ------------------------------------------------------------- DROP
 
-    _DROP = re.compile(
-        rf"^DROP\s+(?P<kind>TABLE|MATERIALIZED\s+VIEW|VIEW)\s+"
-        rf"(?:IF\s+EXISTS\s+)?(?P<name>{_IDENT})\s*$",
-        re.IGNORECASE)
+    _DROP_MVIEW = re.compile(
+        rf"^DROP\s+MATERIALIZED\s+VIEW\s+(?P<ie>IF\s+EXISTS\s+)?"
+        rf"(?P<name>{_IDENT})\s*$", re.IGNORECASE)
 
     def _mv_dependents(self, name: str) -> list[str]:
         out = []
@@ -2830,18 +2808,22 @@ class GhsSql:
         return sorted(v for v, q in self.views.items()
                       if v != name and name.lower() in _refs(self._parse(q)))
 
-    def _drop(self, s: str) -> None:
-        dim = self._DROP_INDEX.match(s)
-        if dim:
-            return self._drop_index(dim)
-        m = self._DROP.match(s)
-        if not m:
+    def _drop_mview(self, m: "re.Match[str]") -> None:
+        return self._drop_named("MATERIALIZED VIEW", _unq(m.group("name")),
+                                bool(m.group("ie")))
+
+    def _drop(self, s: str, node) -> None:
+        """``DROP TABLE|VIEW [IF EXISTS] name``."""
+        if _kind(node) == "DropTable" and node.purge():
             raise ValueError(f"ghs.sql: cannot parse DROP: {s[:80]!r}")
-        name = _unq(m.group("name"))
-        kind = m.group("kind").upper()
+        return self._drop_named(
+            "VIEW" if _kind(node) == "DropView" else "TABLE",
+            _rel_name(node.child()), node.ifExists())
+
+    def _drop_named(self, kind: str, name: str, if_exists: bool) -> None:
         if kind == "VIEW":
             if name not in self.views:
-                if re.search(r"IF\s+EXISTS", s, re.IGNORECASE):
+                if if_exists:
                     return None
                 raise ValueError(
                     f"ghs.sql: unknown view {name!r}"
@@ -2861,7 +2843,7 @@ class GhsSql:
             raise ValueError(
                 f"ghs.sql: {name!r} is a stored view — use DROP VIEW")
         if name not in self.tables:
-            if re.search(r"IF\s+EXISTS", s, re.IGNORECASE):
+            if if_exists:
                 return None
             raise ValueError(f"ghs.sql: unknown table {name!r}")
         if is_mv_stmt != (name in self.mviews):

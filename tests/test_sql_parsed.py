@@ -1,13 +1,20 @@
-"""``GhsSql`` reads INSERT, UPDATE, DELETE, MERGE, ALTER, TRUNCATE and the
-table references of reads from Spark's own parse of the statement.
+"""``GhsSql`` reads every statement of Spark's grammar (DML, ALTER,
+TRUNCATE, CREATE, views, EXPLAIN, SHOW/DESCRIBE, ...), the table
+references of reads and their table-valued function calls from Spark's
+own parse of the statement.
 
 Each test pins a statement a text-level reader got wrong: a string
 literal that looks like SQL (``' WHERE '``, ``'t.v'``, ``'--'``, ``'VERSION
-AS OF'``), a nested ``CASE WHEN`` inside a MERGE clause, MERGE clause
-order and repeats, a DELETE on a renamed column, and stored views that
-read their base table only inside a CTE or a subquery."""
+AS OF'``, ``"table_changes('t', 1)"``), a nested ``CASE WHEN`` inside a
+MERGE clause, MERGE clause order and repeats, a DELETE on a renamed
+column, stored views that read their base table only inside a CTE or a
+subquery, and column types with commas inside ``<...>``; plus a
+warehouse written in the older catalog format, which must still
+attach."""
 
 from __future__ import annotations
+
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,6 +69,25 @@ def test_literal_holding_time_travel_text_binds_nothing(ghs, spark):
     v = ghs.tables["acc"].timeline.latest().commit_id - 1
     assert ghs.sql(f"SELECT count(*) AS n FROM `acc` VERSION AS OF {v} "
                    "AS old").first().n == 3
+
+
+def test_literal_holding_tvf_text_binds_nothing(ghs, spark):
+    def feeds():
+        return [t.name for t in spark.catalog.listTables()
+                if t.name.startswith("acc__ch")]
+
+    for name in feeds():
+        spark.catalog.dropTempView(name)
+    got = ghs.sql("SELECT \"table_changes('acc', 1)\" AS s").first().s
+    assert got == "table_changes('acc', 1)"
+    assert feeds() == []
+    # a real call, aliased or not, binds the feed past commit 1 (the
+    # CREATE): the three inserted rows
+    for q in ("SELECT count(*) AS n FROM table_changes('acc', 1)",
+              "SELECT count(*) AS n FROM table_changes('acc', 1) AS c "
+              "WHERE c._change_type = 'insert'"):
+        assert ghs.sql(q).first().n == 3
+    assert feeds() == ["acc__ch1_2"]
 
 
 def test_comment_marker_inside_literal_is_text(ghs):
@@ -196,3 +222,80 @@ def test_dml_parse_starts_no_job_before_execution(ghs, job_ids,
         ghs.sql(stmt)
         assert seen[n] == before, stmt
     assert [r[:2] for r in _rows(ghs)] == [("a", 2), ("c", 0)]
+
+
+# ------------------------------------------------ CREATE from the parse
+
+
+def test_create_table_with_nested_types(ghs, spark, tmp_path):
+    """Column types come from Spark's parse: the commas inside MAP<...>,
+    STRUCT<...> and ARRAY<STRUCT<...>> split no column, and SHOW CREATE
+    TABLE re-executes to the same column types."""
+    ghs.sql("CREATE TABLE nest (id STRING, m MAP<STRING, INT>, "
+            "s STRUCT<a: INT, b: STRING>, "
+            "arr ARRAY<STRUCT<x: INT, y: STRING>>) USING ghs_table "
+            "TBLPROPERTIES ('primaryKey'='id')")
+    ghs.sql("INSERT INTO nest VALUES ('k', map('p', 1), "
+            "named_struct('a', 2, 'b', 'q'), "
+            "array(named_struct('x', 3, 'y', 'r')))")
+    row = ghs.sql("SELECT * FROM nest").first()
+    assert (row.id, row.m, tuple(row.s), [tuple(e) for e in row.arr]) == (
+        "k", {"p": 1}, (2, "q"), [(3, "r")])
+    stmt = ghs.sql("SHOW CREATE TABLE nest").first()[0]
+    other = GhsSql(spark, tmp_path / "wh2")
+    other.sql(stmt)
+    assert other._data_types(other.tables["nest"]) == ghs._data_types(
+        ghs.tables["nest"]) == {
+        "id": "string", "m": "map<string,int>",
+        "s": "struct<a:int,b:string>", "arr": "array<struct<x:int,y:string>>"}
+
+
+# the durable catalog in its older format: the materialized view's
+# query whitespace-collapsed, its bucket derivation as text
+_TABLE_JSON = ('{"partition_keys": [], "precombine": null, '
+               '"record_keys": ["ok"], "storage_type": "cow"}')
+_VIEWS_JSON = '{"big": "SELECT ok, amt FROM fact WHERE amt > 5.5"}'
+_MVIEW_JSON = (
+    '{"auto": false, "base": "fact", '
+    '"derive": {"day": "date_trunc(\'day\', `ts`)"}, '
+    '"group_cols": ["day"], "kind": "agg", '
+    '"query": "SELECT DATE_TRUNC(\'day\', ts) AS day, COUNT(*) AS cnt, '
+    'SUM(amt) AS total FROM fact GROUP BY DATE_TRUNC(\'day\', ts)", '
+    '"sum_col": "amt"}')
+
+
+def test_older_catalog_warehouse_reattaches(spark, tmp_path):
+    """A fresh ``GhsSql`` attaches a warehouse written in the older
+    catalog format — ``_table.json``, ``_views.json`` and an
+    ``_mview.json`` — refreshes the view, reads the stored view, and
+    SHOW CREATE TABLE re-executes to an equal view."""
+    wh = tmp_path / "wh"
+    NativeTable(spark, wh / "fact", record_keys=["ok"]).bulk_insert(
+        spark.sql("SELECT * FROM VALUES "
+                  "(1, TIMESTAMP'2024-01-01 01:00:00', 5.0), "
+                  "(2, TIMESTAMP'2024-01-01 02:00:00', 6.0), "
+                  "(3, TIMESTAMP'2024-01-02 03:00:00', 7.0) "
+                  "AS v(ok, ts, amt)"))
+    (wh / "fact" / "_table.json").write_text(_TABLE_JSON)
+    (wh / "_views.json").write_text(_VIEWS_JSON)
+    (wh / "rev").mkdir()
+    (wh / "rev" / "_mview.json").write_text(_MVIEW_JSON)
+
+    g = GhsSql(spark, wh)
+    assert sorted(g.tables) == ["fact", "rev"] and "rev" in g.mviews
+    g.sql("REFRESH MATERIALIZED VIEW rev")
+
+    def rows():
+        return sorted((str(r.day), r.cnt, float(r.total))
+                      for r in g.sql("SELECT * FROM rev").collect())
+
+    want = [("2024-01-01 00:00:00", 2, 11.0),
+            ("2024-01-02 00:00:00", 1, 7.0)]
+    assert rows() == want
+    assert sorted(r.ok for r in g.sql("SELECT ok FROM big").collect()) \
+        == [2, 3]
+    stmt = g.sql("SHOW CREATE TABLE rev").first()[0]
+    g.sql("DROP MATERIALIZED VIEW rev")
+    g.sql(stmt)
+    assert g._mv_specs["rev"] == json.loads(_MVIEW_JSON)
+    assert rows() == want

@@ -195,8 +195,17 @@ def test_register_existing_handle_and_read(spark, tmp_path):
 
 
 def test_unsupported_statement_raises(ghs):
-    with pytest.raises(ValueError, match="unsupported"):
-        ghs.sql("GRANT SELECT ON accounts TO analyst")
+    for stmt, msg in (
+            ("GRANT SELECT ON accounts TO analyst", "unsupported"),
+            ("CREATE TABLE pq (id STRING) USING parquet "
+             "TBLPROPERTIES ('primaryKey'='id')", "USING ghs_table"),
+            ("CREATE VIEW v (a) AS SELECT 1", "CREATE VIEW must be"),
+            ("DESCRIBE EXTENDED accounts", "cannot parse DESCRIBE"),
+            ("EXPLAIN INSERT INTO accounts VALUES ('x')",
+             "cannot parse EXPLAIN"),
+            ("CACHE TABLE accounts AS SELECT 1", "unsupported")):
+        with pytest.raises(ValueError, match=msg):
+            ghs.sql(stmt)
 
 
 # ------------------------------- round-10b: travel/introspect/maintain
@@ -282,6 +291,12 @@ def test_ctas_creates_and_loads(ghs):
     ghs.sql("DELETE FROM eu_accounts WHERE id = 'a'")
     assert [r[0] for r in
             ghs.sql("SELECT id FROM eu_accounts").collect()] == ["c"]
+    # the query's root spans only its ORDER BY ... LIMIT clause
+    ghs.sql("CREATE TABLE top2 USING ghs_table "
+            "TBLPROPERTIES ('primaryKey'='id') "
+            "AS SELECT id FROM accounts ORDER BY id DESC LIMIT 2")
+    assert sorted(r.id for r in ghs.sql("SELECT id FROM top2").collect()) \
+        == ["b", "c"]
 
 
 def test_insert_from_time_travel_restores_history(ghs):
@@ -699,6 +714,9 @@ def test_show_create_table_external_carries_location(ghs, tmp_path):
 def test_describe_detail(ghs, spark):
     t = _mk_ledger(ghs, spark)
     row = ghs.sql("DESCRIBE DETAIL ledger").collect()[0]
+    # Spark parses DESC DETAIL t as a column description: the engine
+    # form must match first
+    assert ghs.sql("DESC DETAIL ledger").collect()[0] == row
     head = t.timeline.latest()
     assert row["format"] == "ghs_table"
     assert row["location"] == str(t.root)
@@ -903,7 +921,11 @@ def test_mview_guards(ghs):
               "SELECT * FROM fact JOIN dim USING (ck)",
               "SELECT * FROM fact LEFT JOIN dim ON fact.ck = dim.name",
               "SELECT ck, COUNT(*) AS cnt, SUM(amt) AS total "
-              "FROM fact GROUP BY name"):
+              "FROM fact GROUP BY name",
+              "SELECT ck, COUNT(*) AS cnt, SUM(amt) AS total "
+              "FROM (SELECT * FROM fact) GROUP BY ck",
+              "SELECT ck, COUNT(*) AS cnt, SUM(amt) AS total "
+              "FROM fact f GROUP BY ck"):
         with pytest.raises(ValueError):
             ghs.sql(f"CREATE MATERIALIZED VIEW bad AS {q}")
     ghs.sql("DROP MATERIALIZED VIEW rev")

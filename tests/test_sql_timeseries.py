@@ -146,6 +146,8 @@ def test_tvf_error_shapes(ghs):
                 "'k','sum(v) AS x')")
     with pytest.raises(ValueError, match="n_out"):
         ghs.sql("SELECT * FROM lttb('m', 'ts', 'v', 2, 'k')")
+    with pytest.raises(ValueError, match="cannot bind arguments"):
+        ghs.sql("SELECT * FROM lttb('m', 'ts', 'v', 'k')")
 
 
 def test_gapfill_minute_and_year_units(ghs):
