@@ -6,27 +6,29 @@ is a full-corpus scan per micro-batch. This index materializes the
 corpus's dedup fingerprints ONCE and maintains them off the table's
 change feed:
 
-* ``build()`` writes two hash-only stores under
-  ``<table>/_index/dedup/``: ``exact/`` — (id, content hash) partitioned
-  by the hash's hex PREFIX, and ``bands/`` — (id, band, band_hash)
-  partitioned by the band hash's prefix. Prefix partitioning is what
-  makes SMALL probes cheap: a streaming micro-batch of b docs touches at
-  most b exact prefixes and b×bands band prefixes, so its store reads
-  prune to that fraction of the corpus fingerprints — the probe cost
-  tracks the BATCH, not the corpus (a bulk backfill batch covers every
-  prefix and degrades gracefully to one full fingerprint scan, still
-  never the text).
+* The store is one hash-only ``NativeTable`` under ``<table>/_index/
+  dedup/`` (protocol: ``index_store``) holding two kinds of row: per doc
+  one ``exact`` row (id, content hash) and ``bands`` ``band`` rows (id,
+  band, band hash), partitioned by ``kind`` and the hash's hex PREFIX
+  ``p``. Prefix partitioning is what makes SMALL probes cheap: a
+  streaming micro-batch of b docs touches at most b exact prefixes and
+  b×bands band prefixes, so its store reads prune (``read_by_values`` on
+  the per-file ``p`` stats) to that fraction of the corpus fingerprints —
+  the probe cost tracks the BATCH, not the corpus (a bulk backfill batch
+  covers every prefix and degrades gracefully to one full fingerprint
+  scan, still never the text). ``build()`` is one ``insert_overwrite``.
 * ``probe(batch)`` returns the batch rows that are NOVEL: no exact hash
   match against the store, no verified near-duplicate (band collision →
   exact shingle-Jaccard check against the matched corpus docs, fetched
   by the table's own indexed point lookup — ``read_by_value``, so the
   verification read is range/bloom-pruned, never a corpus scan), and
   in-batch exact duplicates collapsed to the min-id representative.
-* ``refresh()`` consumes the change feed since ``indexed_commit``;
-  changed docs' OLD fingerprints are recomputed from the feed's
-  pre-images (deterministic hashing — no store lookup needed to locate
-  them), so only the prefix partitions holding changed fingerprints are
-  rewritten — O(changed rows + touched partitions), never O(corpus).
+* ``refresh()`` consumes the change feed since ``indexed_commit`` in one
+  store ``merge``; changed docs' OLD fingerprints are recomputed from the
+  feed's pre-images (deterministic hashing — no store lookup needed to
+  locate them), so only the prefix partitions holding changed
+  fingerprints are rewritten — O(changed rows + touched partitions),
+  never O(corpus).
 
 Same staleness contract as the vector index: probing a stale index
 raises unless explicitly allowed — silently missing newly-ingested
@@ -39,27 +41,25 @@ SQL oracle replays the store and the probe decision exactly.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from glue_hudi_spark.checkpoints import release_checkpoint
-from glue_hudi_spark.functions.exprs import in_values
 from glue_hudi_spark.operators.dedup import (
     minhash_signature,
     normalized_text,
     word_shingles,
 )
-from glue_hudi_spark.operators.vector_index import StaleIndexError
-from glue_hudi_spark.storage.native import _parquet_writer
+from glue_hudi_spark.operators.index_store import (
+    StaleIndexError,  # noqa: F401  (re-exported)
+    StoreIndex,
+    stored_meta,
+)
+from glue_hudi_spark.storage.native import NativeTable
 
 #: Bloom pre-filter modulus (probe_bloom_max path): the batch's hash
-#: set maps to ``pmod(xxhash64(h), _BLOOM_BUCKETS)`` buckets and the
+#: set maps to ``pmod(xxhash64(hash), _BLOOM_BUCKETS)`` buckets and the
 #: store is LEFT SEMI broadcast-joined against that bucket set — a
 #: single-hash Bloom filter expressed as a join, so the "bitset" is a
 #: broadcast LongHashedRelation (≤ batch-distinct longs), never a plan
@@ -70,14 +70,21 @@ from glue_hudi_spark.storage.native import _parquet_writer
 #: and a >20× slowdown), so literals are out.
 _BLOOM_BUCKETS = 1 << 26
 
+#: constructor parameters, persisted in every store commit's metadata
+_PARAMS = ("id_col", "text_col", "n", "num_hashes", "bands", "prefix_len",
+           "probe_pushdown_max", "probe_bloom_max")
 
-class DedupIndex:
+
+class DedupIndex(StoreIndex):
     """Exact + near-dup fingerprint store attached to one text column.
 
     ``prefix_len``: hex chars of hash prefix per partition — 1 → 16
-    partitions per store (small corpora; the default), 2 → 256 (large
+    partitions per kind (small corpora; the default), 2 → 256 (large
     corpora, where a partition should stay a bounded rewrite unit).
     """
+
+    _LEGACY_DIRS = ("exact", "bands")
+    _OPTIONS = tuple(k for k in _PARAMS if k != "text_col")
 
     def __init__(self, table, id_col: str, text_col: str = "text",
                  n: int = 3, num_hashes: int = 16, bands: int = 8,
@@ -92,73 +99,66 @@ class DedupIndex:
         # value-pushdown probe path (r12 verdict #8, OPT-IN — set to
         # e.g. 1000 on object-storage corpora): batches with at most
         # this many distinct hashes push the hash SET into the store
-        # scan as an In predicate — stores are written hash-sorted
-        # within each prefix with parquet bloom filters, so row groups
-        # without a batch hash are skipped by stats/bloom and the scan
-        # reads O(batch) row groups, not the whole touched prefix.
-        # Bigger batches (backfills) fall back to the prefix-pruned
-        # anti-join; the collect is bounded by this knob (driver holds
-        # ≤ max hash strings — metadata-sized). Default OFF because the
-        # win needs many row groups per prefix (100-TB corpora on
-        # object storage); on a local-NVMe prefix of 1-2 row groups the
-        # nested predicate costs more than it skips (measured: 2.9 s
-        # pushed vs 2.0 s plain on a 20M-row store — same precedent as
-        # rewrite_persist_max_bytes). Ceiling: parquet translates the
-        # pushed In into a NESTED Or tree, which stack-overflows past
-        # ~2000 values (measured) — never set this above 1000.
+        # read, where the store's per-file bloom sidecars on ``hash``
+        # (built only when this is set) drop every prefix file holding
+        # none of the batch's hashes, and the exact filter runs on the
+        # rest. Bigger batches (backfills) fall back to the
+        # prefix-pruned anti-join; the collect is bounded by this knob
+        # (driver holds ≤ max hash strings — metadata-sized). Default
+        # OFF: the sidecars cost a Spark job per store commit, and the
+        # skipped reads pay that back only on large prefix files (100-TB
+        # corpora on object storage).
         self.probe_pushdown_max = probe_pushdown_max
         # Bloom-prefilter probe path (r12 verdict #8's scale follow-up,
-        # OPT-IN — set to e.g. 200_000): the In pushdown above is
-        # ceiling-bound (~1000 values before parquet's nested-Or tree
-        # overflows), so mid-size batches fell straight to the plain
-        # anti-join, which at a 100-TB corpus shuffles every scanned
-        # store row. This path covers the gap: collect the batch's
-        # distinct hashes (bounded by this knob — driver holds ≤ max
-        # 32-char strings), map it to xxhash64 buckets, and pre-filter
-        # the store scan JVM-side with a broadcast LEFT SEMI join on
-        # the same bucket expression before the exact join. Store rows whose hash is in the batch always pass
-        # (the same xxhash64-bucket expression on both sides — no false
-        # negatives by construction), so the exact anti-join result is
-        # unchanged; false positives only add rows to the shuffle
-        # (~|batch|/2^26). This cuts the store-side SHUFFLE to
-        # O(batch), not the scan I/O — the scan stays prefix-pruned (a
-        # big batch touches every prefix).
+        # OPT-IN — set to e.g. 200_000): mid-size batches past the
+        # pushdown cap would fall straight to the plain anti-join,
+        # which at a 100-TB corpus shuffles every scanned store row.
+        # This path covers the gap: collect the batch's distinct hashes
+        # (bounded by this knob — driver holds ≤ max 32-char strings),
+        # map them to xxhash64 buckets, and pre-filter the store scan
+        # JVM-side with a broadcast LEFT SEMI join on the same bucket
+        # expression before the exact join. Store rows whose hash is in
+        # the batch always pass (the same xxhash64-bucket expression on
+        # both sides — no false negatives by construction), so the exact
+        # anti-join result is unchanged; false positives only add rows
+        # to the shuffle (~|batch|/2^26). This cuts the store-side
+        # SHUFFLE to O(batch), not the scan I/O — the scan stays
+        # prefix-pruned (a big batch touches every prefix).
         self.probe_bloom_max = probe_bloom_max
-        self.root = Path(table.root) / "_index" / "dedup"
-        self.exact_store = self.root / "exact"
-        self.bands_store = self.root / "bands"
+        self.root = self._root(table)
 
-    # ------------------------------------------------------------- metadata
+    @staticmethod
+    def _root(table) -> Path:
+        return Path(table.root) / "_index" / "dedup"
 
-    def _meta_path(self) -> Path:
-        return self.root / "meta.json"
+    @classmethod
+    def open(cls, table) -> "DedupIndex | None":
+        """The table's dedup index, bound to the parameters it was built
+        with (None when it has none)."""
+        meta = stored_meta(cls._root(table))
+        if meta is None:
+            return None
+        return cls(table, **{k: meta[k] for k in _PARAMS if k in meta})
 
-    def _meta(self) -> dict:
-        p = self._meta_path()
-        if not p.exists():
-            raise ValueError(f"no dedup index at {self.root} — build() first")
-        return json.loads(p.read_text())
-
-    def _write_meta(self, meta: dict) -> None:
-        self.root.mkdir(parents=True, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            f.write(json.dumps(meta, indent=1))
-        os.replace(tmp, self._meta_path())
+    def store(self) -> NativeTable:
+        """The fingerprint store: rows (kind, p, id, band, hash), one file
+        per (kind, p) partition, hash-sorted."""
+        return NativeTable(
+            self.spark, self.root, record_keys=["hash", "kind", "id", "band"],
+            precombine="op", partition_keys=["kind", "p"],
+            files_per_partition=1, stats_cols=["kind", "p"],
+            secondary_bloom_cols=["hash"] if self.probe_pushdown_max else [])
 
     # ----------------------------------------------------------------- rows
 
-    def _pfx(self, col):
-        return F.substring(col, 1, self.prefix_len)
-
-    def _fingerprints(self, df: DataFrame,
-                      extra_cols: list | None = None) -> DataFrame:
-        """(id, h, band, band_hash) — per doc, ``bands`` small rows; the
-        stores never carry text or shingles. ``extra_cols``: extra column
-        expressions carried through the pass unchanged (refresh uses a
-        gone/add marker so ONE MinHash pass serves both change sides)."""
+    def _rows(self, df: DataFrame, *extra) -> DataFrame:
+        """(kind, p, id, band, hash) store rows of ``df``'s docs: one
+        ``exact`` row (band -1, hash of the normalized text) and
+        ``bands`` ``band`` rows (hash of the band's MinHash slice) per
+        doc; the store never carries text or shingles. ``extra``: column
+        expressions carried through the pass unchanged (refresh's
+        gone/add marker, so ONE MinHash pass serves both change sides)."""
         r = self.num_hashes // self.bands
-        extra = list(extra_cols or [])
         sig = df.select(
             F.col(self.id_col).alias("id"),
             F.md5(normalized_text(self.text_col)).alias("h"),
@@ -167,155 +167,38 @@ class DedupIndex:
             *extra,
         )
         carried = sig.columns[3:]
-        return sig.select(
-            "id", "h",
-            F.posexplode(F.array(*[
-                F.md5(F.concat_ws(
-                    "|", *[F.col("mh")[b * r + i] for i in range(r)]))
-                for b in range(self.bands)
-            ])).alias("band", "band_hash"),
-            *carried,
-        )
 
-    def _exact_rows(self, fp: DataFrame) -> DataFrame:
-        return (fp.select("id", "h").distinct()
-                .withColumn("hp", self._pfx(F.col("h"))))
+        def row(kind, band, h):
+            return F.struct(F.lit(kind).alias("kind"),
+                            F.lit(band).alias("band"), h.alias("hash"))
 
-    def _band_rows(self, fp: DataFrame) -> DataFrame:
-        return fp.select(
-            "id", "band", "band_hash",
-            self._pfx(F.col("band_hash")).alias("bp"))
-
-    # ----------------------------------------------------------------- build
+        kinds = [row("exact", -1, F.col("h"))] + [
+            row("band", b, F.md5(F.concat_ws(
+                "|", *[F.col("mh")[b * r + i] for i in range(r)])))
+            for b in range(self.bands)]
+        return (sig.select("id", F.explode(F.array(*kinds)).alias("e"),
+                           *carried)
+                .select("e.kind",
+                        F.substring("e.hash", 1, self.prefix_len).alias("p"),
+                        "id", "e.band", "e.hash", *carried))
 
     def build(self) -> dict:
         head = self.table.timeline.latest()
         if head is None:
             raise ValueError(f"table {self.table.root} has no commits")
-        fp = self._fingerprints(self.table.read_snapshot()).persist()
-        try:
-            # repartition on the partition column so each prefix dir is
-            # one task's output — without it every shuffle task writes a
-            # sliver into every dir (T×P tiny files, the small-file
-            # problem at any scale). Hash-sorted within each prefix +
-            # parquet bloom filters so the probe's pushed In predicate
-            # skips row groups by stats/bloom (see probe_pushdown_max).
-            (_parquet_writer(self._exact_rows(fp).repartition("hp")
-                             .sortWithinPartitions("h"), "overwrite")
-             .option("parquet.bloom.filter.enabled#h", "true")
-             .partitionBy("hp").parquet(str(self.exact_store)))
-            (_parquet_writer(self._band_rows(fp).repartition("bp")
-                             .sortWithinPartitions("band_hash"), "overwrite")
-             .option("parquet.bloom.filter.enabled#band_hash", "true")
-             .partitionBy("bp").parquet(str(self.bands_store)))
-        finally:
-            fp.unpersist()
-        self._write_meta({
-            "id_col": self.id_col, "text_col": self.text_col,
-            "n": self.n, "num_hashes": self.num_hashes,
-            "bands": self.bands, "prefix_len": self.prefix_len,
-            # probe-path knobs persist with the index so a session that
-            # re-binds from meta (the SQL face) probes the way the
-            # index was declared — they are deployment shape, not
-            # per-call tuning
-            "probe_pushdown_max": self.probe_pushdown_max,
-            "probe_bloom_max": self.probe_bloom_max,
-            "indexed_commit": head.commit_id,
-        })
+        self._publish(self._rows(self.table.read_snapshot()),
+                      {k: getattr(self, k) for k in _PARAMS},
+                      head.commit_id)
         return {"indexed_commit": head.commit_id}
 
-    # --------------------------------------------------------------- refresh
+    def _rebuild(self, meta: dict) -> None:
+        for k in _PARAMS:
+            setattr(self, k, meta.get(k, getattr(self, k)))
+        self.build()
 
-    def _rewrite_store(self, path: Path, part_col: str, old_filtered,
-                       changed_ids, new_rows, sort_col: str) -> None:
-        """Rewrite one store's affected partitions: old rows minus every
-        changed id, plus the new rows. Dynamic overwrite skips emptied
-        partitions, so those are cleared explicitly. Keeps the build
-        layout contract: hash-sorted within prefix + parquet bloom, so
-        refreshed partitions stay probe-pushdown-prunable."""
-        keep = old_filtered.join(changed_ids, on="id", how="left_anti")
-        out = keep.unionByName(new_rows).localCheckpoint(eager=True)
-        (_parquet_writer(out.repartition(part_col)
-                         .sortWithinPartitions(sort_col), "overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .option(f"parquet.bloom.filter.enabled#{sort_col}", "true")
-         .partitionBy(part_col).parquet(str(path)))
-        self.spark.catalog.refreshByPath(str(path))
-        return out
-
-    def refresh(self) -> dict:
-        """Catch up to the table head: only the prefix partitions holding
-        changed fingerprints are rewritten."""
-        meta = self._meta()
-        head = self.table.timeline.latest()
-        if head is None or head.commit_id == meta["indexed_commit"]:
-            return {"refreshed": False, "partitions_rewritten": 0}
-        feed = self.table.change_feed(meta["indexed_commit"], head.commit_id)
-        # ONE fingerprint pass over the feed (MinHash is the expensive
-        # leg): pre-images and post-images are disjoint row sets, so a
-        # gone/add marker carried through the pass splits them afterwards
-        # — two filtered passes computed every salted hash twice.
-        gone_col = F.col("_change_type").isin("delete", "update_preimage")
-        fp_all = self._fingerprints(
-            feed, extra_cols=[gone_col.alias("__ghs_gone__")]).persist()
-        # gone fingerprints only feed the prefix sets and the changed-id
-        # set (both taken from fp_all whole); the rewrites add back the
-        # POST-image rows only
-        add_fp = fp_all.filter(~F.col("__ghs_gone__")).drop("__ghs_gone__")
-        changed_ids = None
-        try:
-            changed_ids = (fp_all.select("id").distinct()
-                           .localCheckpoint(eager=True))
-            # both stores' touched prefixes in ONE cached aggregate
-            # (every fingerprint row carries h AND band_hash — the
-            # prefix SETS equal the four distinct-collects this folds)
-            prow = fp_all.agg(
-                F.collect_set(self._pfx(F.col("h"))).alias("hp"),
-                F.collect_set(self._pfx(F.col("band_hash"))).alias("bp"),
-            ).first()
-            hps = sorted(prow["hp"])
-            bps = sorted(prow["bp"])
-            n_parts = 0
-            if hps:
-                self.spark.catalog.refreshByPath(str(self.exact_store))
-                old = (self.spark.read.parquet(str(self.exact_store))
-                       .filter(F.col("hp").isin(hps)))
-                out = self._rewrite_store(
-                    self.exact_store, "hp", old, changed_ids,
-                    self._exact_rows(add_fp), sort_col="h")
-                still = {r["hp"] for r in
-                         out.select("hp").distinct().collect()}
-                release_checkpoint(out)  # write + collect both done
-                for p in hps:
-                    if p not in still:
-                        d = self.exact_store / f"hp={p}"
-                        if d.is_dir():
-                            shutil.rmtree(d)
-                n_parts += len(hps)
-            if bps:
-                self.spark.catalog.refreshByPath(str(self.bands_store))
-                old = (self.spark.read.parquet(str(self.bands_store))
-                       .filter(F.col("bp").isin(bps)))
-                out = self._rewrite_store(
-                    self.bands_store, "bp", old, changed_ids,
-                    self._band_rows(add_fp), sort_col="band_hash")
-                still = {r["bp"] for r in
-                         out.select("bp").distinct().collect()}
-                release_checkpoint(out)  # write + collect both done
-                for p in bps:
-                    if p not in still:
-                        d = self.bands_store / f"bp={p}"
-                        if d.is_dir():
-                            shutil.rmtree(d)
-                n_parts += len(bps)
-        finally:
-            fp_all.unpersist()
-            # both store rewrites have consumed the changed-id set
-            if changed_ids is not None:
-                release_checkpoint(changed_ids)
-        meta["indexed_commit"] = head.commit_id
-        self._write_meta(meta)
-        return {"refreshed": True, "partitions_rewritten": n_parts}
+    def _ops(self, feed: DataFrame, meta: dict) -> DataFrame:
+        gone = F.col("_change_type").isin("delete", "update_preimage")
+        return self._rows(feed, F.when(gone, "D").otherwise("U").alias("op"))
 
     # ----------------------------------------------------------------- probe
 
@@ -348,74 +231,44 @@ class DedupIndex:
             == bdf["__ghs_bb__"],
             how="left_semi")
 
-    def _pushed_store_read(self, path: Path, part_col: str,
-                           hash_col: str, batch_rows: DataFrame,
-                           select_cols: list,
-                           empty_as_none: bool = False):
-        """Read one fingerprint store pruned for a probe batch.
+    def _store_read(self, store: NativeTable, pin: int, rows: DataFrame,
+                    kind: str) -> DataFrame | None:
+        """The ``kind`` rows of the pinned store snapshot ``pin`` that the
+        batch's store ``rows`` can match — None when the batch has none.
 
-        Fast path (opt-in, ``probe_pushdown_max`` > 0 and at most that
-        many distinct batch hashes):
-        collect the hash set, derive the partition prefixes driver-side
-        (no second job), and push BOTH ``part_col IN (prefixes)``
-        (partition pruning) and ``hash_col IN (hashes)`` into the scan.
-        The stores are hash-sorted within each prefix and carry parquet
-        bloom filters on the hash column, so the pushed In skips row
-        groups by stats/bloom — the scan cost tracks the batch, not the
-        touched prefixes. Spark folds In lists past
-        ``spark.sql.parquet.pushdown.inFilterThreshold`` into a useless
-        min/max range for uniform hashes, so the threshold is raised
-        for the scan's own execution (the eager localCheckpoint runs it
-        inside the conf scope); the result is batch-bounded by
-        construction. Slow path (bigger batches — bulk backfills):
-        the original lazy prefix-pruned read, no driver hash set.
+        Plain path: only the partitions of the batch's own hash prefixes
+        are read (``read_by_values`` drops every other file by its ``p``
+        stats before Spark lists it).
 
-        Middle path (opt-in, ``probe_bloom_max`` > 0): batches past the
-        In ceiling but within the bloom cap get a Bloom-bucket
-        pre-filter applied as a broadcast LEFT SEMI join over the
-        prefix-pruned scan (:meth:`_bloom_semi_filter`) — store rows
-        whose hash is in the batch always pass (same bucket expression
-        on both sides, no false negatives), so downstream exact joins
-        are unchanged; the store-side shuffle drops to O(batch + false
-        positives) instead of every scanned row. The scan I/O itself
-        stays prefix-pruned only (a bucket-of-hash expression is not
-        parquet-pushable — that is the In path's job)."""
+        Opt-in paths, for batches with at most ``probe_pushdown_max`` /
+        ``probe_bloom_max`` distinct hashes: the hash set is collected
+        and the prefixes derived from it driver-side (no second job).
+        Within the pushdown cap the hash set itself joins the read, so
+        the bloom sidecars drop prefix files holding none of the batch's
+        hashes; within the bloom cap the prefix-pruned read gets a
+        Bloom-bucket pre-filter (:meth:`_bloom_semi_filter`) — store rows
+        whose hash is in the batch always pass, so downstream exact joins
+        are unchanged, and the store-side shuffle drops to O(batch +
+        false positives)."""
+        rows = rows.filter(F.col("kind") == kind)
         cap = max(self.probe_pushdown_max, self.probe_bloom_max)
+        hs = None
         if cap > 0:
-            hs = [r[hash_col] for r in
-                  batch_rows.select(hash_col).distinct()
+            hs = [r["hash"] for r in rows.select("hash").distinct()
                   .limit(cap + 1).collect()]
-            if len(hs) <= cap:
-                if empty_as_none and not hs:
-                    return None
-                self.spark.catalog.refreshByPath(str(path))
-                store = self.spark.read.parquet(str(path))
-                pfx = sorted({h[:self.prefix_len] for h in hs})
-                if (self.probe_pushdown_max > 0
-                        and len(hs) <= self.probe_pushdown_max):
-                    conf = self.spark.conf
-                    key = "spark.sql.parquet.pushdown.inFilterThreshold"
-                    prev = conf.get(key, None)
-                    conf.set(key, str(len(hs) + 1))
-                    try:
-                        return (store.filter(in_values(part_col, pfx)
-                                             & in_values(hash_col, hs))
-                                .select(*select_cols)
-                                .localCheckpoint(eager=True))
-                    finally:
-                        (conf.set(key, prev) if prev is not None
-                         else conf.unset(key))
-                return (self._bloom_semi_filter(
-                            store.filter(F.col(part_col).isin(pfx)),
-                            hash_col, hs)
-                        .select(*select_cols))
-        pfx = sorted({r[part_col] for r in
-                      batch_rows.select(part_col).distinct().collect()})
-        if empty_as_none and not pfx:
+            hs = hs if len(hs) <= cap else None
+        pfx = (sorted({h[:self.prefix_len] for h in hs}) if hs is not None
+               else sorted(r["p"] for r in
+                           rows.select("p").distinct().collect()))
+        if not pfx:
             return None
-        self.spark.catalog.refreshByPath(str(path))
-        store = self.spark.read.parquet(str(path))
-        return store.filter(F.col(part_col).isin(pfx)).select(*select_cols)
+        probes = {"kind": [kind], "p": pfx}
+        if hs is not None and len(hs) <= self.probe_pushdown_max:
+            probes["hash"] = hs
+        read = store.read_by_values(probes, as_of=pin)
+        if hs is None or "hash" in probes:
+            return read
+        return self._bloom_semi_filter(read, "hash", hs)
 
     def probe(self, batch: DataFrame, verify_threshold: float = 0.5,
               max_candidates: int = 100_000,
@@ -427,46 +280,29 @@ class DedupIndex:
         candidate-bounded read), and in-batch exact duplicates (min-id
         keeper). Store reads are PREFIX-PRUNED to the batch's own hash
         prefixes, so a small batch reads a small fraction of the
-        fingerprints. Candidate corpus ids are collected to drive the
-        pruned lookup — bounded by ``max_candidates``."""
-        meta = self._meta()
-        head = self.table.timeline.latest()
-        if (not allow_stale and head is not None
-                and head.commit_id != meta["indexed_commit"]):
-            raise StaleIndexError(
-                f"dedup index at {self.root} is at commit "
-                f"{meta['indexed_commit']} but the table head is "
-                f"{head.commit_id}; refresh() or pass allow_stale=True")
-        fp = self._fingerprints(batch).persist()
+        fingerprints, all from the one store snapshot pinned here.
+        Candidate corpus ids are collected to drive the pruned lookup —
+        bounded by ``max_candidates``."""
+        store, pin, _ = self._pinned(allow_stale)
+        rows = self._rows(batch).persist()
         try:
-            # exact: prune the store to the batch's hash prefixes; with
-            # probe_pushdown_max set, small (micro-batch-shaped) batches
-            # additionally push the hash SET into the scan — the store
-            # files are hash-sorted with parquet bloom filters, so
-            # In(h, ...) skips row groups holding none of the batch's
-            # hashes (the scan reads O(batch) row groups, not the whole
-            # touched prefix)
-            seen_h = self._pushed_store_read(
-                self.exact_store, "hp", "h",
-                self._exact_rows(fp), ["h"])
-            fresh = fp.join(seen_h, on="h", how="left_anti")
+            fresh = rows.filter(F.col("kind") == "exact")
+            seen = self._store_read(store, pin, rows, "exact")
+            if seen is not None:
+                fresh = fresh.join(seen.select("hash"), on="hash",
+                                   how="left_anti")
             # in-batch exact keep-one (same min-id policy as exact_dedup)
-            keep = fresh.groupBy("h").agg(F.min("id").alias("id"))
-            fresh = fresh.join(keep, on=["h", "id"], how="left_semi")
+            surviving_ids = fresh.groupBy("hash").agg(
+                F.min("id").alias("id")).select("id")
             # near-dup candidates: band-collide the survivors against the
-            # batch's band-hash prefixes only (same value-pushdown fast
-            # path as the exact store, on band_hash)
-            store_bands = self._pushed_store_read(
-                self.bands_store, "bp", "band_hash",
-                self._band_rows(fresh),
-                ["id", "band", "band_hash"], empty_as_none=True)
-            surviving_ids = fresh.select("id").distinct()
+            # batch's band-hash prefixes only
+            store_bands = self._store_read(store, pin, rows, "band")
             if store_bands is not None:
-                cand = (fresh.select("id", "band", "band_hash")
+                cand = (rows.filter(F.col("kind") == "band")
+                        .join(surviving_ids, on="id", how="left_semi")
                         .join(store_bands.select(
-                            F.col("id").alias("corpus_id"),
-                            "band", "band_hash"),
-                            on=["band", "band_hash"])
+                            F.col("id").alias("corpus_id"), "band",
+                            "hash"), on=["band", "hash"])
                         .select("id", "corpus_id").distinct())
                 corpus_ids = [r["corpus_id"] for r in
                               cand.select("corpus_id").distinct()
@@ -501,10 +337,10 @@ class DedupIndex:
                         dup_ids, on="id", how="left_anti")
             # materialize the novel-id set EXECUTOR-side (it is
             # batch-sized — never collect it to the driver) so the
-            # fingerprint persist can be released before returning
+            # store-row persist can be released before returning
             out_ids = surviving_ids.localCheckpoint(eager=True)
         finally:
-            fp.unpersist()
+            rows.unpersist()
         return batch.join(
             out_ids.withColumnRenamed("id", self.id_col),
             on=self.id_col, how="left_semi")

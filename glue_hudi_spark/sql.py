@@ -69,6 +69,8 @@ from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from glue_hudi_spark.operators.dedup_index import DedupIndex
+from glue_hudi_spark.operators.vector_index import VectorIndex
 from glue_hudi_spark.storage.native import NativeTable
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*|`[^`]+`"
@@ -236,9 +238,58 @@ def _rel_name(node) -> str:
 
 
 def _refs(plan) -> set[str]:
-    """Lower-cased names of all a parsed query reads (CTE names too)."""
-    return {_rel_name(r).lower() for r in _relations(plan)
-            if _kind(r) != _TVF}
+    """Lower-cased names of all a parsed query reads (CTE names too),
+    the tables and views an engine TVF call reads included."""
+    out = set()
+    for r in _relations(plan):
+        if _kind(r) != _TVF:
+            out.add(_rel_name(r).lower())
+        elif (call := _tvf_call(r)) is not None:
+            out |= {_unq(v).lower() for k, v in call[1].items()
+                    if k in _TVF_SOURCES and v}
+    return out
+
+
+# The engine's read TVFs, each bound as a deterministic temp view plain
+# SQL composes over (WHERE/JOIN), from its literal arguments: name ->
+# parameters as (name, literal type[, default]). An optional parameter
+# the next argument's type does not fit takes its default, so
+# ``dedup_probe('t', 'b', 'allow_stale')`` skips the threshold.
+_TVFS = {
+    "table_changes": (("name", str), ("start", (int, str)),
+                      ("end", (int, str), None)),
+    "time_bucket_gapfill": (("src", str), ("unit", str), ("ts", str),
+                            ("keys", str), ("aggs", str), ("opts", str, "")),
+    "lttb": (("src", str), ("ts", str), ("val", str), ("n", int),
+             ("keys", str, ""), ("pack", int, None)),
+    "dedup_probe": (("tbl", str), ("batch", str),
+                    ("thr", (int, float), 0.5), ("opts", str, "")),
+    "vector_search": (("tbl", str), ("q", str), ("k", int, 10),
+                      ("nprobe", int, 1), ("col", str, None)),
+}
+#: the TVF parameters that name a table or view the call reads
+_TVF_SOURCES = ("name", "src", "tbl", "batch", "q")
+
+
+def _tvf_call(node) -> tuple[str, dict] | None:
+    """``(name, {parameter: value})`` of a parsed engine TVF call, bound
+    from its literal arguments; None for one of Spark's own TVFs."""
+    fn = ".".join(_seq(node.name())).lower()
+    if fn not in _TVFS:
+        return None
+    sig = _TVFS[fn]
+    given = [_literal(x) for x in _seq(node.functionArgs())]
+    vals, kw = list(given), {}
+    for name, typ, *default in sig:
+        if vals and isinstance(vals[0], typ):
+            kw[name] = vals.pop(0)
+        elif default:
+            kw[name] = default[0]
+    if vals or len(kw) < len(sig):
+        params = ", ".join(p[0] + "?" * (len(p) > 2) for p in sig)
+        raise ValueError(f"ghs.sql: {fn}: cannot bind arguments "
+                         f"{given} to {fn}({params})")
+    return fn, kw
 
 
 def _query_start(s: str, plan) -> int:
@@ -651,6 +702,9 @@ class GhsSql:
                         self.spark.sql(self._bind(q, plan)[0]
                                        ).createOrReplaceTempView(vname)
                     except Exception as e:
+                        # replan it on the next read too: a view over a
+                        # stale index's probe heals by REFRESH INDEX
+                        self._views_pending.add(vname)
                         raise ValueError(
                             f"ghs.sql: stored view {vname!r} failed to "
                             f"bind against the current catalog ({e}) — "
@@ -683,10 +737,10 @@ class GhsSql:
         subs, names = [], set()
         for rel in _relations(plan):
             if _kind(rel) == _TVF:
-                fn = ".".join(_seq(rel.name())).lower()
-                if fn in self._TVFS:
-                    subs.append(self._bind_tvf(s, rel, fn))
-                continue  # else one of Spark's own TVFs
+                call = _tvf_call(rel)
+                if call is not None:  # else one of Spark's own TVFs
+                    subs.append(self._bind_tvf(s, rel, *call))
+                continue
             name = _rel_name(rel)
             t = self.tables.get(name)
             if _kind(rel) == "UnresolvedRelation":
@@ -706,44 +760,14 @@ class GhsSql:
             subs.append((_span(rel.relation())[0], _span(rel)[1], alias))
         return _splice(s, a, b or len(s), subs), names
 
-    # The engine's read TVFs, each bound as a deterministic temp view
-    # plain SQL composes over (WHERE/JOIN), from its literal arguments:
-    # name -> parameters as (name, literal type[, default]). An optional
-    # parameter the next argument's type does not fit takes its default,
-    # so ``dedup_probe('t', 'b', 'allow_stale')`` skips the threshold.
-    _TVFS = {
-        "table_changes": (("name", str), ("start", (int, str)),
-                          ("end", (int, str), None)),
-        "time_bucket_gapfill": (("src", str), ("unit", str), ("ts", str),
-                                ("keys", str), ("aggs", str),
-                                ("opts", str, "")),
-        "lttb": (("src", str), ("ts", str), ("val", str), ("n", int),
-                 ("keys", str, ""), ("pack", int, None)),
-        "dedup_probe": (("tbl", str), ("batch", str),
-                        ("thr", (int, float), 0.5), ("opts", str, "")),
-        "vector_search": (("tbl", str), ("q", str), ("k", int, 10),
-                          ("nprobe", int, 1), ("col", str, None)),
-    }
-
-    def _bind_tvf(self, s: str, node, fn: str) -> tuple[int, int, str]:
-        """Bind the engine TVF call ``node`` (of ``fn``): the call's
-        ``(start, stop)`` in ``s`` — its node spans a trailing alias too,
-        so the call ends at the ``)`` after its last argument — and the
-        name of the view bound for it."""
-        args, sig = _seq(node.functionArgs()), self._TVFS[fn]
-        given = [_literal(x) for x in args]
-        vals, kw = list(given), {}
-        for name, typ, *default in sig:
-            if vals and isinstance(vals[0], typ):
-                kw[name] = vals.pop(0)
-            elif default:
-                kw[name] = default[0]
-        if vals or len(kw) < len(sig):
-            params = ", ".join(p[0] + "?" * (len(p) > 2) for p in sig)
-            raise ValueError(f"ghs.sql: {fn}: cannot bind arguments "
-                             f"{given} to {fn}({params})")
+    def _bind_tvf(self, s: str, node, fn: str,
+                  kw: dict) -> tuple[int, int, str]:
+        """Bind the engine TVF call ``node`` (of ``fn``, arguments ``kw``):
+        the call's ``(start, stop)`` in ``s`` — its node spans a trailing
+        alias too, so the call ends at the ``)`` after its last argument
+        — and the name of the view bound for it."""
         a = _span(node)[0]
-        b = s.index(")", _span(args[-1])[1]) + 1
+        b = s.index(")", _span(_seq(node.functionArgs())[-1])[1]) + 1
         return a, b, {
             "table_changes": self._table_changes,
             "time_bucket_gapfill": self._gapfill, "lttb": self._lttb,
@@ -884,10 +908,10 @@ class GhsSql:
     # (CREATE INDEX ... USING <type>); the reference itself configures
     # Hudi's record-key index through write options only
     # (processData.py:64-78), so SQL index DDL is the lakehouse-parity
-    # extension. Index state lives ON DISK next to the table
-    # (_index/dedup/meta.json, _index/ivf/<col>/meta.json), so every
-    # statement here re-binds from the meta — indexes survive sessions
-    # and SHOW INDEXES needs no session registry.
+    # extension. Each index keeps its state on disk next to the table, in
+    # its own store, so every statement here re-binds through the index
+    # classes' open/exists/status/drop — indexes survive sessions and
+    # SHOW INDEXES needs no session registry.
 
     _CREATE_INDEX = re.compile(
         rf"^CREATE\s+(?P<kind>DEDUP|VECTOR)\s+INDEX\s+"
@@ -930,39 +954,24 @@ class GhsSql:
             out[k] = allowed[k](_unq(v))
         return out
 
-    def _dedup_index(self, t: NativeTable):
-        """Re-bind the table's persisted dedup index from its on-disk
-        meta (None if never created)."""
-        from glue_hudi_spark.operators.dedup_index import DedupIndex
+    def _dedup_index(self, m: "re.Match[str]") -> DedupIndex:
+        """The dedup index of the statement's table (on its named column,
+        when it names one)."""
+        ix = DedupIndex.open(self._target(m.group("name")))
+        if ix is None:
+            raise ValueError(
+                f"ghs.sql: table {_unq(m.group('name'))!r} has no DEDUP "
+                "INDEX — CREATE DEDUP INDEX first")
+        if m.group("col") and _unq(m.group("col")) != ix.text_col:
+            raise ValueError(
+                f"ghs.sql: the DEDUP INDEX is on "
+                f"{ix.text_col!r}, not {_unq(m.group('col'))!r}")
+        return ix
 
-        meta_p = Path(t.root) / "_index" / "dedup" / "meta.json"
-        if not meta_p.exists():
-            return None
-        meta = json.loads(meta_p.read_text())
-        return DedupIndex(
-            t, id_col=meta["id_col"], text_col=meta["text_col"],
-            n=meta["n"], num_hashes=meta["num_hashes"],
-            bands=meta["bands"], prefix_len=meta["prefix_len"],
-            probe_pushdown_max=meta.get("probe_pushdown_max", 0),
-            probe_bloom_max=meta.get("probe_bloom_max", 0))
-
-    def _vector_indexes(self, t: NativeTable) -> list:
-        """All persisted IVF indexes on the table (one per vector
-        column), re-bound from their on-disk meta."""
-        from glue_hudi_spark.operators.vector_index import VectorIndex
-
-        base = Path(t.root) / "_index" / "ivf"
-        out = []
-        if base.is_dir():
-            for d in sorted(base.iterdir()):
-                ix = VectorIndex(t, vec_col=d.name)
-                if ix.exists():
-                    out.append(ix)
-        return out
-
-    def _one_vector_index(self, t: NativeTable, col: str | None,
-                          who: str):
-        ixs = self._vector_indexes(t)
+    @staticmethod
+    def _one_vector_index(t: NativeTable, col: str | None,
+                          who: str) -> VectorIndex:
+        ixs = VectorIndex.open_all(t)
         if col:
             for ix in ixs:
                 if ix.vec_col == _unq(col):
@@ -979,6 +988,13 @@ class GhsSql:
                 f"ghs.sql: {who}: table has VECTOR INDEXes on "
                 f"{[i.vec_col for i in ixs]} — name the column")
         return ixs[0]
+
+    def _index(self, m: "re.Match[str]", who: str):
+        """The index a REFRESH or DROP statement names."""
+        if m.group("kind").upper() == "DEDUP":
+            return self._dedup_index(m)
+        return self._one_vector_index(
+            self._target(m.group("name")), m.group("col"), who)
 
     def _no_txn_index(self, verb: str) -> None:
         if self._txn is not None:
@@ -1004,117 +1020,56 @@ class GhsSql:
                     "ghs.sql: CREATE DEDUP INDEX needs OPTIONS "
                     "(id_col = <numeric id column>) — probe results "
                     "key on it")
-            if self._dedup_index(t) is not None:
-                if m.group("ine"):
-                    return None
+            ix, build = DedupIndex(t, text_col=col, **opts), {}
+        else:
+            build = self._index_opts(
+                m.group("opts"), "CREATE VECTOR INDEX",
+                {"id_col": str, "n_centroids": int, "train_iters": int})
+            if "id_col" not in build:
                 raise ValueError(
-                    f"ghs.sql: table {_unq(m.group('name'))!r} already "
-                    "has a DEDUP INDEX — DROP DEDUP INDEX first")
-            from glue_hudi_spark.operators.dedup_index import DedupIndex
-
-            DedupIndex(t, text_col=col, **opts).build()
-            return None
-        opts = self._index_opts(
-            m.group("opts"), "CREATE VECTOR INDEX",
-            {"id_col": str, "n_centroids": int, "train_iters": int})
-        id_col = opts.pop("id_col", None)
-        if id_col is None:
-            raise ValueError(
-                "ghs.sql: CREATE VECTOR INDEX needs OPTIONS "
-                "(id_col = <numeric id column>)")
-        from glue_hudi_spark.operators.vector_index import VectorIndex
-
-        ix = VectorIndex(t, vec_col=col)
+                    "ghs.sql: CREATE VECTOR INDEX needs OPTIONS "
+                    "(id_col = <numeric id column>)")
+            ix = VectorIndex(t, vec_col=col)
         if ix.exists():
             if m.group("ine"):
                 return None
             raise ValueError(
-                f"ghs.sql: table {_unq(m.group('name'))!r} already has "
-                f"a VECTOR INDEX on {col!r} — DROP VECTOR INDEX first")
-        ix.build(id_col=id_col, **opts)
+                f"ghs.sql: table {_unq(m.group('name'))!r} already has a "
+                f"{kind} INDEX"
+                + (f" on {col!r}" if kind == "VECTOR" else "")
+                + f" — DROP {kind} INDEX first")
+        ix.build(**build)
         return None
 
     def _refresh_index(self, m: "re.Match[str]") -> None:
         self._no_txn_index("REFRESH INDEX")
-        t = self._target(m.group("name"))
-        if m.group("kind").upper() == "DEDUP":
-            ix = self._dedup_index(t)
-            if ix is None:
-                raise ValueError(
-                    f"ghs.sql: table {_unq(m.group('name'))!r} has no "
-                    "DEDUP INDEX — CREATE DEDUP INDEX first")
-            if m.group("col") and _unq(m.group("col")) != ix.text_col:
-                raise ValueError(
-                    f"ghs.sql: the DEDUP INDEX is on "
-                    f"{ix.text_col!r}, not {_unq(m.group('col'))!r}")
-        else:
-            ix = self._one_vector_index(
-                t, m.group("col"), "REFRESH VECTOR INDEX")
-        ix.refresh()
+        self._index(m, f"REFRESH {m.group('kind').upper()} INDEX").refresh()
         return None
 
     def _drop_index(self, m: "re.Match[str]") -> None:
-        import shutil
-
         self._no_txn_index("DROP INDEX")
-        t = self._target(m.group("name"))
-        kind = m.group("kind").upper()
-        if kind == "DEDUP":
-            root = Path(t.root) / "_index" / "dedup"
-            ix = self._dedup_index(t)
-            if ix is None:
-                if m.group("ie"):
-                    return None
-                raise ValueError(
-                    f"ghs.sql: table {_unq(m.group('name'))!r} has no "
-                    "DEDUP INDEX")
-            if m.group("col") and _unq(m.group("col")) != ix.text_col:
-                raise ValueError(
-                    f"ghs.sql: the DEDUP INDEX is on "
-                    f"{ix.text_col!r}, not {_unq(m.group('col'))!r}")
-        else:
-            try:
-                ix = self._one_vector_index(
-                    t, m.group("col"), "DROP VECTOR INDEX")
-            except ValueError:
-                if m.group("ie"):
-                    return None
-                raise
-            root = ix.root
-        shutil.rmtree(root, ignore_errors=True)
+        try:
+            ix = self._index(m, f"DROP {m.group('kind').upper()} INDEX")
+        except ValueError:
+            if m.group("ie"):
+                return None
+            raise
+        ix.drop()
         return None
 
     def _show_indexes(self, m: "re.Match[str]") -> DataFrame:
         t = self._table(m.group("name"))
-        head = t.timeline.latest()
+        found = [("ivf", vx.vec_col, vx) for vx in VectorIndex.open_all(t)]
+        dx = DedupIndex.open(t)
+        if dx is not None:
+            found.insert(0, ("dedup", dx.text_col, dx))
         rows = []
-        ix = self._dedup_index(t)
-        if ix is not None:
-            meta = json.loads((ix.root / "meta.json").read_text())
-            shown = {k: meta[k] for k in
-                     ("id_col", "n", "num_hashes", "bands",
-                      "prefix_len")}
-            shown.update({k: meta[k] for k in
-                          ("probe_pushdown_max", "probe_bloom_max")
-                          if meta.get(k)})
-            rows.append(
-                ("dedup", meta["text_col"],
-                 json.dumps(shown, sort_keys=True),
-                 meta["indexed_commit"],
-                 head is not None
-                 and head.commit_id != meta["indexed_commit"]))
-        for vx in self._vector_indexes(t):
-            st = vx.status()
-            meta = json.loads((vx.root / "meta.json").read_text())
-            rows.append(
-                ("ivf", vx.vec_col,
-                 json.dumps({"id_col": meta["id_col"],
-                             "n_centroids": meta["n_centroids"],
-                             "train_iters": meta["train_iters"]},
-                            sort_keys=True),
-                 meta["indexed_commit"], bool(st.get("stale"))))
+        for kind, col, ix in found:
+            st = ix.status()
+            rows.append((kind, col, json.dumps(st["options"], sort_keys=True),
+                         st["indexed_commit"], st["stale"]))
         return self.spark.createDataFrame(
-            rows or [],
+            rows,
             "kind string, column string, options string, "
             "indexed_commit string, stale boolean")
 
@@ -1122,7 +1077,7 @@ class GhsSql:
                      opts: str) -> str:
         """``dedup_probe('t', 'batch'[, threshold][, 'allow_stale'])``:
         the batch rows that are NOVEL against t's dedup index."""
-        ix = self._dedup_index(self._table(tbl))
+        ix = DedupIndex.open(self._table(tbl))
         if ix is None:
             raise ValueError(
                 f"ghs.sql: dedup_probe: table {_unq(tbl)!r} has no DEDUP "

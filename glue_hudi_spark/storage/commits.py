@@ -742,8 +742,10 @@ class CommitTimeline:
                     for sc in base.parent.glob(base.name + ".*"):
                         sc.unlink()
             p.unlink()
-        # prune empty partition/commit/index dirs left behind
-        for sub in (DATA_DIR, "_index", "_changes", "_dv"):
+        # prune empty partition/commit/sidecar dirs left behind; of
+        # ``_index`` only the bloom sidecars are the table's own (the
+        # secondary indexes keep their stores, tables themselves, there)
+        for sub in (DATA_DIR, "_index/bloom", "_changes", "_dv"):
             sub_root = self.root / sub
             if sub_root.is_dir():
                 for dirpath, dirnames, filenames in os.walk(sub_root, topdown=False):

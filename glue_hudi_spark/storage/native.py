@@ -4047,13 +4047,16 @@ class NativeTable:
                 keyed, allowMissingColumns=True),
             parallelism=parallelism, extra_stats=extra_stats)
 
-    def _write_tombstones(self, keyed: DataFrame) -> list[str]:
+    def _write_tombstones(self, keyed: DataFrame,
+                          distinct: bool = False) -> list[str]:
         """Land the delete batch's KEY PROJECTION as parquet under
         ``_changes/<uid>/`` and return the rel paths, for the publishing
         commit's ``tombstones`` manifest field. Executor-side Spark
         write — key bytes never stage on the driver. Paths carry no
         commit id, so an OCC rebase reuses them untouched (the loser's
-        delete intent is unchanged by the winner's files)."""
+        delete intent is unchanged by the winner's files). ``distinct``:
+        the caller knows the record keys distinct, so the dedup shuffle
+        (a Spark job of its own) is skipped."""
         if not self.change_feed_deletes:
             return []
         import uuid as _uuid
@@ -4062,8 +4065,10 @@ class NativeTable:
         out_dir = self.root / CHANGES_DIR / uid
         cols = [RECORD_KEY_COL] + [
             k for k in self.record_keys if k != RECORD_KEY_COL]
-        _parquet_writer(keyed.select(*cols).dropDuplicates([RECORD_KEY_COL]),
-                        "overwrite").parquet(str(out_dir))
+        keys = keyed.select(*cols)
+        if not distinct:
+            keys = keys.dropDuplicates([RECORD_KEY_COL])
+        _parquet_writer(keys, "overwrite").parquet(str(out_dir))
         return sorted(
             str(p.relative_to(self.root))
             for p in out_dir.glob("*.parquet"))
@@ -4478,8 +4483,9 @@ class NativeTable:
                     if keys is None else _without_keys(existing, keys))
             merged = output(kept, existing, keyed)
             gone = tombstones(keyed) if tombstones else None
+            # keyed holds distinct keys: the held probe's, or deduped
             written = ([] if gone is None else self._drop_on_error(
-                stack, self._write_tombstones(gone)))
+                stack, self._write_tombstones(gone, distinct=True)))
             # the anti-join fronts the record-key column; restore the
             # stored schema's order (plus evolved columns at the end) so
             # the schema is stable commit-over-commit — catalog sync's
@@ -5021,7 +5027,7 @@ class NativeTable:
         has_dels = op == "d" or op_col is not None
         with ExitStack() as stack:
             tombstones = (self._drop_on_error(stack, self._write_tombstones(
-                keyed.filter(F.col(DELTA_OP_COL) == "d")))
+                keyed.filter(F.col(DELTA_OP_COL) == "d"), distinct=True))
                 if has_dels and self.change_feed_deletes else [])
             files = self._write_files(keyed, cid, build_blooms=False)
             if prev is None:

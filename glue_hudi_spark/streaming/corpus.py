@@ -110,8 +110,7 @@ class CorpusIngestStream:
 
             ix = DedupIndex(self.table, id_col=self.id_col,
                             text_col=self.text_col)
-        if self.table.exists() and ix is not None \
-                and ix._meta_path().exists():
+        if self.table.exists() and ix is not None and ix.exists():
             ix.refresh()  # no-op when current; heals a post-commit crash
             fresh = ix.probe(batch_df,
                              verify_threshold=self.near_dup_threshold)
@@ -140,7 +139,7 @@ class CorpusIngestStream:
             return
         self.table.bulk_insert(fresh, extra_stats=marker)
         if ix is not None:
-            if ix._meta_path().exists():
+            if ix.exists():
                 ix.refresh()
             else:
                 ix.build()

@@ -1049,10 +1049,10 @@ def main_dedup_bloom() -> None:
             t0 = time.perf_counter()
             novel = ix.probe(batch).count()
             sec = time.perf_counter() - t0
-            fp = ix._fingerprints(batch)
-            joined = ix._pushed_store_read(
-                ix.exact_store, "hp", "h", ix._exact_rows(fp),
-                ["h"]).count()
+            store = ix.store()
+            joined = ix._store_read(
+                store, store.timeline.latest().commit_id,
+                ix._rows(batch), "exact").count()
             probe(f"dedup_bloom_probe_{label}_20k_batch", sec,
                   novel=novel, exact_rows_into_join=joined)
         # non-indexed arrival dedup, same corpus/batch: the corpus-side

@@ -30,10 +30,22 @@ def pytest_collection_modifyitems(config, items):
     slow = _full_profile_ids()
     if not slow:
         return
+    # nodeid: tests/test_x.py::test_y[param] -> test_x.py::test_y[param]
+    collected = {item.nodeid.split("/")[-1] for item in items}
+    # an entry naming no collected test of a wholly collected file is
+    # stale (a renamed or removed test would silently leave the profile);
+    # a file named with ``::`` on the command line is collected in part
+    partial = {a.split("::")[0].split("/")[-1]
+               for a in config.args if "::" in a}
+    files = {c.split("::")[0] for c in collected} - partial
+    stale = sorted(e for e in slow
+                   if e.split("::")[0] in files and e not in collected)
+    if stale:
+        raise pytest.UsageError(
+            "tests/full_profile.txt names tests that were not collected: "
+            + ", ".join(stale))
     for item in items:
-        # nodeid: tests/test_x.py::test_y[param] -> test_x.py::test_y[param]
-        short = item.nodeid.split("/")[-1]
-        if short in slow:
+        if item.nodeid.split("/")[-1] in slow:
             item.add_marker(pytest.mark.full)
 
 

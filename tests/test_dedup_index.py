@@ -84,9 +84,7 @@ def test_refresh_handles_deletes(spark, tmp_path):
     batch = spark.createDataFrame(
         [dict(doc_id=7007, text=doomed["text"])])
     assert ix.probe(batch).count() == 1
-    for store in (ix.exact_store, ix.bands_store):
-        assert spark.read.parquet(str(store)).filter(
-            "id = 7").count() == 0
+    assert ix.store().read_snapshot().filter("id = 7").count() == 0
 
 
 def test_refresh_noop(spark, tmp_path):
@@ -100,10 +98,10 @@ def test_store_never_holds_text(spark, tmp_path):
     t = _mk(spark, tmp_path / "t")
     ix = DedupIndex(t, id_col="doc_id")
     ix.build()
-    assert set(spark.read.parquet(str(ix.exact_store)).columns) == \
-        {"id", "h", "hp"}
-    assert set(spark.read.parquet(str(ix.bands_store)).columns) == \
-        {"id", "band", "band_hash", "bp"}
+    store = ix.store().read_snapshot()
+    assert set(store.columns) == {"kind", "p", "id", "band", "hash"}
+    assert {r.kind for r in store.select("kind").distinct().collect()} == \
+        {"exact", "band"}
 
 
 def test_probe_store_reads_are_prefix_pruned(spark, tmp_path):
@@ -119,18 +117,16 @@ def test_probe_store_reads_are_prefix_pruned(spark, tmp_path):
     from glue_hudi_spark.operators.dedup import normalized_text
     hp = batch.select(F.substring(F.md5(
         normalized_text("text")), 1, 1).alias("p")).collect()[0]["p"]
-    exact_dirs = {d.name for d in ix.exact_store.iterdir()
-                  if d.name.startswith("hp=")}
+    store = ix.store()
+    head = store.timeline.latest()
+    exact_files = [f for f in head.files if "_pp_kind=exact" in f]
     # the store HAS many prefixes; the probe read needs exactly one —
-    # assert the scan plan carries the non-empty partition filter
-    assert len(exact_dirs) > 4
-    pruned = (spark.read.parquet(str(ix.exact_store))
-              .filter(F.col("hp").isin([hp])).select("h"))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    scans = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert scans
-    pf = scans[0].split("PartitionFilters: ")[1]
-    assert not pf.startswith("[]") and "hp" in pf.split("]")[0], pf
+    # assert the read lists that prefix's files only
+    assert len(exact_files) > 4
+    read = ix._store_read(store, head.commit_id, ix._rows(batch), "exact")
+    listed = read.inputFiles()
+    assert listed and all(f"/_pp_kind=exact/_pp_p={hp}/" in f
+                          for f in listed), listed
 
 
 def test_probe_pushdown_path_matches_join_path(spark, tmp_path):
@@ -151,26 +147,26 @@ def test_probe_pushdown_path_matches_join_path(spark, tmp_path):
         dict(doc_id=1007, text="duplicate pair payload words here now"),
     ])
     plain = DedupIndex(t, id_col="doc_id")
-    plain.build()  # writes the sorted+bloom store layout once
-    pushed = DedupIndex(t, id_col="doc_id", probe_pushdown_max=1000)
+    plain.build()
     want = sorted(r["doc_id"] for r in plain.probe(batch).collect())
+    pushed = DedupIndex(t, id_col="doc_id", probe_pushdown_max=1000)
     got = sorted(r["doc_id"] for r in pushed.probe(batch).collect())
-    assert got == want == [1005, 1006]
-    # the fast path's scan really pushes the hash set (the helper
-    # checkpoints its result, hiding the scan — replay its exact read
-    # expression under the same raised threshold and inspect the plan)
-    fp = pushed._fingerprints(batch)
-    hs = [r["h"] for r in pushed._exact_rows(fp).select("h")
-          .distinct().collect()]
-    key = "spark.sql.parquet.pushdown.inFilterThreshold"
-    spark.conf.set(key, str(len(hs) + 1))
-    try:
-        plan = (spark.read.parquet(str(pushed.exact_store))
-                .filter(F.col("h").isin(hs))
-                ._jdf.queryExecution().executedPlan().toString())
-    finally:
-        spark.conf.unset(key)
-    assert "In(h, [" in plan or "In(h,[" in plan, plan
+    pushed.build()  # the store gains bloom sidecars on its hashes
+    got_bloomed = sorted(r["doc_id"] for r in pushed.probe(batch).collect())
+    assert got == got_bloomed == want == [1005, 1006]
+    store = pushed.store()
+    head = store.timeline.latest()
+    assert all((store.root / "_index" / "bloom" / f"{f}.col.hash.bloom")
+               .is_file() for f in head.files)
+    # the fast path's read filters on the batch's hash set, and lists
+    # only files of the batch's own exact prefixes
+    rows = pushed._rows(batch)
+    read = pushed._store_read(store, head.commit_id, rows, "exact")
+    plan = read._jdf.queryExecution().executedPlan().toString()
+    assert "In(hash, [" in plan or "In(hash,[" in plan, plan
+    pfx = {r.p for r in rows.filter("kind = 'exact'").collect()}
+    assert all(any(f"/_pp_kind=exact/_pp_p={p}/" in f for p in pfx)
+               for f in read.inputFiles())
     # over-limit batch: silent fallback to the lazy join path
     tiny = DedupIndex(t, id_col="doc_id", probe_pushdown_max=1)
     got2 = sorted(r["doc_id"] for r in tiny.probe(batch).collect())
@@ -202,13 +198,13 @@ def test_probe_bloom_path_matches_join_path(spark, tmp_path):
     assert got == want == [1005, 1006]
     # the pre-filtered store read: only batch-matching rows (+ rare
     # false positives) survive, and the plan holds no Python stage
-    fp = bloom._fingerprints(batch)
-    read = bloom._pushed_store_read(
-        bloom.exact_store, "hp", "h", bloom._exact_rows(fp), ["h"])
+    store = bloom.store()
+    read = bloom._store_read(store, store.timeline.latest().commit_id,
+                             bloom._rows(batch), "exact")
     plan = read._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     survivors = read.count()
-    store_total = spark.read.parquet(str(bloom.exact_store)).count()
+    store_total = store.read_snapshot().filter("kind = 'exact'").count()
     # exactly one store hash is in the batch (doc 3's re-crawl); allow
     # a handful of false positives, but nothing near the full store
     assert 1 <= survivors <= 5 < store_total

@@ -326,6 +326,20 @@ def test_held_writes_start_no_job_before_their_write(spark, tmp_path,
     assert gone == {f"k{i:03d}" for i in [*range(50, 55), *range(10, 20, 2)]}
 
 
+def test_held_delete_writes_tombstones_without_a_dedup(spark, tmp_path,
+                                                      job_ids):
+    """A held delete's keys are known distinct: on a change-feed table it
+    runs its tombstone write and its data write, and no dedup shuffle."""
+    t = _date_table(spark, tmp_path / "t")
+    dels = _held_rows(spark, 50, 55).select("k", "dt")
+    before = job_ids()
+    c = t.delete(dels)
+    assert len(job_ids() - before) == 2
+    assert sorted(r.k for r in spark.read.parquet(
+        *[str(t.root / f) for f in c.tombstones]).collect()) == \
+        [f"k{i:03d}" for i in range(50, 55)]
+
+
 ODD_KEYS = ["it's", "back\\slash", "tab\there", "bell\x07", "new\nline",
             "plain"]
 

@@ -189,8 +189,7 @@ def test_operator_stores_are_zstd(spark, tmp_path):
         [("00099", 99, "a brand new document with fresh tokens")],
         "dk string, doc_id long, text string"))
     assert dix.refresh()["refreshed"]
-    assert _store_codecs(dix.exact_store) == {"ZSTD"}
-    assert _store_codecs(dix.bands_store) == {"ZSTD"}
+    assert _store_codecs(dix.root / "data") == {"ZSTD"}
 
     vecs = NativeTable(spark, tmp_path / "vecs", record_keys=["vk"],
                        precombine="vec_id")
@@ -202,7 +201,7 @@ def test_operator_stores_are_zstd(spark, tmp_path):
     vix.build(id_col="vec_id", n_centroids=4)
     vecs.delete(spark.createDataFrame([("000003",)], "vk string"))
     assert vix.refresh()["refreshed"]
-    assert _store_codecs(vix.postings) == {"ZSTD"}
+    assert _store_codecs(vix.root / "data") == {"ZSTD"}
 
     dim = spark.createDataFrame(
         [(1, dt.datetime(2024, 1, 1), dt.datetime(2100, 1, 1), "gold")],

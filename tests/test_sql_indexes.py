@@ -160,6 +160,25 @@ def test_index_tvf_in_stored_view(ghs, spark, tmp_path):
     assert g2.sql("SELECT * FROM novelties").count() == 1
 
 
+def test_index_tvf_view_replans_after_refresh(ghs, spark):
+    """A stored view over dedup_probe replans when its table moves: reads
+    refuse the stale index until REFRESH, then the view answers against
+    the grown corpus."""
+    ghs.sql("CREATE DEDUP INDEX ON docs (text) "
+            "OPTIONS (id_col = doc_id)")
+    novel = "brand new corpus document with fresh tokens xylophone"
+    spark.createDataFrame([(7001, novel)], "doc_id bigint, text string"
+                          ).createOrReplaceTempView("b5")
+    ghs.sql("CREATE VIEW novel5 AS "
+            "SELECT doc_id FROM dedup_probe('docs', 'b5')")
+    assert ghs.sql("SELECT * FROM novel5").count() == 1
+    ghs.sql(f"INSERT INTO docs VALUES ('90001', 90001, '{novel}')")
+    with pytest.raises(ValueError, match="novel5"):
+        ghs.sql("SELECT * FROM novel5")
+    ghs.sql("REFRESH DEDUP INDEX ON docs")
+    assert ghs.sql("SELECT * FROM novel5").count() == 0
+
+
 def test_probe_knobs_persist_through_sql(ghs, spark):
     """OPTIONS (probe_bloom_max = N) on CREATE DEDUP INDEX persists in
     the index meta and is honored by every session that re-binds from
@@ -169,7 +188,9 @@ def test_probe_knobs_persist_through_sql(ghs, spark):
             "(id_col = doc_id, probe_bloom_max = 1000)")
     opts = ghs.sql("SHOW INDEXES ON docs").first().options
     assert '"probe_bloom_max": 1000' in opts
-    ix = ghs._dedup_index(ghs.tables["docs"])
+    from glue_hudi_spark.operators.dedup_index import DedupIndex
+
+    ix = DedupIndex.open(ghs.tables["docs"])
     assert ix.probe_bloom_max == 1000 and ix.probe_pushdown_max == 0
     spark.createDataFrame(
         [(8000, TEXTS[2] + " tail2"),            # exact re-crawl

@@ -187,6 +187,22 @@ def test_view_reading_base_in_cte_or_subquery(ghs, body):
         ghs.sql("DROP TABLE acc")
 
 
+def test_view_over_tvf_replans_after_base_write(ghs):
+    """A stored view over a table-valued function replans when the table
+    the call reads moves, and that table's DROP is guarded by it."""
+    ghs.sql("CREATE TABLE m (k STRING, v INT) USING ghs_table "
+            "TBLPROPERTIES ('primaryKey'='k');"
+            "INSERT INTO m VALUES ('a', 1)")
+    start = ghs.tables["m"].timeline.latest().commit_id
+    ghs.sql("INSERT INTO m VALUES ('b', 2), ('c', 3)")
+    ghs.sql("CREATE VIEW cv AS SELECT count(*) AS n "
+            f"FROM table_changes('m', {start})")
+    assert ghs.sql("SELECT * FROM cv").first().n == 2
+    ghs.sql("INSERT INTO m VALUES ('d', 4)")
+    assert ghs.sql("SELECT * FROM cv").first().n == 3
+    assert ghs._view_dependents("m") == ["cv"]
+
+
 def test_column_sharing_a_table_name_is_no_dependency(ghs):
     ghs.sql("CREATE TABLE note (k STRING) USING ghs_table "
             "TBLPROPERTIES ('primaryKey'='k')")

@@ -180,7 +180,7 @@ def test_corpus_stream_index_mode_drops_near_dups(spark, tmp_path):
     from glue_hudi_spark.operators.dedup_index import DedupIndex
 
     ix = DedupIndex(stream.table, id_col="doc_id")
-    assert ix._meta()["indexed_commit"] == \
+    assert ix.status()["indexed_commit"] == \
         stream.table.timeline.latest().commit_id
 
 

@@ -71,17 +71,13 @@ def test_query_postings_read_is_partition_pruned(spark, tmp_path):
     ix = VectorIndex(t)
     ix.build(id_col="vec_id", n_centroids=8)
     out = ix.query(t.read_snapshot().filter("vec_id = 3"), k=5, nprobe=1)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the postings scan (the one reading _vnorm) must carry a NON-EMPTY
-    # partition filter on cell — the nprobe/n_cells read fraction IS the
-    # index; an empty PartitionFilters would mean a full-corpus scan
-    postings_scans = [l for l in plan.splitlines()
-                      if "_vnorm" in l and "PartitionFilters" in l]
-    assert postings_scans, "postings FileScan not found in plan"
-    for l in postings_scans:
-        pf = l.split("PartitionFilters: ")[1]
-        assert pf.startswith("[") and not pf.startswith("[]"), l
-        assert "cell" in pf.split("]")[0], l
+    # the postings read lists the probed cell's file only — the
+    # nprobe/n_cells read fraction IS the index; every cell's file would
+    # mean a full-corpus scan
+    postings = [f for f in out.inputFiles() if str(ix.root) in f]
+    cells = {f.split("/_pp_cell=")[1].split("/")[0] for f in postings}
+    assert len(cells) == 1, postings
+    assert len(ix.store().timeline.latest().files) == 8
     assert out.count() > 0
 
 
@@ -173,14 +169,13 @@ def test_refresh_rewrites_only_affected_cells(spark, tmp_path):
 
 
 def test_refresh_clears_emptied_cell(spark, tmp_path):
-    # delete EVERY member of one cell with no arrivals: dynamic partition
-    # overwrite writes no rows for it, so the refresh must clear the
-    # stale partition dir explicitly — deleted vectors must never be
-    # served as neighbors
+    # delete EVERY member of one cell with no arrivals: the refresh
+    # writes no rows for it, and its old file must leave the store —
+    # deleted vectors must never be served as neighbors
     t = _mk_table(spark, tmp_path / "t")
     ix = VectorIndex(t)
     ix.build(id_col="vec_id", n_centroids=8)
-    post = spark.read.parquet(str(ix.postings))
+    post = ix.store().read_snapshot()
     cells = {r["cell"]: r["n"] for r in
              post.groupBy("cell").count().withColumnRenamed(
                  "count", "n").collect()}
@@ -190,7 +185,8 @@ def test_refresh_clears_emptied_cell(spark, tmp_path):
     t.delete(spark.createDataFrame(
         [dict(vk=f"{i:06d}") for i in doomed]))
     ix.refresh()
-    left = spark.read.parquet(str(ix.postings))
+    left = ix.store().read_snapshot()
     assert left.filter(F.col("id").isin(doomed)).count() == 0
+    assert victim not in {r.cell for r in left.collect()}
     got = ix.query(t.read_snapshot().filter("vec_id < 4"), k=50, nprobe=8)
     assert not [r for r in got.collect() if r["neighbor_id"] in doomed]
