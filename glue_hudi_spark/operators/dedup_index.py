@@ -84,7 +84,8 @@ class DedupIndex(StoreIndex):
     """
 
     _LEGACY_DIRS = ("exact", "bands")
-    _OPTIONS = tuple(k for k in _PARAMS if k != "text_col")
+    _OPTIONS = ("id_col", "n", "num_hashes", "bands", "prefix_len")
+    _KNOBS = ("probe_pushdown_max", "probe_bloom_max")
 
     def __init__(self, table, id_col: str, text_col: str = "text",
                  n: int = 3, num_hashes: int = 16, bands: int = 8,
@@ -99,15 +100,12 @@ class DedupIndex(StoreIndex):
         # value-pushdown probe path (r12 verdict #8, OPT-IN — set to
         # e.g. 1000 on object-storage corpora): batches with at most
         # this many distinct hashes push the hash SET into the store
-        # read, where the store's per-file bloom sidecars on ``hash``
-        # (built only when this is set) drop every prefix file holding
-        # none of the batch's hashes, and the exact filter runs on the
-        # rest. Bigger batches (backfills) fall back to the
+        # read as an exact filter (the prefix files are hash-sorted, so
+        # parquet's row-group stats skip what the filter's range
+        # excludes) instead of anti-joining every row of the touched
+        # prefixes. Bigger batches (backfills) fall back to the
         # prefix-pruned anti-join; the collect is bounded by this knob
-        # (driver holds ≤ max hash strings — metadata-sized). Default
-        # OFF: the sidecars cost a Spark job per store commit, and the
-        # skipped reads pay that back only on large prefix files (100-TB
-        # corpora on object storage).
+        # (driver holds ≤ max hash strings — metadata-sized).
         self.probe_pushdown_max = probe_pushdown_max
         # Bloom-prefilter probe path (r12 verdict #8's scale follow-up,
         # OPT-IN — set to e.g. 200_000): mid-size batches past the
@@ -146,8 +144,7 @@ class DedupIndex(StoreIndex):
         return NativeTable(
             self.spark, self.root, record_keys=["hash", "kind", "id", "band"],
             precombine="op", partition_keys=["kind", "p"],
-            files_per_partition=1, stats_cols=["kind", "p"],
-            secondary_bloom_cols=["hash"] if self.probe_pushdown_max else [])
+            files_per_partition=1, stats_cols=["kind", "p"])
 
     # ----------------------------------------------------------------- rows
 
@@ -243,9 +240,8 @@ class DedupIndex(StoreIndex):
         Opt-in paths, for batches with at most ``probe_pushdown_max`` /
         ``probe_bloom_max`` distinct hashes: the hash set is collected
         and the prefixes derived from it driver-side (no second job).
-        Within the pushdown cap the hash set itself joins the read, so
-        the bloom sidecars drop prefix files holding none of the batch's
-        hashes; within the bloom cap the prefix-pruned read gets a
+        Within the pushdown cap the hash set itself joins the read's
+        exact filter; within the bloom cap the prefix-pruned read gets a
         Bloom-bucket pre-filter (:meth:`_bloom_semi_filter`) — store rows
         whose hash is in the batch always pass, so downstream exact joins
         are unchanged, and the store-side shuffle drops to O(batch +
@@ -294,12 +290,13 @@ class DedupIndex(StoreIndex):
             # in-batch exact keep-one (same min-id policy as exact_dedup)
             surviving_ids = fresh.groupBy("hash").agg(
                 F.min("id").alias("id")).select("id")
-            # near-dup candidates: band-collide the survivors against the
-            # batch's band-hash prefixes only
-            store_bands = self._store_read(store, pin, rows, "band")
+            # near-dup candidates: band-collide the survivors against
+            # their own band-hash prefixes only
+            bands = (rows.filter(F.col("kind") == "band")
+                     .join(surviving_ids, on="id", how="left_semi"))
+            store_bands = self._store_read(store, pin, bands, "band")
             if store_bands is not None:
-                cand = (rows.filter(F.col("kind") == "band")
-                        .join(surviving_ids, on="id", how="left_semi")
+                cand = (bands
                         .join(store_bands.select(
                             F.col("id").alias("corpus_id"), "band",
                             "hash"), on=["band", "hash"])

@@ -74,6 +74,8 @@ class StoreIndex:
     _LEGACY_DIRS: tuple = ()
     #: metadata keys ``status()`` reports as the index's options
     _OPTIONS: tuple = ()
+    #: opt-in metadata keys it reports only when set
+    _KNOBS: tuple = ()
 
     root: Path
     table: NativeTable
@@ -99,7 +101,8 @@ class StoreIndex:
             "indexed_commit": indexed,
             "table_head": at.commit_id if at else None,
             "stale": indexed is None or bool(at and at.commit_id != indexed),
-            "options": {k: meta[k] for k in self._OPTIONS if k in meta},
+            "options": {**{k: meta[k] for k in self._OPTIONS if k in meta},
+                        **{k: meta[k] for k in self._KNOBS if meta.get(k)}},
         }
 
     def _publish(self, rows: DataFrame, meta: dict, indexed: int) -> None:

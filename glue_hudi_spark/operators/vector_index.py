@@ -7,9 +7,9 @@ incrementally off its change feed.
 
 * The postings live in one ``NativeTable`` under
   ``<table>/_index/ivf/<vec_col>/`` (protocol: ``index_store``): (id,
-  vector, norm) rows partitioned by ``cell``, one file per cell. Every
-  store commit carries the metadata-sized centroids and the indexed
-  commit id in its stats.
+  vector, norm) rows partitioned by ``cell``. Every store commit
+  carries the metadata-sized centroids and the indexed commit id in its
+  stats.
 * ``build()`` trains deterministic centroids (``kmeans_centroids``, or
   the n lowest-id vectors train-free) and writes the postings in one
   ``insert_overwrite``.
@@ -82,11 +82,10 @@ class VectorIndex(StoreIndex):
         return [ix for ix in found if ix.exists()]
 
     def store(self) -> NativeTable:
-        """The postings: rows (id, v, _vnorm, cell), one file per cell."""
+        """The postings: rows (id, v, _vnorm, cell), partitioned by cell."""
         return NativeTable(
             self.spark, self.root, record_keys=["cell", "id"],
-            precombine="op", partition_keys=["cell"],
-            files_per_partition=1, stats_cols=["cell"])
+            precombine="op", partition_keys=["cell"], stats_cols=["cell"])
 
     # ----------------------------------------------------------------- build
 

@@ -69,8 +69,6 @@ from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from glue_hudi_spark.operators.dedup_index import DedupIndex
-from glue_hudi_spark.operators.vector_index import VectorIndex
 from glue_hudi_spark.storage.native import NativeTable
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*|`[^`]+`"
@@ -663,7 +661,10 @@ class GhsSql:
         if df is not None:
             df.unpersist()
 
-    def _with_views(self):
+    def _with_views(self, plan) -> None:
+        """Bind each registered table's head as its temp view, and
+        replan the stored views that read a moved one; raise if the
+        statement ``plan`` reads a stored view that fails to bind."""
         moved: set[str] = set()
         for name, t in self.tables.items():
             head = t.timeline.latest()
@@ -685,33 +686,38 @@ class GhsSql:
             t.read_snapshot().createOrReplaceTempView(name)
             self._view_cache[name] = key
             moved.add(name)
-        if self.views and (moved or self._views_pending):
-            # (re)plan ONLY the stored views whose base tables (or
-            # upstream views) moved: a temp view captures the plan at
-            # creation, so a stale one would keep reading the OLD
-            # snapshot relation — but replanning all V views on every
-            # head move is O(V) driver analysis per statement for
-            # unrelated work. Transitive: a view over a replanned view
-            # replans too (insertion order = creation order, so
-            # upstream views precede their dependents).
-            replanned = {n.lower() for n in moved}
-            for vname, q in self.views.items():
-                plan = self._parse(q)
-                if vname in self._views_pending or _refs(plan) & replanned:
-                    try:
-                        self.spark.sql(self._bind(q, plan)[0]
-                                       ).createOrReplaceTempView(vname)
-                    except Exception as e:
-                        # replan it on the next read too: a view over a
-                        # stale index's probe heals by REFRESH INDEX
-                        self._views_pending.add(vname)
-                        raise ValueError(
-                            f"ghs.sql: stored view {vname!r} failed to "
-                            f"bind against the current catalog ({e}) — "
-                            f"DROP VIEW {vname} or restore its bases"
-                        ) from e
-                    replanned.add(vname.lower())
-            self._views_pending = set()
+        if not (self.views and (moved or self._views_pending)):
+            return
+        # (re)plan ONLY the stored views whose base tables (or upstream
+        # views) moved: a temp view captures the plan at creation, so a
+        # stale one would keep reading the OLD snapshot relation — but
+        # replanning all V views on every head move is O(V) driver
+        # analysis per statement for unrelated work. Transitive: a view
+        # over a replanned view replans too (insertion order = creation
+        # order, so upstream views precede their dependents).
+        replanned = {n.lower() for n in moved}
+        failed: dict[str, Exception] = {}
+        for vname, q in self.views.items():
+            vplan = self._parse(q)
+            if vname in self._views_pending or _refs(vplan) & replanned:
+                try:
+                    self.spark.sql(self._bind(q, vplan)[0]
+                                   ).createOrReplaceTempView(vname)
+                except Exception as e:
+                    # unbind it rather than serve the old plan, and
+                    # replan it at every read until it binds: a view
+                    # over a stale index's probe heals by REFRESH INDEX
+                    self.spark.catalog.dropTempView(vname)
+                    failed[vname] = e
+                replanned.add(vname.lower())
+        self._views_pending = set(failed)
+        reads = _refs(plan)
+        for vname, e in failed.items():
+            if vname.lower() in reads:
+                raise ValueError(
+                    f"ghs.sql: stored view {vname!r} failed to bind "
+                    f"against the current catalog ({e}) — DROP VIEW "
+                    f"{vname} or restore its bases") from e
 
     def _parse(self, s: str):
         """Spark's own parse of ``s``: its unresolved plan, each node
@@ -954,9 +960,11 @@ class GhsSql:
             out[k] = allowed[k](_unq(v))
         return out
 
-    def _dedup_index(self, m: "re.Match[str]") -> DedupIndex:
+    def _dedup_index(self, m: "re.Match[str]"):
         """The dedup index of the statement's table (on its named column,
         when it names one)."""
+        from glue_hudi_spark.operators.dedup_index import DedupIndex
+
         ix = DedupIndex.open(self._target(m.group("name")))
         if ix is None:
             raise ValueError(
@@ -969,8 +977,9 @@ class GhsSql:
         return ix
 
     @staticmethod
-    def _one_vector_index(t: NativeTable, col: str | None,
-                          who: str) -> VectorIndex:
+    def _one_vector_index(t: NativeTable, col: str | None, who: str):
+        from glue_hudi_spark.operators.vector_index import VectorIndex
+
         ixs = VectorIndex.open_all(t)
         if col:
             for ix in ixs:
@@ -1020,6 +1029,8 @@ class GhsSql:
                     "ghs.sql: CREATE DEDUP INDEX needs OPTIONS "
                     "(id_col = <numeric id column>) — probe results "
                     "key on it")
+            from glue_hudi_spark.operators.dedup_index import DedupIndex
+
             ix, build = DedupIndex(t, text_col=col, **opts), {}
         else:
             build = self._index_opts(
@@ -1029,6 +1040,8 @@ class GhsSql:
                 raise ValueError(
                     "ghs.sql: CREATE VECTOR INDEX needs OPTIONS "
                     "(id_col = <numeric id column>)")
+            from glue_hudi_spark.operators.vector_index import VectorIndex
+
             ix = VectorIndex(t, vec_col=col)
         if ix.exists():
             if m.group("ine"):
@@ -1058,6 +1071,9 @@ class GhsSql:
         return None
 
     def _show_indexes(self, m: "re.Match[str]") -> DataFrame:
+        from glue_hudi_spark.operators.dedup_index import DedupIndex
+        from glue_hudi_spark.operators.vector_index import VectorIndex
+
         t = self._table(m.group("name"))
         found = [("ivf", vx.vec_col, vx) for vx in VectorIndex.open_all(t)]
         dx = DedupIndex.open(t)
@@ -1077,6 +1093,8 @@ class GhsSql:
                      opts: str) -> str:
         """``dedup_probe('t', 'batch'[, threshold][, 'allow_stale'])``:
         the batch rows that are NOVEL against t's dedup index."""
+        from glue_hudi_spark.operators.dedup_index import DedupIndex
+
         ix = DedupIndex.open(self._table(tbl))
         if ix is None:
             raise ValueError(
@@ -1236,7 +1254,7 @@ class GhsSql:
             out = None
         if out is not None:
             return out
-        self._with_views()
+        self._with_views(plan)
         return self._select_prune(*self._bind(s, plan))[0]
 
     def _explain(self, s: str, node) -> DataFrame:
@@ -1253,7 +1271,7 @@ class GhsSql:
             raise ValueError(
                 f"ghs.sql: cannot parse EXPLAIN: {s[:80]!r} — use "
                 "EXPLAIN [FORMATTED|EXTENDED|CODEGEN|COST] SELECT ...")
-        self._with_views()
+        self._with_views(plan)
         q, names = self._bind(s, plan, a)
         notes = []
         for name, bounds in self._select_prune(q, names)[1].items():
@@ -1285,7 +1303,7 @@ class GhsSql:
         if plan is None:
             plan = self._parse(s)
         if not s[a:b].lstrip().upper().startswith("VALUES"):
-            self._with_views()
+            self._with_views(plan)
         return self.spark.sql(self._bind(s, plan, a, b)[0])
 
     # ------------------------------------------------------- transactions

@@ -162,8 +162,10 @@ def test_index_tvf_in_stored_view(ghs, spark, tmp_path):
 
 def test_index_tvf_view_replans_after_refresh(ghs, spark):
     """A stored view over dedup_probe replans when its table moves: reads
-    refuse the stale index until REFRESH, then the view answers against
-    the grown corpus."""
+    of it refuse the stale index until REFRESH, then it answers against
+    the grown corpus. Its failed replan unbinds it without failing other
+    statements: reads that do not touch it still run, and a view created
+    after it still replans."""
     ghs.sql("CREATE DEDUP INDEX ON docs (text) "
             "OPTIONS (id_col = doc_id)")
     novel = "brand new corpus document with fresh tokens xylophone"
@@ -171,12 +173,17 @@ def test_index_tvf_view_replans_after_refresh(ghs, spark):
                           ).createOrReplaceTempView("b5")
     ghs.sql("CREATE VIEW novel5 AS "
             "SELECT doc_id FROM dedup_probe('docs', 'b5')")
+    ghs.sql("CREATE VIEW ndocs AS SELECT count(*) AS n FROM docs")
     assert ghs.sql("SELECT * FROM novel5").count() == 1
+    assert ghs.sql("SELECT * FROM ndocs").first().n == 25
     ghs.sql(f"INSERT INTO docs VALUES ('90001', 90001, '{novel}')")
+    assert ghs.sql("SELECT count(*) AS n FROM docs").first().n == 26
+    assert ghs.sql("SELECT * FROM ndocs").first().n == 26
     with pytest.raises(ValueError, match="novel5"):
         ghs.sql("SELECT * FROM novel5")
     ghs.sql("REFRESH DEDUP INDEX ON docs")
     assert ghs.sql("SELECT * FROM novel5").count() == 0
+    assert ghs.sql("SELECT * FROM ndocs").first().n == 26
 
 
 def test_probe_knobs_persist_through_sql(ghs, spark):

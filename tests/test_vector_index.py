@@ -74,10 +74,12 @@ def test_query_postings_read_is_partition_pruned(spark, tmp_path):
     # the postings read lists the probed cell's file only — the
     # nprobe/n_cells read fraction IS the index; every cell's file would
     # mean a full-corpus scan
+    def cells(files):
+        return {f.split("/_pp_cell=")[1].split("/")[0] for f in files}
+
     postings = [f for f in out.inputFiles() if str(ix.root) in f]
-    cells = {f.split("/_pp_cell=")[1].split("/")[0] for f in postings}
-    assert len(cells) == 1, postings
-    assert len(ix.store().timeline.latest().files) == 8
+    assert len(cells(postings)) == 1, postings
+    assert len(cells(ix.store().timeline.latest().files)) == 8
     assert out.count() > 0
 
 
