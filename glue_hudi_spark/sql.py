@@ -363,7 +363,8 @@ class GhsSql:
                 if (d / "_table.json").is_file():
                     self.tables[d.name] = NativeTable.open(spark, d)
         self.tables.update(tables or {})
-        # materialized views: name -> MaterializedAgg/MaterializedJoin
+        # materialized views: name -> MaterializedAgg / MaterializedJoin /
+        # MaterializedJoinAgg
         # (the state NativeTable is ALSO registered in self.tables so
         # reads/DESCRIBE/BEGIN-snapshots see it; write statements are
         # guarded by _target). Durable like tables: the definition

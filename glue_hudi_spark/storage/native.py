@@ -3051,6 +3051,43 @@ class NativeTable:
                 old = old.withColumn(c, F.lit(None).cast(new_types[c]))
         return old, new
 
+    def _fingerprint_join(self, caller: str, from_commit: int,
+                          to_commit: int | None
+                          ) -> tuple[DataFrame, list[str]]:
+        """``(joined, data_cols)``: the full outer join, on the record
+        key ``_k``, of the two sides of a diff (``_diff_sides``) that
+        ``diff_snapshots`` and ``change_feed`` both classify. The old
+        side carries ``_fp_old`` and its data columns as ``_old_<c>``,
+        the new side ``_fp_new`` and its data columns as named; the
+        md5 row fingerprint is computed scan-side, so the join shuffles
+        key + fingerprint and unchanged rows compare on one string.
+        ``to_commit`` defaults to the head; ``caller`` names the method
+        in the error for an empty range."""
+        to_commit = (
+            to_commit if to_commit is not None
+            else self.timeline.latest().commit_id
+        )
+        if from_commit >= to_commit:
+            raise ValueError(
+                f"{caller}: from_commit {from_commit} must be < "
+                f"to_commit {to_commit}"
+            )
+        old, new = self._diff_sides(from_commit, to_commit)
+        data_cols = [c for c in new.columns if c not in META_COLS]
+        fp = F.md5(F.concat_ws("\x1f", *[
+            F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
+            for c in data_cols
+        ]))
+        o = old.select(
+            F.col(RECORD_KEY_COL).alias("_k"), fp.alias("_fp_old"),
+            *[F.col(c).alias(f"_old_{c}") for c in data_cols],
+        )
+        n = new.select(
+            F.col(RECORD_KEY_COL).alias("_k"), fp.alias("_fp_new"),
+            *data_cols,
+        )
+        return o.join(n, on="_k", how="full_outer"), data_cols
+
     def diff_snapshots(
         self, from_commit: int, to_commit: int | None = None
     ) -> DataFrame:
@@ -3069,30 +3106,8 @@ class NativeTable:
         sync job applies exactly this diff to replicate the table without
         re-copying it.
         """
-        to_commit = (
-            to_commit if to_commit is not None
-            else self.timeline.latest().commit_id
-        )
-        if from_commit >= to_commit:
-            raise ValueError(
-                f"diff_snapshots: from_commit {from_commit} must be < "
-                f"to_commit {to_commit}"
-            )
-        old, new = self._diff_sides(from_commit, to_commit)
-        data_cols = [c for c in new.columns if c not in META_COLS]
-        fp = F.md5(F.concat_ws("\x1f", *[
-            F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
-            for c in data_cols
-        ]))
-        o = old.select(
-            F.col(RECORD_KEY_COL).alias("_k"), fp.alias("_fp_old"),
-            *[F.col(c).alias(f"_old_{c}") for c in data_cols],
-        )
-        n = new.select(
-            F.col(RECORD_KEY_COL).alias("_k"), fp.alias("_fp_new"),
-            *data_cols,
-        )
-        j = o.join(n, on="_k", how="full_outer")
+        j, data_cols = self._fingerprint_join(
+            "diff_snapshots", from_commit, to_commit)
         change = (
             F.when(F.col("_fp_old").isNull(), F.lit("I"))
             .when(F.col("_fp_new").isNull(), F.lit("D"))
@@ -3118,30 +3133,8 @@ class NativeTable:
         possible (apply +postimage −preimage; see ``operators.ivm``).
         Same single full-outer join as ``diff_snapshots``; the U branch
         fans out to two rows via an array-explode projection."""
-        to_commit = (
-            to_commit if to_commit is not None
-            else self.timeline.latest().commit_id
-        )
-        if from_commit >= to_commit:
-            raise ValueError(
-                f"change_feed: from_commit {from_commit} must be < "
-                f"to_commit {to_commit}"
-            )
-        old, new = self._diff_sides(from_commit, to_commit)
-        data_cols = [c for c in new.columns if c not in META_COLS]
-        fp = F.md5(F.concat_ws("\x1f", *[
-            F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
-            for c in data_cols
-        ]))
-        o = old.select(
-            F.col(RECORD_KEY_COL).alias("_k"), fp.alias("_fp_old"),
-            *[F.col(c).alias(f"_old_{c}") for c in data_cols],
-        )
-        n = new.select(
-            F.col(RECORD_KEY_COL).alias("_k"), fp.alias("_fp_new"),
-            *data_cols,
-        )
-        j = o.join(n, on="_k", how="full_outer")
+        j, data_cols = self._fingerprint_join(
+            "change_feed", from_commit, to_commit)
 
         def img(change_type: str, prefix: str):
             return F.struct(
@@ -5112,9 +5105,15 @@ class NativeTable:
         ever prunes on the leading key. Unpartitioned tables only (a
         partitioned table's layout is its partition dirs).
         """
+        return self._rewrite_all("cluster", zorder_by, zorder_bits)
+
+    def _rewrite_all(self, action: str, zorder_by: list[str] | None = None,
+                     zorder_bits: int = 8) -> Commit:
+        """``cluster`` and ``compact``: rewrite the whole live snapshot
+        (base files + deltas, renames and drops materialized, per-record
+        ``_ghs_commit_time`` kept) as one ``action`` commit."""
         if zorder_by and self.partition_keys:
             raise ValueError("zorder clustering is for unpartitioned tables")
-        prev = self.timeline.latest()
         merged = self.read_snapshot(with_meta=True)
         cid = self.timeline.next_commit_id()
         if zorder_by:
@@ -5125,16 +5124,17 @@ class NativeTable:
             # a z-order rewrite needs an explicit width (the range shuffle
             # on the z-value IS the layout); tables without a configured
             # files_per_partition keep their current file count
-            width = self.files_per_partition or max(1, len(prev.files))
+            width = self.files_per_partition or max(
+                1, len(self.timeline.latest().files))
             files = self._write_files(
                 merged_z, cid, n_files=width, cluster_col=zcol
             )
         else:
             files = self._write_files(merged, cid)
-        # like compact: the logical snapshot was rewritten wholesale, so
-        # renames/drops are now materialized in the files
+        # the snapshot read rendered LOGICAL names; the rewrite therefore
+        # materializes renames/drops into the files — mapping resets
         return self._commit(
-            cid, "cluster", files, [], merged.schema.json(), {},
+            cid, action, files, [], merged.schema.json(), {},
             *self._collect_file_stats(files),
             column_mapping={}, retired_cols=[], column_defaults={},
         )
@@ -5463,16 +5463,7 @@ class NativeTable:
         compaction's own commit id would make ``read_incremental`` report
         the whole table as changed after each compaction — a round-3 fix;
         ``cluster()`` already behaved this way."""
-        merged = self.read_snapshot(with_meta=True)
-        cid = self.timeline.next_commit_id()
-        files = self._write_files(merged, cid)
-        # the snapshot read rendered LOGICAL names; the rewrite therefore
-        # materializes renames/drops into the files — mapping resets
-        return self._commit(
-            cid, "compact", files, [], merged.schema.json(), {},
-            *self._collect_file_stats(files),
-            column_mapping={}, retired_cols=[], column_defaults={},
-        )
+        return self._rewrite_all("compact")
 
     def rollback(self, to_commit_id: int | None = None) -> Commit:
         """Restore the table to a prior commit's state (Hudi savepoint

@@ -12,7 +12,7 @@ from glue_hudi_spark.streaming.dedup import (
     streaming_sessionization,
 )
 from glue_hudi_spark.streaming.materialized import (
-    MaterializedAgg, MaterializedJoinAgg)
+    MaterializedAgg, MaterializedJoin, MaterializedJoinAgg)
 from glue_hudi_spark.streaming.sketches import SketchStream
 from glue_hudi_spark.streaming.stateful import running_user_profiles
 from glue_hudi_spark.streaming.windowed import windowed_event_counts
@@ -24,6 +24,7 @@ __all__ = [
     "EnrichStream",
     "enrich_asof",
     "MaterializedAgg",
+    "MaterializedJoin",
     "MaterializedJoinAgg",
     "SketchStream",
     "streaming_exact_dedup",

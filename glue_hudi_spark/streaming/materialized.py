@@ -1,37 +1,166 @@
-"""Streaming materialized view: an aggregate table maintained from the
-CDC stream's own change feed.
+"""Materialized views over NativeTables, maintained from their bases' own
+change feeds (``NativeTable.change_feed``): each refresh absorbs exactly
+the rows that changed, O(changes), never a recompute. Three shapes:
 
-Composes three pieces this engine already has — the streaming CDC merge
-(``CdcStream``), the commit-to-commit change feed
-(``NativeTable.change_feed``), and additive-aggregate maintenance
-(``operators.ivm``) — into the thing warehouses sell as "continuously
-refreshed materialized views": after every merged micro-batch, the
-(group, cnt, total) state absorbs exactly the rows that changed,
-O(changes) per refresh, never a recompute.
+* ``MaterializedAgg``: ``groupBy(group_cols).agg(count, sum(sum_col))``
+  over one base, with optional derived group columns (the TimescaleDB
+  continuous aggregate);
+* ``MaterializedJoin``: ``fact LEFT JOIN dim ON join_col``, the N:1
+  enrichment join;
+* ``MaterializedJoinAgg``: the same aggregate over ``fact INNER JOIN
+  dim``.
 
-Consistency contract: the state table's commit stats record the BASE
-table commit id the state reflects (``view_of_commit``). Refresh is
-idempotent — a replayed trigger sees the recorded watermark and skips —
-and crash-safe in the same way the CDC merges are: the marker publishes
-atomically with the state commit. The maintained state is bit-identical
-to a from-scratch aggregate of the base snapshot (exact DECIMAL sums),
-asserted in tests after every refresh.
+All three run one refresh protocol (``_View``); a shape supplies only
+its from-scratch snapshot and its window's op batch.
+
+* Watermarks: every state commit's stats record the base commit id(s)
+  the state reflects, one key per base (``view_of_commit``;
+  ``join_of_fact_commit`` / ``join_of_dim_commit``;
+  ``ja_of_fact_commit`` / ``ja_of_dim_commit``). They publish
+  atomically with the state, so a refresh is crash-safe the way the CDC
+  merges are.
+* ``pending_commits``: Σ max(0, head − watermark) over the bases, a
+  missing head or watermark counted as 0. Metadata only (manifest
+  heads, no scan); it drives the deferred ``refresh='commit:N'`` policy.
+* ``refresh``: a view with no watermark materializes from scratch in
+  one ``insert_overwrite``. One whose watermarks reach every head is
+  fresh and returns None, so a replayed trigger is a no-op. Otherwise
+  the window's upserts and deletes land as ONE atomic ``merge`` commit
+  carrying the new watermarks; an empty window (heads moved by
+  compact/bin_pack, or dim churn touching no fact) publishes a
+  metadata-only ``touch(action="watermark")`` so a converged view's
+  next refresh is the O(1) early exit. Every persist and checkpoint a
+  refresh makes belongs to a call-local ``ExitStack``: it is released
+  whether the merge commits or anything before it raises.
+
+The maintained state is identical to the from-scratch result over the
+bases' snapshots (exact DECIMAL sums), asserted in tests after every
+refresh.
 """
 
 from __future__ import annotations
 
+from contextlib import ExitStack
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from glue_hudi_spark.checkpoints import release_checkpoint
 from glue_hudi_spark.operators import ivm
 from glue_hudi_spark.storage.native import NativeTable, local_batch
 
+_OP = "_mv_op"  # the op column of every state merge batch
 
-class MaterializedAgg:
+
+def _bounded_keys(df: DataFrame, cap: int) -> set | None:
+    """Driver-bounded distinct key collection: ``df``'s (first column)
+    values when there are at most ``cap`` and none is NULL, else None —
+    min/max file stats can't speak for NULLs, and an unbounded set would
+    put O(changes) on the driver."""
+    rows = df.limit(cap + 1).collect()
+    vals = {r[0] for r in rows}
+    if len(rows) > cap or None in vals:
+        return None
+    return vals
+
+
+def _group_ops(state: NativeTable, delta: DataFrame,
+               group_cols: list[str]) -> DataFrame:
+    """The keyed op batch for signed per-group deltas, O(changed
+    groups): ``delta`` semi-joins the CURRENT state down to the groups
+    it touches, ``ivm.merge_delta`` applies it on that slice, and each
+    group becomes an upsert, or a delete once its count reaches 0. The
+    state merge then rewrites only the touched groups' files."""
+    touched = state.read_snapshot().join(
+        delta.select(*group_cols), on=group_cols, how="left_semi")
+    return ivm.merge_delta(touched, delta, group_cols).withColumn(
+        _OP, F.when(F.col("cnt") > 0, F.lit("U")).otherwise(F.lit("D")))
+
+
+class _View:
+    """The refresh protocol of the module docstring. A shape sets
+    ``state`` (its NativeTable), ``_bases`` (the base tables, the first
+    one driving) and ``_marks`` (one watermark stat key per base), and
+    supplies ``_snapshot(upto)`` and ``_batch(since, upto, owned)``."""
+
+    def _watermarks(self) -> list:
+        last = self.state.timeline.latest()
+        stats = last.stats if last is not None else {}
+        return [stats.get(k) for k in self._marks]
+
+    def pending_commits(self) -> int:
+        """Base commits not yet absorbed by the view: head id minus the
+        recorded watermark, summed over the bases (commit ids are head+1
+        sequential within a timeline). A never-materialized view counts
+        every base commit pending, the same metric as after its first
+        refresh."""
+        heads = [t.timeline.latest() for t in self._bases]
+        return sum(max(0, (h.commit_id if h else 0) - (w or 0))
+                   for h, w in zip(heads, self._watermarks()))
+
+    def refresh(self):
+        """Bring the view to its bases' heads. Returns the new
+        watermarks, one base commit id per base, or None when already
+        fresh or the first base has no commits."""
+        heads = [t.timeline.latest() for t in self._bases]
+        if heads[0] is None:
+            return None
+        upto = tuple(h.commit_id if h else 0 for h in heads)
+        marker = {k: int(u) for k, u in zip(self._marks, upto)}
+        wm = self._watermarks()
+        if wm[0] is None:
+            self.state.insert_overwrite(self._snapshot(upto),
+                                        extra_stats=marker)
+            return upto
+        since = tuple(w or 0 for w in wm)
+        if all(s >= u for s, u in zip(since, upto)):
+            return None  # fresh, or a replayed trigger
+        with ExitStack() as owned:
+            batch, prune = self._batch(since, upto, owned)
+            committed = self.state.merge(batch, op_col=_OP,
+                                         extra_stats=marker,
+                                         prune_values=prune)
+        if committed is None:
+            self.state.touch(marker, action="watermark")
+        return upto
+
+    def read(self):
+        return self.state.read_snapshot()
+
+
+class _JoinView(_View):
+    """What the two join shapes share: a ``fact`` and a ``dim`` base
+    joined on ``join_col``, the dim side projected to ``dim_cols``."""
+
+    def _dim_proj(self, as_of: int):
+        """The dim at ``as_of``: ``join_col`` and ``dim_cols`` (default:
+        every other column). Raises when the dim has no commit."""
+        d = self.dim.read_snapshot(as_of=as_of)
+        cols = self.dim_cols or [
+            c for c in d.columns if c != self.join_col]
+        return d.select(F.col(self.join_col), *cols)
+
+    def _facts_with(self, keys: DataFrame, vals: set | None, as_of: int):
+        """Facts at ``as_of`` whose join key is among ``keys``: when the
+        fact table indexes ``join_col`` (stats or secondary blooms) and
+        ``vals`` holds the keys driver-side, a point lookup reading only
+        the files that can hold one, else a semi-join (AQE broadcasts
+        the keys). O(affected facts) either way, not O(|fact|)."""
+        if vals is not None and (
+                self.join_col in self.fact.stats_cols
+                or self.join_col in self.fact.secondary_bloom_cols):
+            return self.fact.read_by_value(
+                self.join_col, sorted(vals), as_of=as_of)
+        return self.fact.read_snapshot(as_of=as_of).join(
+            keys, on=self.join_col, how="left_semi")
+
+
+class MaterializedAgg(_View):
     """Maintains groupBy(``group_cols``).agg(count, sum(``sum_col``))
-    over a NativeTable, refreshed incrementally from its change feed."""
+    over a NativeTable, refreshed incrementally from its change feed.
+    The watermark is ``view_of_commit``."""
+
+    _marks = ("view_of_commit",)
 
     def __init__(
         self,
@@ -44,6 +173,7 @@ class MaterializedAgg:
     ):
         self.spark = spark
         self.base = base
+        self._bases = (base,)
         self.group_cols = list(group_cols)
         self.sum_col = sum_col
         # derived group columns (TimescaleDB continuous aggregates):
@@ -58,68 +188,30 @@ class MaterializedAgg:
         )
 
     def _derived(self, df):
-        from pyspark.sql import functions as F
-
         for name, ex in self.derive.items():
             df = df.withColumn(name, F.expr(ex))
         return df
-
-    def _last_refreshed(self) -> int | None:
-        latest = self.state.timeline.latest()
-        if latest is None:
-            return None
-        return latest.stats.get("view_of_commit")
-
-    def pending_commits(self) -> int:
-        """Base commits not yet absorbed by the view (head id minus the
-        recorded watermark; commit ids are head+1 sequential within a
-        timeline). A never-materialized view counts everything pending.
-        Drives the deferred ``refresh='commit:N'`` maintenance policy —
-        a metadata-only check (two manifest heads), no scan."""
-        latest = self.base.timeline.latest()
-        if latest is None:
-            return 0
-        since = self._last_refreshed()
-        if since is None:
-            return latest.commit_id
-        return max(0, latest.commit_id - since)
 
     def refresh(self) -> int | None:
         """Bring the view up to the base table's latest commit. Returns
         the new watermark (base commit id), or None when already fresh.
         First call materializes from scratch; later calls apply only the
         change feed between the recorded watermark and latest."""
-        base_latest = self.base.timeline.latest()
-        if base_latest is None:
-            return None
-        upto = base_latest.commit_id
-        since = self._last_refreshed()
-        marker = {"view_of_commit": int(upto)}
-        if since is None:
-            snap = ivm.aggregate_state(
-                self._derived(self.base.read_snapshot(as_of=upto)),
-                self.group_cols, self.sum_col,
-            )
-            self.state.insert_overwrite(snap, extra_stats=marker)
-            return upto
-        if since >= upto:
-            return None  # fresh (or a replayed trigger) — no-op
-        from pyspark.sql import functions as F
+        # defined on this class, not inherited: lakebench's tracer
+        # patches the class's own ``refresh`` attribute
+        wm = super().refresh()
+        return None if wm is None else wm[0]
 
+    def _snapshot(self, upto):
+        return ivm.aggregate_state(
+            self._derived(self.base.read_snapshot(as_of=upto[0])),
+            self.group_cols, self.sum_col)
+
+    def _batch(self, since, upto, owned):
+        (since,), (upto,) = since, upto
         feed = self._derived(self.base.change_feed(since, upto))
-        # O(changed groups), round-10 (the MaterializedJoin shape): the
-        # signed per-group delta (map-side combined over the feed)
-        # semi-joins the CURRENT state down to touched groups only, the
-        # algebra runs on that slice, and ONE atomic merge commit
-        # upserts changed groups / deletes emptied ones — the state
-        # rewrite prunes to the touched groups' files instead of
-        # rewriting the whole view (insert_overwrite did O(state) file
-        # writes per refresh however narrow the window was).
-        delta = ivm.change_feed_delta(feed, self.group_cols, self.sum_col)
-        touched = self.state.read_snapshot().join(
-            delta.select(*self.group_cols), on=self.group_cols,
-            how="left_semi")
-        merged = ivm.merge_delta(touched, delta, self.group_cols)
+        batch = _group_ops(self.state, ivm.change_feed_delta(
+            feed, self.group_cols, self.sum_col), self.group_cols)
         # The batch is O(touched groups): held on the driver, the
         # merge's probe, prune, anti-join and write legs read its rows
         # instead of each re-deriving change feed → delta → semi-join.
@@ -130,43 +222,27 @@ class MaterializedAgg:
         # the size comes from the base's manifests: one batch row per
         # group the feed touches. A window past local_batch's cap
         # merges unheld.
-        batch = merged.withColumn(
-            "_ma_op", F.when(F.col("cnt") > 0, F.lit("U"))
-            .otherwise(F.lit("D")))
         derived_keys = set(self.group_cols) & set(self.derive)
         held = local_batch(batch, max_rows=self.base.change_feed_max_rows(
             since, upto, None if derived_keys else self.group_cols))
-        committed = self.state.merge(held[0] if held else batch,
-                                     op_col="_ma_op", extra_stats=marker)
-        if committed is None:
-            # empty window (head moved by compact/etc.): metadata-only
-            # watermark commit keeps the converged cadence O(1)
-            self.state.touch(marker, action="watermark")
-        return upto
-
-    def read(self):
-        return self.state.read_snapshot()
+        return (held[0] if held else batch), None
 
 
-class MaterializedJoin:
+class MaterializedJoin(_JoinView):
     """Incrementally-maintained JOIN view: ``state = fact LEFT JOIN dim
     ON join_col`` (the N:1 enrichment join), refreshed from BOTH tables'
-    change feeds — the join analogue of ``MaterializedAgg``, and the
-    thing warehouses sell as an incrementally-refreshed join view.
+    change feeds. Watermarks: ``join_of_fact_commit`` /
+    ``join_of_dim_commit``.
 
     Delta equations per refresh window (f_since→f_upto, d_since→d_upto):
 
     * Δfact inserts/update-postimages re-join against the dim's CURRENT
       snapshot and upsert into the state; Δfact deletes delete their
       state rows — O(|Δfact|).
-    * Δdim changed keys K select the AFFECTED facts: when the fact
-      table indexes ``join_col`` (stats or secondary blooms) and K is
-      driver-sized, ``fact.read_by_value(join_col, K)`` reads ONLY the
-      files that can hold a changed key; otherwise a semi-join of the
-      fact snapshot on ``join_col ∈ K`` (AQE broadcasts K). Either way
-      O(|affected facts|), not O(|fact|). A dim DELETE re-emits its
-      facts with NULL attributes — left-join semantics preserved, facts
-      never silently dropped.
+    * Δdim changed keys K select the AFFECTED facts (``_facts_with``),
+      O(|affected facts|), which re-join and upsert. A dim DELETE
+      re-emits its facts with NULL attributes — left-join semantics
+      preserved, facts never silently dropped.
 
     ``cluster_by=join_col`` fixes the STATE layout for dim-heavy churn:
     by default state files range-cluster on the fact record key, so one
@@ -180,18 +256,9 @@ class MaterializedJoin:
     join keys' files). Windows whose join-key set exceeds
     ``prune_key_cap`` (or holds NULLs) fall back to unpruned merges —
     pruning is an optimization, never a correctness dependency.
-
-    The whole window lands as ONE atomic ``merge`` commit (upserts +
-    deletes together) carrying both watermarks
-    (``join_of_fact_commit`` / ``join_of_dim_commit``) in its stats —
-    idempotent under replayed triggers, crash-safe like every other
-    streaming sink here. An EMPTY window (base heads moved by
-    compact/add_column, or dim churn touching no fact) publishes a
-    metadata-only ``touch`` commit so the watermark still advances and
-    converged refreshes stay O(1) (round-9 advice). Maintained state is
-    row-identical to the from-scratch join of the two snapshots (the
-    pytest invariant).
     """
+
+    _marks = ("join_of_fact_commit", "join_of_dim_commit")
 
     def __init__(
         self,
@@ -207,6 +274,7 @@ class MaterializedJoin:
         self.spark = spark
         self.fact = fact
         self.dim = dim
+        self._bases = (fact, dim)
         self.join_col = join_col
         self.dim_cols = dim_cols
         if cluster_by is not None and cluster_by != join_col:
@@ -231,81 +299,31 @@ class MaterializedJoin:
                if cluster_by else {}),
         )
 
-    def _dim_proj(self, as_of: int | None):
-        from pyspark.sql import functions as F
+    def _snapshot(self, upto):
+        return self.fact.read_snapshot(as_of=upto[0]).join(
+            self._dim_proj(upto[1]), on=self.join_col, how="left")
 
-        d = self.dim.read_snapshot(as_of=as_of)
-        cols = self.dim_cols or [
-            c for c in d.columns if c != self.join_col]
-        return d.select(F.col(self.join_col), *cols)
-
-    def _watermarks(self):
-        last = self.state.timeline.latest()
-        if last is None:
-            return None
-        return (last.stats.get("join_of_fact_commit"),
-                last.stats.get("join_of_dim_commit"))
-
-    def pending_commits(self) -> int:
-        """Unabsorbed base commits across BOTH sides (fact + dim head
-        ids minus the recorded watermarks) — the deferred
-        ``refresh='commit:N'`` trigger. Metadata-only."""
-        f = self.fact.timeline.latest()
-        d = self.dim.timeline.latest()
-        if f is None and d is None:
-            return 0
-        wm = self._watermarks()
-        if wm is None or wm[0] is None:
-            # never refreshed: every base commit on BOTH sides is
-            # pending — sum (missing watermark = 0), consistent with
-            # the steady-state branch below, so a 'commit:N' trigger
-            # counts the same metric before and after first refresh
-            return (f.commit_id if f else 0) + (d.commit_id if d else 0)
-        return (max(0, (f.commit_id if f else 0) - (wm[0] or 0))
-                + max(0, (d.commit_id if d else 0) - (wm[1] or 0)))
-
-    def refresh(self):
-        """Bring the view to both base tables' heads. Returns the new
-        (fact_commit, dim_commit) watermark, or None when fresh."""
-        from pyspark.sql import functions as F
-
-        f_latest = self.fact.timeline.latest()
-        if f_latest is None:
-            return None
-        d_latest = self.dim.timeline.latest()
-        f_upto = f_latest.commit_id
-        d_upto = d_latest.commit_id if d_latest else 0
-        marker = {"join_of_fact_commit": int(f_upto),
-                  "join_of_dim_commit": int(d_upto)}
-        dim_now = self._dim_proj(d_upto if d_latest else None)
-        wm = self._watermarks()
-        if wm is None or wm[0] is None:
-            snap = self.fact.read_snapshot(as_of=f_upto).join(
-                dim_now, on=self.join_col, how="left")
-            self.state.insert_overwrite(snap, extra_stats=marker)
-            return f_upto, d_upto
-        f_since, d_since = wm
-        if f_since >= f_upto and d_since >= d_upto:
-            return None  # fresh, or a replayed trigger
-        fk = self.fact.record_keys
+    def _batch(self, since, upto, owned):
+        (f_since, d_since), (f_upto, d_upto) = since, upto
+        dim_now = self._dim_proj(d_upto)
         ups = dels = None
         # the window's join-key set, for the value-pruned state merge
         # (cluster_by layout). None = pruning disabled for this window
         # (off, too many keys, or NULL join values — merge stays exact
         # either way, the prune is only a file-skip).
         prune_keys: set | None = set() if self.cluster_by else None
-        ff_persisted = None
         if f_upto > f_since:
             ff = self.fact.change_feed(f_since, f_upto)
             if prune_keys is not None:
                 # the feed feeds three consumers (ups, dels, key probe) —
                 # persist so its lineage computes once
-                ff_persisted = ff = ff.persist()
+                ff = ff.persist()
+                owned.callback(ff.unpersist)
                 # ALL change types: a fact re-pointed to a new dim key
                 # still has its OLD row in a file placed by the PRE-image
                 # value — that file must stay in the merge's rewrite set
-                prune_keys = self._bounded_keys(
-                    ff.select(self.join_col).distinct(), prune_keys)
+                prune_keys = _bounded_keys(
+                    ff.select(self.join_col).distinct(), self.prune_key_cap)
             ups = ff.filter(F.col("_change_type").isin(
                 "insert", "update_postimage")).drop("_change_type")
             dels = ff.filter(
@@ -313,17 +331,8 @@ class MaterializedJoin:
         if d_upto > d_since:
             dkeys = (self.dim.change_feed(d_since, d_upto)
                      .select(self.join_col).distinct())
-            dvals = self._bounded_keys(dkeys, set())
-            if dvals is not None and (
-                    self.join_col in self.fact.stats_cols
-                    or self.join_col in self.fact.secondary_bloom_cols):
-                # bloom/stats-assisted affected-fact selection: reads
-                # only fact files that can hold a changed dim key
-                affected = self.fact.read_by_value(
-                    self.join_col, sorted(dvals), as_of=f_upto)
-            else:
-                affected = self.fact.read_snapshot(as_of=f_upto).join(
-                    dkeys, on=self.join_col, how="left_semi")
+            dvals = _bounded_keys(dkeys, self.prune_key_cap)
+            affected = self._facts_with(dkeys, dvals, f_upto)
             if prune_keys is not None:
                 prune_keys = (prune_keys | dvals
                               if dvals is not None else None)
@@ -331,65 +340,35 @@ class MaterializedJoin:
             # as-of-f_upto image — dedup by the fact key
             ups = (affected if ups is None
                    else ups.unionByName(affected, allowMissingColumns=True)
-                   .dropDuplicates(fk))
+                   .dropDuplicates(self.fact.record_keys))
         parts = []
         if ups is not None:
             parts.append(ups.join(dim_now, on=self.join_col, how="left")
-                         .withColumn("_mj_op", F.lit("U")))
+                         .withColumn(_OP, F.lit("U")))
         if dels is not None:
-            parts.append(dels.withColumn("_mj_op", F.lit("D")))
+            parts.append(dels.withColumn(_OP, F.lit("D")))
         batch = parts[0]
         for p in parts[1:]:
             batch = batch.unionByName(p, allowMissingColumns=True)
         # derivation (feeds + affected-fact selection + dim join) runs
         # once; the merge's probe/anti-join/write read the checkpoint —
         # O(window changes) stored, the whole pipeline not re-executed
-        # per leg (see MaterializedAgg.refresh)
+        # per leg (see MaterializedAgg._batch)
         batch = batch.localCheckpoint(eager=False)
-        # one atomic commit applies the window's upserts AND deletes,
-        # with the watermarks in its stats
-        try:
-            committed = self.state.merge(
-                batch, op_col="_mj_op", extra_stats=marker,
-                prune_values=({self.join_col: sorted(prune_keys)}
-                              if prune_keys else None))
-        finally:
-            release_checkpoint(batch)
-            if ff_persisted is not None:
-                ff_persisted.unpersist()
-        if committed is None:
-            # empty window (heads moved without row changes, or dim
-            # churn touching no fact): advance the watermark with a
-            # metadata-only commit, or every later refresh re-plans and
-            # re-scans this same converged window forever
-            self.state.touch(marker, action="watermark")
-        return f_upto, d_upto
-
-    def _bounded_keys(self, df, acc: set) -> set | None:
-        """Driver-bounded distinct key collection: ``acc`` ∪ df's values
-        when ≤ ``prune_key_cap`` and NULL-free, else None (pruning off —
-        min/max file stats can't speak for NULLs, and an unbounded list
-        would put O(changes) on the driver)."""
-        rows = df.limit(self.prune_key_cap + 1).collect()
-        if len(rows) > self.prune_key_cap:
-            return None
-        vals = {r[0] for r in rows}
-        if None in vals:
-            return None
-        return acc | vals
-
-    def read(self):
-        return self.state.read_snapshot()
+        owned.callback(release_checkpoint, batch)
+        return batch, ({self.join_col: sorted(prune_keys)}
+                       if prune_keys else None)
 
 
-class MaterializedJoinAgg:
+class MaterializedJoinAgg(_JoinView):
     """Incrementally-maintained AGGREGATE-OVER-JOIN view: ``state =
     SELECT group_cols..., count, sum(sum_col) FROM fact INNER JOIN dim
     ON join_col GROUP BY group_cols`` — the revenue-by-nation class,
-    composed from the two existing view shapes: the fact is the big
+    composed from the two other view shapes: the fact is the big
     table, the dim the N:1 enrichment side (unique ``join_col``; fact
     and dim column names must be disjoint apart from it), and group
-    columns may come from EITHER side.
+    columns may come from EITHER side. Watermarks:
+    ``ja_of_fact_commit`` / ``ja_of_dim_commit``.
 
     Maintenance is the classic bilinear delta — with ΔF/ΔD the signed
     change feeds of the window:
@@ -401,18 +380,18 @@ class MaterializedJoinAgg:
     exactly, so one pass over each feed suffices. Each leg then runs
     the same signed per-group aggregate ``MaterializedAgg`` uses
     (``ivm.change_feed_delta`` — the sign comes from that leg's own
-    ``_change_type``), the two deltas sum, and the merge is the
-    O(changed groups) keyed-state path: touched groups only, one
-    atomic merge commit carrying both watermarks, emptied groups
-    deleted, exact-DECIMAL totals bit-identical to a from-scratch
-    GROUP BY over the join (the pytest invariant).
+    ``_change_type``), the two deltas sum, and the merge is the same
+    O(changed groups) keyed-state path: touched groups only, emptied
+    groups deleted, exact-DECIMAL totals bit-identical to a
+    from-scratch GROUP BY over the join (the pytest invariant).
 
     Scale shape: leg 1 is O(|Δfact|) (feed ⋈ broadcastable dim); leg 2
-    selects only the OLD facts holding a changed dim key — via the
-    fact table's stats/bloom point lookup (``read_by_value`` at the
-    old commit) when the key set is driver-sized, else a semi-join —
-    so it is O(|affected facts|), never O(|fact|). Nothing recomputes.
+    selects only the OLD facts holding a changed dim key
+    (``_facts_with`` at the old commit), so it is O(|affected facts|),
+    never O(|fact|). Nothing recomputes.
     """
+
+    _marks = ("ja_of_fact_commit", "ja_of_dim_commit")
 
     def __init__(
         self,
@@ -429,6 +408,7 @@ class MaterializedJoinAgg:
         self.spark = spark
         self.fact = fact
         self.dim = dim
+        self._bases = (fact, dim)
         self.join_col = join_col
         self.group_cols = list(group_cols)
         self.sum_col = sum_col
@@ -438,59 +418,15 @@ class MaterializedJoinAgg:
             spark, state_path, record_keys=list(group_cols),
             precombine=None)
 
-    def _dim_proj(self, as_of: int | None):
-        from pyspark.sql import functions as F
+    def _snapshot(self, upto):
+        return ivm.aggregate_state(
+            self.fact.read_snapshot(as_of=upto[0]).join(
+                self._dim_proj(upto[1]), on=self.join_col, how="inner"),
+            self.group_cols, self.sum_col)
 
-        d = self.dim.read_snapshot(as_of=as_of)
-        cols = self.dim_cols or [
-            c for c in d.columns if c != self.join_col]
-        return d.select(F.col(self.join_col), *cols)
-
-    def _watermarks(self):
-        last = self.state.timeline.latest()
-        if last is None:
-            return None
-        return (last.stats.get("ja_of_fact_commit"),
-                last.stats.get("ja_of_dim_commit"))
-
-    def pending_commits(self) -> int:
-        """Unabsorbed base commits across both sides — metadata-only,
-        same contract as the other two view classes."""
-        f = self.fact.timeline.latest()
-        d = self.dim.timeline.latest()
-        if f is None and d is None:
-            return 0
-        wm = self._watermarks()
-        if wm is None or wm[0] is None:
-            return (f.commit_id if f else 0) + (d.commit_id if d else 0)
-        return (max(0, (f.commit_id if f else 0) - (wm[0] or 0))
-                + max(0, (d.commit_id if d else 0) - (wm[1] or 0)))
-
-    def refresh(self):
-        """Bring the view to both base heads. Returns the new
-        (fact_commit, dim_commit) watermark, or None when fresh."""
-        from pyspark.sql import functions as F
-
-        f_latest = self.fact.timeline.latest()
-        if f_latest is None:
-            return None
-        d_latest = self.dim.timeline.latest()
-        f_upto = f_latest.commit_id
-        d_upto = d_latest.commit_id if d_latest else 0
-        marker = {"ja_of_fact_commit": int(f_upto),
-                  "ja_of_dim_commit": int(d_upto)}
-        dim_now = self._dim_proj(d_upto if d_latest else None)
-        wm = self._watermarks()
-        if wm is None or wm[0] is None:
-            snap = ivm.aggregate_state(
-                self.fact.read_snapshot(as_of=f_upto).join(
-                    dim_now, on=self.join_col, how="inner"),
-                self.group_cols, self.sum_col)
-            self.state.insert_overwrite(snap, extra_stats=marker)
-            return f_upto, d_upto
-        f_since, d_since = wm
-        if f_since >= f_upto and (d_since or 0) >= d_upto:
-            return None  # fresh, or a replayed trigger
+    def _batch(self, since, upto, owned):
+        (f_since, d_since), (f_upto, d_upto) = since, upto
+        dim_now = self._dim_proj(d_upto)
         deltas = []
         if f_upto > f_since:
             # leg 1: ΔF ⋈ D_new — the feed's own _change_type signs it
@@ -498,61 +434,30 @@ class MaterializedJoinAgg:
                 dim_now, on=self.join_col, how="inner")
             deltas.append(ivm.change_feed_delta(
                 j1, self.group_cols, self.sum_col))
-        if d_latest and d_upto > (d_since or 0):
+        if d_upto > d_since:
             # leg 2: F_old ⋈ ΔD — the DIM feed's _change_type signs it;
             # only old facts holding a changed key participate
-            dfd = self.dim.change_feed(d_since or 0, d_upto)
-            dcols = self.dim_cols or [
-                c for c in self._dim_proj(d_upto).columns
-                if c != self.join_col]
-            dsel = dfd.select(self.join_col, *dcols, "_change_type")
+            dfd = self.dim.change_feed(d_since, d_upto)
             keys = dfd.select(self.join_col).distinct()
-            rows = keys.limit(self.dim_key_cap + 1).collect()
-            vals = ({r[0] for r in rows}
-                    if len(rows) <= self.dim_key_cap else None)
-            if vals is not None and None in vals:
-                vals = None
-            if vals and (self.join_col in self.fact.stats_cols
-                         or self.join_col
-                         in self.fact.secondary_bloom_cols):
-                f_old = self.fact.read_by_value(
-                    self.join_col, sorted(vals), as_of=f_since)
-            else:
-                f_old = self.fact.read_snapshot(as_of=f_since).join(
-                    keys, on=self.join_col, how="left_semi")
+            # an empty key set takes the semi-join, not a lookup
+            vals = _bounded_keys(keys, self.dim_key_cap) or None
+            f_old = self._facts_with(keys, vals, f_since)
             need = {self.join_col, self.sum_col} | {
                 g for g in self.group_cols if g in f_old.columns}
-            j2 = dsel.join(f_old.select(*sorted(need)),
-                           on=self.join_col, how="inner")
+            j2 = dfd.select(*dim_now.columns, "_change_type").join(
+                f_old.select(*sorted(need)), on=self.join_col, how="inner")
             deltas.append(ivm.change_feed_delta(
                 j2, self.group_cols, self.sum_col))
         delta = deltas[0]
-        for d in deltas[1:]:
-            delta = delta.unionByName(d)
         if len(deltas) > 1:
-            delta = delta.groupBy(*self.group_cols).agg(
+            delta = delta.unionByName(deltas[1]).groupBy(
+                *self.group_cols).agg(
                 F.sum("_cnt_d").alias("_cnt_d"),
                 F.sum("_sum_d").cast("decimal(28,6)").alias("_sum_d"))
-        touched = self.state.read_snapshot().join(
-            delta.select(*self.group_cols), on=self.group_cols,
-            how="left_semi")
-        merged = ivm.merge_delta(touched, delta, self.group_cols)
         # both bilinear legs (feed joins + signed aggregates) compute
         # once; the merge's probe/anti-join/write read the O(touched
-        # groups) checkpoint (see MaterializedAgg.refresh)
-        batch = merged.withColumn(
-            "_ja_op", F.when(F.col("cnt") > 0, F.lit("U"))
-            .otherwise(F.lit("D"))).localCheckpoint(eager=False)
-        try:
-            committed = self.state.merge(batch, op_col="_ja_op",
-                                         extra_stats=marker)
-        finally:
-            release_checkpoint(batch)
-        if committed is None:
-            # empty window: metadata-only watermark commit keeps the
-            # converged cadence O(1)
-            self.state.touch(marker, action="watermark")
-        return f_upto, d_upto
-
-    def read(self):
-        return self.state.read_snapshot()
+        # groups) checkpoint (see MaterializedAgg._batch)
+        batch = _group_ops(self.state, delta, self.group_cols
+                           ).localCheckpoint(eager=False)
+        owned.callback(release_checkpoint, batch)
+        return batch, None

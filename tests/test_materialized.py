@@ -637,20 +637,108 @@ def test_failed_state_merge_releases_refresh_storage(
         spark, tmp_path, monkeypatch, persistent_rdds, kind):
     """A refresh whose state merge fails (OCC conflict, write error)
     must still release the window's batch checkpoint and the persisted
-    fact feed — not leave them for ContextCleaner GC."""
+    fact feed — not leave them for ContextCleaner GC. So must one that
+    fails before the merge, once the fact feed is persisted: here the
+    dim's change feed raises (a watermark commit retention cleaned)."""
     if kind == "join":
-        fact, _, view = _mk_clustered_pair(spark, tmp_path)
+        fact, dim, view = _mk_clustered_pair(spark, tmp_path)
     else:
-        fact, _, view = _mk_ja(spark, tmp_path)
+        fact, dim, view = _mk_ja(spark, tmp_path)
     view.refresh()
     fact.upsert(spark.createDataFrame(
         [(200, 1, 9.0, 1)], "oid long, ckey long, amt double, seq int"))
     before = persistent_rdds()
 
     def boom(*a, **kw):
-        raise RuntimeError("injected state-merge failure")
+        raise RuntimeError("injected failure")
 
     monkeypatch.setattr(view.state, "merge", boom)
     with pytest.raises(RuntimeError, match="injected"):
         view.refresh()
     assert persistent_rdds() <= before
+    monkeypatch.undo()
+
+    dim_col = "name" if kind == "join" else "nation"
+    dim.upsert(spark.createDataFrame(
+        [(1, "renamed", 2)], f"ckey long, {dim_col} string, seq int"))
+    monkeypatch.setattr(dim, "change_feed", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        view.refresh()
+    assert persistent_rdds() <= before
+
+
+# ------------------------------------- the shared refresh protocol's contract
+
+def test_agg_watermark_return_value_and_pending_commits(spark, tmp_path):
+    """The aggregate view records ``view_of_commit``, returns the base
+    commit id as an int, and counts pending base commits the same way
+    before and after its first refresh."""
+    base = _mk(spark, tmp_path / "base")
+    view = MaterializedAgg(spark, base, tmp_path / "view", ["grp"], "value")
+    assert view.pending_commits() == 0  # no base commit yet
+    assert view.refresh() is None
+    base.bulk_insert(_rows(spark, [("a", "g1", 1.0, 1)]))
+    base.upsert(_rows(spark, [("b", "g2", 2.0, 2)]))
+    assert view.pending_commits() == 2
+    wm = view.refresh()
+    assert type(wm) is int and wm == base.timeline.latest().commit_id
+    assert view.state.timeline.latest().stats["view_of_commit"] == wm
+    assert view.pending_commits() == 0
+    base.upsert(_rows(spark, [("a", "g2", 4.0, 3)]))
+    assert view.pending_commits() == 1
+
+
+@pytest.mark.parametrize("kind", ["join", "join_agg"])
+def test_join_watermarks_return_values_and_pending_commits(
+        spark, tmp_path, kind):
+    """Each join view records its own pair of watermark keys, returns
+    ``(fact_commit, dim_commit)``, and sums pending commits over both
+    bases before and after its first refresh."""
+    if kind == "join":
+        fact, dim, view = _mk_join_pair(spark, tmp_path)
+        marks, dim_col = ("join_of_fact_commit", "join_of_dim_commit"), "name"
+    else:
+        fact, dim, view = _mk_ja(spark, tmp_path)
+        marks, dim_col = ("ja_of_fact_commit", "ja_of_dim_commit"), "nation"
+    fact.upsert(spark.createDataFrame(
+        [(200, 1, 3.0, 1)], "oid long, ckey long, amt double, seq int"))
+    assert view.pending_commits() == 3  # fact head 2 + dim head 1
+
+    def heads():
+        return (fact.timeline.latest().commit_id,
+                dim.timeline.latest().commit_id)
+
+    wm = view.refresh()
+    assert type(wm) is tuple and wm == heads()
+    stats = view.state.timeline.latest().stats
+    assert tuple(stats[k] for k in marks) == wm
+    assert view.pending_commits() == 0
+    dim.upsert(spark.createDataFrame(
+        [(1, "one", 2)], f"ckey long, {dim_col} string, seq int"))
+    assert view.pending_commits() == 1
+    assert view.refresh() == heads()
+    assert view.pending_commits() == 0
+
+
+def test_join_views_over_a_dim_without_commits_raise(spark, tmp_path):
+    from glue_hudi_spark.streaming import MaterializedJoinAgg
+    fact = NativeTable(spark, tmp_path / "fact", record_keys=["oid"],
+                       precombine="seq")
+    dim = NativeTable(spark, tmp_path / "dim", record_keys=["ckey"],
+                      precombine="seq")
+    views = [
+        MaterializedJoin(spark, fact, dim, tmp_path / "mj",
+                         join_col="ckey"),
+        MaterializedJoinAgg(spark, fact, dim, tmp_path / "ja",
+                            join_col="ckey", group_cols=["ckey"],
+                            sum_col="amt"),
+    ]
+    for view in views:  # no fact commit: nothing to do yet
+        assert view.pending_commits() == 0
+        assert view.refresh() is None
+    fact.bulk_insert(spark.createDataFrame(
+        [(1, 1, 1.0, 1)], "oid long, ckey long, amt double, seq int"))
+    for view in views:
+        assert view.pending_commits() == 1
+        with pytest.raises(ValueError, match="has no commits"):
+            view.refresh()
