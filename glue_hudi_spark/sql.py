@@ -1680,7 +1680,10 @@ class GhsSql:
         """Delta's SHALLOW CLONE: zero-copy branch of the CURRENT
         snapshot (hardlinked data files + one fresh manifest —
         clone_to's O(metadata) contract); the clone is an independent
-        table from here on."""
+        table from here on. The manifest carries the whole snapshot
+        (column mapping, defaults, DVs, partition spec); the saved table
+        config is what ``clone_to`` gives the clone handle, not the
+        source's full ``_table.json``."""
         name = _unq(m.group("name"))
         if name in self.views:
             raise ValueError(

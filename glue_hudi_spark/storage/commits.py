@@ -25,12 +25,13 @@ format here leaves room for that by versioning the manifest schema.)
 from __future__ import annotations
 
 import contextvars
+import copy
 import json
 import os
 import re
 import tempfile
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 from pathlib import Path
 
 # Writer identity for commits published while the var is set (the SQL
@@ -71,7 +72,8 @@ class ConcurrentWriteError(RuntimeError):
 
 @dataclass
 class Commit:
-    """One committed snapshot of the table."""
+    """One committed snapshot of the table. The field order is the key
+    order of the manifest JSON (see ``CommitTimeline._payload``)."""
 
     commit_id: int
     action: str  # bulk_insert | insert | upsert | delete | delta_upsert | delta_delete | compact
@@ -100,6 +102,12 @@ class Commit:
     # serves metadata-only COUNT(*) (Delta stats-count parity) without
     # touching a data byte. Optional like file_sizes.
     row_counts: dict = field(default_factory=dict)
+    # THIS commit's delete tombstones (Delta _change_data analogue): rel
+    # paths of parquet files holding the key columns of rows this commit
+    # deleted. NOT carried forward — per-commit change metadata, read by
+    # the change-feed stream via at(cid). Commit-id-independent paths
+    # (_changes/<uuid>/), so an OCC rebase carries them untouched.
+    tombstones: list[str] = field(default_factory=list)
     # Column mapping (Delta column-mapping class): {logical: physical}
     # rename indirection so old files serve renamed columns WITHOUT
     # rewrite — reads rename physical->logical, writes translate back.
@@ -108,12 +116,6 @@ class Commit:
     # compaction/clustering materialize both back to identity.
     column_mapping: dict = field(default_factory=dict)
     retired_cols: list = field(default_factory=list)
-    # THIS commit's delete tombstones (Delta _change_data analogue): rel
-    # paths of parquet files holding the key columns of rows this commit
-    # deleted. NOT carried forward — per-commit change metadata, read by
-    # the change-feed stream via at(cid). Commit-id-independent paths
-    # (_changes/<uuid>/), so an OCC rebase carries them untouched.
-    tombstones: list[str] = field(default_factory=list)
     # Deletion vectors (Delta DV / Iceberg positional-delete class):
     # {data_rel: {"files": [dv_rels], "rows": n}} — position sidecars
     # under _dv/ marking rows of a live base file as deleted WITHOUT
@@ -147,6 +149,39 @@ class Commit:
         """Deterministic, sortable commit token (plays the role of Hudi's
         ``_hoodie_commit_time``)."""
         return f"{self.commit_id:020d}"
+
+    @classmethod
+    def empty(cls) -> "Commit":
+        """The table state before its first commit: no files, no schema."""
+        return cls(0, "", [])
+
+    def successor(self, commit_id: int, action: str, stats: dict,
+                  **changes) -> "Commit":
+        """The next commit over this one's snapshot: every
+        :data:`SNAPSHOT_FIELDS` entry of ``self``, with ``changes``
+        applied over them, copied so that the successor shares no
+        container with ``self`` (which may be a cached manifest) or with
+        the caller. The per-commit fields start fresh: no tombstones
+        unless ``changes`` brings them, and ``wall_time`` is stamped at
+        publish."""
+        snapshot = {f: getattr(self, f) for f in SNAPSHOT_FIELDS}
+        snapshot.update(changes)
+        return Commit(commit_id=commit_id, action=action, stats=stats,
+                      **copy.deepcopy(snapshot))
+
+
+# What one commit says about itself rather than the table it leaves
+# behind: a successor never inherits these.
+PER_COMMIT_FIELDS = frozenset(
+    {"commit_id", "action", "stats", "tombstones", "wall_time"})
+# The snapshot: everything a reader of the commit sees of the table, and
+# what a metadata-only commit, branch fork, fast-forward or clone
+# republishes. Every Commit field is in exactly one of the two sets.
+SNAPSHOT_FIELDS = (
+    "files", "deltas", "schema_json", "key_stats", "col_stats",
+    "file_sizes", "row_counts", "column_mapping", "retired_cols", "dvs",
+    "partition_spec", "column_defaults",
+)
 
 
 class CommitTimeline:
@@ -274,25 +309,9 @@ class CommitTimeline:
             if hit is not None:
                 return hit
         d = json.loads(path.read_text())
-        commit = Commit(
-            commit_id=d["commit_id"],
-            action=d["action"],
-            files=d["files"],
-            deltas=d.get("deltas", []),
-            schema_json=d.get("schema_json"),
-            wall_time=d.get("wall_time", 0.0),
-            stats=d.get("stats", {}),
-            key_stats=d.get("key_stats", {}),
-            col_stats=d.get("col_stats", {}),
-            file_sizes=d.get("file_sizes", {}),
-            row_counts=d.get("row_counts", {}),
-            tombstones=d.get("tombstones", []),
-            column_mapping=d.get("column_mapping", {}),
-            retired_cols=d.get("retired_cols", []),
-            dvs=d.get("dvs", {}),
-            partition_spec=d.get("partition_spec"),
-            column_defaults=d.get("column_defaults", {}),
-        )
+        # a field an older manifest predates takes its dataclass default
+        commit = Commit(**{f.name: d[f.name] for f in fields(Commit)
+                           if f.name in d})
         if key is not None:
             cache = CommitTimeline._manifest_cache
             if len(cache) >= CommitTimeline._MANIFEST_CACHE_MAX:
@@ -430,26 +449,11 @@ class CommitTimeline:
         return protected
 
     def _payload(self, commit: Commit) -> dict:
-        return {
-            "manifest_version": MANIFEST_VERSION,
-            "commit_id": commit.commit_id,
-            "action": commit.action,
-            "files": commit.files,
-            "deltas": commit.deltas,
-            "schema_json": commit.schema_json,
-            "wall_time": commit.wall_time or time.time(),
-            "stats": commit.stats,
-            "key_stats": commit.key_stats,
-            "col_stats": commit.col_stats,
-            "file_sizes": commit.file_sizes,
-            "row_counts": commit.row_counts,
-            "tombstones": commit.tombstones,
-            "column_mapping": commit.column_mapping,
-            "retired_cols": commit.retired_cols,
-            "dvs": commit.dvs,
-            "partition_spec": commit.partition_spec,
-            "column_defaults": commit.column_defaults,
-        }
+        payload = {"manifest_version": MANIFEST_VERSION,
+                   **{f.name: getattr(commit, f.name)
+                      for f in fields(Commit)}}
+        payload["wall_time"] = commit.wall_time or time.time()
+        return payload
 
     def publish(self, commit: Commit) -> None:
         """Atomically publish a manifest (write-temp + link).

@@ -42,13 +42,13 @@ import json
 import os
 import re
 import shutil
-import time
 import urllib.parse
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass
 from functools import lru_cache
 from pathlib import Path
+from typing import Callable
 
 from pyspark import SparkContext, StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -454,11 +454,6 @@ def _parse_partition_field(spec: str) -> PartitionField:
     tag = suffix[transform] + (str(param_i) if param_i is not None else "")
     return PartitionField(spec, transform, source, param_i,
                           f"{source}_{tag}")
-
-
-def _all_manifest_files(c: "Commit") -> list[str]:
-    """Every data-file rel a manifest references (base + deltas)."""
-    return [*c.files, *(f for d in c.deltas for f in d["files"])]
 
 
 def file_dir_commit(rel: str) -> int:
@@ -1051,11 +1046,7 @@ class NativeTable:
         # table evolved by another writer/process opens with the evolved
         # layout, not whatever the caller passed. None (legacy manifests)
         # keeps the constructor spec.
-        head = self.timeline.latest()
-        if head is not None and head.partition_spec is not None and \
-                list(head.partition_spec) != self.partition_keys:
-            self.partition_keys = list(head.partition_spec)
-            self._set_pfields()
+        self._adopt_spec(self.timeline.latest())
 
     def _set_pfields(self) -> None:
         self._pfields = [_parse_partition_field(s)
@@ -1065,6 +1056,15 @@ class NativeTable:
             raise ValueError(
                 f"partition spec {self.partition_keys} produces duplicate "
                 f"partition-field names {names}")
+
+    def _adopt_spec(self, commit: "Commit | None") -> None:
+        """Follow the partition spec ``commit`` published: the manifest's
+        spec is authoritative for this handle. No commit, or one with no
+        recorded spec (legacy manifests), keeps the current spec."""
+        if commit is not None and commit.partition_spec is not None and \
+                list(commit.partition_spec) != self.partition_keys:
+            self.partition_keys = list(commit.partition_spec)
+            self._set_pfields()
 
     # ------------------------------------------------------------------ util
 
@@ -2444,7 +2444,7 @@ class NativeTable:
         if head is not None and head.deltas:
             report["compacted"] = self.compact().commit_id
         packed = self.bin_pack(target_bytes)
-        report["bin_packed"] = packed.stats.get("packed") if packed else 0
+        report["bin_packed"] = packed.stats["packed_files"] if packed else 0
         report["cleaned"] = len(self.timeline.clean(self.retain_commits))
         if expire_older_than is not None:
             report["expired"] = self.expire_snapshots(
@@ -2482,23 +2482,21 @@ class NativeTable:
         t.stats_cols = list(self.stats_cols)
         t.secondary_bloom_cols = list(self.secondary_bloom_cols)
         t.constraints = list(self.constraints)
-        # the BRANCH head's partition spec is authoritative for the handle
         t.partition_keys = list(self.partition_keys)
-        t._set_pfields()
-        head = t.timeline.latest()
-        if head is not None and head.partition_spec is not None and \
-                list(head.partition_spec) != t.partition_keys:
-            t.partition_keys = list(head.partition_spec)
-            t._set_pfields()
+        # the BRANCH head's partition spec is authoritative for the handle
+        t._adopt_spec(t.timeline.latest())
         return t
 
     def create_branch(self, name: str,
                       at_commit: int | None = None) -> "NativeTable":
         """Fork a branch from main at ``at_commit`` (default: head). One
         manifest copy carrying the fork point's files BY REFERENCE —
-        branching a 100-TB table moves zero data bytes. Returns a handle
-        onto the new branch. Concurrent same-name creates: the manifest
-        link is the OCC, exactly one wins."""
+        branching a 100-TB table moves zero data bytes. The fork carries
+        the whole snapshot (``Commit.successor``: files, deltas, schema,
+        stats indexes, column mapping and defaults, DVs, partition spec);
+        the returned handle shares this handle's config. Concurrent
+        same-name creates: the manifest link is the OCC, exactly one
+        wins."""
         if self.ref is not None:
             raise ValueError(
                 f"create_branch from branch {self.ref!r}: fork from the "
@@ -2513,29 +2511,9 @@ class NativeTable:
         bt = self.timeline.branch_timeline(name)
         if bt.exists():
             raise ValueError(f"branch {name!r} already exists at {self.root}")
-        fork = Commit(
-            commit_id=src.commit_id,
-            action="create_branch",
-            files=list(src.files),
-            deltas=[dict(d) for d in src.deltas],
-            schema_json=src.schema_json,
-            wall_time=time.time(),
-            stats={"forked_from": src.commit_id, "branch": name},
-            key_stats=dict(src.key_stats),
-            col_stats=dict(src.col_stats),
-            column_mapping=dict(src.column_mapping),
-            retired_cols=list(src.retired_cols),
-            dvs=dict(src.dvs),
-            partition_spec=(list(src.partition_spec)
-                            if src.partition_spec is not None else None),
-            # tombstones are per-commit change metadata, not snapshot
-            # state — the fork carries none (see CommitTimeline.create_tag)
-        )
-        fork.file_sizes = {f: src.file_sizes[f]
-                           for f in src.files if f in src.file_sizes}
-        fork.row_counts = {f: src.row_counts[f]
-                           for f in src.files if f in src.row_counts}
-        bt.publish(fork)
+        bt.publish(src.successor(
+            src.commit_id, "create_branch",
+            {"forked_from": src.commit_id, "branch": name}))
         return self.branch(name)
 
     def create_tag(self, name: str, at_commit: int | None = None) -> None:
@@ -2569,10 +2547,12 @@ class NativeTable:
         replay, exactly Iceberg's fast_forward contract.
 
         Metadata-only: the new main manifest carries the branch head's
-        files by reference (ids allocated off the global max keep their
-        row stamps unique and monotonic on main). A concurrent main
-        writer racing this publish collides on the commit id and one
-        side rebases/aborts through the normal OCC path.
+        whole snapshot (``Commit.successor``), its files by reference
+        (ids allocated off the global max keep their row stamps unique
+        and monotonic on main). This handle keeps its own config and
+        adopts the branch's partition spec. A concurrent main writer
+        racing this publish collides on the commit id and one side
+        rebases/aborts through the normal OCC path.
         """
         if self.ref is not None:
             raise ValueError("fast_forward must run on the main handle")
@@ -2589,37 +2569,13 @@ class NativeTable:
                 f"fast_forward {name!r} onto {self.root}: main advanced "
                 f"(head {head_id}, fork base {fork_base}) — re-branch "
                 "from the new head and replay")
-        cid = self.timeline.next_commit_id()
-        commit = Commit(
-            commit_id=cid,
-            action="fast_forward",
-            files=list(bh.files),
-            deltas=[dict(d) for d in bh.deltas],
-            schema_json=bh.schema_json,
-            wall_time=time.time(),
-            stats={"fast_forward_of": name, "branch_head": bh.commit_id,
-                   "fork_base": fork_base},
-            key_stats=dict(bh.key_stats),
-            col_stats=dict(bh.col_stats),
-            column_mapping=dict(bh.column_mapping),
-            retired_cols=list(bh.retired_cols),
-            dvs=dict(bh.dvs),
-            partition_spec=(list(bh.partition_spec)
-                            if bh.partition_spec is not None else None),
-        )
-        commit.file_sizes = {f: bh.file_sizes[f]
-                             for f in _all_manifest_files(bh)
-                             if f in bh.file_sizes}
-        commit.row_counts = {f: bh.row_counts[f]
-                             for f in _all_manifest_files(bh)
-                             if f in bh.row_counts}
+        commit = bh.successor(
+            self.timeline.next_commit_id(), "fast_forward",
+            {"fast_forward_of": name, "branch_head": bh.commit_id,
+             "fork_base": fork_base})
         self.timeline.publish(commit)
         self.timeline.clean(self.retain_commits)
-        # adopt the branch's partition spec on this handle (like rollback)
-        if commit.partition_spec is not None and \
-                list(commit.partition_spec) != self.partition_keys:
-            self.partition_keys = list(commit.partition_spec)
-            self._set_pfields()
+        self._adopt_spec(commit)
         if drop:
             self.timeline.drop_branch(name)
         return commit
@@ -3365,6 +3321,19 @@ class NativeTable:
         — correctness over zero-copy. MoR live deltas clone the same way
         (delta files are files). Requires an empty/nonexistent
         destination.
+
+        The clone's one manifest carries the source head's whole snapshot
+        (``Commit.successor``: column mapping, retired columns, defaults,
+        DVs, partition spec and the per-file sizes and row counts, so no
+        file is stat-ed or footer-read). It does NOT carry all of the
+        handle config: the clone handle gets the source's record keys,
+        precombine, partition keys, storage type, ``files_per_partition``,
+        ``stats_cols``, ``bloom_index`` and ``secondary_bloom_cols``, and
+        constructor defaults for the rest of ``_PROPS``
+        (``change_feed_deletes``, ``deletion_vectors``, ``constraints``,
+        retention and compaction policy, ...). Copying those would change
+        what the clone's writes cost (a change-feed clone writes delete
+        tombstones), so it is left to the caller.
         """
         commit = self.timeline.latest()
         if commit is None:
@@ -3411,14 +3380,10 @@ class NativeTable:
         # seed the clone's timeline AT the source's commit id: linked
         # files live under data/<id> dirs up to that id, so the clone's
         # next write (id+1) lands in a fresh dir instead of colliding
-        clone._commit(
-            commit.commit_id, "clone", list(commit.files),
-            [dict(d) for d in commit.deltas], commit.schema_json,
+        clone.timeline.publish(commit.successor(
+            commit.commit_id, "clone",
             {"cloned_from": str(self.root),
-             "source_commit": commit.commit_id},
-            dict(commit.key_stats), dict(commit.col_stats),
-            dvs=dict(commit.dvs),
-        )
+             "source_commit": commit.commit_id}))
         return clone
 
     def last_stream_batch_id(self) -> int | None:
@@ -3455,7 +3420,44 @@ class NativeTable:
                 dvs: dict | None = None,
                 partition_spec: list[str] | None = None,
                 column_defaults: dict | None = None) -> Commit:
-        """Publish with bounded retry-with-rebase on OCC conflict.
+        """Publish a data write: ``files`` and ``deltas`` under
+        ``schema_json``, as a successor of the head (see ``_publish``).
+
+        The column mapping, retired columns and column defaults carry
+        forward from the head unless given: compact/cluster pass empties
+        after materializing them into file bytes, rename/drop rewrite
+        them. Deletion vectors carry forward per surviving data file: a
+        rewritten or removed file's entry dies with it (the rewrite read
+        DV-filtered rows, so the marks are materialized). The partition
+        spec carries forward, and the FIRST commit records the
+        constructor's spec, so every table has a manifest-authoritative
+        layout (evolve_partition_spec rewrites it)."""
+        head = self.timeline.latest()
+        if dvs is None:
+            dvs = ({f: head.dvs[f] for f in files if f in head.dvs}
+                   if head else {})
+        if partition_spec is None:
+            partition_spec = (head.partition_spec
+                              if head is not None
+                              and head.partition_spec is not None
+                              else self.partition_keys)
+        given = {k: v for k, v in (("column_mapping", column_mapping),
+                                   ("retired_cols", retired_cols),
+                                   ("column_defaults", column_defaults))
+                 if v is not None}
+        sizes, rows = self._manifest_inventory(files, deltas)
+        return self._publish((head or Commit.empty()).successor(
+            commit_id, action, stats, files=files, deltas=deltas,
+            schema_json=schema_json, key_stats=key_stats or {},
+            col_stats=col_stats or {}, tombstones=tombstones or [],
+            dvs=dvs, partition_spec=partition_spec, file_sizes=sizes,
+            row_counts=rows, **given))
+
+    def _publish(self, commit: Commit) -> Commit:
+        """Publish with bounded retry-with-rebase on OCC conflict: the
+        one path for data writes (``_commit``) and for metadata-only
+        commits (a ``Commit.successor`` of the head, or of rollback's
+        target).
 
         When another writer wins the commit id, the loser does NOT re-run
         its merge: it re-reads the new head, verifies the two commits
@@ -3465,69 +3467,20 @@ class NativeTable:
         conflict-resolution behavior a multi-writer lake needs. Genuinely
         overlapping writes still raise ``ConcurrentWriteError``.
         """
-        key_stats = dict(key_stats or {})
-        col_stats = dict(col_stats or {})
-        # column mapping carries forward unless the caller materializes
-        # (compact/cluster pass {}) or rewrites it (rename/drop/rollback)
-        head = self.timeline.latest()
-        if column_mapping is None:
-            column_mapping = dict(head.column_mapping) if head else {}
-        if retired_cols is None:
-            retired_cols = list(head.retired_cols) if head else []
-        if column_defaults is None:
-            # carried forward like the mapping; compact/cluster pass {}
-            # after materializing defaults into file bytes
-            column_defaults = dict(head.column_defaults) if head else {}
-        # deletion vectors carry forward per surviving data file: a
-        # rewritten/removed file's entry dies with it (the rewrite read
-        # DV-filtered rows, so the marks are materialized). Callers that
-        # replay an OLD file set (rollback) or add marks (_dv_delete)
-        # pass dvs explicitly.
-        if dvs is None:
-            dvs = ({f: head.dvs[f] for f in files if f in head.dvs}
-                   if head else {})
-        # partition spec carries forward; the FIRST commit records the
-        # constructor's spec so every table created from here on has a
-        # manifest-authoritative layout (evolve_partition_spec rewrites it)
-        if partition_spec is None:
-            partition_spec = (list(head.partition_spec)
-                              if head is not None
-                              and head.partition_spec is not None
-                              else list(self.partition_keys))
-        base = self.timeline.before(commit_id)  # the head this writer saw
+        # the head this writer saw
+        base = self.timeline.before(commit.commit_id)
         for _ in range(OCC_MAX_REBASES + 1):
-            commit = Commit(
-                commit_id=commit_id,
-                action=action,
-                files=files,
-                deltas=deltas,
-                schema_json=schema_json,
-                stats=stats,
-                key_stats=key_stats,
-                col_stats=col_stats,
-                tombstones=list(tombstones or []),
-                column_mapping=dict(column_mapping),
-                retired_cols=list(retired_cols),
-                dvs=dict(dvs),
-                partition_spec=list(partition_spec),
-                column_defaults=dict(column_defaults),
-            )
-            commit.file_sizes, commit.row_counts = (
-                self._manifest_inventory(files, deltas))
             try:
                 self.timeline.publish(commit)
             except ConcurrentWriteError:
-                if action == "insert_overwrite":
+                if commit.action == "insert_overwrite":
                     # REPLACE semantics: the writer's intent is "the table
                     # is exactly df" — carrying a concurrent winner's rows
                     # through a rebase would silently violate it (Delta
                     # likewise conflicts unpredicated overwrites with any
                     # concurrent write)
                     raise
-                (commit_id, files, deltas, key_stats, col_stats, stats,
-                 dvs, base) = self._rebase_commit(
-                    base, commit_id, files, deltas, schema_json,
-                    key_stats, col_stats, stats, dvs)
+                commit, base = self._rebase_commit(base, commit)
                 continue
             self.timeline.clean(self.retain_commits)
             return commit
@@ -3535,11 +3488,10 @@ class NativeTable:
             f"commit on {self.root} lost {OCC_MAX_REBASES} consecutive "
             "OCC races — giving up")
 
-    def _rebase_commit(self, base: Commit | None, commit_id: int,
-                       files: list[str], deltas: list[dict],
-                       schema_json: str, key_stats: dict, col_stats: dict,
-                       stats: dict, dvs: dict | None = None):
-        """Rebase a conflicted commit onto the current timeline head.
+    def _rebase_commit(self, base: Commit | None,
+                       lost: Commit) -> tuple[Commit, Commit]:
+        """Rebase a conflicted commit onto the current timeline head;
+        returns (the rebased commit, the head it was rebased onto).
 
         The commit's intent relative to ``base`` is reconstructed as
         (added files, removed files, added deltas, dropped deltas); the
@@ -3550,6 +3502,7 @@ class NativeTable:
         as changes of THIS commit, not the winner's); rows this commit
         merely carried keep their stamps (compact/cluster semantics).
         """
+        commit_id, files, deltas = lost.commit_id, lost.files, lost.deltas
         actual = self.timeline.latest()
         base_files = set(base.files) if base else set()
         base_deltas = base.deltas if base else []
@@ -3580,7 +3533,7 @@ class NativeTable:
             _conflict("winner compacted deltas this commit also consumed")
         winner_added = [f for f in actual.files if f not in base_files]
         if self._key_ranges_overlap(
-                added, key_stats, winner_added, actual.key_stats):
+                added, lost.key_stats, winner_added, actual.key_stats):
             _conflict("winner inserted overlapping key ranges")
         # deletion-vector intent: entries this commit changed vs base.
         # Legal iff the winner left both the file AND its DV state alone
@@ -3590,8 +3543,7 @@ class NativeTable:
         # DV state — carrying the winner's marks would lose its deletes,
         # dropping them would resurrect rows).
         base_dvs = base.dvs if base else {}
-        our_dvs = dvs or {}
-        dv_delta = {f: e for f, e in our_dvs.items()
+        dv_delta = {f: e for f, e in lost.dvs.items()
                     if e != base_dvs.get(f)}
         winner_files = set(actual.files)
         for f in dv_delta:
@@ -3609,15 +3561,15 @@ class NativeTable:
         new_cid = actual.commit_id + 1
         old_token, new_token = f"{commit_id:020d}", f"{new_cid:020d}"
         restamped = self._restamp_files(
-            added, schema_json, old_token, new_token, new_cid,
+            added, lost.schema_json, old_token, new_token, new_cid,
             build_blooms=True)
         re_deltas = []
         for d in new_deltas:
             re_deltas.append({
                 **d, "commit_id": new_cid,
                 "files": self._restamp_files(
-                    d["files"], schema_json, old_token, new_token, new_cid,
-                    build_blooms=False),
+                    d["files"], lost.schema_json, old_token, new_token,
+                    new_cid, build_blooms=False),
             })
 
         rebased_files = (
@@ -3632,7 +3584,7 @@ class NativeTable:
         rb_col = {f: actual.col_stats[f] for f in rebased_files
                   if f in actual.col_stats}
         rb_col.update(new_col)
-        rb_stats = {**stats, "occ_rebased_from": commit_id,
+        rb_stats = {**lost.stats, "occ_rebased_from": commit_id,
                     "occ_rebased_onto": actual.commit_id}
         # winner's DV state for surviving files, plus our own changes
         # (both verified disjoint above); entries for files we removed
@@ -3640,8 +3592,13 @@ class NativeTable:
         rebased_set = set(rebased_files)
         rb_dvs = {f: e for f, e in actual.dvs.items() if f in rebased_set}
         rb_dvs.update(dv_delta)
-        return (new_cid, rebased_files, rebased_deltas, rb_key, rb_col,
-                rb_stats, rb_dvs, actual)
+        sizes, rows = self._manifest_inventory(rebased_files, rebased_deltas)
+        # tombstone paths are commit-id-independent: they ride along as-is
+        return lost.successor(
+            new_cid, lost.action, rb_stats, files=rebased_files,
+            deltas=rebased_deltas, key_stats=rb_key, col_stats=rb_col,
+            dvs=rb_dvs, tombstones=lost.tombstones, file_sizes=sizes,
+            row_counts=rows), actual
 
     def _key_ranges_overlap(self, ours: list[str], our_key_stats: dict,
                             theirs: list[str], their_key_stats: dict) -> bool:
@@ -4028,7 +3985,7 @@ class NativeTable:
             if not partial:
                 return self._delta_commit(
                     batch, "delta_upsert", "u", extra_stats)
-            if (self.timeline.latest() or Commit(0, "", [])).deltas:
+            if (self.timeline.latest() or Commit.empty()).deltas:
                 self.compact()
         prev = self.timeline.latest()
         if prev is None:
@@ -4142,17 +4099,15 @@ class NativeTable:
             for rel in new_rels:
                 (self.root / rel).unlink(missing_ok=True)
             new_rels = []
-        dvs = self._merge_dv_entries(prev, prev.files, new_rels, per_file)
-        return self._commit(
-            cid, "delete", list(prev.files),
-            [dict(d) for d in prev.deltas], prev.schema_json,
+        return self._publish(prev.successor(
+            cid, "delete",
             {"files_rewritten": 0, "files_carried": len(prev.files),
              "dv_files_marked": len(per_file),
              "dv_rows_marked": sum(per_file.values()),
              **(extra_stats or {})},
-            dict(prev.key_stats), dict(prev.col_stats),
-            tombstones=tombstones, dvs=dvs,
-        )
+            tombstones=tombstones,
+            dvs=self._merge_dv_entries(prev, prev.files, new_rels,
+                                       per_file)))
 
     def _dv_delete(self, batch: DataFrame,
                    extra_stats: dict | None = None) -> Commit | None:
@@ -4186,14 +4141,11 @@ class NativeTable:
             if not affected:
                 # nothing can match: publish the (possibly tombstoned)
                 # no-op delete without touching a data byte
-                return self._commit(
-                    cid, "delete", list(prev.files),
-                    [dict(d) for d in prev.deltas], prev.schema_json,
+                return self._publish(prev.successor(
+                    cid, "delete",
                     {"files_rewritten": 0, "dv_rows_marked": 0,
                      **(extra_stats or {})},
-                    dict(prev.key_stats), dict(prev.col_stats),
-                    tombstones=tombstones,
-                )
+                    tombstones=tombstones))
             src = self.spark.read.schema(
                 T.StructType.fromJson(json.loads(prev.schema_json))
             ).parquet(*[str(self.root / f) for f in affected])
@@ -4298,21 +4250,36 @@ class NativeTable:
                     >= max(1, min_dv_rows)]
         if not to_purge:
             return None
-        purged = set(to_purge)
-        carried = [f for f in commit.files if f not in purged]
-        df = self._read_files(to_purge, commit.schema_json,
-                              dvs=commit.dvs,
+        return self._rewrite_selected(
+            commit, to_purge, "purge",
+            len(to_purge) if not self.partition_keys else None,
+            lambda new, carried: {
+                "purged_files": len(to_purge),
+                "purged_rows": sum(int(commit.dvs[f]["rows"])
+                                   for f in to_purge)})
+
+    def _rewrite_selected(self, commit: Commit, selected: list[str],
+                          action: str, n_files: int | None,
+                          stats: Callable[[list[str], list[str]], dict]
+                          ) -> Commit:
+        """Rewrite the ``selected`` base files of ``commit`` at
+        ``n_files`` width (None = the layout's own) and carry everything
+        else by manifest reference: the other base files with their
+        stats and DVs, and the MoR deltas (delta records override by key
+        at read, so a base rewrite cannot change merge results). The
+        selection is read under ``commit``'s schema, DVs and column
+        defaults, so marks and defaults materialize while per-record
+        ``_ghs_commit_time`` is kept. ``stats(new, carried)`` builds the
+        commit stats from the written and the carried files."""
+        chosen = set(selected)
+        carried = [f for f in commit.files if f not in chosen]
+        df = self._read_files(selected, commit.schema_json, dvs=commit.dvs,
                               defaults=commit.column_defaults)
         cid = self.timeline.next_commit_id()
-        files = self._write_files(
-            df, cid,
-            n_files=len(to_purge) if not self.partition_keys else None)
+        files = self._write_files(df, cid, n_files=n_files)
         return self._commit_carried(
-            cid, "purge", commit, carried, files, commit.schema_json,
-            {"purged_files": len(to_purge),
-             "purged_rows": sum(int(commit.dvs[f]["rows"])
-                                for f in to_purge)},
-            deltas=commit.deltas)
+            cid, action, commit, carried, files, commit.schema_json,
+            stats(files, carried), deltas=commit.deltas)
 
     def bootstrap(self, src_dir: str | Path, pattern: str = "*.parquet") -> Commit:
         """Metadata-only bootstrap (Hudi's METADATA_ONLY bootstrap mode):
@@ -4391,7 +4358,7 @@ class NativeTable:
     def _overwrite(self, df: DataFrame, parallelism: int,
                    extra_stats: dict | None, scope: str) -> Commit:
         if scope == "partitions" and (self.timeline.latest() or
-                                      Commit(0, "", [])).deltas:
+                                      Commit.empty()).deltas:
             # MoR with un-compacted deltas: a delta file can hold records
             # for partitions this batch does NOT touch, and the overwrite
             # commit publishes with deltas=[] — carrying only prev.files
@@ -4629,8 +4596,8 @@ class NativeTable:
         col_stats = {**{f: prev.col_stats[f] for f in carried
                         if f in prev.col_stats}, **col_stats}
         return self._commit(
-            cid, action, carried + files, [dict(d) for d in deltas or []],
-            schema_json, stats, key_stats, col_stats, tombstones=tombstones)
+            cid, action, carried + files, deltas or [], schema_json, stats,
+            key_stats, col_stats, tombstones=tombstones)
 
     def delete_where(self, cond,
                      extra_stats: dict | None = None) -> Commit:
@@ -4646,7 +4613,7 @@ class NativeTable:
         CoW only; MoR tables compact first (a predicate delete must see
         merged rows to decide) — documented cost, not a surprise.
         """
-        if self.storage_type == "mor" and (self.timeline.latest() or Commit(0, "", [])).deltas:
+        if self.storage_type == "mor" and (self.timeline.latest() or Commit.empty()).deltas:
             self.compact()
         if self.deletion_vectors:
             return self._dv_delete_where(cond, extra_stats)
@@ -4690,14 +4657,8 @@ class NativeTable:
         head = self.timeline.latest()
         if head is None:
             raise ValueError(f"table {self.root} has no commits")
-        cid = self.timeline.next_commit_id()
-        return self._commit(
-            cid, action, list(head.files),
-            [dict(d) for d in head.deltas], head.schema_json,
-            dict(extra_stats or {}),
-            dict(head.key_stats), dict(head.col_stats),
-            dvs=dict(head.dvs),
-        )
+        return self._publish(head.successor(
+            self.timeline.next_commit_id(), action, dict(extra_stats or {})))
 
     def merge(self, batch: DataFrame, op_col: str = "op",
               drop_cols: list[str] | None = None,
@@ -5044,8 +5005,8 @@ class NativeTable:
             commit = self._commit(
                 cid, action, base_files, deltas, schema,
                 dict(extra_stats or {}),
-                dict(prev.key_stats) if prev else {},
-                dict(prev.col_stats) if prev else {},
+                prev.key_stats if prev else None,
+                prev.col_stats if prev else None,
                 tombstones=tombstones,
             )
         if len(deltas) >= self.compact_every or (
@@ -5186,23 +5147,17 @@ class NativeTable:
         ]
         if not to_pack:
             return None
-        packed = set(to_pack)
-        carried = [f for f in commit.files if f not in packed]
-        df = self._read_files(to_pack, commit.schema_json, dvs=commit.dvs,
-                              defaults=commit.column_defaults)
-        cid = self.timeline.next_commit_id()
         if self.partition_keys:
             # width 1: all of a partition's slivers coalesce into ~1 file
-            files = self._write_files(df, cid, n_files=1)
+            width = 1
         else:
             pack_bytes = sum(sizes[f] for f in to_pack)
             width = max(1, -(-pack_bytes // target_bytes))  # ceil
-            files = self._write_files(df, cid, n_files=width)
-        return self._commit_carried(
-            cid, "bin_pack", commit, carried, files, commit.schema_json,
-            {"packed_files": len(to_pack), "new_files": len(files),
-             "carried_files": len(carried)},
-            deltas=commit.deltas)
+        return self._rewrite_selected(
+            commit, to_pack, "bin_pack", width,
+            lambda new, carried: {"packed_files": len(to_pack),
+                                  "new_files": len(new),
+                                  "carried_files": len(carried)})
 
     def rewrite_data_files(self, prune: dict | None = None,
                            only_legacy_spec: bool = False,
@@ -5250,18 +5205,11 @@ class NativeTable:
             selected = selected[:max_files]
         if not selected:
             return None
-        chosen = set(selected)
-        carried = [f for f in commit.files if f not in chosen]
-        df = self._read_files(selected, commit.schema_json,
-                              dvs=commit.dvs,
-                              defaults=commit.column_defaults)
-        cid = self.timeline.next_commit_id()
-        files = self._write_files(df, cid)
-        return self._commit_carried(
-            cid, "rewrite_files", commit, carried, files, commit.schema_json,
-            {"rewritten_files": len(selected), "new_files": len(files),
-             "carried_files": len(carried)},
-            deltas=commit.deltas)
+        return self._rewrite_selected(
+            commit, selected, "rewrite_files", None,
+            lambda new, carried: {"rewritten_files": len(selected),
+                                  "new_files": len(new),
+                                  "carried_files": len(carried)})
 
     # --------------------------------------------- schema evolution (DDL)
 
@@ -5318,14 +5266,9 @@ class NativeTable:
         mapping = dict(prev.column_mapping)
         physical = mapping.pop(old, old)
         mapping[new] = physical
-        cid = self.timeline.next_commit_id()
-        return self._commit(
-            cid, "rename_column", list(prev.files),
-            [dict(d) for d in prev.deltas], prev.schema_json,
-            {"renamed": {"from": old, "to": new}},
-            dict(prev.key_stats), dict(prev.col_stats),
-            column_mapping=mapping, retired_cols=list(prev.retired_cols),
-        )
+        return self._publish(prev.successor(
+            self.timeline.next_commit_id(), "rename_column",
+            {"renamed": {"from": old, "to": new}}, column_mapping=mapping))
 
     def drop_column(self, col: str) -> Commit:
         """Metadata-only column drop: the physical column stays in live
@@ -5343,17 +5286,12 @@ class NativeTable:
         self._check_renameable(col, "drop")
         mapping = dict(prev.column_mapping)
         physical = mapping.pop(col, col)
-        cid = self.timeline.next_commit_id()
-        return self._commit(
-            cid, "drop_column", list(prev.files),
-            [dict(d) for d in prev.deltas], prev.schema_json,
-            {"dropped": col},
-            dict(prev.key_stats), dict(prev.col_stats),
-            column_mapping=mapping,
-            retired_cols=list(prev.retired_cols) + [physical],
+        return self._publish(prev.successor(
+            self.timeline.next_commit_id(), "drop_column",
+            {"dropped": col}, column_mapping=mapping,
+            retired_cols=prev.retired_cols + [physical],
             column_defaults={k: v for k, v in prev.column_defaults.items()
-                             if k != physical},
-        )
+                             if k != physical}))
 
     def add_column(self, col: str, dtype: str,
                    default=None) -> Commit:
@@ -5392,13 +5330,10 @@ class NativeTable:
         cid = self.timeline.next_commit_id()
         if default is not None:
             defaults[col] = {"value": default, "since": cid}
-        return self._commit(
-            cid, "add_column", list(prev.files),
-            [dict(d) for d in prev.deltas], new_schema.json(),
+        return self._publish(prev.successor(
+            cid, "add_column",
             {"added": {"column": col, "type": dtype, "default": default}},
-            dict(prev.key_stats), dict(prev.col_stats),
-            column_defaults=defaults,
-        )
+            schema_json=new_schema.json(), column_defaults=defaults))
 
     def evolve_partition_spec(self, new_specs: list[str] | None) -> Commit:
         """Metadata-only partition-spec change (Iceberg partition
@@ -5441,17 +5376,12 @@ class NativeTable:
                     f"partition field {f.name!r} ({f.spec!r}) collides "
                     f"with the previous spec's {old[f.name]!r}; pick a "
                     "transform with a distinct field name")
-        cid = self.timeline.next_commit_id()
-        commit = self._commit(
-            cid, "evolve_partition", list(prev.files),
-            [dict(d) for d in prev.deltas], prev.schema_json,
+        commit = self._publish(prev.successor(
+            self.timeline.next_commit_id(), "evolve_partition",
             {"partition_spec": {"from": list(self.partition_keys),
                                 "to": new_specs}},
-            dict(prev.key_stats), dict(prev.col_stats),
-            partition_spec=new_specs,
-        )
-        self.partition_keys = new_specs
-        self._set_pfields()
+            partition_spec=new_specs))
+        self._adopt_spec(commit)
         return commit
 
     def compact(self) -> Commit:
@@ -5492,29 +5422,12 @@ class NativeTable:
                     f"commit {to_commit_id} not found at {self.root} "
                     f"(cleaned or never existed)"
                 )
-        cid = self.timeline.next_commit_id()
-        commit = self._commit(
-            cid, "rollback", list(target.files),
-            [dict(d) for d in target.deltas], target.schema_json,
-            {"rolled_back_to": target.commit_id},
-            dict(target.key_stats), dict(target.col_stats),
-            column_mapping=dict(target.column_mapping),
-            retired_cols=list(target.retired_cols),
-            # the TARGET's DV state, not the head's: rolling back past a
-            # DV delete must un-mark its rows
-            dvs=dict(target.dvs),
-            # likewise the TARGET's partition spec: rolling back past an
-            # evolve_partition restores the old layout
-            partition_spec=(list(target.partition_spec)
-                            if target.partition_spec is not None else None),
-            # likewise the TARGET's column defaults: rolling back past a
-            # compact/cluster (which cleared defaults after materializing
-            # them into file bytes) restores pre-add files whose rows are
-            # served by the default — an empty map would read them NULL
-            column_defaults=dict(target.column_defaults),
-        )
-        if target.partition_spec is not None and \
-                list(target.partition_spec) != self.partition_keys:
-            self.partition_keys = list(target.partition_spec)
-            self._set_pfields()
+        # the TARGET's whole snapshot, not the head's: rolling back past
+        # a DV delete un-marks its rows, past an evolve_partition restores
+        # the old layout, past a compact/cluster restores the column
+        # defaults its pre-add files are served by
+        commit = self._publish(target.successor(
+            self.timeline.next_commit_id(), "rollback",
+            {"rolled_back_to": target.commit_id}))
+        self._adopt_spec(commit)
         return commit

@@ -814,6 +814,21 @@ def test_bin_pack_coalesces_small_files_only(spark, tmp_table_dir):
     assert t.validate()["ok"]
 
 
+def test_maintain_reports_packed_file_count(spark, tmp_table_dir):
+    """maintain()'s report names how many files its bin-pack step
+    coalesced: the ``packed_files`` count that commit recorded."""
+    t = NativeTable(spark, tmp_table_dir, record_keys=["id"],
+                    precombine="seq", files_per_partition=2)
+    t.bulk_insert(spark.createDataFrame(
+        [(f"{i:04d}", i, 1) for i in range(20)], "id string, v int, seq int"))
+    assert len(t.timeline.latest().files) == 2
+    report = t.maintain()
+    packed = [c for c in t.timeline.history() if c.action == "bin_pack"]
+    assert len(packed) == 1 and packed[0].stats["packed_files"] == 2
+    assert report["bin_packed"] == 2
+    assert t.read_snapshot().count() == 20
+
+
 def test_bin_pack_uses_manifest_sizes_not_stat(spark, tmp_table_dir, monkeypatch):
     """The sliver scan must read the manifest's carried file_sizes, not
     issue a per-file stat() — on an object store that's O(files) metadata

@@ -411,3 +411,53 @@ def test_same_branch_occ_race_rebases(spark, tmp_path):
     assert snap.filter("seq = 3").count() == 3   # B's write survived
     # main never saw either
     assert t.read_snapshot().filter("seq >= 2").count() == 0
+
+
+# ----------------------------------------- copies carry the whole snapshot
+
+
+def _evolve(spark, t):
+    """Rename, drop, defaulted ADD COLUMN and a DV delete: every piece of
+    snapshot state beyond the file set a copy has to carry."""
+    t.rename_column("v", "w")
+    t.drop_column("note")
+    t.add_column("c", "string", default="dflt")
+    t.delete(spark.createDataFrame([("k0001",), ("k0002",)], "id string"))
+
+
+def _rows(t):
+    snap = t.read_snapshot()
+    cols = sorted(snap.columns)
+    return cols, sorted((tuple(r[c] for c in cols) for r in snap.collect()),
+                        key=str)
+
+
+@pytest.mark.parametrize("how", ["create_branch", "fast_forward", "clone_to"])
+def test_copies_carry_the_whole_snapshot(spark, tmp_path, how):
+    t = _mk(spark, tmp_path / "t", deletion_vectors=True)
+    t.bulk_insert(_df(spark, n=20).withColumn("note", F.lit("n")))
+    if how == "create_branch":
+        _evolve(spark, t)
+        src, copy = t, t.create_branch("dev")
+    elif how == "fast_forward":
+        src = t.create_branch("dev")
+        _evolve(spark, src)
+        t.fast_forward("dev")
+        src, copy = t.branch("dev"), t
+    else:
+        _evolve(spark, t)
+        src, copy = t, t.clone_to(tmp_path / "clone")
+    cols, rows = _rows(src)
+    assert cols == ["c", "id", "seq", "w"]
+    assert len(rows) == 18 and {r[0] for r in rows} == {"dflt"}
+    assert _rows(copy) == (cols, rows)
+    # the copy stays writable under the carried mapping and defaults
+    batch = spark.createDataFrame(
+        [("k0005", 5.5, 2, "new"), ("k0100", 1.0, 2, None)],
+        "id string, w double, seq int, c string")
+    src.upsert(batch)
+    copy.upsert(batch)
+    got = _rows(copy)
+    assert got == _rows(src) and len(got[1]) == 19
+    assert ("new", "k0005", 2, 5.5) in got[1]
+    assert (None, "k0100", 2, 1.0) in got[1]

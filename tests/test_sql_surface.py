@@ -1194,6 +1194,15 @@ def test_shallow_clone_and_restore(ghs, spark):
         ghs.sql("CREATE TABLE mvclone SHALLOW CLONE mv")
     with pytest.raises(ValueError, match="MATERIALIZED VIEW"):
         ghs.sql("RESTORE TABLE mv TO VERSION AS OF 1")
+    # a clone carries the whole snapshot: renamed and defaulted columns
+    # read back exactly as on the source
+    ghs.sql("ALTER TABLE accounts RENAME COLUMN balance TO amount")
+    ghs.sql("ALTER TABLE accounts ADD COLUMN tier STRING DEFAULT 'std'")
+    ghs.sql("CREATE TABLE snap2 SHALLOW CLONE accounts")
+    q = "SELECT id, amount, region, tier FROM {} ORDER BY id"
+    got = _rows(ghs, q.format("snap2"))
+    assert got == _rows(ghs, q.format("accounts"))
+    assert len(got) == 3 and {r[3] for r in got} == {"std"}
 
 
 def test_txn_rollback_restores_constraints(ghs):
